@@ -129,7 +129,9 @@ def _parse_stbl(data: bytes, start: int, end: int) -> dict:
             count = int.from_bytes(data[q + 4:q + 8], "big")
             out["n_samples"] = count
             if uniform:
-                out["sizes"] = [uniform] * count
+                # metadata-only streams declare counts whose samples are
+                # not in the file: expand only when demuxing
+                out["uniform_size"] = uniform
             else:
                 if q + 8 + 4 * count > e:
                     raise ValueError("mp4: stsz table truncated")
@@ -370,6 +372,12 @@ def parse_mp4_frames(data: bytes) -> list[bytes]:
     if track is None:
         raise ValueError("mp4: no video track")
     sizes = track.get("sizes")
+    if "uniform_size" in track:
+        # every sample must lie in the file, so it bounds the count
+        if track["uniform_size"] * track["n_samples"] > len(data):
+            raise ValueError(
+                "mp4: stsz declares more sample bytes than the file holds")
+        sizes = [track["uniform_size"]] * track["n_samples"]
     stsc = track.get("stsc")
     stco = track.get("stco")
     if not sizes or not stsc or not stco:

@@ -936,20 +936,6 @@ def _page_content(objs: dict[int, _Obj], body: bytes) -> bytes:
     return content
 
 
-def _page_content_streams(data: bytes) -> list[bytes]:
-    """Validated parse shared by every extractor: header/encryption
-    checks, object scan, ObjStm expansion, page-tree walk, and the
-    concatenated decoded /Contents stream per page (page-tree order).
-
-    Raises ValueError for non-PDF bytes or encrypted documents; pages
-    whose content stream cannot be located contribute empty bytes."""
-    objs = _validated_objects(data)
-    return [
-        _page_content(objs, objs[pnum].body)
-        for pnum in _page_order(data, objs)
-    ]
-
-
 def _pages_with_fonts(
     data: bytes,
 ) -> list[tuple[bytes, dict[bytes, _FontDecoder]]]:
@@ -1201,13 +1187,6 @@ def _resources_xobjects(
 ) -> list[tuple[bytes, int]]:
     """(name, objnum) pairs of the page's /XObject resources."""
     return _resources_entries(page_body, objs, b"XObject")
-
-
-def _image_filter(body: bytes) -> bytes:
-    fm = re.search(rb"/Filter\s*(\[[^\]]*\]|/[^\s/<>\[\]()]*)", body)
-    if fm is None:
-        return b""
-    return re.sub(rb"[\[\]\s]", b"", fm.group(1))
 
 
 def _unpack_samples(

@@ -941,15 +941,15 @@ def _parse_shading_fn(fsrc, objs: dict[int, _Obj], depth: int = 0):
             raise ValueError("stitching function: missing /Functions")
         # balanced-bracket scan: subfunction dicts carry their own
         # [...] arrays, so a non-greedy regex would truncate early
-        depth, p = 0, fm.end() - 1
+        level, p = 0, fm.end() - 1
         end = None
         while p < len(body):
             c = body[p]
             if c == 0x5B:      # [
-                depth += 1
+                level += 1
             elif c == 0x5D:    # ]
-                depth -= 1
-                if depth == 0:
+                level -= 1
+                if level == 0:
                     end = p
                     break
             p += 1

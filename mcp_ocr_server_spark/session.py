@@ -4,6 +4,13 @@ The reference sizes a worker pool from YAML (internal/config/config.go:220-227);
 here parallelism is Spark's task scheduling (SURVEY.md §2.6 P2) and the knobs
 that matter are shuffle partitioning, AQE, and Arrow batch size for the
 binary-heavy media columns (SURVEY.md §4 "Vectorization").
+
+Python workers fork from `spark_daemon`, not from `pyspark.daemon`.  Every
+task's set-up calls `importlib.invalidate_caches()`, which on Python 3.11
+and 3.12 makes each zip importer re-read all of `pyspark.zip` -- about a
+quarter of a CPU second per task, more than many of the UDF bodies cost.
+The daemon skips the re-read while the archive is unchanged.  Python 3.13
+reads lazily, so the module can be deleted once that is the floor.
 """
 
 from __future__ import annotations
@@ -54,6 +61,7 @@ def get_spark(
             str(cfg.arrow_batch_rows),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "mcp_ocr_server_spark.spark_daemon")
         # P4 backstops (SURVEY.md §2.6), honestly scoped:
         # - the cooperative engine deadline is the ONLY mechanism active
         #   in local mode (Spark's scheduler skips the speculation

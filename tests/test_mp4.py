@@ -9,6 +9,7 @@ import pytest
 from mcp_ocr_server_spark.functions.mp4 import (
     encode_mp4,
     mp4_metadata,
+    parse_mp4_frames,
     walk_boxes,
 )
 from mcp_ocr_server_spark.functions.multimodal import video_inventory_row
@@ -78,6 +79,17 @@ def test_error_contract():
         mp4_metadata(bytes(b))
     with pytest.raises(ValueError, match="no moov"):
         mp4_metadata(good[:28] + good[-72:])   # ftyp + mdat only
+
+
+def test_uniform_stsz_count_bounded_by_file():
+    # metadata reads a uniform-size stsz count without allocating it;
+    # demuxing refuses a count whose samples cannot lie in the file
+    b = bytearray(encode_mp4(1.0))
+    q = b.index(b"stsz") + 12         # past type, version/flags, size
+    b[q:q + 4] = (0xFFFFFFFF).to_bytes(4, "big")
+    assert mp4_metadata(bytes(b))["n_frames"] == 0xFFFFFFFF
+    with pytest.raises(ValueError, match="stsz declares more sample bytes"):
+        parse_mp4_frames(bytes(b))
 
 
 def test_fuzz_exception_discipline():

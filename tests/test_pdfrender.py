@@ -10,6 +10,8 @@ a non-ValueError), corpus truth recovery for every renderable class,
 and the e2e pdf_text_row fallback for compositing documents.
 """
 
+import re
+
 import numpy as np
 import pytest
 
@@ -768,6 +770,18 @@ def test_stitching_function_v_ramp():
                    (t - 0.5) / 0.5)
     exp = np.clip(np.rint(exp * 255), 0, 255)
     assert (band == exp[None, :]).all()
+
+
+def test_self_referencing_stitching_function_refuses():
+    """A Type 3 function listing its own shading object among its
+    /Functions hits the nesting cap as a ValueError, not a
+    RecursionError."""
+    data = page([("shstitch", 100.0, 0.0, 300.0, 0.0)])
+    num = re.search(rb"(\d+) 0 obj\s*<< /ShadingType 2", data).group(1)
+    sub = b"<< /FunctionType 2 /Domain [0 1] /C0 [1] /C1 [0] /N 1 >>"
+    assert sub in data
+    with pytest.raises(ValueError, match="nesting too deep"):
+        render_pdf_pages(data.replace(sub, num + b" 0 R"))
 
 
 def test_sampled_function_linear_interpolation():
