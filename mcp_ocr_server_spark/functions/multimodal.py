@@ -45,11 +45,11 @@ Stages (each a mapInPandas over an Arrow batch iterator):
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators.rows import map_rows
 
 MEDIA_SCHEMA = (
     "media_ref string, kind string, bytes binary,"
@@ -238,20 +238,8 @@ def image_feature_row(ref: str, data: bytes) -> dict:
 
 def image_features(media: DataFrame) -> DataFrame:
     """REAL path: decode + analyzer metrics per image, Arrow-batched."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                image_feature_row(ref, bytes(data))
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "width", "height", "sharpness", "contrast",
-                "brightness", "error"])
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return map_rows(media, lambda ref, data: [image_feature_row(ref, data)],
+                    IMAGE_FEATURES_SCHEMA, "media_ref", "bytes")
 
 
 def audio_feature_row(ref: str, data: bytes,
@@ -279,18 +267,9 @@ def audio_feature_row(ref: str, data: bytes,
 def audio_features(media: DataFrame, sample_rate: int = 16_000) -> DataFrame:
     """Per-clip energy summary; WAV decodes for real, compressed
     formats via the documented stub seam."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                audio_feature_row(ref, bytes(data), sample_rate)
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "n_samples", "rms", "peak", "error"])
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
+    return map_rows(
+        media, lambda ref, data: [audio_feature_row(ref, data, sample_rate)],
+        AUDIO_FEATURES_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -322,20 +301,8 @@ def audio_inventory(media: DataFrame) -> DataFrame:
     estimate only as the unwalkable-stream fallback), plus FLAC's
     embedded decoded-PCM md5 (the dedup key).  Unknown/truncated
     payloads are error rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "format", "codec", "sample_rate",
-                "channels", "duration_s", "pcm_md5", "error"]
-        for pdf in batches:
-            rows = [
-                audio_inventory_row(ref, bytes(data))
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=AUDIO_INVENTORY_SCHEMA
-    )
+    return map_rows(media, lambda ref, data: [audio_inventory_row(ref, data)],
+                    AUDIO_INVENTORY_SCHEMA, "media_ref", "bytes")
 
 
 AUDIO_TAGS_SCHEMA = (
@@ -365,20 +332,8 @@ def audio_tags_stage(media: DataFrame) -> DataFrame:
     dedups and routes on without decoding a sample.  Formats without a
     tag structure return n_tags=0 (absence is data); unknown containers
     are error rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "format", "vendor", "title", "artist",
-                "album", "n_tags", "error"]
-        for pdf in batches:
-            rows = [
-                audio_tags_row(ref, bytes(data))
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=AUDIO_TAGS_SCHEMA
-    )
+    return map_rows(media, lambda ref, data: [audio_tags_row(ref, data)],
+                    AUDIO_TAGS_SCHEMA, "media_ref", "bytes")
 
 
 VIDEO_FRAME_FEATURES_SCHEMA = (
@@ -412,18 +367,9 @@ def video_frame_features(media: DataFrame, every_n: int = 2) -> DataFrame:
     still worked; only pixel decode needs the absent codec.  Container
     failures (truncated/EBML/foreign) surface as one per-CLIP error
     row naming what was seen."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "frame_idx", "width", "height",
-                "sharpness", "contrast", "brightness", "error"]
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(video_feature_rows(ref, bytes(data), every_n))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=VIDEO_FRAME_FEATURES_SCHEMA
+    return map_rows(
+        media, lambda ref, data: video_feature_rows(ref, data, every_n),
+        VIDEO_FRAME_FEATURES_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -445,26 +391,20 @@ def video_keyframes(media: DataFrame, every_n: int = 4) -> DataFrame:
     frame extraction for AVI (functions/avi.py) and mp4 sample tables
     (functions/mp4.py); webm/foreign payloads are per-clip error
     rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                try:
-                    for idx, frame in _decode_video_frames(bytes(data), every_n):
-                        rows.append(dict(
-                            media_ref=ref, frame_idx=idx,
-                            frame_sha=hashlib.sha256(frame).hexdigest(),
-                            error=None))
-                except Exception as exc:
-                    rows.append(dict(media_ref=ref, frame_idx=None,
-                                     frame_sha=None, error=str(exc)))
-            yield pd.DataFrame(rows, columns=[
-                "media_ref", "frame_idx", "frame_sha", "error"])
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=VIDEO_KEYFRAMES_SCHEMA
+    return map_rows(
+        media, lambda ref, data: _keyframe_rows(ref, data, every_n),
+        VIDEO_KEYFRAMES_SCHEMA, "media_ref", "bytes",
     )
+
+
+def _keyframe_rows(ref: str, data: bytes, every_n: int) -> list[dict]:
+    try:
+        return [dict(media_ref=ref, frame_idx=idx,
+                     frame_sha=hashlib.sha256(frame).hexdigest(), error=None)
+                for idx, frame in _decode_video_frames(data, every_n)]
+    except Exception as exc:
+        return [dict(media_ref=ref, frame_idx=None, frame_sha=None,
+                     error=str(exc))]
 
 
 VIDEO_INVENTORY_SCHEMA = (
@@ -545,17 +485,5 @@ def video_inventory(media: DataFrame) -> DataFrame:
     decode: container/codec/dims/duration/frame-count per clip for
     AVI (RIFF walk), mp4 (ISO-BMFF box walk) and webm/matroska (EBML
     walk); foreign payloads are error rows naming what was seen."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "container", "codec", "width", "height",
-                "duration_s", "n_frames", "rotation", "error"]
-        for pdf in batches:
-            rows = [
-                video_inventory_row(ref, bytes(data))
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=VIDEO_INVENTORY_SCHEMA
-    )
+    return map_rows(media, lambda ref, data: [video_inventory_row(ref, data)],
+                    VIDEO_INVENTORY_SCHEMA, "media_ref", "bytes")

@@ -52,6 +52,8 @@ from typing import Iterator, NamedTuple
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..operators.rows import map_rows
+
 PDF_TEXT_SCHEMA = "media_ref string, n_pages int, text string, error string"
 
 _OBJ_START_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
@@ -244,10 +246,15 @@ _FILTER_ABBREV = {
 
 
 def _parse_filters(body: bytes) -> list[bytes]:
-    """The /Filter entry as a normalized name list ([] = unfiltered)."""
-    fm = re.search(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)", body)
+    """The /Filter entry as a normalized name list ([] = unfiltered).
+    An indirect /Filter (`n 0 R`, or inside the array) refuses: read as
+    unfiltered, its compressed bytes would pass for decoded data."""
+    fm = re.search(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+|\d+\s+\d+\s+R)",
+                   body)
     if fm is None:
         return []
+    if re.search(rb"\d+\s+\d+\s+R", fm.group(1)):
+        raise ValueError("indirect /Filter reference unsupported")
     names = re.findall(rb"/[A-Za-z0-9]+", fm.group(1))
     return [_FILTER_ABBREV.get(n, n) for n in names]
 
@@ -983,18 +990,14 @@ def _ocr_pdf_rasters(data: bytes, ocr_cfg) -> tuple[list[str], float] | None:
             return None
     except Exception:
         return None
-    from ..imaging.analyzer import preprocess
     from ..ocr.engine import get_engine
+    from ..operators.media_ocr import recognize_fail_soft
 
     engine = get_engine(ocr_cfg.ocr)
     texts: list[str] = []
     confs: list[float] = []
     for img in rasters:
-        try:
-            processed, _q, _steps = preprocess(img, ocr_cfg.preprocessing)
-        except Exception:
-            processed = img  # fail-soft, handler.go:271-275
-        res = engine.recognize(processed)
+        res = recognize_fail_soft(img, ocr_cfg, engine.recognize)
         texts.append(res.text)
         confs.append(res.confidence)
     return texts, (sum(confs) / len(confs) if confs else 0.0)
@@ -1075,19 +1078,9 @@ def pdf_text(media: DataFrame, ocr_cfg=None) -> DataFrame:
     (pages joined by form-feed), REAL decode path — errors isolate per
     row exactly like the OCR stage (P1).  ocr_cfg enables the
     scanned-PDF OCR fallback for text-less documents."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                pdf_text_row(ref, bytes(data), ocr_cfg=ocr_cfg)
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "n_pages", "text", "error"]
-            )
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=PDF_TEXT_SCHEMA
+    return map_rows(
+        media, lambda ref, data: [pdf_text_row(ref, data, ocr_cfg=ocr_cfg)],
+        PDF_TEXT_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -1276,7 +1269,8 @@ def _luma_fold(rgb: "np.ndarray") -> "np.ndarray":
 
 
 def _decode_image_xobject(
-    obj: _Obj, objs: dict[int, _Obj] | None = None
+    obj: _Obj, objs: dict[int, _Obj] | None = None,
+    smask_chain: frozenset[int] = frozenset(),
 ) -> "np.ndarray":
     """One /Subtype /Image XObject -> grayscale uint8 raster.
 
@@ -1287,8 +1281,10 @@ def _decode_image_xobject(
     via the in-repo baseline JPEG decoder; /Decode component remaps
     (§8.9.5.2 — the 1-bit fax inversion [1 0] shape and any linear
     map); /SMask soft masks composited onto the white page background
-    (needs `objs` to resolve the mask object).  Everything else
-    raises ValueError naming the unsupported feature."""
+    (needs `objs` to resolve the mask object; `smask_chain` holds the
+    mask objects already being decoded, so a cycle refuses).
+    Everything else raises ValueError naming the unsupported
+    feature."""
     import numpy as np
 
     body = obj.body
@@ -1330,7 +1326,7 @@ def _decode_image_xobject(
             raise ValueError(
                 "DCTDecode geometry mismatch vs /Width /Height"
             )
-        return _apply_smask(img, body, objs)
+        return _apply_smask(img, body, objs, smask_chain)
     samples = _apply_filter_list(raw, filters, parms)
     maxval = (1 << bpc) - 1
     # colorspace: direct name, /Indexed array (inline or via an
@@ -1369,7 +1365,7 @@ def _decode_image_xobject(
         mapped = table[idx]
         gray = (mapped[..., 0] if base_ncomp == 1
                 else _luma_fold(mapped))
-        return _apply_smask(gray.copy(), body, objs)
+        return _apply_smask(gray.copy(), body, objs, smask_chain)
     nm = re.search(rb"/(DeviceGray|DeviceRGB)\b", cs_tok)
     if nm is None:
         raise ValueError(
@@ -1395,11 +1391,13 @@ def _decode_image_xobject(
             np.rint(vals * 255.0), 0, 255
         ).astype(np.uint8)
     gray = out[..., 0] if ncomp == 1 else _luma_fold(out)
-    return _apply_smask(np.ascontiguousarray(gray), body, objs)
+    return _apply_smask(np.ascontiguousarray(gray), body, objs,
+                        smask_chain)
 
 
 def _apply_smask(
-    img: "np.ndarray", body: bytes, objs: dict[int, _Obj] | None
+    img: "np.ndarray", body: bytes, objs: dict[int, _Obj] | None,
+    smask_chain: frozenset[int],
 ) -> "np.ndarray":
     """Composite a /SMask soft mask (§11.6.5.2) onto the white page
     background: out = (alpha * pix + (255 - alpha) * 255) / 255 in
@@ -1419,10 +1417,13 @@ def _apply_smask(
         raise ValueError(
             "image XObject: /SMask needs the object table"
         )
-    mask_obj = objs.get(int(sm.group(1)))
+    num = int(sm.group(1))
+    if num in smask_chain:
+        raise ValueError("image XObject: /SMask reference cycle")
+    mask_obj = objs.get(num)
     if mask_obj is None:
         raise ValueError("image XObject: dangling /SMask reference")
-    mask = _decode_image_xobject(mask_obj, objs)
+    mask = _decode_image_xobject(mask_obj, objs, smask_chain | {num})
     if mask.shape != img.shape:
         raise ValueError(
             "image XObject: /SMask geometry differs from the image"

@@ -44,8 +44,9 @@ import hashlib
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators.rows import map_rows
 
 __all__ = ["encode_warc", "gunzip_members", "iter_warc_records",
            "split_http_response", "warc_records", "warc_record_rows"]
@@ -360,20 +361,8 @@ def warc_redirect_rows(ref: str, data: bytes) -> list[dict]:
 def warc_records(archives: DataFrame) -> DataFrame:
     """Archive bytes -> typed record rows (1:N row-local fan-out,
     zero shuffle).  Input: (warc_ref string, bytes binary)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_ref", "rec_idx", "warc_type", "url", "date",
-                "http_status", "mime", "payload_len", "payload_md5",
-                "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["warc_ref"], pdf["bytes"]):
-                rows.extend(warc_record_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return archives.select("warc_ref", "bytes").mapInPandas(
-        run, schema=WARC_RECORDS_SCHEMA
-    )
+    return map_rows(archives, warc_record_rows, WARC_RECORDS_SCHEMA,
+                    "warc_ref", "bytes")
 
 
 WARC_MAIN_SCHEMA = (
@@ -428,19 +417,8 @@ def warc_main_rows(ref: str, data: bytes) -> list[dict]:
 def warc_main_content(archives: DataFrame) -> DataFrame:
     """Archive bytes -> boilerplate-stripped main text per 200
     text/html response (row-local 1:N, zero shuffle)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_ref", "rec_idx", "url", "main_text", "n_chars",
-                "charset", "charset_source", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["warc_ref"], pdf["bytes"]):
-                rows.extend(warc_main_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return archives.select("warc_ref", "bytes").mapInPandas(
-        run, schema=WARC_MAIN_SCHEMA
-    )
+    return map_rows(archives, warc_main_rows, WARC_MAIN_SCHEMA,
+                    "warc_ref", "bytes")
 
 
 # --- writer (deterministic corpus/test writer) ------------------------------

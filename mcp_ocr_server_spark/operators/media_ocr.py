@@ -167,6 +167,18 @@ WORD_BOX_SCHEMA = (
 )
 
 
+def recognize_fail_soft(img: np.ndarray, cfg: JobConfig, recognize):
+    """Preprocess then `recognize(image)`: any preprocess exception
+    falls back to the ORIGINAL image (F5, handler.go:271-275).  Only the
+    deadline-aware ocr_map and the independent oracle
+    (synthetic.golden_media) keep their own copy of this chain."""
+    try:
+        processed, _q, _steps = preprocess(img, cfg.preprocessing)
+    except Exception:
+        processed = img  # fail-soft, handler.go:271-275
+    return recognize(processed)
+
+
 def word_box_rows(ref: str, png: bytes, cfg: JobConfig) -> list[dict]:
     """Word boxes for one image — shared VERBATIM by the Spark stage
     (queries.q_media_words) and the golden-fixture generator, so the
@@ -179,11 +191,8 @@ def word_box_rows(ref: str, png: bytes, cfg: JobConfig) -> list[dict]:
     if len(png) > cfg.ocr.max_image_size:
         return []
     img = decode_image(bytes(png))
-    try:
-        processed, _q, _steps = preprocess(img, cfg.preprocessing)
-    except Exception:
-        processed = img  # fail-soft, handler.go:271-275
-    _res, boxes = get_engine(cfg.ocr).recognize_with_details(processed)
+    _res, boxes = recognize_fail_soft(
+        img, cfg, get_engine(cfg.ocr).recognize_with_details)
     return [
         dict(media_ref=ref, word_idx=i, x=b.x, y=b.y, width=b.width,
              height=b.height, text=b.text,
@@ -201,79 +210,59 @@ SCAN_PDF_SCHEMA = (
     "media_ref string, page_idx int, text string, confidence double,"
     " error string"
 )
-
-
-def scan_pdf_rows(ref: str, data: bytes, cfg: JobConfig) -> list[dict]:
-    """OCR rows for one scanned PDF — shared VERBATIM by the Spark
-    stage (queries.q_pdf_scan_ocr) and the golden-fixture generator.
-    Document-level raster failures (non-PDF, encrypted, born-digital
-    pages, unsupported image features) yield ONE error row with
-    page_idx null; per-page OCR failures isolate to their page (P1)."""
-    from ..functions.pdf import extract_pdf_page_rasters
-    from ..ocr.engine import get_engine
-
-    try:
-        rasters = extract_pdf_page_rasters(bytes(data))
-    except Exception as exc:
-        return [dict(media_ref=ref, page_idx=None, text=None,
-                     confidence=None, error=str(exc))]
-    engine = get_engine(cfg.ocr)
-    out: list[dict] = []
-    for i, img in enumerate(rasters):
-        row = dict(media_ref=ref, page_idx=i, text=None,
-                   confidence=None, error=None)
-        try:
-            try:
-                processed, _q, _steps = preprocess(img, cfg.preprocessing)
-            except Exception:
-                processed = img  # fail-soft, handler.go:271-275
-            res = engine.recognize(processed)
-            row["text"] = res.text
-            row["confidence"] = round(res.confidence, 6)
-        except Exception as exc:
-            row["error"] = str(exc)
-        out.append(row)
-    return out
-
-
 RENDER_PDF_SCHEMA = SCAN_PDF_SCHEMA  # same (ref, page, text, conf, err)
 
 
-def render_pdf_rows(ref: str, data: bytes, cfg: JobConfig) -> list[dict]:
-    """OCR rows for one COMPOSITING PDF — shared VERBATIM by the Spark
-    stage (queries.q_pdf_render_ocr) and the golden-fixture generator.
-    Pages go through the content-stream renderer
-    (functions/pdfrender.render_pdf_pages: multi-image, text-over-
-    image, rect fills, invisible OCR layers) instead of the single-
-    XObject raster path; document-level failures (non-PDF, encrypted,
-    constructs outside the renderer scope such as rotation or curves)
-    yield ONE error row with page_idx null; per-page OCR failures
-    isolate to their page (P1) — identical contract to scan_pdf_rows."""
-    from ..functions.pdfrender import render_pdf_pages
+def ocr_pages(ref: str, load_pages, cfg: JobConfig,
+              prepare=lambda img: img) -> list[dict]:
+    """OCR rows (SCAN_PDF_SCHEMA) for one payload's pages.
+
+    `load_pages()` is the page source; when it raises, the payload is
+    ONE error row with page_idx null.  Each page runs `prepare` and then
+    the fail-soft chain; a failure there isolates to its page's row
+    (P1)."""
     from ..ocr.engine import get_engine
 
     try:
-        rasters = render_pdf_pages(bytes(data))
+        pages = load_pages()
     except Exception as exc:
         return [dict(media_ref=ref, page_idx=None, text=None,
                      confidence=None, error=str(exc))]
     engine = get_engine(cfg.ocr)
     out: list[dict] = []
-    for i, img in enumerate(rasters):
+    for i, img in enumerate(pages):
         row = dict(media_ref=ref, page_idx=i, text=None,
                    confidence=None, error=None)
         try:
-            try:
-                processed, _q, _steps = preprocess(img, cfg.preprocessing)
-            except Exception:
-                processed = img  # fail-soft, handler.go:271-275
-            res = engine.recognize(processed)
+            res = recognize_fail_soft(prepare(img), cfg, engine.recognize)
             row["text"] = res.text
             row["confidence"] = round(res.confidence, 6)
         except Exception as exc:
             row["error"] = str(exc)
         out.append(row)
     return out
+
+
+def scan_pdf_rows(ref: str, data: bytes, cfg: JobConfig) -> list[dict]:
+    """OCR rows for one scanned PDF (queries.q_pdf_scan_ocr and the
+    golden-fixture generator).  Document-level raster failures (non-PDF,
+    encrypted, born-digital pages, unsupported image features) are the
+    page source's error row."""
+    from ..functions.pdf import extract_pdf_page_rasters
+
+    return ocr_pages(ref, lambda: extract_pdf_page_rasters(bytes(data)), cfg)
+
+
+def render_pdf_rows(ref: str, data: bytes, cfg: JobConfig) -> list[dict]:
+    """OCR rows for one COMPOSITING PDF (queries.q_pdf_render_ocr and
+    the golden-fixture generator).  Pages go through the content-stream
+    renderer (functions/pdfrender.render_pdf_pages: multi-image, text-
+    over-image, rect fills, invisible OCR layers) instead of the single-
+    XObject raster path; constructs outside the renderer scope (such as
+    rotation or curves) are the page source's error row."""
+    from ..functions.pdfrender import render_pdf_pages
+
+    return ocr_pages(ref, lambda: render_pdf_pages(bytes(data)), cfg)
 
 
 # Scan-format chain: the rest of the imdecode input matrix
@@ -315,33 +304,9 @@ def scan_inventory_row(ref: str, data: bytes) -> dict:
 def scan_image_ocr_rows(ref: str, data: bytes, cfg: JobConfig) -> list[dict]:
     """OCR rows for one scan payload, every page (TIFF: per IFD; GIF:
     per composited frame; other formats: the single image).  RGB pages
-    fold to gray with the repo-wide BT.601 luma before the preprocess
-    + engine chain the image branch runs.  Decode failures yield ONE
-    error row with page_idx null; per-page OCR failures isolate to
-    their page (P1) — identical contract to scan_pdf_rows."""
+    fold to gray with the repo-wide BT.601 luma before the chain;
+    decode failures are the page source's error row."""
     from ..imaging.codecs import decode_image_pages, to_gray
-    from ..ocr.engine import get_engine
 
-    try:
-        pages = decode_image_pages(bytes(data))
-    except Exception as exc:
-        return [dict(media_ref=ref, page_idx=None, text=None,
-                     confidence=None, error=str(exc))]
-    engine = get_engine(cfg.ocr)
-    out: list[dict] = []
-    for i, img in enumerate(pages):
-        row = dict(media_ref=ref, page_idx=i, text=None,
-                   confidence=None, error=None)
-        try:
-            img = to_gray(img)
-            try:
-                processed, _q, _steps = preprocess(img, cfg.preprocessing)
-            except Exception:
-                processed = img  # fail-soft, handler.go:271-275
-            res = engine.recognize(processed)
-            row["text"] = res.text
-            row["confidence"] = round(res.confidence, 6)
-        except Exception as exc:
-            row["error"] = str(exc)
-        out.append(row)
-    return out
+    return ocr_pages(ref, lambda: decode_image_pages(bytes(data)), cfg,
+                     prepare=to_gray)

@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import FIXTURE_JOB
+from .operators.rows import map_rows
 from .plans.pipeline import extract
 from .sources import synthetic as S
 
@@ -220,41 +220,26 @@ GROUP BY error_code
 def q_media_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed quality analyzer (A1-A5) over the media table vs the
     committed per-media golden metrics."""
-    media = S.media_df(spark, FLAGSHIP_CORPUS)
+    from .imaging.analyzer import analyze
+    from .imaging.png import decode_png
 
-    def analyze_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .imaging.analyzer import analyze
-        from .imaging.png import decode_png
+    def quality_row(ref, data):
+        q = analyze(decode_png(data), FIXTURE_JOB.preprocessing)
+        return [dict(
+            media_ref=ref, n_bytes=len(data),
+            sharpness=round(q.sharpness, 6),
+            contrast=round(q.contrast, 6),
+            brightness=round(q.brightness, 6),
+            needs_preprocessing=q.needs_preprocessing,
+            pipeline=",".join(q.suggested_pipeline),
+        )]
 
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                img = decode_png(bytes(data))
-                q = analyze(img, FIXTURE_JOB.preprocessing)
-                rows.append(
-                    dict(
-                        media_ref=ref,
-                        n_bytes=len(bytes(data)),
-                        sharpness=round(q.sharpness, 6),
-                        contrast=round(q.contrast, 6),
-                        brightness=round(q.brightness, 6),
-                        needs_preprocessing=q.needs_preprocessing,
-                        pipeline=",".join(q.suggested_pipeline),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "n_bytes", "sharpness", "contrast",
-                         "brightness", "needs_preprocessing", "pipeline"],
-            )
-
-    return media.mapInPandas(
-        analyze_map,
-        schema=(
-            "media_ref string, n_bytes long, sharpness double,"
-            " contrast double, brightness double,"
-            " needs_preprocessing boolean, pipeline string"
-        ),
+    return map_rows(
+        S.media_df(spark, FLAGSHIP_CORPUS), quality_row,
+        "media_ref string, n_bytes long, sharpness double,"
+        " contrast double, brightness double,"
+        " needs_preprocessing boolean, pipeline string",
+        "media_ref", "bytes",
     )
 
 
@@ -349,29 +334,16 @@ LAYOUT_META = os.path.join(FIXTURES, "layout_meta.parquet")
 def q_media_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed page-layout parse (imaging/layout.py): block/line/word
     segmentation with reading-order boxes, vs committed golden."""
-    media = S.media_df(spark, FLAGSHIP_CORPUS)
+    from .imaging.layout import layout_summary
+    from .imaging.png import decode_png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .imaging.layout import layout_summary
-        from .imaging.png import decode_png
-
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                s = layout_summary(decode_png(bytes(data)))
-                rows.append(dict(media_ref=ref, **s))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "n_blocks", "n_lines", "n_words",
-                         "first_block_y", "last_block_bottom"],
-            )
-
-    return media.mapInPandas(
-        run,
-        schema=(
-            "media_ref string, n_blocks long, n_lines long, n_words long,"
-            " first_block_y int, last_block_bottom int"
-        ),
+    return map_rows(
+        S.media_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: [
+            dict(media_ref=ref, **layout_summary(decode_png(data)))],
+        "media_ref string, n_blocks long, n_lines long, n_words long,"
+        " first_block_y int, last_block_bottom int",
+        "media_ref", "bytes",
     )
 
 
@@ -475,19 +447,10 @@ def q_media_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     (media_ocr.word_box_rows)."""
     from .operators.media_ocr import WORD_BOX_SCHEMA, word_box_rows
 
-    media = S.media_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "word_idx", "x", "y", "width", "height",
-                "text", "confidence"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(word_box_rows(ref, bytes(data), FIXTURE_JOB))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.select("media_ref", "bytes").mapInPandas(
-        run, schema=WORD_BOX_SCHEMA
+    return map_rows(
+        S.media_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: word_box_rows(ref, data, FIXTURE_JOB),
+        WORD_BOX_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -765,19 +728,9 @@ def q_warc_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting tiny string edges — same shape as warc_records."""
     from .functions.warc import WARC_REDIRECTS_SCHEMA, warc_redirect_rows
 
-    archives = S.warc_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_ref", "rec_idx", "url", "http_status",
-                "location", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["warc_ref"], pdf["bytes"]):
-                rows.extend(warc_redirect_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return archives.select("warc_ref", "bytes").mapInPandas(
-        run, schema=WARC_REDIRECTS_SCHEMA
+    return map_rows(
+        S.warc_df(spark, FLAGSHIP_CORPUS), warc_redirect_rows,
+        WARC_REDIRECTS_SCHEMA, "warc_ref", "bytes",
     )
 
 
@@ -806,19 +759,9 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings only, never file bytes."""
     from .functions.sitemap import SITEMAP_SCHEMA, sitemap_rows
 
-    maps = S.sitemap_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "entry_idx", "kind", "loc", "lastmod",
-                "changefreq", "priority", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(sitemap_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return maps.select("media_ref", "bytes").mapInPandas(
-        run, schema=SITEMAP_SCHEMA
+    return map_rows(
+        S.sitemap_df(spark, FLAGSHIP_CORPUS), sitemap_rows, SITEMAP_SCHEMA,
+        "media_ref", "bytes",
     )
 
 
@@ -847,19 +790,9 @@ def q_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     — map-side combinable, host keys are the natural crawl partition."""
     from .functions.sitemap import SITEMAP_SCHEMA, sitemap_rows
 
-    maps = S.sitemap_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "entry_idx", "kind", "loc", "lastmod",
-                "changefreq", "priority", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(sitemap_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    entries = maps.select("media_ref", "bytes").mapInPandas(
-        run, schema=SITEMAP_SCHEMA
+    entries = map_rows(
+        S.sitemap_df(spark, FLAGSHIP_CORPUS), sitemap_rows, SITEMAP_SCHEMA,
+        "media_ref", "bytes",
     ).filter((F.col("kind") == "urlset") & F.col("error").isNull())
     urls = entries.select(
         F.regexp_extract("loc", r"^https?://([^/?#]+)", 1).alias("host"),
@@ -926,19 +859,9 @@ def q_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     robots_verdict-style gates join (q_frontier_admission below)."""
     from .functions.robots import ROBOTS_SCHEMA, robots_rows
 
-    files = S.robots_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "row_idx", "kind", "agent", "allow",
-                "pattern", "regex", "sitemap_url", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(robots_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("media_ref", "bytes").mapInPandas(
-        run, schema=ROBOTS_SCHEMA
+    return map_rows(
+        S.robots_df(spark, FLAGSHIP_CORPUS), robots_rows, ROBOTS_SCHEMA,
+        "media_ref", "bytes",
     )
 
 
@@ -974,18 +897,8 @@ def q_frontier_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left-join misses
     files = S.robots_df(spark, FLAGSHIP_CORPUS)
 
-    def run_robots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "row_idx", "kind", "agent", "allow",
-                "pattern", "regex", "sitemap_url", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(robots_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
     rules = (
-        files.select("media_ref", "bytes")
-        .mapInPandas(run_robots, schema=ROBOTS_SCHEMA)
+        map_rows(files, robots_rows, ROBOTS_SCHEMA, "media_ref", "bytes")
         .filter(F.col("kind") == "rule")
         .groupBy(F.col("media_ref").alias("host"))
         .agg(F.sort_array(F.collect_list(F.struct(
@@ -994,18 +907,8 @@ def q_frontier_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     maps = S.sitemap_df(spark, FLAGSHIP_CORPUS)
 
-    def run_maps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "entry_idx", "kind", "loc", "lastmod",
-                "changefreq", "priority", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(sitemap_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
     urls = (
-        maps.select("media_ref", "bytes")
-        .mapInPandas(run_maps, schema=SITEMAP_SCHEMA)
+        map_rows(maps, sitemap_rows, SITEMAP_SCHEMA, "media_ref", "bytes")
         .filter((F.col("kind") == "urlset") & F.col("error").isNull())
         .select(
             "loc",
@@ -1078,19 +981,9 @@ def q_sitemap_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-count-sized)."""
     from .functions.sitemap import SITEMAP_SCHEMA, sitemap_rows
 
-    maps = S.sitemap_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "entry_idx", "kind", "loc", "lastmod",
-                "changefreq", "priority", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(sitemap_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    entries = maps.select("media_ref", "bytes").mapInPandas(
-        run, schema=SITEMAP_SCHEMA
+    entries = map_rows(
+        S.sitemap_df(spark, FLAGSHIP_CORPUS), sitemap_rows, SITEMAP_SCHEMA,
+        "media_ref", "bytes",
     )
     idx = entries.filter(F.col("kind") == "sitemapindex").select(
         F.col("media_ref").alias("index_ref"),
@@ -1142,19 +1035,9 @@ def q_feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to sitemap_urls."""
     from .functions.feeds import FEED_SCHEMA, feed_rows
 
-    feeds = S.feed_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "entry_idx", "kind", "title", "link",
-                "published", "guid", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(feed_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return feeds.select("media_ref", "bytes").mapInPandas(
-        run, schema=FEED_SCHEMA
+    return map_rows(
+        S.feed_df(spark, FLAGSHIP_CORPUS), feed_rows, FEED_SCHEMA,
+        "media_ref", "bytes",
     )
 
 
@@ -1181,35 +1064,19 @@ def q_discovery_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.sitemap import SITEMAP_SCHEMA, sitemap_rows
     from .functions.warc import WARC_REDIRECTS_SCHEMA, warc_redirect_rows
 
-    def fan(df, fn, schema, cols):
-        def run(batches):
-            for pdf in batches:
-                rows: list[dict] = []
-                for ref, data in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                    rows.extend(fn(ref, bytes(data)))
-                yield pd.DataFrame(rows, columns=cols)
-
-        return df.mapInPandas(run, schema=schema)
-
-    smap = fan(
-        S.sitemap_df(spark, FLAGSHIP_CORPUS).select("media_ref", "bytes"),
-        sitemap_rows, SITEMAP_SCHEMA,
-        ["media_ref", "entry_idx", "kind", "loc", "lastmod",
-         "changefreq", "priority", "error"],
+    smap = map_rows(
+        S.sitemap_df(spark, FLAGSHIP_CORPUS), sitemap_rows, SITEMAP_SCHEMA,
+        "media_ref", "bytes",
     ).filter((F.col("kind") == "urlset") & F.col("error").isNull()) \
      .select(F.lit("sitemap").alias("source"), F.col("loc").alias("url"))
-    feed = fan(
-        S.feed_df(spark, FLAGSHIP_CORPUS).select("media_ref", "bytes"),
-        feed_rows, FEED_SCHEMA,
-        ["media_ref", "entry_idx", "kind", "title", "link",
-         "published", "guid", "error"],
+    feed = map_rows(
+        S.feed_df(spark, FLAGSHIP_CORPUS), feed_rows, FEED_SCHEMA,
+        "media_ref", "bytes",
     ).filter(F.col("link").isNotNull()) \
      .select(F.lit("feed").alias("source"), F.col("link").alias("url"))
-    redir = fan(
-        S.warc_df(spark, FLAGSHIP_CORPUS).select("warc_ref", "bytes"),
-        warc_redirect_rows, WARC_REDIRECTS_SCHEMA,
-        ["warc_ref", "rec_idx", "url", "http_status", "location",
-         "error"],
+    redir = map_rows(
+        S.warc_df(spark, FLAGSHIP_CORPUS), warc_redirect_rows,
+        WARC_REDIRECTS_SCHEMA, "warc_ref", "bytes",
     ).filter(F.col("location").isNotNull()) \
      .select(F.lit("redirect").alias("source"),
              F.col("location").alias("url"))
@@ -1432,18 +1299,10 @@ def q_pdf_scan_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo); rows never carry pixels, only extracted text."""
     from .operators.media_ocr import SCAN_PDF_SCHEMA, scan_pdf_rows
 
-    pdfs = S.scan_pdf_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "page_idx", "text", "confidence", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(scan_pdf_rows(ref, bytes(data), FIXTURE_JOB))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pdfs.select("media_ref", "bytes").mapInPandas(
-        run, schema=SCAN_PDF_SCHEMA
+    return map_rows(
+        S.scan_pdf_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: scan_pdf_rows(ref, data, FIXTURE_JOB),
+        SCAN_PDF_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -1475,19 +1334,9 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     document, no cross-document state)."""
     from .functions.pdf import PDF_LAYOUT_SCHEMA, pdf_layout_rows
 
-    docs = S.layout_pdf_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "page_idx", "line_idx", "x", "y", "text",
-                "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(pdf_layout_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("media_ref", "bytes").mapInPandas(
-        run, schema=PDF_LAYOUT_SCHEMA
+    return map_rows(
+        S.layout_pdf_df(spark, FLAGSHIP_CORPUS), pdf_layout_rows,
+        PDF_LAYOUT_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -1517,19 +1366,9 @@ def q_pdf_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     object table, no raster or content-stream work."""
     from .functions.pdf import PDF_INFO_SCHEMA, pdf_info_rows
 
-    docs = S.pdf_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "title", "author", "subject", "producer",
-                "created", "n_pages", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(pdf_info_rows(ref, bytes(data)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("media_ref", "bytes").mapInPandas(
-        run, schema=PDF_INFO_SCHEMA
+    return map_rows(
+        S.pdf_df(spark, FLAGSHIP_CORPUS), pdf_info_rows, PDF_INFO_SCHEMA,
+        "media_ref", "bytes",
     )
 
 
@@ -1564,18 +1403,10 @@ def q_pdf_render_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     media work unit); rows never carry pixels, only extracted text."""
     from .operators.media_ocr import RENDER_PDF_SCHEMA, render_pdf_rows
 
-    pdfs = S.comp_pdf_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "page_idx", "text", "confidence", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(render_pdf_rows(ref, bytes(data), FIXTURE_JOB))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pdfs.select("media_ref", "bytes").mapInPandas(
-        run, schema=RENDER_PDF_SCHEMA
+    return map_rows(
+        S.comp_pdf_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: render_pdf_rows(ref, data, FIXTURE_JOB),
+        RENDER_PDF_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -1609,20 +1440,10 @@ def q_scan_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         scan_inventory_row,
     )
 
-    scans = S.scan_format_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "format", "n_pages", "width", "height",
-                "channels", "error"]
-        for pdf in batches:
-            rows = [
-                scan_inventory_row(ref, bytes(data))
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return scans.select("media_ref", "bytes").mapInPandas(
-        run, schema=SCAN_INVENTORY_SCHEMA
+    return map_rows(
+        S.scan_format_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: [scan_inventory_row(ref, data)],
+        SCAN_INVENTORY_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -1649,19 +1470,10 @@ def q_scan_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     media kind."""
     from .operators.media_ocr import SCAN_PDF_SCHEMA, scan_image_ocr_rows
 
-    scans = S.scan_format_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "page_idx", "text", "confidence", "error"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                rows.extend(scan_image_ocr_rows(ref, bytes(data),
-                                                FIXTURE_JOB))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return scans.select("media_ref", "bytes").mapInPandas(
-        run, schema=SCAN_PDF_SCHEMA
+    return map_rows(
+        S.scan_format_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: scan_image_ocr_rows(ref, data, FIXTURE_JOB),
+        SCAN_PDF_SCHEMA, "media_ref", "bytes",
     )
 
 
@@ -1690,20 +1502,10 @@ def q_scan_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         scan_inventory_row,
     )
 
-    scans = S.scan_format_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_ref", "format", "n_pages", "width", "height",
-                "channels", "error"]
-        for pdf in batches:
-            rows = [
-                scan_inventory_row(ref, bytes(data))
-                for ref, data in zip(pdf["media_ref"], pdf["bytes"])
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    inv = scans.select("media_ref", "bytes").mapInPandas(
-        run, schema=SCAN_INVENTORY_SCHEMA
+    inv = map_rows(
+        S.scan_format_df(spark, FLAGSHIP_CORPUS),
+        lambda ref, data: [scan_inventory_row(ref, data)],
+        SCAN_INVENTORY_SCHEMA, "media_ref", "bytes",
     )
     return (
         inv.groupBy(
@@ -1828,18 +1630,11 @@ def q_html_main_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     with editorial golden spans, same plan."""
     from .functions.text_extract import main_content_eval_row
 
-    docs = S.html_eval_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                main_content_eval_row(d, c, h, g)
-                for d, c, h, g in zip(pdf["doc_id"], pdf["cls"],
-                                      pdf["html"], pdf["golden"])
-            ]
-            yield pd.DataFrame(rows, columns=HTML_EVAL_COLS)
-
-    per_doc = docs.mapInPandas(run, schema=HTML_EVAL_ROW_SCHEMA)
+    per_doc = map_rows(
+        S.html_eval_df(spark, FLAGSHIP_CORPUS),
+        lambda *row: [main_content_eval_row(*row)],
+        HTML_EVAL_ROW_SCHEMA, "doc_id", "cls", "html", "golden",
+    )
     return per_doc.groupBy("cls").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.round(F.avg("flat_precision"), 6).alias("flat_precision"),
@@ -1890,21 +1685,11 @@ def q_html_main_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle — same plan family as extract_spans' html branch."""
     from .functions.markdown import markdown_eval_row
 
-    docs = S.html_md_df(spark, FLAGSHIP_CORPUS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                markdown_eval_row(d, c, h, g)
-                for d, c, h, g in zip(pdf["doc_id"], pdf["cls"],
-                                      pdf["html"], pdf["golden"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "cls", "exact", "md_md5",
-                               "n_blocks", "n_chars"]
-            )
-
-    return docs.mapInPandas(run, schema=HTML_MD_ROW_SCHEMA)
+    return map_rows(
+        S.html_md_df(spark, FLAGSHIP_CORPUS),
+        lambda *row: [markdown_eval_row(*row)],
+        HTML_MD_ROW_SCHEMA, "doc_id", "cls", "html", "golden",
+    )
 
 
 SUBTITLE_GOLDEN = os.path.join(FIXTURES, "subtitle_cues.parquet")
@@ -1925,24 +1710,16 @@ def q_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one row-local Arrow-batch pass, zero shuffle."""
     from .functions.subtitles import subtitle_rows
 
-    docs = S.subtitle_df(spark, FLAGSHIP_CORPUS)
-    cols = ["media_ref", "format", "cue_idx", "start_s", "end_s",
-            "text", "has_error"]
+    def cue_rows(ref, data):
+        for r in subtitle_rows(ref, data):
+            r["has_error"] = r.pop("error") is not None
+            yield r
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, data in zip(pdf["media_ref"], pdf["bytes"]):
-                for r in subtitle_rows(ref, bytes(data)):
-                    r["has_error"] = r.pop("error") is not None
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("media_ref", "bytes").mapInPandas(
-        run,
-        schema=("media_ref string, format string, cue_idx int,"
-                " start_s double, end_s double, text string,"
-                " has_error boolean"),
+    return map_rows(
+        S.subtitle_df(spark, FLAGSHIP_CORPUS), cue_rows,
+        "media_ref string, format string, cue_idx int, start_s double,"
+        " end_s double, text string, has_error boolean",
+        "media_ref", "bytes",
     )
 
 
@@ -1973,26 +1750,14 @@ def q_html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract_spans html-branch plan family."""
     from .functions.dom import extract_html_metadata
 
-    docs = S.html_meta_df(spark, FLAGSHIP_CORPUS)
-    out_cols = ["page_id", "cls", "title", "description", "canonical",
-                "og_title", "og_type", "lang", "jsonld_types",
-                "n_meta"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pid, cls, html in zip(pdf["page_id"], pdf["cls"],
-                                      pdf["html"]):
-                m = extract_html_metadata(html)
-                rows.append(dict(page_id=pid, cls=cls, **m))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return docs.mapInPandas(
-        run,
-        schema=("page_id string, cls string, title string,"
-                " description string, canonical string,"
-                " og_title string, og_type string, lang string,"
-                " jsonld_types string, n_meta int"),
+    return map_rows(
+        S.html_meta_df(spark, FLAGSHIP_CORPUS),
+        lambda pid, cls, html: [
+            dict(page_id=pid, cls=cls, **extract_html_metadata(html))],
+        "page_id string, cls string, title string, description string,"
+        " canonical string, og_title string, og_type string, lang string,"
+        " jsonld_types string, n_meta int",
+        "page_id", "cls", "html",
     )
 
 

@@ -37,16 +37,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import lru_cache
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from ..config import FILE_NOT_FOUND, IMAGE_TOO_LARGE, DEFAULT_CONFIG, JobConfig
 from ..imaging import kernels
 from ..imaging.analyzer import preprocess
 from ..imaging.font import render_text
 from ..imaging.png import encode_png
+from ..operators.rows import map_rows
 
 # ---------------------------------------------------------------------------
 # configuration
@@ -370,15 +369,8 @@ HTML_EVAL_SCHEMA = "doc_id string, cls string, html string, golden string"
 
 
 def html_eval_df(spark, cfg: CorpusConfig, n: int = N_HTML_EVAL_DOCS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [html_eval_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "cls", "html", "golden"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=HTML_EVAL_SCHEMA
-    )
+    return _generated_df(spark, n, 4, HTML_EVAL_SCHEMA,
+                         lambda j: [html_eval_item(cfg, j)])
 
 
 # --- structured-markdown corpus (functions/markdown.py eval) ---------------
@@ -502,15 +494,8 @@ HTML_MD_SCHEMA = "doc_id string, cls string, html string, golden string"
 
 
 def html_md_df(spark, cfg: CorpusConfig, n: int = N_HTML_MD_DOCS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [html_md_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "cls", "html", "golden"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=HTML_MD_SCHEMA
-    )
+    return _generated_df(spark, n, 4, HTML_MD_SCHEMA,
+                         lambda j: [html_md_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -534,11 +519,6 @@ HTML_META_SCHEMA = (
     " description string, canonical string, og_title string,"
     " og_type string, lang string, jsonld_types string, n_meta int"
 )
-
-_HTML_META_COLS = [
-    "page_id", "cls", "html", "title", "description", "canonical",
-    "og_title", "og_type", "lang", "jsonld_types", "n_meta",
-]
 
 
 def html_meta_item(cfg: CorpusConfig, j: int) -> tuple:
@@ -626,14 +606,8 @@ def html_meta_item(cfg: CorpusConfig, j: int) -> tuple:
 
 
 def html_meta_df(spark, cfg: CorpusConfig, n: int = N_HTML_META_DOCS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [html_meta_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=_HTML_META_COLS)
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=HTML_META_SCHEMA
-    )
+    return _generated_df(spark, n, 4, HTML_META_SCHEMA,
+                         lambda j: [html_meta_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -777,15 +751,8 @@ def subtitle_item(
 
 
 def subtitle_df(spark, cfg: CorpusConfig, n: int = N_SUBTITLE_FILES):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [subtitle_item(cfg, int(j))[:3] for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=SUBTITLE_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, SUBTITLE_MEDIA_SCHEMA,
+                         lambda j: [subtitle_item(cfg, j)[:3]])
 
 
 # ---------------------------------------------------------------------------
@@ -908,6 +875,14 @@ def expected_rows(cfg: CorpusConfig, job: JobConfig, i: int) -> list[dict]:
 # Spark-distributed materialization (mapInPandas over spark.range — no
 # driver-side generation, no shuffle; scales to any n_docs)
 
+def _generated_df(spark, n: int, n_parts: int, schema: str, rows_of):
+    """`rows_of(j)` for every generator index j in range(n), one Spark
+    row stage over `spark.range`: every row is a pure function of
+    (cfg, j), so the partitioning never changes the corpus."""
+    return map_rows(spark.range(0, n, numPartitions=n_parts),
+                    lambda j: rows_of(int(j)), schema, "id")
+
+
 DOCS_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,"
     "media_ref:string,offset:int>>"
@@ -936,22 +911,13 @@ def b64_media_item(cfg: CorpusConfig, j: int) -> tuple[str, str, bool]:
 
 
 def b64_media_df(spark, cfg: CorpusConfig):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                b64_media_item(cfg, int(j))
-                for j in pdf["id"]
-                if media_exists(cfg, int(j))
-            ]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "data_b64", "corrupted"]
-            )
-
     n = cfg.media_universe
-    n_parts = max(4, min(256, n // 32 or 4))
-    return spark.range(0, n, numPartitions=n_parts).mapInPandas(
-        gen, schema=B64_MEDIA_SCHEMA
+    return _generated_df(
+        spark, n, max(4, min(256, n // 32 or 4)), B64_MEDIA_SCHEMA,
+        lambda j: [b64_media_item(cfg, j)] if media_exists(cfg, j) else [],
     )
+
+
 EXPECTED_SCHEMA = (
     "doc_id string, order int, kind string, media_ref string, text string, "
     "confidence double, language string, error_code string"
@@ -959,60 +925,27 @@ EXPECTED_SCHEMA = (
 
 
 def docs_df(spark, cfg: CorpusConfig):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                doc_id, spans = doc_item(cfg, int(i))
-                rows.append(
-                    (doc_id,
-                     [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                      for s in spans])
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
+    def doc_row(i: int) -> list[tuple]:
+        doc_id, spans = doc_item(cfg, i)
+        return [(doc_id, [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                          for s in spans])]
 
     n_parts = max(4, min(256, cfg.n_docs // 64 or 4))
-    return (
-        spark.range(0, cfg.n_docs, numPartitions=n_parts)
-        .mapInPandas(gen, schema=DOCS_SCHEMA)
-    )
+    return _generated_df(spark, cfg.n_docs, n_parts, DOCS_SCHEMA, doc_row)
 
 
 def media_df(spark, cfg: CorpusConfig):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                media_item(cfg, int(j))
-                for j in pdf["id"]
-                if media_exists(cfg, int(j))
-            ]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "bytes", "degradation", "true_text"]
-            )
-
     n = cfg.media_universe
-    n_parts = max(4, min(256, n // 32 or 4))
-    return spark.range(0, n, numPartitions=n_parts).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
+    return _generated_df(
+        spark, n, max(4, min(256, n // 32 or 4)), MEDIA_SCHEMA,
+        lambda j: [media_item(cfg, j)] if media_exists(cfg, j) else [],
     )
 
 
 def expected_df(spark, cfg: CorpusConfig, job: JobConfig = DEFAULT_CONFIG):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for i in pdf["id"]:
-                rows.extend(expected_rows(cfg, job, int(i)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "order", "kind", "media_ref", "text",
-                         "confidence", "language", "error_code"],
-            )
-
     n_parts = max(4, min(256, cfg.n_docs // 64 or 4))
-    return spark.range(0, cfg.n_docs, numPartitions=n_parts).mapInPandas(
-        gen, schema=EXPECTED_SCHEMA
-    )
+    return _generated_df(spark, cfg.n_docs, n_parts, EXPECTED_SCHEMA,
+                         lambda i: expected_rows(cfg, job, i))
 
 
 # ---------------------------------------------------------------------------
@@ -1125,14 +1058,8 @@ def audio_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
 
 
 def audio_df(spark, cfg: CorpusConfig, n: int = N_AUDIO_CLIPS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [audio_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, AUDIO_MEDIA_SCHEMA,
+                         lambda j: [audio_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -1344,14 +1271,8 @@ def sniff_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
 
 
 def sniff_df(spark, cfg: CorpusConfig, n: int = N_SNIFF_CLIPS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [sniff_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=AUDIO_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, AUDIO_MEDIA_SCHEMA,
+                         lambda j: [sniff_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -1495,14 +1416,8 @@ def video_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
 
 
 def video_df(spark, cfg: CorpusConfig, n: int = N_VIDEO_CLIPS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [video_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=VIDEO_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, VIDEO_MEDIA_SCHEMA,
+                         lambda j: [video_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -1587,14 +1502,8 @@ def video_sniff_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
 
 
 def video_sniff_df(spark, cfg: CorpusConfig, n: int = N_VIDEO_SNIFF_CLIPS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [video_sniff_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=VIDEO_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, VIDEO_MEDIA_SCHEMA,
+                         lambda j: [video_sniff_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -1761,14 +1670,8 @@ def scan_format_item(
 
 
 def scan_format_df(spark, cfg: CorpusConfig, n: int = N_SCAN_IMAGES):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [scan_format_item(cfg, int(j))[:3] for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=SCAN_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, SCAN_MEDIA_SCHEMA,
+                         lambda j: [scan_format_item(cfg, j)[:3]])
 
 
 # ---------------------------------------------------------------------------
@@ -1930,15 +1833,9 @@ def warc_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
 
 
 def warc_df(spark, cfg: CorpusConfig, n: int = N_WARC_FILES):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [warc_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["warc_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema="warc_ref string, bytes binary, kind string"
-    )
+    return _generated_df(spark, n, 4,
+                         "warc_ref string, bytes binary, kind string",
+                         lambda j: [warc_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -2603,14 +2500,8 @@ def pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
 
 
 def pdf_df(spark, cfg: CorpusConfig, n: int = N_PDF_DOCS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [pdf_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=PDF_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, PDF_MEDIA_SCHEMA,
+                         lambda j: [pdf_item(cfg, j)])
 
 
 INTERLEAVED_CORPUS = CorpusConfig(n_docs=60, p_pdf=0.35)
@@ -2863,17 +2754,8 @@ SCAN_PDF_SCHEMA = (
 
 
 def scan_pdf_df(spark, cfg: CorpusConfig, n: int = N_SCAN_PDFS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [scan_pdf_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "bytes", "kind", "true_text"],
-            )
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=SCAN_PDF_SCHEMA
-    )
+    return _generated_df(spark, n, 4, SCAN_PDF_SCHEMA,
+                         lambda j: [scan_pdf_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -3001,16 +2883,8 @@ LAYOUT_PDF_SCHEMA = "media_ref string, bytes binary, kind string"
 
 
 def layout_pdf_df(spark, cfg: CorpusConfig, n: int = N_LAYOUT_PDFS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [layout_pdf_item(cfg, int(j))[:3] for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "bytes", "kind"]
-            )
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=LAYOUT_PDF_SCHEMA
-    )
+    return _generated_df(spark, n, 4, LAYOUT_PDF_SCHEMA,
+                         lambda j: [layout_pdf_item(cfg, j)[:3]])
 
 
 # ---------------------------------------------------------------------------
@@ -3094,15 +2968,8 @@ SITEMAP_MEDIA_SCHEMA = "media_ref string, bytes binary, kind string"
 
 
 def sitemap_df(spark, cfg: CorpusConfig, n: int = N_SITEMAPS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [sitemap_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=SITEMAP_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 4, SITEMAP_MEDIA_SCHEMA,
+                         lambda j: [sitemap_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -3196,15 +3063,8 @@ ROBOTS_MEDIA_SCHEMA = "media_ref string, bytes binary, kind string"
 
 
 def robots_df(spark, cfg: CorpusConfig, n: int = N_ROBOTS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [robots_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=2).mapInPandas(
-        gen, schema=ROBOTS_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 2, ROBOTS_MEDIA_SCHEMA,
+                         lambda j: [robots_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -3266,15 +3126,8 @@ FEED_MEDIA_SCHEMA = "media_ref string, bytes binary, kind string"
 
 
 def feed_df(spark, cfg: CorpusConfig, n: int = N_FEEDS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [feed_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "bytes", "kind"])
-
-    return spark.range(0, n, numPartitions=2).mapInPandas(
-        gen, schema=FEED_MEDIA_SCHEMA
-    )
+    return _generated_df(spark, n, 2, FEED_MEDIA_SCHEMA,
+                         lambda j: [feed_item(cfg, j)])
 
 
 # ---------------------------------------------------------------------------
@@ -3662,14 +3515,5 @@ COMP_PDF_SCHEMA = (
 
 
 def comp_pdf_df(spark, cfg: CorpusConfig, n: int = N_COMP_PDFS):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [comp_pdf_item(cfg, int(j)) for j in pdf["id"]]
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "bytes", "kind", "true_text"],
-            )
-
-    return spark.range(0, n, numPartitions=4).mapInPandas(
-        gen, schema=COMP_PDF_SCHEMA
-    )
+    return _generated_df(spark, n, 4, COMP_PDF_SCHEMA,
+                         lambda j: [comp_pdf_item(cfg, j)])

@@ -994,3 +994,52 @@ def test_aes_corpus_class_extracts_clean_text():
         joined = "\n".join(extract_pdf_text(data))
         assert joined and all(c.isascii() for c in joined)
     assert seen >= 2
+
+
+def test_indirect_filter_refuses_not_raw_bytes():
+    """A stream whose /Filter is an indirect reference (bare or inside
+    the array) is refused by name: read as unfiltered, its compressed
+    bytes would pass for decoded content."""
+    from mcp_ocr_server_spark.functions.pdf import pdf_text_row
+
+    data = make_pdf(PAGES, compress=True)
+    assert pdf_text_row("ok", data)["error"] is None
+    for ref in (b"/Filter 9 0 R", b"/Filter [9 0 R]"):
+        row = pdf_text_row("r", data.replace(b"/Filter /FlateDecode", ref))
+        assert row["text"] is None
+        assert "indirect /Filter" in row["error"]
+
+
+def test_smask_reference_cycle_refuses():
+    """An image /SMask chain that returns to an object already being
+    decoded is a named ValueError, never a RecursionError: the image
+    masking itself, an image and its mask referencing each other, and
+    two masks referencing each other."""
+    import numpy as np
+
+    from mcp_ocr_server_spark.functions.pdf import (
+        _decode_image_xobject, _Obj, extract_pdf_page_rasters)
+    from mcp_ocr_server_spark.sources.synthetic import (
+        make_scanned_pdf_bytes)
+
+    data = make_scanned_pdf_bytes([np.full((4, 4), 200, np.uint8)],
+                                  variant="smask", flate=False)
+    assert b"4 0 obj\n<< /Subtype /Image" in data
+    assert b"/SMask 6 0 R" in data
+    (page,) = extract_pdf_page_rasters(data)
+    assert page.shape == (4, 4)
+    self_ref = data.replace(b"/SMask 6 0 R", b"/SMask 4 0 R")
+    mutual = data.replace(b"/BitsPerComponent 8 /Filter",
+                          b"/BitsPerComponent 8 /SMask 4 0 R /Filter")
+    assert self_ref != data != mutual
+    for bad in (self_ref, mutual):
+        with pytest.raises(ValueError, match="/SMask reference cycle"):
+            extract_pdf_page_rasters(bad)
+
+    gray = (b"<< /Subtype /Image /Width 4 /Height 4"
+            b" /ColorSpace /DeviceGray /BitsPerComponent 8")
+    masks = {8: _Obj(gray + b" /SMask 9 0 R >>", bytes(16)),
+             9: _Obj(gray + b" /SMask 8 0 R >>", bytes(16))}
+    with pytest.raises(ValueError, match="/SMask reference cycle"):
+        _decode_image_xobject(_Obj(gray + b" /SMask 8 0 R >>", bytes(16)),
+                              masks)
