@@ -383,14 +383,18 @@ def parse_mp4_frames(data: bytes) -> list[bytes]:
     if not sizes or not stsc or not stco:
         raise ValueError("mp4: video track has no sample tables")
     # expand stsc runs: entry i applies from first_chunk_i (1-based)
-    # up to the next entry's first_chunk
+    # up to the next entry's first_chunk, so one forward pointer walks
+    # the runs alongside the chunks (ISO/IEC 14496-12 8.7.4 requires
+    # strictly increasing first_chunk)
+    if any(a[0] >= b[0] for a, b in zip(stsc, stsc[1:])):
+        raise ValueError("mp4: stsc first_chunk not strictly increasing")
     frames: list[bytes] = []
     si = 0
+    run = -1
     for ci, off in enumerate(stco):
-        per_chunk = 0
-        for first, spc in stsc:
-            if ci + 1 >= first:
-                per_chunk = spc
+        while run + 1 < len(stsc) and stsc[run + 1][0] <= ci + 1:
+            run += 1
+        per_chunk = stsc[run][1] if run >= 0 else 0
         pos = off
         for _ in range(per_chunk):
             if si >= len(sizes):

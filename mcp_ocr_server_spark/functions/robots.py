@@ -145,12 +145,9 @@ def admission_fold():
     array (struct<…, pattern, regex, allow>) against a `path` column:
     regex matching via the translation above, longest-PATTERN
     precedence, allow wins exact ties, empty path matches as '/'.
-    Shared verbatim by the batch composition
-    (queries.q_frontier_admission) and the streaming gate
-    (streaming.url_admission.streaming_frontier_admission) so the two
-    consumers can never drift — the factoring discipline
-    robots_verdict/host_path_of already follow.  Aggregates nothing,
-    so it is legal inside an append-mode streaming query."""
+    One expression so queries.q_frontier_admission and its unit test
+    (test_robots.py) run the same fold.  Aggregates nothing: the
+    verdict is a projection after the broadcast rules join."""
     from pyspark.sql import functions as F
 
     return F.expr(

@@ -776,11 +776,11 @@ FROM read_parquet('{SITEMAP_GOLDEN}')
 def q_sitemap_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frontier admission per host: the composition a crawler runs on
     sitemap-discovered URLs BEFORE fetching — leaf-urlset locs ->
-    (host, path) -> the SAME RFC 9309 robots gate the url family and
-    the streaming admission operator use (robots_verdict: broadcast
-    rules join + row-local longest-match fold) -> per-host rollup of
-    distinct URLs, how many the site's own robots rules admit, and the
-    scheduling-hint coverage (share of entries carrying lastmod).
+    (host, path) -> the SAME RFC 9309 robots gate q_url_robots uses
+    (robots_verdict: broadcast rules join + row-local longest-match
+    fold) -> per-host rollup of distinct URLs, how many the site's own
+    robots rules admit, and the scheduling-hint coverage (share of
+    entries carrying lastmod).
 
     Correctness-only by the warc_charsets convention (it re-runs the
     sitemap fan-out bench already times as sitemap_urls).
@@ -3843,10 +3843,7 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch_us — timezone-free, no float truncation, Spark-4-ANSI-safe
     where a TIMESTAMP_NTZ -> DOUBLE cast is not).  A gap of EXACTLY
     the threshold starts a new session (>=): that matches the built-in
-    session_window's half-open [start, last_event + gap) windows, so
-    the STREAMING twin streaming/stream_extract.sessionize_stream
-    (session_window + watermark, state bounded by the watermark) has
-    identical semantics at the boundary too."""
+    session_window's half-open [start, last_event + gap) windows."""
     from pyspark.sql import Window
 
     gap_us = int(SESSION_GAP_S * 1_000_000)
@@ -6664,8 +6661,8 @@ def url_canonical(col: str):
     any other scheme (ftp, mailto, relative paths) passes through
     UNCHANGED rather than collapsing to a degenerate shared key (the
     round-4 review found the https-only extractor mapped every non-https
-    URL to the single key 'https://', which would make a streaming
-    admission gate silently drop all but one of them).
+    URL to the single key 'https://', which would make q_url_dedup
+    silently keep only one of them).
 
     Rule order is load-bearing: fragment → tracking params → repair a
     leading '&' the strip may have exposed ('?utm_x=1&id=2' →
@@ -6674,7 +6671,8 @@ def url_canonical(col: str):
     end ('//' included — one slash was the round-4 review's
     idempotence counterexample).  Idempotent: canon(canon(u)) ==
     canon(u), pinned by test_curation.py.  Factored so tests and the
-    streaming admission consumer share the exact shipped rules.
+    three URL queries (q_url_dedup, q_url_blocklist, q_url_robots)
+    share the exact shipped rules.
 
     Known heuristic limit (documented, not silent): the '&'→'?' repair
     assumes a query-less path never contains a literal unencoded '&';
@@ -6937,26 +6935,14 @@ def robots_rules_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def host_path_of(curl):
-    """(host, path) Columns from a canonical URL Column — shared by
-    q_url_robots and the streaming robots gate so the verdict's two
-    consumers can never drift on extraction rules.  Non-web schemes
-    yield host '' (robots out of scope)."""
-    col = F.col(curl) if isinstance(curl, str) else curl
-    return (
-        F.regexp_extract(col, r"^https?://([^/?#]+)", 1),
-        F.regexp_extract(col, r"^https?://[^/?#]+([^?#]*)", 1),
-    )
-
-
 def robots_verdict(urls: DataFrame) -> DataFrame:
     """RFC 9309 verdict columns (allowed, matched_rule) appended to a
     (host, path, ...) DataFrame.  One broadcast equi-join on the
     rule-set key brings each host's rules ARRAY onto the row; the
     longest-match + allow-wins-ties winner is then a row-local
     filter/transform/array_max fold over that array — NO aggregation,
-    NO window, which also makes this gate legal inside a streaming
-    query (streaming_robots_admission reuses it verbatim).  Structs
+    NO window.  Shared by q_url_robots and q_sitemap_frontier so the
+    two gates can never drift on RFC 9309 rules.  Structs
     compare lexicographically by field, so array_max over
     (score, allow, prefix) IS the arg-max; higher-order functions
     propagate a NULL rules array to a NULL winner, which coalesces to
@@ -7009,16 +6995,17 @@ def q_url_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     production scale the key is the host itself against the fetched
     robots store, rules arrays KB-sized by construction) and resolves
     the winner with a row-local array fold: no per-rule row fan-out,
-    no groupBy, no window — one projection after the join.  The same
-    verdict function runs unchanged inside the streaming admission
-    gate (streaming/url_admission.py), where a groupBy formulation
-    would be illegal in append mode."""
+    no groupBy, no window — one projection after the join.  Non-web
+    schemes yield host '' (robots out of scope)."""
     aug = _url_augment(
         _t(spark, sf_dir, "documents").select("doc_id", "source")
     )
-    host, path = host_path_of(url_canonical("url"))
+    curl = url_canonical("url")
     urls = aug.select(
-        "doc_id", host.alias("host"), path.alias("path")
+        "doc_id",
+        F.regexp_extract(curl, r"^https?://([^/?#]+)", 1).alias("host"),
+        F.regexp_extract(curl, r"^https?://[^/?#]+([^?#]*)", 1)
+        .alias("path"),
     )
     return robots_verdict(urls).select(
         "doc_id", "host", "path", "allowed", "matched_rule"
@@ -7906,33 +7893,6 @@ def _bloom_pos(col, j: int):
     )
 
 
-def bloom_bits(ev: DataFrame):
-    """Numpy bitset (BLOOM_M bits, BLOOM_K md5 positions per key) for
-    an eval shingle set `ev` (one `shingle` column).  The collect is of
-    DISTINCT bit positions — bounded by min(k*|ev|, BLOOM_M), never
-    corpus-sized.  Shared by the batch query and the streaming twin
-    (streaming/decon.py): train once, broadcast everywhere."""
-    import numpy as np
-
-    pos_rows = (
-        ev.select(
-            F.explode(
-                F.array(*[_bloom_pos(F.col("shingle"), j)
-                          for j in range(BLOOM_K)])
-            ).alias("pos")
-        )
-        .distinct()
-        .collect()
-    )
-    bits = np.zeros(BLOOM_M >> 3, dtype=np.uint8)
-    if pos_rows:
-        pos = np.fromiter((r["pos"] for r in pos_rows), dtype=np.int64)
-        np.bitwise_or.at(
-            bits, pos >> 3, (1 << (pos & 7).astype(np.uint8)).astype(np.uint8)
-        )
-    return bits
-
-
 def bloom_survivors(corpus_sh: DataFrame, bc) -> DataFrame:
     """(doc_id, shingle) rows whose BLOOM_K md5 positions are all set in
     the broadcast bitset `bc` — positions computed JVM-side (codegen),
@@ -7978,29 +7938,35 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, re-derived relationally in DuckDB (positions IN the
     set-bit table), so the bloom itself is value-checked, not just the
     confirmed counts."""
+    import numpy as np
+
     docs = _t(spark, sf_dir, "documents")
     ev = (
         _shingles_spark(docs.filter(F.col("doc_id") % 7 == 0), 8)
         .select("shingle").distinct()
     )
-    bc = spark.sparkContext.broadcast(bloom_bits(ev))
-    corpus = _shingles_spark(docs.filter(F.col("doc_id") % 7 != 0), 8)
-    return bloom_screen(
-        corpus, bc, F.broadcast(ev.withColumn("is_eval", F.lit(1)))
+    pos_rows = (
+        ev.select(
+            F.explode(
+                F.array(*[_bloom_pos(F.col("shingle"), j)
+                          for j in range(BLOOM_K)])
+            ).alias("pos")
+        )
+        .distinct()
+        .collect()
     )
-
-
-def bloom_screen(shingled: DataFrame, bc, ev_flagged: DataFrame) -> DataFrame:
-    """The screen body SHARED by q_decontaminate_bloom and the
-    streaming twin (streaming/decon.py): bitset-probe the (doc_id,
-    shingle) stream, exact-confirm survivors against `ev_flagged`
-    (shingle, is_eval=1 — caller chooses broadcast/persist), roll up
-    per doc.  One definition so the stream-equals-batch contract is
-    enforced by construction, not only by the parity test (round-4
-    review: the two bodies were copy-pasted and could drift)."""
-    probed = bloom_survivors(shingled, bc)
+    bits = np.zeros(BLOOM_M >> 3, dtype=np.uint8)
+    if pos_rows:
+        pos = np.fromiter((r["pos"] for r in pos_rows), dtype=np.int64)
+        np.bitwise_or.at(
+            bits, pos >> 3, (1 << (pos & 7).astype(np.uint8)).astype(np.uint8)
+        )
+    bc = spark.sparkContext.broadcast(bits)
+    corpus = _shingles_spark(docs.filter(F.col("doc_id") % 7 != 0), 8)
+    ev_flagged = F.broadcast(ev.withColumn("is_eval", F.lit(1)))
     return (
-        probed.join(ev_flagged, "shingle", "left")
+        bloom_survivors(corpus, bc)
+        .join(ev_flagged, "shingle", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bloom_hits"),
@@ -8044,8 +8010,7 @@ FROM hits GROUP BY doc_id
 # 5. windowed + relational sanity
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event aggregation (the batch shape of the
-    streaming path in streaming/)."""
+    """Tumbling 1-hour event aggregation."""
     return (
         _t(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -8185,12 +8150,12 @@ def q_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-k is `orderBy().limit(k)` — Catalyst compiles it to
     `TakeOrderedAndProject` (per-partition heap + k-row merge at the
     driver), so no row ever funnels through a single-partition global
-    window.  Rank is stamped afterwards on the k survivors only; the
-    constant partition key keeps the window spec non-empty (10 rows in
-    one task is the intent, not an accident)."""
+    window.  Rank is stamped afterwards on the k survivors only, with
+    no window at all: one aggregate collects them into an array sorted
+    by the same (revenue desc, suppkey asc) key, and posexplode numbers
+    its elements."""
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
-    from pyspark.sql import Window
 
     rev = (
         li.groupBy("l_suppkey")
@@ -8206,13 +8171,18 @@ def q_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         rev.l_suppkey == F.col("s_suppkey"),
     )
     top = joined.orderBy(F.desc("revenue"), F.asc("l_suppkey")).limit(10)
-    w = Window.partitionBy(F.lit(0)).orderBy(F.desc("revenue"), F.asc("l_suppkey"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        F.col("rank").cast("int").alias("rank"),
-        F.col("l_suppkey").alias("suppkey"),
-        "s_name",
-        "revenue",
-        "n_items",
+    ranked = top.agg(
+        F.sort_array(F.collect_list(F.struct(
+            (-F.col("revenue")).alias("neg_revenue"),
+            "l_suppkey", "s_name", "revenue", "n_items",
+        ))).alias("top")
+    ).select(F.posexplode("top").alias("pos", "r"))
+    return ranked.select(
+        (F.col("pos") + 1).cast("int").alias("rank"),
+        F.col("r.l_suppkey").alias("suppkey"),
+        "r.s_name",
+        "r.revenue",
+        "r.n_items",
     )
 
 

@@ -48,19 +48,12 @@ OUTPUT_SCHEMA = "content_hash string, media_ref string, admit_ordinal long"
 STATE_SCHEMA = "seen array<string>, n_admitted long"
 
 
-def make_first_seen_fn(
-    key_field: str,
-    out_fields: list[str],
-    max_state_per_shard: int | None = None,
-):
-    """Generic first-seen admission state function — ONE definition for
-    every first-seen streaming operator (content-hash dedup here, the
-    canonical-URL admission gate in url_admission.py; previously two
-    verbatim copies that could drift — review finding).
+def _make_dedup_fn(max_state_per_shard: int | None):
+    """First-seen admission state function over `content_hash`.
 
-    State per shard: (admission-ordered list of seen `key_field`
-    values, total admitted count); each micro-batch emits `out_fields`
-    + `admit_ordinal` for rows whose key is new, folds the new keys
+    State per shard: (admission-ordered list of seen hashes, total
+    admitted count); each micro-batch emits (content_hash, media_ref,
+    admit_ordinal) for rows whose hash is new, folds the new hashes
     into state, and (optionally) FIFO-evicts past the cap."""
 
     def _fn(
@@ -74,18 +67,17 @@ def make_first_seen_fn(
         else:
             order, n_admitted = [], 0
         seen = set(order)
-        out: dict[str, list] = {f: [] for f in out_fields}
+        out: dict[str, list] = {"content_hash": [], "media_ref": []}
         out_ord: list[int] = []
         for pdf in pdfs:
-            cols = [pdf[key_field]] + [pdf[f] for f in out_fields]
-            for k, *rest in zip(*cols):
-                if k not in seen:
+            for h, ref in zip(pdf["content_hash"], pdf["media_ref"]):
+                if h not in seen:
                     out_ord.append(n_admitted)  # shard admission ordinal
                     n_admitted += 1
-                    seen.add(k)
-                    order.append(k)
-                    for f, v in zip(out_fields, rest):
-                        out[f].append(v)
+                    seen.add(h)
+                    order.append(h)
+                    out["content_hash"].append(h)
+                    out["media_ref"].append(ref)
         if max_state_per_shard is not None and len(order) > max_state_per_shard:
             order = order[-max_state_per_shard:]  # FIFO eviction
         state.update((order, n_admitted))
@@ -93,12 +85,6 @@ def make_first_seen_fn(
         yield pd.DataFrame(out)
 
     return _fn
-
-
-def _make_dedup_fn(max_state_per_shard: int | None):
-    return make_first_seen_fn(
-        "content_hash", ["content_hash", "media_ref"], max_state_per_shard
-    )
 
 
 def streaming_first_seen(

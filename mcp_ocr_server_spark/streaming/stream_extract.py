@@ -12,20 +12,10 @@ Exactly-once: foreachBatch appends with per-batch parquet sub-dirs
 keyed by batch id (idempotent re-writes on retry); on Iceberg this
 would be a transactional append per micro-batch.
 
-Also provides the stateful-streaming twins of the batch analytics
-(late data bounded by watermarks, state bounded by window/session/
-join-horizon eviction): tumbling-window counts (q_events_hourly),
-gap-based sessionization (q_event_sessions), a stream-stream interval
-join (q_purchase_error_window), and windowed approx quantiles
-(q_event_quantiles) — each unit-tested against its batch twin on the
-same input.  A fifth twin, the ordered conversion funnel
-(q_event_funnel), lives in streaming/funnel.py as a custom
-applyInPandasWithState operator with fixed 24-byte per-user state;
-a sixth, per-source quota admission (q_source_quota's ingestion-time
-policy twin), lives in streaming/quota.py with one long of state per
-source; a seventh, ingestion-time decontamination (the
-decontaminate_bloom screen with the eval bitset trained once and
-probed per micro-batch, zero state), lives in streaming/decon.py.
+Also provides one stateful operator over the events table: a
+watermarked stream-stream interval join (stream_purchase_error_pairs,
+the streaming form of q_purchase_error_window), unit-tested against
+the batch bucketed range join on the same input.
 """
 
 from __future__ import annotations
@@ -39,8 +29,8 @@ from ..plans.pipeline import extract
 from ..sources.synthetic import DOCS_SCHEMA
 
 # the events fixture's exact parquet schema (ts is timestamp_NTZ on
-# disk; each streaming reader casts to LTZ explicitly where a
-# watermark requires it) — one definition for all three events twins
+# disk; the reader casts to LTZ explicitly because a watermark
+# requires it)
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long,"
     " event_type string, value double, props string"
@@ -303,108 +293,6 @@ def stream_extract(
     return writer.start()
 
 
-def stream_events_hourly(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Watermarked tumbling-window counts per event_type.
-
-    Late events older than the watermark are dropped; state for closed
-    windows is evicted — bounded state at unbounded input, which a
-    batch job can't express.
-
-    `ts` is read as timestamp_ntz (the events parquet's actual type)
-    and cast to LTZ for the watermark, the same explicit-cast treatment
-    as sessionize_stream — hour_start's UTC dependency is a visible
-    cast in the plan, not the reader defaulting to LTZ.
-    """
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
-            "event_type", "n", "sum_value",
-        )
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Streaming sessionization: built-in `session_window` (gap-based,
-    merging) with a watermark — the streaming twin of
-    queries.q_event_sessions (same 30-min inactivity gap, same
-    session_start per (user, session)).  A session closes once the
-    watermark passes its end + gap; its state is then evicted, so
-    state stays bounded at unbounded input.  Output mode must be
-    `append`: a session row is only final after closing.
-
-    Two documented semantic deltas vs the batch twin (review finding):
-      - `session_end` here is session_window's window end = last event
-        + gap, NOT max(ts) like q_event_sessions' session_end; join
-        the twins on (user_id, session_start) and compare n_events, or
-        subtract the gap to recover last-event time.
-      - `ts` is read as timestamp_ntz to MATCH the batch corpus's
-        parquet type exactly.  Spark's watermark/session_window REQUIRE
-        an LTZ event-time column, so the plan casts ntz -> ltz for the
-        stateful op and the window bounds back to ntz on output; both
-        casts preserve wall-clock time under the session timezone,
-        which session.py pins to UTC.  The UTC dependency is thereby
-        an explicit pair of casts in the plan, not an accident of the
-        reader defaulting to LTZ."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-        )
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_purchase_error_pairs(
@@ -498,61 +386,3 @@ def stream_purchase_error_pairs(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_event_quantiles(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "2 hours",
-    accuracy: int = 10_000,
-    available_now: bool = True,
-):
-    """Watermarked hourly tail-latency rollup — the streaming twin of
-    queries.q_event_quantiles: p50/p90/p99 of `value` per (hour,
-    event_type) window.
-
-    Streaming aggregation state must be bounded and mergeable, so this
-    uses `approx_percentile` — the GK sketch documented as
-    q_event_quantiles' 100 TB swap — NOT exact `percentile`: an exact
-    per-group value->count map in streaming state would grow with the
-    window's distinct-value count and be rebuilt per micro-batch;
-    the sketch is fixed-size and merges micro-batch partials the same
-    way map-side partials merge in batch.  Rank error <= n/accuracy
-    per window (asserted against the batch EXACT per-window quantiles
-    in test_streaming.py).  Append mode: a window's row is final once
-    the watermark closes it."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(
-                f"approx_percentile(value,"
-                f" array(0.5D, 0.9D, 0.99D), {accuracy})"
-            ).alias("ps"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                "hour_start"
-            ),
-            "event_type", "n",
-            F.col("ps")[0].alias("p50"),
-            F.col("ps")[1].alias("p90"),
-            F.col("ps")[2].alias("p99"),
-        )
-    )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -92,6 +92,64 @@ def test_uniform_stsz_count_bounded_by_file():
         parse_mp4_frames(bytes(b))
 
 
+def _with_chunk_tables(stsc: list[tuple[int, int]], n_chunks: int) -> bytes:
+    """A one-sample (b"x") video mp4 whose stsc holds `stsc` and whose
+    stco holds `n_chunks` offsets, all pointing at that sample."""
+    import struct as _s
+
+    good = encode_mp4(1.0, frames=[b"x"])
+
+    def full(t, body):
+        return _s.pack(">I", 12 + len(body)) + t + b"\x00" * 4 + body
+
+    def span(t):
+        start = good.index(t) - 4
+        return start, start + int.from_bytes(good[start:start + 4], "big")
+
+    old_stsc, old_stco = span(b"stsc"), span(b"stco")
+    new_stsc = full(b"stsc", _s.pack(">I", len(stsc)) + b"".join(
+        _s.pack(">III", first, spc, 1) for first, spc in stsc))
+
+    def stco(off):
+        return full(b"stco", _s.pack(">I", n_chunks)
+                    + _s.pack(">I", off) * n_chunks)
+
+    delta = (len(new_stsc) + len(stco(0))
+             - (old_stsc[1] - old_stsc[0]) - (old_stco[1] - old_stco[0]))
+    # mdat is last and its payload is the one sample
+    new_stco = stco(len(good) + delta - 1)
+    assert old_stsc[1] <= old_stco[0]
+    b = bytearray(good[:old_stsc[0]] + new_stsc
+                  + good[old_stsc[1]:old_stco[0]] + new_stco
+                  + good[old_stco[1]:])
+    for t in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
+        q = b.index(t) - 4
+        size = int.from_bytes(b[q:q + 4], "big") + delta
+        b[q:q + 4] = size.to_bytes(4, "big")
+    return bytes(b)
+
+
+def test_chunk_tables_demux_in_linear_time():
+    # stsc x stco rescans were quadratic in counts the file declares:
+    # a ~1 MB file of 65,536 entries each took minutes to demux
+    import time
+
+    n = 1 << 16
+    d = _with_chunk_tables([(i + 1, 1) for i in range(n)], n)
+    assert len(d) > 1_000_000
+    t0 = time.perf_counter()
+    assert parse_mp4_frames(d) == [b"x"]
+    assert time.perf_counter() - t0 < 5.0
+
+
+def test_stsc_first_chunk_must_increase():
+    assert parse_mp4_frames(_with_chunk_tables([(1, 1), (2, 1)], 2)) == [
+        b"x"]
+    for stsc in ([(1, 1), (1, 1)], [(2, 1), (1, 1)]):
+        with pytest.raises(ValueError, match="stsc first_chunk"):
+            parse_mp4_frames(_with_chunk_tables(stsc, 2))
+
+
 def test_fuzz_exception_discipline():
     # every corruption either parses or raises ValueError — never a
     # foreign exception, never a hang (the avi/audio_meta contract)

@@ -70,6 +70,7 @@ def test_top_suppliers_broadcast_and_topk(spark):
     plan = _plan(spark, Q.q_top_suppliers(spark, SF), "simple")
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan  # rank-limit pushdown, no global sort
+    assert "Window" not in plan
 
 
 def test_ann_topk_broadcasts_queries_not_corpus(spark):

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from mcp_ocr_server_spark.plans.pipeline import extract
 from mcp_ocr_server_spark.sources import synthetic as S
 from mcp_ocr_server_spark.streaming.stream_extract import (
-    stream_events_hourly,
     stream_extract,
 )
 
@@ -44,37 +43,6 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     )
     assert key(streamed) == key(batch)
 
-
-def test_stream_events_watermarked_window(spark, tmp_path):
-    src = "/root/testdata/sf0.001/events.parquet"
-    events = spark.read.parquet(src)
-    landing = str(tmp_path / "events")
-    events.write.parquet(landing, mode="append")
-
-    q = stream_events_hourly(
-        spark, landing,
-        out_dir=str(tmp_path / "agg"),
-        checkpoint_dir=str(tmp_path / "eckpt"),
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "agg"))
-    # with availableNow + append mode, only windows older than the
-    # watermark close; assert the closed windows match the batch result
-    batch = (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
-            "event_type", "n", "sum_value",
-        )
-    )
-    got = {(r.hour_start, r.event_type): (r.n, r.sum_value) for r in out.collect()}
-    want = {
-        (r.hour_start, r.event_type): (r.n, r.sum_value) for r in batch.collect()
-    }
-    assert got, "no windows closed — watermark/trigger wiring broken"
-    for k, v in got.items():
-        assert want[k] == v
 
 
 def test_stateful_streaming_dedup(spark, tmp_path):
@@ -146,46 +114,6 @@ def test_stateful_dedup_fifo_eviction():
     # state capped to the 2 newest => h1 evicted => re-admitted; h3 not
     assert run(["h1", "h3"]) == ["h1"]
 
-
-def test_streaming_sessionization_matches_batch(spark, tmp_path):
-    """session_window stream == the batch gaps-and-islands query on
-    (user, n_events) per session, for sessions the watermark closed.
-    session_window's `end` is last_event + gap (window semantics), so
-    the join key is (user_id, session_start) + event count."""
-    from pyspark.sql import functions as F
-
-    from mcp_ocr_server_spark.queries import q_event_sessions
-    from mcp_ocr_server_spark.streaming.stream_extract import (
-        sessionize_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "events_in")
-    spark.read.parquet(f"{sf}/events.parquet").write.parquet(src)
-
-    out = str(tmp_path / "sessions_out")
-    q = sessionize_stream(
-        spark, src, out, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).withColumn(
-        "session_start",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-    )
-    batch = q_event_sessions(spark, sf).select(
-        "user_id",
-        F.col("session_start"),
-        F.col("n_events").alias("n_batch"),
-    )
-    joined = got.join(batch, ["user_id", "session_start"]).select(
-        (F.col("n_events") == F.col("n_batch")).alias("same")
-    )
-    n_stream = got.count()
-    assert n_stream > 0
-    rows = joined.collect()
-    # every emitted (closed) session matches its batch twin exactly
-    assert len(rows) == n_stream
-    assert all(r["same"] for r in rows)
 
 
 def test_stream_memoization_across_micro_batches(spark, tmp_path):
@@ -428,450 +356,3 @@ def test_stream_range_join_matches_batch(spark, tmp_path):
     )
     assert len(got) > 0
     assert got == exp
-
-
-def test_stream_windowed_quantiles_rank_bound(spark, tmp_path):
-    """Streaming hourly approx quantiles: per closed window, n matches
-    the batch count exactly and each sketch quantile's rank within the
-    window's values is within n/accuracy (+1 for the discrete member
-    step) of the target rank — the same GK bound the batch swap test
-    pins, here across micro-batch state merges."""
-    import pandas as pd
-
-    from mcp_ocr_server_spark.streaming.stream_extract import (
-        stream_event_quantiles,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "events_in")
-    spark.read.parquet(f"{sf}/events.parquet").repartition(4).write.parquet(
-        src
-    )
-    out = str(tmp_path / "q_out")
-    acc = 10_000
-    q = stream_event_quantiles(
-        spark, src, out, str(tmp_path / "ckpt"), accuracy=acc,
-        available_now=True,
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).collect()
-    assert got
-
-    ev = pd.read_parquet(f"{sf}/events.parquet")
-    ev["hour_start"] = (
-        ev["ts"].dt.floor("h").dt.strftime("%Y-%m-%d %H:%M:%S")
-    )
-    groups = ev.groupby(["hour_start", "event_type"])["value"]
-    for r in got:
-        vals = groups.get_group((r["hour_start"], r["event_type"]))
-        n = len(vals)
-        assert r["n"] == n
-        for p, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
-            lo = int((vals < r[col]).sum()) + 1
-            hi = int((vals <= r[col]).sum())
-            assert hi >= lo - 1  # the sketch value is a member or dup
-            target = p * n
-            dist = max(lo - target, target - hi, 0)
-            assert dist <= n / acc + 1, (r, p, lo, hi, n)
-
-
-def test_streaming_funnel_matches_batch(spark, tmp_path):
-    """The stateful streaming funnel equals q_event_funnel when events
-    arrive in timestamp order across micro-batches (the operator's
-    documented equivalence contract): feed the corpus as three
-    ts-ordered chunks, one per micro-batch, and compare per-step user
-    counts — AND the exact (user, step) conversion sets."""
-    from pyspark.sql import functions as F
-
-    from mcp_ocr_server_spark.queries import q_event_funnel
-    from mcp_ocr_server_spark.streaming.funnel import run_streaming_funnel
-
-    sf = "/root/testdata/sf0.001"
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    # three contiguous time slices, one file each => ts-ordered batches
-    src = str(tmp_path / "events_in")
-    bounds = ev.selectExpr(
-        "percentile(unix_micros(cast(ts as timestamp)), 0.33) AS a",
-        "percentile(unix_micros(cast(ts as timestamp)), 0.66) AS b",
-    ).collect()[0]
-    marked = ev.withColumn(
-        "m", F.expr("unix_micros(cast(ts as timestamp))")
-    )
-    for i, (lo, hi) in enumerate(
-        [(None, bounds.a), (bounds.a, bounds.b), (bounds.b, None)]
-    ):
-        chunk = marked
-        if lo is not None:
-            chunk = chunk.filter(F.col("m") > lo)
-        if hi is not None:
-            chunk = chunk.filter(F.col("m") <= hi)
-        chunk.drop("m").coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "funnel_out")
-    q = run_streaming_funnel(
-        spark, src, out, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    stream_counts = {
-        r.step: r.n
-        for r in got.groupBy("step").agg(F.count("*").alias("n")).collect()
-    }
-    batch_counts = {
-        r.step: r.n_users for r in q_event_funnel(spark, sf).collect()
-    }
-    assert stream_counts == batch_counts
-    # exact per-user agreement on the final step (purchase converters)
-    stream_p = {
-        r.user_id for r in got.filter("step = 3").collect()
-    }
-    from mcp_ocr_server_spark.queries import _t
-
-    evd = _t(spark, sf, "events")
-    v = evd.filter("event_type = 'view'").groupBy("user_id").agg(
-        F.min("ts").alias("t")
-    )
-    c = (
-        evd.filter("event_type = 'click'")
-        .join(v, "user_id")
-        .filter("ts > t")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-    )
-    p = (
-        evd.filter("event_type = 'purchase'")
-        .join(c, "user_id")
-        .filter("ts > t")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-    )
-    batch_p = {r.user_id for r in p.collect()}
-    assert stream_p == batch_p
-
-
-def test_streaming_source_quota_admission(spark, tmp_path):
-    """Per-source quota admission across micro-batches: each source
-    admits exactly min(quota, n_source) docs (count parity with the
-    batch source_quota policy), admission is first-arrived (batch-1
-    docs hold their slots against batch-2 arrivals), and ordinals are
-    a gapless 0..k-1 per source."""
-    from mcp_ocr_server_spark.streaming.quota import run_streaming_quota
-
-    QUOTA = 5
-    docs = spark.createDataFrame(
-        [(i, f"src{i % 4}") for i in range(60)], "doc_id long, source string"
-    )
-    landing = str(tmp_path / "docs_landing")
-    # three ordered drops; maxFilesPerTrigger=1 => three micro-batches
-    for lo, hi in ((0, 20), (20, 40), (40, 60)):
-        (docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-         .orderBy("doc_id").coalesce(1)
-         .write.parquet(landing, mode="append"))
-
-    q = run_streaming_quota(
-        spark, landing,
-        out_dir=str(tmp_path / "quota_out"),
-        checkpoint_dir=str(tmp_path / "quota_ckpt"),
-        quota=QUOTA,
-    )
-    q.awaitTermination(300)
-
-    out = spark.read.parquet(str(tmp_path / "quota_out")).collect()
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r.source, []).append((r.admit_ordinal, r.doc_id))
-    assert set(by_src) == {f"src{i}" for i in range(4)}
-    for src, rows in by_src.items():
-        rows.sort()
-        # exactly quota admitted (every source has 15 candidates)
-        assert [o for o, _ in rows] == list(range(QUOTA)), (src, rows)
-        # first-arrived: all admitted doc_ids come from the first drop
-        assert all(d < 20 for _, d in rows), (src, rows)
-
-
-def test_streaming_decontaminate_matches_batch(spark, tmp_path):
-    """The ingestion-time contamination screen (eval bitset trained
-    once, broadcast, probed per micro-batch) must produce EXACTLY the
-    batch decontaminate_bloom answer on the same corpus: same flagged
-    docs, same (n_bloom_hits, n_confirmed) — the operator is per-doc,
-    so micro-batching cannot change it."""
-    from mcp_ocr_server_spark import queries as Q
-    from mcp_ocr_server_spark.streaming.decon import (
-        run_streaming_decontaminate,
-    )
-
-    SF = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    eval_docs = docs.filter(F.col("doc_id") % 7 == 0)
-    corpus = docs.filter(F.col("doc_id") % 7 != 0).select("doc_id", "text")
-
-    landing = str(tmp_path / "docs_landing")
-    # two drops => two micro-batches (maxFilesPerTrigger=1)
-    corpus.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        landing, mode="append"
-    )
-    corpus.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        landing, mode="append"
-    )
-
-    q = run_streaming_decontaminate(
-        spark, landing, eval_docs,
-        out_dir=str(tmp_path / "decon_out"),
-        checkpoint_dir=str(tmp_path / "decon_ckpt"),
-    )
-    q.awaitTermination(300)
-
-    got = {
-        r.doc_id: (r.n_bloom_hits, r.n_confirmed)
-        for r in spark.read.parquet(str(tmp_path / "decon_out")).collect()
-    }
-    want = {
-        r.doc_id: (r.n_bloom_hits, r.n_confirmed)
-        for r in Q.QUERIES["decontaminate_bloom"][0](spark, SF).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_stream_anomaly_matches_batch(spark, tmp_path):
-    """Streaming anomaly twin: for every window the watermark closes,
-    (n, z, is_anomaly) equal the batch q_events_anomaly row EXACTLY
-    (the baseline's literal doubles round-trip losslessly), and the
-    availableNow run emits nearly all windows."""
-    from mcp_ocr_server_spark import queries as Q
-    from mcp_ocr_server_spark.streaming.anomaly import (
-        stream_event_anomaly,
-        train_baseline,
-    )
-
-    SF = "/root/testdata/sf0.001"
-    src = str(tmp_path / "events_in")
-    spark.read.parquet(f"{SF}/events.parquet").repartition(4).write.parquet(
-        src
-    )
-    baseline = train_baseline(spark.read.parquet(src))
-    q = stream_event_anomaly(
-        spark, src, str(tmp_path / "a_out"), str(tmp_path / "a_ckpt"),
-        baseline, available_now=True,
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r.hour_start, r.event_type): (r.n, r.z, r.is_anomaly)
-        for r in spark.read.parquet(str(tmp_path / "a_out")).collect()
-    }
-    want = {
-        (r.hour_start, r.event_type): (r.n, r.z, r.is_anomaly)
-        for r in Q.QUERIES["events_anomaly"][0](spark, SF).collect()
-    }
-    assert got, "stream emitted nothing"
-    for k, v in got.items():
-        assert want[k] == v, (k, v, want[k])
-    # availableNow closes everything except at most the final
-    # watermark horizon (2h) per type
-    assert len(got) >= len(want) - 3 * len(baseline)
-
-
-def test_streaming_url_admission_matches_batch(spark, tmp_path):
-    """Streaming canonical-URL admission: the admitted-URL set equals
-    the batch url_dedup keeper set, exactly one admission per canonical
-    URL across micro-batches, and admissions survive a second drop
-    (state persists between triggers)."""
-    from mcp_ocr_server_spark import queries as Q
-    from mcp_ocr_server_spark.streaming.url_admission import (
-        run_streaming_url_admission,
-    )
-
-    SF = "/root/testdata/sf0.001"
-    aug = Q._url_augment(
-        Q._t(spark, SF, "documents").select("doc_id", "source")
-    )
-    landing = str(tmp_path / "docs_landing")
-    # two drops => at least two micro-batches (maxFilesPerTrigger=1)
-    aug.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        landing, mode="append"
-    )
-    aug.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        landing, mode="append"
-    )
-    q = run_streaming_url_admission(
-        spark, landing, str(tmp_path / "u_out"), str(tmp_path / "u_ckpt"),
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(str(tmp_path / "u_out")).collect()
-    batch = Q.QUERIES["url_dedup"][0](spark, SF).collect()
-    want_urls = {r.canonical_url for r in batch if r.keep}
-    got_urls = [r.canonical_url for r in got]
-    assert set(got_urls) == want_urls
-    assert len(got_urls) == len(set(got_urls))  # one admission each
-    # every admitted doc_id really carries that canonical URL in batch
-    pair_ok = {(r.canonical_url, r.doc_id) for r in batch}
-    assert all((r.canonical_url, r.doc_id) in pair_ok for r in got)
-
-
-def test_streaming_robots_admission_matches_batch(spark, tmp_path):
-    """Robots-gated streaming admission: the admitted canonical-URL
-    set equals {canonical URLs carried by at least one robots-ALLOWED
-    doc} derived from the two batch queries, every admitted doc is
-    itself allowed, and one admission per URL across micro-batches."""
-    from mcp_ocr_server_spark import queries as Q
-    from mcp_ocr_server_spark.streaming.url_admission import (
-        run_streaming_robots_admission,
-    )
-
-    SF = "/root/testdata/sf0.001"
-    aug = Q._url_augment(
-        Q._t(spark, SF, "documents").select("doc_id", "source")
-    )
-    landing = str(tmp_path / "docs_landing")
-    aug.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        landing, mode="append"
-    )
-    aug.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        landing, mode="append"
-    )
-    q = run_streaming_robots_admission(
-        spark, landing, str(tmp_path / "r_out"), str(tmp_path / "r_ckpt"),
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(str(tmp_path / "r_out")).collect()
-    verdict = {r.doc_id: r.allowed
-               for r in Q.QUERIES["url_robots"][0](spark, SF).collect()}
-    canon = {r.doc_id: r.canonical_url
-             for r in Q.QUERIES["url_dedup"][0](spark, SF).collect()}
-    want_urls = {canon[d] for d, ok in verdict.items() if ok}
-    assert {r.canonical_url for r in got} == want_urls
-    assert len(got) == len({r.canonical_url for r in got})  # one each
-    for r in got:
-        assert verdict[r.doc_id], r  # never admits a disallowed doc
-        assert canon[r.doc_id] == r.canonical_url
-
-
-def test_streaming_warc_main_matches_batch(spark, tmp_path):
-    """Streaming crawl ingestion (stream_warc): WARC fan-out + charset
-    decode + DOM strip + cross-batch canonical-URL admission.  The
-    admitted canonical-URL set equals the batch distinct set, exactly
-    one admission per URL across micro-batches (the corpus carries
-    REAL cross-archive /legacy/* duplicates), and every admitted row's
-    main_text matches a batch row for that canonical URL."""
-    from mcp_ocr_server_spark import queries as Q
-    from mcp_ocr_server_spark.functions.warc import warc_main_content
-    from mcp_ocr_server_spark.sources.synthetic import warc_df
-    from mcp_ocr_server_spark.streaming.stream_warc import (
-        run_streaming_warc_main,
-    )
-
-    archives = warc_df(spark, Q.FLAGSHIP_CORPUS).select(
-        "warc_ref", "bytes"
-    )
-    landing = str(tmp_path / "warc_landing")
-    # two drops => at least two micro-batches (maxFilesPerTrigger=1)
-    archives.filter(
-        F.xxhash64("warc_ref") % 2 == 0
-    ).coalesce(1).write.parquet(landing, mode="append")
-    archives.filter(
-        F.xxhash64("warc_ref") % 2 != 0
-    ).coalesce(1).write.parquet(landing, mode="append")
-
-    q = run_streaming_warc_main(
-        spark, landing, str(tmp_path / "w_out"), str(tmp_path / "w_ckpt"),
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(str(tmp_path / "w_out")).collect()
-    batch = (
-        warc_main_content(archives)
-        .filter(F.col("error").isNull() & (F.col("main_text") != ""))
-        .withColumn("canonical_url", Q.url_canonical("url"))
-        .collect()
-    )
-    want_urls = {r.canonical_url for r in batch}
-    got_urls = [r.canonical_url for r in got]
-    assert set(got_urls) == want_urls
-    assert len(got_urls) == len(set(got_urls))  # one admission each
-    # the gate did real work: fewer admissions than batch rows
-    assert len(got_urls) < len(batch)
-    # admitted content belongs to that canonical URL in batch
-    ok_pairs = {(r.canonical_url, r.main_text) for r in batch}
-    assert all((r.canonical_url, r.main_text) in ok_pairs for r in got)
-    # charset provenance flows through the streaming path too
-    assert {r.charset_source for r in got} >= {"http", "meta", "bom"}
-
-
-def test_streaming_frontier_admission_matches_batch(spark, tmp_path):
-    """Parsed-robots streaming frontier (streaming_frontier_admission,
-    q_frontier_admission's twin): sitemap-discovered URLs arrive in
-    two micro-batches carrying cross-batch duplicates; the admitted
-    canonical-URL set equals the batch composition's distinct ALLOWED
-    set, one admission per URL, and no disallowed URL is ever
-    admitted."""
-    from mcp_ocr_server_spark import queries as Q
-    from mcp_ocr_server_spark.streaming.url_admission import (
-        streaming_frontier_admission,
-    )
-
-    # batch truth: the full text-to-verdict composition
-    batch = Q.QUERIES["frontier_admission"][0](spark, None).collect()
-    allowed_locs = {r.loc for r in batch if r.allowed}
-    denied_locs = {r.loc for r in batch if not r.allowed}
-    assert allowed_locs and denied_locs  # the gate actually gates
-
-    # rules side, exactly as the batch composition builds it
-    from mcp_ocr_server_spark.functions.robots import (
-        ROBOTS_SCHEMA,
-        robots_rows,
-    )
-    from mcp_ocr_server_spark.sources import synthetic as S
-
-    rule_rows = []
-    for j in range(S.N_ROBOTS):
-        ref, data, _k = S.robots_item(Q.FLAGSHIP_CORPUS, j)
-        rule_rows.extend(
-            r for r in robots_rows(ref, data) if r["kind"] == "rule"
-        )
-    rules = (
-        spark.createDataFrame(rule_rows, ROBOTS_SCHEMA)
-        .groupBy(F.col("media_ref").alias("host"))
-        .agg(F.sort_array(F.collect_list(F.struct(
-            "row_idx", "pattern", "regex", "allow"))).alias("rules"))
-    )
-
-    # url stream: sitemap locs as (doc_id, url), split into two
-    # overlapping landing files (cross-batch duplicates included)
-    urls = Q.QUERIES["sitemap_urls"][0](spark, None).filter(
-        (F.col("kind") == "urlset") & F.col("error").isNull()
-    ).select(
-        F.monotonically_increasing_id().alias("doc_id"),
-        F.col("loc").alias("url"),
-    ).collect()
-    landing = str(tmp_path / "urls_landing")
-    half = len(urls) // 2
-    df1 = spark.createDataFrame(urls[:half + 5], "doc_id long, url string")
-    df2 = spark.createDataFrame(urls[half - 5:], "doc_id long, url string")
-    df1.coalesce(1).write.parquet(landing, mode="append")
-    df2.coalesce(1).write.parquet(landing, mode="append")
-
-    stream = (
-        spark.readStream.schema("doc_id long, url string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    q = (
-        streaming_frontier_admission(stream, rules)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "f_out"))
-        .option("checkpointLocation", str(tmp_path / "f_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(str(tmp_path / "f_out")).collect()
-    # sitemap locs are already canonical (https, lowercase, no junk),
-    # so canonical_url == loc and the sets compare directly
-    assert {r.canonical_url for r in got} == allowed_locs
-    assert len(got) == len({r.canonical_url for r in got})
-    assert not {r.canonical_url for r in got} & denied_locs
