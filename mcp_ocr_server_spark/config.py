@@ -41,7 +41,6 @@ class OCRConfig:
 class PreprocessingConfig:
     """internal/config/config.go:197-212."""
 
-    enabled: bool = True
     auto_mode: bool = True  # config.go:201 — quality-driven pipeline
     grayscale: bool = True
     denoise: bool = True
@@ -50,50 +49,30 @@ class PreprocessingConfig:
     adaptive_c: float = 2.0  # config.go:206
     deskew_enabled: bool = True
     deskew_angle_limit: float = 10.0  # config.go:209
-    # K5 estimator: "hough" (strict analyzer.go:169-232 parity),
-    # "profile" (projection-profile), or "hough+profile" (reference
-    # estimator first, profile refinement when it reports no evidence)
-    skew_method: str = "hough+profile"
-    # K2 kernel: "nlmeans" (live path, preprocessor.go:140-150 —
-    # FastNlMeansDenoising h=3/7/21) or "median" (dead path denoise.go)
-    denoise_method: str = "nlmeans"
     # Quality thresholds: analyzer.go:116-133 + configs/config.yaml:36-39
+    # (the upper brightness bound is fixed: analyzer.BRIGHTNESS_MAX)
     sharpness_threshold: float = 100.0
     contrast_threshold: float = 30.0
     brightness_min: float = 50.0
-    brightness_max: float = 200.0  # hardcoded at analyzer.go:33
-
-
-@dataclass(frozen=True)
-class CacheConfig:
-    """internal/config/config.go:213-219 — retained for parity of the
-    memoization *key* (cache.go:188-198).  TTL / max-entries / sweep are
-    service-loop artifacts replaced by durable exactly-once memoization
-    (SURVEY.md §2.5 C2)."""
-
-    enabled: bool = True
-    ttl_seconds: int = 3600
-    max_entries: int = 100
 
 
 @dataclass(frozen=True)
 class JobConfig:
+    """The reference's cache settings (config.go:213-219) and worker
+    pool have no field here: the durable memo anti-join always runs
+    (SURVEY.md §2.5 C2) and Spark task scheduling is the pool (§2.6
+    P2), so neither TTL, size nor pool width would be read."""
+
     ocr: OCRConfig = field(default_factory=OCRConfig)
     preprocessing: PreprocessingConfig = field(default_factory=PreprocessingConfig)
-    cache: CacheConfig = field(default_factory=CacheConfig)
-    # Spark-side knobs (new — no reference equivalent):
-    media_partitions: int = 32  # target partitions for the media UDF stage
-    # Arrow batch rows for binary-carrying stages; 0 = auto-size so a
-    # batch of worst-case images stays ~256 MB (measured: 1024-row
-    # batches are 22% faster than 64 on small images, but 1024 rows of
-    # 10 MiB images would be a 10 GiB batch)
-    arrow_max_records_per_batch: int = 0
     checkpoint_buckets: int = 32  # resume granularity (plans/checkpoint.py)
 
     @property
     def arrow_batch_rows(self) -> int:
-        if self.arrow_max_records_per_batch:
-            return self.arrow_max_records_per_batch
+        # Arrow batch rows for binary-carrying stages, sized so a batch
+        # of worst-case images stays ~256 MB (measured: 1024-row batches
+        # are 22% faster than 64 on small images, but 1024 rows of
+        # 10 MiB images would be a 10 GiB batch)
         target_bytes = 256 * 1024 * 1024
         return max(16, min(1024, target_bytes // self.ocr.max_image_size))
 

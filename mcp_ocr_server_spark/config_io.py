@@ -11,13 +11,13 @@ file-driven configuration surface, mapped onto JobConfig:
   preprocessing.*        -> PreprocessingConfig (incl.
                             quality_thresholds.{sharpness,contrast,
                             brightness})
-  performance.*          -> cache settings; worker_pool_size maps to
-                            media_partitions (the reference's worker
-                            pool IS Spark task scheduling, SURVEY §2.6
-                            P2); queue_size is accepted-and-ignored
-                            (backpressure is Spark's scheduler's job)
-  spark.* (extension)    -> media_partitions / checkpoint_buckets /
-                            arrow_max_records_per_batch overrides
+  spark.* (extension)    -> checkpoint_buckets
+
+The reference's `performance` section (cache TTL/size, worker pool,
+queue) has no counterpart: the durable memo and Spark scheduling
+replace all of it, so those keys are refused like any other key the
+job would not read.  A typo is refused the same way instead of being
+silently dropped.
 
 Validation mirrors Validate() rule-for-rule where the rule still has
 meaning here; each error message keeps the reference's wording so a
@@ -26,17 +26,38 @@ user migrating a config file sees familiar diagnostics.
 
 from __future__ import annotations
 
-from .config import (
-    CacheConfig,
-    JobConfig,
-    OCRConfig,
-    PreprocessingConfig,
-)
+from .config import JobConfig, OCRConfig, PreprocessingConfig
 
 _ENGINES = ("tesseract", "template")  # template = the deterministic engine
 _BIN_MODES = ("otsu", "adaptive")
-_SKEW_METHODS = ("hough", "profile", "hough+profile")
-_DENOISE_METHODS = ("nlmeans", "median")
+
+# YAML key -> (dataclass field, coercion), one table per section
+_OCR_KEYS = {
+    "engine": ("engine", str),
+    "language": ("language", str),
+    "page_seg_mode": ("psm", int),
+    "engine_mode": ("oem", int),
+    "whitelist": ("char_whitelist", str),
+    "max_image_size": ("max_image_size", int),
+    "timeout": ("timeout_seconds", int),
+}
+_PRE_KEYS = {
+    "auto_mode": ("auto_mode", bool),
+    "grayscale": ("grayscale", bool),
+    "denoise": ("denoise", bool),
+    "binarization_mode": ("binarization_mode", str),
+    "adaptive_block_size": ("adaptive_block_size", int),
+    "adaptive_c": ("adaptive_c", float),
+    "deskew_correction": ("deskew_enabled", bool),
+    "deskew_angle_limit": ("deskew_angle_limit", float),
+}
+_THRESHOLD_KEYS = {
+    "sharpness": ("sharpness_threshold", float),
+    "contrast": ("contrast_threshold", float),
+    "brightness": ("brightness_min", float),
+}
+_SPARK_KEYS = {"checkpoint_buckets": ("checkpoint_buckets", int)}
+_SECTIONS = ("ocr", "preprocessing", "spark")
 
 
 class ConfigError(ValueError):
@@ -50,107 +71,49 @@ def _section(doc: dict, name: str) -> dict:
     return sec
 
 
+def _fields(sec: dict, keys: dict, path: str) -> dict:
+    """Dataclass kwargs for one section; any key outside `keys` is
+    refused by its dotted path."""
+    for k in sec:
+        if k not in keys:
+            raise ConfigError(f"unknown config key: {path}.{k}")
+    return {keys[k][0]: keys[k][1](v) for k, v in sec.items()}
+
+
 def job_config_from_dict(doc: dict) -> JobConfig:
+    for name in doc:
+        if name not in _SECTIONS:
+            raise ConfigError(f"unknown config key: {name}")
     ocr_d = _section(doc, "ocr")
-    pre_d = _section(doc, "preprocessing")
-    perf_d = _section(doc, "performance")
-    spark_d = _section(doc, "spark")
-    qt = pre_d.get("quality_thresholds") or {}
+    pre_d = dict(_section(doc, "preprocessing"))
+    qt = _section(pre_d, "quality_thresholds")
+    pre_d.pop("quality_thresholds", None)
 
     engine = ocr_d.get("engine", "tesseract")
     if engine not in _ENGINES:
         raise ConfigError(f"unsupported OCR engine: {engine}")
-
-    base = JobConfig()
-    ocr = OCRConfig(
-        engine=engine,
-        language=str(ocr_d.get("language", base.ocr.language)),
-        psm=int(ocr_d.get("page_seg_mode", base.ocr.psm)),
-        oem=int(ocr_d.get("engine_mode", base.ocr.oem)),
-        char_whitelist=str(ocr_d.get("whitelist", base.ocr.char_whitelist)),
-        max_image_size=int(ocr_d.get("max_image_size", base.ocr.max_image_size)),
-        timeout_seconds=int(ocr_d.get("timeout", base.ocr.timeout_seconds)),
-    )
+    ocr = OCRConfig(**_fields(ocr_d, _OCR_KEYS, "ocr"))
     if ocr.max_image_size <= 0:
         raise ConfigError(f"invalid max_image_size: {ocr.max_image_size}")
     if ocr.timeout_seconds <= 0:
         raise ConfigError(f"invalid timeout: {ocr.timeout_seconds}")
 
     pre = PreprocessingConfig(
-        enabled=bool(pre_d.get("enabled", base.preprocessing.enabled)),
-        auto_mode=bool(pre_d.get("auto_mode", base.preprocessing.auto_mode)),
-        grayscale=bool(pre_d.get("grayscale", base.preprocessing.grayscale)),
-        denoise=bool(pre_d.get("denoise", base.preprocessing.denoise)),
-        binarization_mode=str(
-            pre_d.get("binarization_mode", base.preprocessing.binarization_mode)
-        ),
-        adaptive_block_size=int(
-            pre_d.get("adaptive_block_size", base.preprocessing.adaptive_block_size)
-        ),
-        adaptive_c=float(pre_d.get("adaptive_c", base.preprocessing.adaptive_c)),
-        deskew_enabled=bool(
-            pre_d.get("deskew_correction", base.preprocessing.deskew_enabled)
-        ),
-        deskew_angle_limit=float(
-            pre_d.get("deskew_angle_limit", base.preprocessing.deskew_angle_limit)
-        ),
-        skew_method=str(pre_d.get("skew_method", base.preprocessing.skew_method)),
-        denoise_method=str(
-            pre_d.get("denoise_method", base.preprocessing.denoise_method)
-        ),
-        sharpness_threshold=float(
-            qt.get("sharpness", base.preprocessing.sharpness_threshold)
-        ),
-        contrast_threshold=float(
-            qt.get("contrast", base.preprocessing.contrast_threshold)
-        ),
-        brightness_min=float(
-            qt.get("brightness", base.preprocessing.brightness_min)
-        ),
-        brightness_max=base.preprocessing.brightness_max,  # analyzer.go:33
+        **_fields(pre_d, _PRE_KEYS, "preprocessing"),
+        **_fields(qt, _THRESHOLD_KEYS, "preprocessing.quality_thresholds"),
     )
     if pre.binarization_mode not in _BIN_MODES:
         raise ConfigError(f"invalid binarization_mode: {pre.binarization_mode}")
-    if pre.skew_method not in _SKEW_METHODS:
-        raise ConfigError(f"invalid skew_method: {pre.skew_method}")
-    if pre.denoise_method not in _DENOISE_METHODS:
-        raise ConfigError(f"invalid denoise_method: {pre.denoise_method}")
     if pre.adaptive_block_size % 2 == 0 or pre.adaptive_block_size < 3:
         raise ConfigError(
             f"invalid adaptive_block_size: {pre.adaptive_block_size}"
         )
 
-    cache = CacheConfig(
-        enabled=bool(perf_d.get("cache_enabled", base.cache.enabled)),
-        ttl_seconds=int(perf_d.get("cache_ttl", base.cache.ttl_seconds)),
-        max_entries=int(perf_d.get("cache_size", base.cache.max_entries)),
-    )
-    if cache.enabled and cache.max_entries <= 0:
-        raise ConfigError(f"invalid cache_size: {cache.max_entries}")
-
-    pool = int(perf_d.get("worker_pool_size", base.media_partitions))
-    if pool <= 0:
-        raise ConfigError(f"invalid worker_pool_size: {pool}")
-    queue_size = int(perf_d.get("queue_size", 100))
-    if queue_size <= 0:
-        raise ConfigError(f"invalid queue_size: {queue_size}")
-
     job = JobConfig(
         ocr=ocr,
         preprocessing=pre,
-        cache=cache,
-        media_partitions=int(spark_d.get("media_partitions", pool)),
-        arrow_max_records_per_batch=int(
-            spark_d.get(
-                "arrow_max_records_per_batch", base.arrow_max_records_per_batch
-            )
-        ),
-        checkpoint_buckets=int(
-            spark_d.get("checkpoint_buckets", base.checkpoint_buckets)
-        ),
+        **_fields(_section(doc, "spark"), _SPARK_KEYS, "spark"),
     )
-    if job.media_partitions <= 0:
-        raise ConfigError(f"invalid media_partitions: {job.media_partitions}")
     if job.checkpoint_buckets <= 0:
         raise ConfigError(f"invalid checkpoint_buckets: {job.checkpoint_buckets}")
     return job

@@ -161,6 +161,10 @@ def _parse_stbl(data: bytes, start: int, end: int) -> dict:
                 int.from_bytes(data[q + 4 + 4 * i:q + 8 + 4 * i], "big")
                 for i in range(n)
             ]
+        elif btype == b"co64":
+            # 64-bit chunk offsets (files past 4 GiB): recorded so the
+            # demuxer can refuse them by name; metadata never reads them
+            out["co64"] = True
     return out
 
 
@@ -371,6 +375,8 @@ def parse_mp4_frames(data: bytes) -> list[bytes]:
             break
     if track is None:
         raise ValueError("mp4: no video track")
+    if track.get("co64"):
+        raise ValueError("mp4: co64 chunk offsets unsupported")
     sizes = track.get("sizes")
     if "uniform_size" in track:
         # every sample must lie in the file, so it bounds the count

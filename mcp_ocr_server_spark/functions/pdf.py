@@ -841,6 +841,40 @@ def _content_text(
     return "\n".join(text_lines)
 
 
+_TRAILER_RE = re.compile(rb"trailer(.*?)startxref", re.S)
+_XREF_TYPE_RE = re.compile(rb"/Type\s*/XRef\b")
+
+
+def _xref_heads(objs: dict[int, _Obj]) -> list[bytes]:
+    """Heads of the /XRef streams: the trailer dicts of a PDF 1.5+ file
+    without a 'trailer' keyword.  The /Type check runs on parsed object
+    HEADS, not the whole file, so page text that merely mentions these
+    names cannot false-positive."""
+    return [
+        o.body for o in objs.values()
+        if o.stream is not None and _XREF_TYPE_RE.search(o.body)
+    ]
+
+
+def _trailer_ref(data: bytes, objs: dict[int, _Obj], key: bytes) -> int | None:
+    """Object number of `/key n g R` in the LAST trailer dict that
+    carries it (incremental updates append one trailer each), or None.
+    The trailer dicts are the `trailer ... startxref` sections, or the
+    /XRef stream heads when the file has no 'trailer' keyword — the
+    same heads _validated_objects scans for /Encrypt."""
+    if b"trailer" in data:
+        heads = [m.group(1) for m in _TRAILER_RE.finditer(data)]
+    else:
+        heads = _xref_heads(objs)
+    num = None
+    pat = re.compile(rb"/" + key + rb"\s+(\d+)\s+\d+\s+R")
+    for head in heads:
+        m = pat.search(head)
+        if m is not None:
+            num = int(m.group(1))
+    return num
+
+
 def _validated_objects(data: bytes) -> dict[int, _Obj]:
     """Header/encryption-validated object table with ObjStm expansion —
     the parse every extractor (text, layout, rasters, renderer) shares.
@@ -859,28 +893,21 @@ def _validated_objects(data: bytes) -> dict[int, _Obj]:
     # the whole file would reject documents whose page TEXT mentions it
     enc_ref: int | None = None
     id0 = b""
-    for tm in re.finditer(rb"trailer(.*?)startxref", data, re.S):
+    for tm in _TRAILER_RE.finditer(data):
         em = re.search(rb"/Encrypt\s+(\d+)\s+\d+\s+R", tm.group(1))
         if em is not None:
             enc_ref = int(em.group(1))
         elif re.search(rb"/Encrypt\b", tm.group(1)):
             raise ValueError("encrypted PDF: decryption unsupported")
     objs = _objects(data)
-    xref_heads: list[bytes] = []
     if b"trailer" not in data:
         # PDF 1.5+ layout: with no 'trailer' keyword the trailer dict
         # IS the /XRef stream's dict (its head sits UNCOMPRESSED in
         # the file, so the flat scan sees it) — that is where /Encrypt
         # lives for these files, and it must be found BEFORE ObjStm
         # expansion or an encrypted payload would surface as a zlib
-        # error instead of decrypting.  The /Type checks run on parsed
-        # object HEADS, not the whole file, so page text that merely
-        # mentions these names cannot false-positive.
-        xref_heads = [
-            o.body for o in objs.values()
-            if o.stream is not None
-            and re.search(rb"/Type\s*/XRef\b", o.body)
-        ]
+        # error instead of decrypting.
+        xref_heads = _xref_heads(objs)
         if not xref_heads:
             raise ValueError(
                 "no trailer keyword and no /XRef stream:"
@@ -916,7 +943,7 @@ def _validated_objects(data: bytes) -> dict[int, _Obj]:
         objs = {
             num: (
                 o if o.stream is None or num == enc_ref
-                or re.search(rb"/Type\s*/XRef\b", o.body)
+                or _XREF_TYPE_RE.search(o.body)
                 else _Obj(o.body, dec.decrypt_stream(num, o.stream))
             )
             for num, o in objs.items()
@@ -1770,10 +1797,10 @@ def extract_pdf_info(data: bytes) -> dict:
     out: dict = dict(title=None, author=None, subject=None,
                      producer=None, created=None,
                      n_pages=len(_page_order(data, objs)))
-    im = None
-    for im in re.finditer(rb"/Info\s+(\d+)\s+\d+\s+R", data):
-        pass  # LAST match wins: incremental updates append trailers
-    info = objs.get(int(im.group(1))) if im is not None else None
+    # /Info from the trailer, /Metadata from the catalog: a whole-file
+    # scan would also match stream payloads (a page that merely shows
+    # the text "/Info 5 0 R")
+    info = objs.get(_trailer_ref(data, objs, b"Info"))
     if info is not None:
         for key, field in ((b"Title", "title"), (b"Author", "author"),
                            (b"Subject", "subject"),
@@ -1791,7 +1818,11 @@ def extract_pdf_info(data: bytes) -> dict:
            for f in ("title", "author", "subject", "producer",
                      "created")):
         return out
-    mm = re.search(rb"/Metadata\s+(\d+)\s+\d+\s+R", data)
+    root = objs.get(_trailer_ref(data, objs, b"Root"))
+    mm = (
+        re.search(rb"/Metadata\s+(\d+)\s+\d+\s+R", root.body)
+        if root is not None else None
+    )
     if mm is not None:
         try:
             xml = _stream_of(objs.get(int(mm.group(1))))

@@ -29,6 +29,10 @@ import numpy as np
 from ..config import PreprocessingConfig
 from . import kernels
 
+# upper brightness bound, hardcoded in the reference (analyzer.go:33);
+# only the lower bound is configurable (PreprocessingConfig.brightness_min)
+BRIGHTNESS_MAX = 200.0
+
 
 @dataclass(frozen=True)
 class ImageQuality:
@@ -50,12 +54,12 @@ def analyze(img: np.ndarray, cfg: PreprocessingConfig) -> ImageQuality:
         sharp < cfg.sharpness_threshold
         or cont < cfg.contrast_threshold
         or bright < cfg.brightness_min
-        or bright > cfg.brightness_max
+        or bright > BRIGHTNESS_MAX
     )
     pipeline: list[str] = ["grayscale"]
     if bright < cfg.brightness_min:
         pipeline.append("brighten")
-    elif bright > cfg.brightness_max:
+    elif bright > BRIGHTNESS_MAX:
         pipeline.append("darken")
     if cont < cfg.contrast_threshold:
         pipeline.append("contrast_enhance")
@@ -111,15 +115,13 @@ def apply_step(
     if step == "contrast_enhance":
         return kernels.clahe(img)
     if step == "denoise":
-        return kernels.denoise(img, cfg.denoise_method, deadline=deadline)
+        return kernels.nl_means_denoise(img, deadline=deadline)
     if step == "binarization":
         return kernels.binarize(
             img, cfg.binarization_mode, cfg.adaptive_block_size, cfg.adaptive_c
         )
     if step == "deskew":
-        return kernels.deskew(
-            img, cfg.deskew_angle_limit, cfg.skew_method, deadline=deadline
-        )
+        return kernels.deskew(img, cfg.deskew_angle_limit, deadline=deadline)
     if step == "resize":
         return kernels.resize(img)  # no target dims configured => identity
     return img

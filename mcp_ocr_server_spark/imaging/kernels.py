@@ -65,18 +65,9 @@ def darken(img: np.ndarray) -> np.ndarray:
 # OpenCV's "fast" variant uses integer LUT-approximated exponentials
 # and a sliding-sum recurrence; we compute exact float weights, so
 # outputs differ at the unit-rounding level but follow the same
-# weighting semantics.  The reference's dead-path median blur
-# (internal/preprocessing/denoise.go:44-57) is kept as the cheap
-# alternative, dispatched by PreprocessingConfig.denoise_method.
-
-
-def median_denoise(img: np.ndarray, ksize: int = 3) -> np.ndarray:
-    gray = _ensure_gray(img)
-    pad = ksize // 2
-    padded = np.pad(gray, pad, mode="edge")
-    h, w = gray.shape
-    windows = np.lib.stride_tricks.sliding_window_view(padded, (ksize, ksize))
-    return np.median(windows.reshape(h, w, -1), axis=2).astype(np.uint8)
+# weighting semantics.  This is the one denoise kernel: the reference's
+# median blur (internal/preprocessing/denoise.go:44-57) is a dead path
+# there and has no counterpart here.
 
 
 def nl_means_denoise(
@@ -146,15 +137,6 @@ def nl_means_denoise(
             num += w * pf[pad + dy : pad + dy + H, pad + dx : pad + dx + W]
             den += w
     return np.clip(np.round(num / den), 0, 255).astype(np.uint8)
-
-
-def denoise(
-    img: np.ndarray, method: str = "nlmeans", deadline: float | None = None
-) -> np.ndarray:
-    """K2 dispatch: 'nlmeans' = live-path parity, 'median' = dead-path."""
-    if method == "median":
-        return median_denoise(img)
-    return nl_means_denoise(img, deadline=deadline)
 
 
 # --------------------------------------------------------------------------
@@ -376,36 +358,28 @@ def estimate_skew(img: np.ndarray, max_angle: float = 15.0) -> float:
 # K6+K5 combined deskew step with the reference's apply-thresholds:
 # rotate only if 0.5 < |angle| < deskew_angle_limit (preprocessor.go:246-252).
 #
-# Estimator selection (skew_method):
-#   "hough"         — strict reference parity: Canny -> HoughLinesP ->
-#                     median (imaging/hough.py, analyzer.go:169-232).
-#                     NOTE: with the reference's literal parameters
-#                     (vote threshold 100, maxLineGap 0) the estimator
-#                     returns 0.0 on small/fine-rastered pages — the
-#                     reference server leaves such pages uncorrected.
-#   "profile"       — projection-profile search (north_star-sanctioned
-#                     alternative; near-exact on the fixture corpus).
-#   "hough+profile" — DEFAULT: run the reference estimator first; when
-#                     it reports no evidence (0.0), refine with the
-#                     profile search.  Identical to the reference
-#                     whenever its estimator fires; strictly better
-#                     when it gives up.  Both estimators share the
-#                     rotate()-render sign convention (verified:
-#                     rotate(img, +8) => estimate ~ +8 from each).
+# The estimate always runs in one fixed order:
+#   1. the reference estimator: Canny -> HoughLinesP -> median
+#      (imaging/hough.py, analyzer.go:169-232);
+#   2. only when it reports no evidence (0.0), the projection-profile
+#      search (north_star-sanctioned; near-exact on the fixture corpus).
+# The fallback exists because with the reference's literal parameters
+# (vote threshold 100, maxLineGap 0) the Hough estimator returns 0.0 on
+# small/fine-rastered pages, which the reference server leaves
+# uncorrected.  The result is identical to the reference whenever its
+# estimator fires.  Both estimators share the rotate()-render sign
+# convention (verified: rotate(img, +8) => estimate ~ +8 from each).
 
 
 def deskew(
     img: np.ndarray,
     angle_limit: float = 10.0,
-    method: str = "hough+profile",
     deadline: float | None = None,
 ) -> np.ndarray:
-    angle = 0.0
-    if method in ("hough", "hough+profile"):
-        from .hough import skew_angle_hough
+    from .hough import skew_angle_hough
 
-        angle = skew_angle_hough(_ensure_gray(img), deadline=deadline)
-    if angle == 0.0 and method in ("profile", "hough+profile"):
+    angle = skew_angle_hough(_ensure_gray(img), deadline=deadline)
+    if angle == 0.0:
         angle = estimate_skew(img)
     if 0.5 < abs(angle) < angle_limit:
         return rotate(img, -angle)

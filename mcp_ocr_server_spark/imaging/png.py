@@ -165,6 +165,8 @@ def decode_png(data: bytes) -> np.ndarray:
         payload = data[pos + 8 : pos + 8 + length]
         pos += 12 + length
         if tag == b"IHDR":
+            if len(payload) != 13:
+                raise ValueError("corrupt PNG: IHDR length")
             width, height, bit_depth, color_type, _, _, interlace = struct.unpack(
                 ">IIBBBBB", payload
             )

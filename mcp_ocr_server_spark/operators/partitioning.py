@@ -14,7 +14,7 @@ layers, applied in plans/pipeline.py:
    result re-joins to every referencing span.  This is both the
    memoization (cache.go:188-198) and the hot-key de-skew.
 3. **Uniform redistribution.**  sha256 content hashes are uniformly
-   distributed, so `repartition(n, salted_hash)` gives near-perfect
+   distributed, so `repartition(n, xxhash64(hash))` gives near-perfect
    row balance with no hot partition; n is sized from a byte-cost
    hint so each partition carries a bounded volume of media bytes.
 
@@ -32,14 +32,10 @@ from pyspark.sql import DataFrame, functions as F
 # target media bytes per task at scale: small enough that a partition of
 # encoded images + decoded arrays fits executor memory comfortably
 TARGET_BYTES_PER_PARTITION = 64 * 1024 * 1024
+MAX_PARTITIONS = 100_000
 
 
-def n_partitions_for_cost(
-    spark,
-    total_cost_bytes: int | None,
-    min_parts: int | None = None,
-    max_parts: int = 100_000,
-) -> int:
+def n_partitions_for_cost(spark, total_cost_bytes: int | None) -> int:
     # Floor = 4x parallelism, not 1x: per-image cost is heavy-tailed
     # (NL-means runs only on low-sharpness pages, 10-30x the cost of a
     # clean page), so core-count-sized partitions leave straggler tasks
@@ -47,25 +43,21 @@ def n_partitions_for_cost(
     # rebalance; measured 9.0 s -> 7.0 s on the sf0.1 extraction at
     # local[32] (128 partitions), with task overhead negligible against
     # per-image compute.  The byte-cost term still dominates at scale.
-    base = spark.sparkContext.defaultParallelism
-    min_parts = min_parts or base * 4
+    min_parts = spark.sparkContext.defaultParallelism * 4
     if total_cost_bytes is None:
         return min_parts
-    return max(min_parts, min(max_parts, math.ceil(total_cost_bytes / TARGET_BYTES_PER_PARTITION)))
+    return max(
+        min_parts,
+        min(MAX_PARTITIONS, math.ceil(total_cost_bytes / TARGET_BYTES_PER_PARTITION)),
+    )
 
 
 def repartition_media(
-    df: DataFrame,
-    key: str = "content_hash",
-    total_cost_bytes: int | None = None,
-    salt: int = 0,
+    df: DataFrame, total_cost_bytes: int | None = None
 ) -> DataFrame:
-    """Redistribute distinct media work units uniformly.
-
-    `xxhash64(key, salt)` re-keys the (already uniform) content hash so
-    repeated runs with different salts land differently — useful when a
-    straggler analysis wants a different placement without changing n.
-    """
+    """Redistribute distinct media work units uniformly by
+    `xxhash64(content_hash, 0)`, which re-keys the (already uniform)
+    content hash; the fixed seed keeps placement stable across runs."""
     spark = df.sparkSession
     n = n_partitions_for_cost(spark, total_cost_bytes)
-    return df.repartition(n, F.xxhash64(F.col(key), F.lit(salt)))
+    return df.repartition(n, F.xxhash64(F.col("content_hash"), F.lit(0)))

@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, JobConfig
-from .pipeline import SPAN_COLS, extract
+from .pipeline import SPAN_COLS, extract, hash_media, hash_pdfs
 
 WATERMARK_SCHEMA = (
     "bucket int, run_id string, n_docs long, n_spans long, n_errors long,"
@@ -271,22 +271,10 @@ def run_checkpointed(
     # - (ref, n_bytes, content_hash) projection, persisted: sha256 over
     #   the media bytes runs exactly once
     # - partition-sizing hint (at cluster scale: Iceberg table metadata)
-    from .pipeline import content_hash_col
-
-    media_hashed = media.select(
-        "media_ref",
-        F.length("bytes").alias("n_bytes"),
-        content_hash_col(cfg).alias("content_hash"),
-    ).persist()
+    media_hashed = hash_media(media, cfg).persist()
     # pdf analogue of media_hashed: sha256 over the pdf corpus runs
     # once per run, not twice per bucket (review finding)
-    pdfs_hashed = (
-        pdfs.select(
-            "media_ref", F.sha2("bytes", 256).alias("content_hash")
-        ).persist()
-        if pdfs is not None
-        else None
-    )
+    pdfs_hashed = hash_pdfs(pdfs).persist() if pdfs is not None else None
     try:
         total_bytes = media_hashed.agg(F.sum("n_bytes")).first()[0] or 0
         bucket_cost = max(1, int(total_bytes) // b)

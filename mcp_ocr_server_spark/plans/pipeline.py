@@ -94,6 +94,9 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 def content_hash_col(cfg: JobConfig) -> F.Column:
     """C1 cache key: hex(sha256(bytes || language || bool-string ||
     engine)) (cache.go:188-198; auto_mode deliberately NOT in the key).
+    The bool-string is the reference's preprocessing flag, always
+    "true" here: preprocessing always runs, so the literal keeps every
+    key equal to one the reference would write.
 
     One extension beyond the reference's key: the RESOLVED engine name.
     The reference has exactly one engine; here a memo row written by the
@@ -107,13 +110,26 @@ def content_hash_col(cfg: JobConfig) -> F.Column:
         F.concat(
             F.col("bytes"),
             F.lit(cfg.ocr.language.encode("utf-8")),
-            F.lit(
-                ("true" if cfg.preprocessing.enabled else "false").encode("utf-8")
-            ),
+            F.lit(b"true"),
             F.lit(resolved_engine(cfg.ocr).encode("utf-8")),
         ),
         256,
     )
+
+
+def hash_media(media: DataFrame, cfg: JobConfig) -> DataFrame:
+    """media(media_ref, bytes) -> (media_ref, n_bytes, content_hash):
+    the projection every media consumer joins on instead of the bytes."""
+    return media.select(
+        "media_ref",
+        F.length("bytes").alias("n_bytes"),
+        content_hash_col(cfg).alias("content_hash"),
+    )
+
+
+def hash_pdfs(pdfs: DataFrame) -> DataFrame:
+    """pdfs(media_ref, bytes) -> (media_ref, content_hash)."""
+    return pdfs.select("media_ref", F.sha2("bytes", 256).alias("content_hash"))
 
 
 def _null(dtype: str) -> F.Column:
@@ -182,11 +198,7 @@ def extract(
     # strings), then fetch that representative's bytes with one join;
     # bytes cross the wire exactly once, into the OCR stage.
     if media_hashed is None:
-        media_hashed = media.select(
-            "media_ref",
-            F.length("bytes").alias("n_bytes"),
-            content_hash_col(cfg).alias("content_hash"),
-        )
+        media_hashed = hash_media(media, cfg)
     media_spans = (
         spans.filter(F.col("kind") == "image")
         .join(media_hashed, "media_ref", "left")
@@ -283,17 +295,10 @@ def _pdf_branch(
     1.0."""
     from ..config import PDF_PARSE_FAILED
     from ..functions.pdf import PDF_RESULT_SCHEMA, make_pdf_parse_map
-    from ..operators.partitioning import repartition_media
 
     pdf_parse_map = make_pdf_parse_map(ocr_cfg=cfg)
 
-    pdf_hashed = (
-        pdfs_hashed
-        if pdfs_hashed is not None
-        else pdfs.select(
-            "media_ref", F.sha2("bytes", 256).alias("content_hash")
-        )
-    )
+    pdf_hashed = pdfs_hashed if pdfs_hashed is not None else hash_pdfs(pdfs)
     pdf_spans = spans.filter(F.col("kind") == "pdf").join(
         pdf_hashed, "media_ref", "left"
     )

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, JobConfig
-from ..plans.pipeline import extract
+from ..plans.pipeline import extract, hash_media, hash_pdfs
 from ..sources.synthetic import DOCS_SCHEMA
 
 # the events fixture's exact parquet schema (ts is timestamp_NTZ on
@@ -213,24 +213,13 @@ def stream_extract(
     # Parked in the shared sketch cache => released by
     # queries.clear_caches, the house lifecycle for persisted handles.
     from ..queries import _persisted_sig
-    from ..plans.pipeline import content_hash_col
 
     media_hashed = _persisted_sig(
-        spark,
-        ("stream_media_hashed", out_dir),
-        lambda: media.select(
-            "media_ref",
-            F.length("bytes").alias("n_bytes"),
-            content_hash_col(cfg).alias("content_hash"),
-        ),
+        spark, ("stream_media_hashed", out_dir), lambda: hash_media(media, cfg)
     )
     pdfs_hashed = (
         _persisted_sig(
-            spark,
-            ("stream_pdfs_hashed", out_dir),
-            lambda: pdfs.select(
-                "media_ref", F.sha2("bytes", 256).alias("content_hash")
-            ),
+            spark, ("stream_pdfs_hashed", out_dir), lambda: hash_pdfs(pdfs)
         )
         if pdfs is not None
         else None

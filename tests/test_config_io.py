@@ -21,9 +21,9 @@ def test_example_config_loads():
     assert cfg.ocr.psm == 3 and cfg.ocr.oem == 3
     assert cfg.ocr.max_image_size == 10 * 1024 * 1024
     assert cfg.preprocessing.binarization_mode == "otsu"
-    assert cfg.preprocessing.skew_method == "hough+profile"
-    assert cfg.cache.enabled and cfg.cache.max_entries == 100
-    assert cfg.media_partitions == 32
+    assert cfg.checkpoint_buckets == 32
+    # the example file restates every default the job reads
+    assert cfg.preprocessing == JobConfig().preprocessing
 
 
 def test_empty_doc_gives_reference_defaults():
@@ -31,7 +31,7 @@ def test_empty_doc_gives_reference_defaults():
     dflt = JobConfig()
     assert cfg.ocr == dflt.ocr
     assert cfg.preprocessing == dflt.preprocessing
-    assert cfg.cache == dflt.cache
+    assert cfg.checkpoint_buckets == dflt.checkpoint_buckets
 
 
 @pytest.mark.parametrize(
@@ -44,12 +44,15 @@ def test_empty_doc_gives_reference_defaults():
          "invalid binarization_mode"),
         ({"preprocessing": {"adaptive_block_size": 10}},
          "invalid adaptive_block_size"),
-        ({"preprocessing": {"skew_method": "fft"}}, "invalid skew_method"),
+        # keys the job does not read are refused by name, not dropped
+        ({"preprocessing": {"skew_method": "fft"}},
+         "unknown config key: preprocessing.skew_method"),
         ({"performance": {"cache_enabled": True, "cache_size": 0}},
-         "invalid cache_size"),
-        ({"performance": {"worker_pool_size": 0}},
-         "invalid worker_pool_size"),
-        ({"performance": {"queue_size": 0}}, "invalid queue_size"),
+         "unknown config key: performance"),
+        ({"spark": {"media_partitions": 0}},
+         "unknown config key: spark.media_partitions"),
+        ({"preprocessing": {"quality_thresholds": {"brightness_max": 1}}},
+         "unknown config key: preprocessing.quality_thresholds.brightness_max"),
         ({"spark": {"checkpoint_buckets": 0}}, "invalid checkpoint_buckets"),
     ],
 )
@@ -62,14 +65,20 @@ def test_quality_thresholds_and_spark_overrides():
     cfg = job_config_from_dict(
         {
             "preprocessing": {"quality_thresholds": {"sharpness": 55.0}},
-            "performance": {"worker_pool_size": 8},
-            "spark": {"media_partitions": 64, "checkpoint_buckets": 128},
+            "spark": {"checkpoint_buckets": 128},
         }
     )
     assert cfg.preprocessing.sharpness_threshold == 55.0
-    # explicit spark.media_partitions beats the worker_pool_size mapping
-    assert cfg.media_partitions == 64
+    assert cfg.preprocessing.contrast_threshold == 30.0
     assert cfg.checkpoint_buckets == 128
-    # without the spark override, pool size maps through
-    cfg2 = job_config_from_dict({"performance": {"worker_pool_size": 8}})
-    assert cfg2.media_partitions == 8
+
+
+def test_unknown_key_refused():
+    """A typo is refused by its dotted path instead of silently falling
+    back to the default."""
+    with pytest.raises(
+        ConfigError, match="unknown config key: preprocessing.skew_methd"
+    ):
+        job_config_from_dict({"preprocessing": {"skew_methd": "profile"}})
+    with pytest.raises(ConfigError, match="unknown config key: ocr.langauge"):
+        job_config_from_dict({"ocr": {"langauge": "eng"}})

@@ -96,8 +96,8 @@ def test_reference_params_below_evidence_on_small_pages():
     """With the literal reference parameters (vote threshold 100,
     maxLineGap 0), small fine-rastered pages fall below the evidence
     guard and the estimator reports 0.0 — the reference server leaves
-    such pages uncorrected.  This pins why skew_method defaults to
-    'hough+profile'."""
+    such pages uncorrected.  This pins why deskew falls back to the
+    projection-profile search."""
     from mcp_ocr_server_spark.imaging.png import decode_png
     from mcp_ocr_server_spark.sources.synthetic import CorpusConfig, media_item
 
@@ -115,15 +115,15 @@ def test_reference_params_below_evidence_on_small_pages():
 
 
 def test_deskew_dispatch_hough_profile():
-    """Default method corrects a 3-degree page via the profile
-    refinement when the reference estimator reports no evidence."""
+    """deskew corrects a 3-degree page via the profile refinement
+    when the reference estimator reports no evidence."""
     from mcp_ocr_server_spark.imaging.font import render_text
 
     img = render_text("HELLO WORLD THIS IS A TEST LINE", scale=3)
     pad = 20
     img = np.pad(img, pad, mode="constant", constant_values=255)
     rot = kernels.rotate(img, 3.0)
-    out = kernels.deskew(kernels.binarize_otsu(rot), 10.0, "hough+profile")
+    out = kernels.deskew(kernels.binarize_otsu(rot), 10.0)
     assert abs(kernels.estimate_skew(out)) <= 0.5
 
 
@@ -167,12 +167,3 @@ def test_nlmeans_committed_expected_output():
 
 EXPECTED_NLMEANS_DIGEST = "7d087c505d936eee"
 
-
-def test_denoise_dispatch():
-    _clean, noisy = _noisy_pair()
-    assert np.array_equal(
-        kernels.denoise(noisy, "median"), kernels.median_denoise(noisy)
-    )
-    assert np.array_equal(
-        kernels.denoise(noisy, "nlmeans"), kernels.nl_means_denoise(noisy)
-    )

@@ -318,7 +318,7 @@ def test_decode_image_sniffs_all_formats():
 # infinite loop (the exception-contract class the audio sniffers pin
 # the same way).
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from mcp_ocr_server_spark.imaging.webp import encode_webp
@@ -350,6 +350,7 @@ def test_decode_image_fuzz_magic_prefixed(data):
 
 @settings(max_examples=90, deadline=None)
 @given(st.integers(min_value=0, max_value=10_000), st.integers(0, 8))
+@example(cut=16, which=4)  # PNG cut inside IHDR: struct.error once
 def test_decode_image_truncation_fuzz(cut, which):
     # truncations of VALID streams — the parsers must refuse loudly,
     # not wander: exercises mid-structure EOF in every container

@@ -66,15 +66,6 @@ def test_adaptive_mean_binarization():
     assert b[0, 0] == 255
 
 
-def test_median_denoise_removes_salt_pepper():
-    img = np.full((20, 20), 128, dtype=np.uint8)
-    rng = np.random.RandomState(42)
-    ys, xs = rng.randint(1, 19, 10), rng.randint(1, 19, 10)
-    img[ys, xs] = 255
-    out = kernels.median_denoise(img, 3)
-    assert (out == 128).all()
-
-
 def test_sharpness_blur_ordering():
     """Laplacian variance: sharp text >> blurred text (A1 threshold basis)."""
     img = render_text("SHARPNESS TEST IMAGE", scale=3)

@@ -150,6 +150,18 @@ def test_stsc_first_chunk_must_increase():
             parse_mp4_frames(_with_chunk_tables(stsc, 2))
 
 
+def test_co64_refused_by_name():
+    # a track whose chunk offsets are 64-bit (co64, not stco) still
+    # reports metadata, but the demuxer refuses it by name rather than
+    # as a track without sample tables
+    good = encode_mp4(1.0, frames=[b"x"])
+    assert good.count(b"stco") == 1
+    d = good.replace(b"stco", b"co64")
+    assert mp4_metadata(d)["n_frames"] == 1
+    with pytest.raises(ValueError, match="co64 chunk offsets unsupported"):
+        parse_mp4_frames(d)
+
+
 def test_fuzz_exception_discipline():
     # every corruption either parses or raises ValueError — never a
     # foreign exception, never a hang (the avi/audio_meta contract)

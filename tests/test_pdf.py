@@ -565,6 +565,23 @@ def test_pdf_info_metadata():
     assert row["error"] is not None and row["n_pages"] is None
 
 
+def test_pdf_info_from_trailer_not_content():
+    """/Info resolves through the trailer dict only: a page whose text
+    shows "/Info 6 0 R" must not pull in object 6 as the document's
+    metadata once the trailer carries no /Info."""
+    from mcp_ocr_server_spark.functions.pdf import extract_pdf_info
+    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
+
+    # objects: 1 catalog, 2 pages, 3 font, 4 page, 5 content, 6 /Info
+    pdf = make_pdf_bytes([["see /Info 6 0 R"]], info=dict(title="Smuggled"))
+    assert extract_pdf_info(pdf)["title"] == "Smuggled"
+    head, tail = pdf.rsplit(b" /Info 6 0 R", 1)
+    assert b"trailer" in head and b"startxref" in tail
+    stripped = head + tail
+    assert b"/Info 6 0 R" in stripped  # still in the content stream
+    assert extract_pdf_info(stripped)["title"] is None
+
+
 def test_pdf_info_xmp_fallback():
     """XMP /Metadata fills fields the /Info dict lacks (per-field,
     /Info winning where both exist), with XML entities unescaped and

@@ -74,6 +74,25 @@ def test_corpus_exercises_all_paths(result):
     assert any(r.confidence is not None and r.confidence > 0 for r in exp.values())
 
 
+def test_content_hash_key_known_answer(spark):
+    """The memo key is sha256(bytes || language || b"true" || engine):
+    a changed key would orphan every committed memo row."""
+    import hashlib
+
+    from mcp_ocr_server_spark.plans.pipeline import content_hash_col
+
+    data = bytes(range(256)) * 3
+    got = (
+        spark.createDataFrame([(bytearray(data),)], "bytes binary")
+        .select(content_hash_col(FIXTURE_JOB).alias("h"))
+        .first()
+        .h
+    )
+    assert got == hashlib.sha256(
+        data + b"eng+chi_sim+chi_tra+jpn" + b"true" + b"template"
+    ).hexdigest()
+
+
 def test_memoization_computes_each_hash_once(spark):
     """C2/C3: distinct content hashes are computed exactly once even when
     media is byte-duplicated across documents (cache_test.go:64-77)."""
