@@ -962,6 +962,26 @@ def test_hash_2b_termination_and_determinism():
     assert hash_2b(b"", b"s1" * 4, b"u" * 48) != hash_2b(b"", b"s1" * 4)
 
 
+@pytest.mark.parametrize("pw,salt,udata,expected", [
+    (b"", b"saltsalt", b"",
+     "f383e1cdcd8e7e67f45a599473d3f5a7bd181c381364391074cafe0713e3331d"),
+    (b"", bytes(range(8)), b"u" * 48,
+     "aaf0a7ffc1d8eb215cacf3e329d3365e3308109b21a91de209922743290203af"),
+    (b"secret", b"saltsalt", b"",
+     "f28f56ef5747965c3a052f8e074560c8fb02d13283508c02219717d36ef23e4c"),
+    (b"secret", b"\x00\xff" * 4, bytes(range(48)),
+     "13cab767b8873d187efcac2368e9351f648b7b7bced6c8dd1e70229fc57f9694"),
+    ("pässwörd-ünïcode".encode() * 5, b"KEYSALT!", b"\x9a" * 48,
+     "ad24b10a305e8621a4b8dcd06cbccc080c308d306dc8ebe471184c0efccf3650"),
+], ids=["empty", "empty-udata", "pw", "pw-udata", "utf8-udata"])
+def test_hash_2b_known_answers(pw, salt, udata, expected):
+    """Pinned Algorithm 2.B outputs: a faster hash_2b must reproduce
+    them exactly (empty and non-empty passwords, /U data absent and
+    48 bytes, a 100-byte UTF-8 password)."""
+    from mcp_ocr_server_spark.functions.pdfcrypt import hash_2b
+    assert hash_2b(pw, salt, udata).hex() == expected
+
+
 def test_dangling_encrypt_ref_still_refuses():
     data = make_pdf([["x"]])
     data = data.replace(b"/Root 1 0 R", b"/Root 1 0 R /Encrypt 99 0 R")
