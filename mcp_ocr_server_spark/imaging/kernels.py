@@ -70,6 +70,17 @@ def darken(img: np.ndarray) -> np.ndarray:
 # there and has no counterpart here.
 
 
+def _shift_sum(src: np.ndarray, out: np.ndarray, taps: int, step: int) -> None:
+    """out[:, i] = sum of src[:, i + k*step] for k < taps."""
+    n = out.shape[1]
+    if taps == 1:
+        np.copyto(out, src[:, :n])
+        return
+    np.add(src[:, :n], src[:, step : step + n], out=out)
+    for k in range(2, taps):
+        out += src[:, k * step : k * step + n]
+
+
 def nl_means_denoise(
     img: np.ndarray,
     h: float = 3.0,
@@ -80,62 +91,77 @@ def nl_means_denoise(
     """Non-local means: each pixel is the weight-averaged value of every
     pixel in its search window, weighted by 7x7 patch similarity.
 
-    Per-offset patch distances use the box-filter identity
-    D_v = B2(x+v) + B2(x) - 2*box(I * I_v)  (B2 = box(I^2) precomputed
-    once), so each of the search^2 offsets costs one product + one
-    integral image instead of a fresh patch convolution.  float32
-    throughout; ~0.1-0.3 s on fixture-sized pages, run only for images
-    the analyzer flags blurry (sharpness < threshold)."""
+    One offset row `dy` at a time, its `dx` offsets in groups: each
+    group forms (shifted - centre)^2 over the patch-padded frame, box-
+    sums it with two separable shift-add passes, and turns the distances
+    into float32 weights in one exp.  Then num/den accumulate offset by
+    offset in (dy, dx) order, so the float32 sums see the same operands
+    in the same order as a plain per-offset loop.  ~0.1-0.2 s on
+    fixture-sized pages, run only for images the analyzer flags blurry
+    (sharpness < threshold)."""
     gray = _ensure_gray(img)
     t = template // 2
     s = search // 2
     H, W = gray.shape
     pad = s + t
-    # Integral images over INTEGER pixel products: p*p <= 65025 and the
-    # full-image cumsum can reach ~6e9 on a large page — past float32's
-    # 24-bit mantissa (errors of hundreds in the patch distances, i.e.
-    # multiplicative noise in the weights).  int64 keeps every patch
-    # distance EXACT; only the weight exponential runs in float32.
-    pi = np.pad(gray, pad, mode="reflect").astype(np.int64)
+    # Patch distances are EXACT integers: a box sum of squared 8-bit
+    # differences is at most template^2 * 255^2 (3,186,225 for 7x7), so
+    # int32 never wraps, and since that is below 2^24 the conversion to
+    # float32 is exact too.  Only the weight exponential rounds.  (A
+    # float32 integral image would not be exact: the full-image cumsum
+    # passes float32's 24-bit mantissa on a large page.)
+    pi = np.pad(gray, pad, mode="reflect").astype(np.int32)
     pf = pi.astype(np.float32)
-    area = float(template * template)
-    inv_h2 = 1.0 / (h * h)
-
-    def box(a: np.ndarray) -> np.ndarray:
-        # box-sum over the template window; output indexed by padded
-        # coords minus t (valid for any center in [t, size-t))
-        ii = np.cumsum(np.cumsum(a, axis=0, dtype=np.int64), axis=1)
-        ii = np.pad(ii, ((1, 0), (1, 0)))
-        return (
-            ii[template:, template:] - ii[:-template, template:]
-            - ii[template:, :-template] + ii[:-template, :-template]
-        )
-
-    b2 = box(pi * pi)  # b2[y, x] = patch-sq-sum centered at padded (y+t, x+t)
+    scale = np.float32(-(1.0 / (h * h)) / float(template * template))
+    ph, pw = H + 2 * t, W + 2 * t  # patch-padded frame around the centres
+    centre = pi[s : s + ph, s : s + pw]
+    # Offsets per group: all `search` of a row on small pages, fewer on
+    # large ones, so each int32 work buffer stays near 2^20 elements
+    # (4 MB).  Batching a whole row of a 1024x1024 page would peak at
+    # ~550 MB; one offset at a time keeps the same page under ~50 MB.
+    group = max(1, min(search, 2**20 // (ph * pw)))
+    # One flattened frame per offset, so both box passes are shift-adds
+    # over contiguous rows: the vertical pass shifts by whole frame rows
+    # (pw), the horizontal pass by one element.  Horizontal sums that
+    # run past a frame row land in columns >= W, which are never read;
+    # the last template-1 of each offset are never written (zeros).
+    sq = np.empty((group, ph * pw), dtype=np.int32)
+    col = np.empty((group, H * pw), dtype=np.int32)
+    d2 = np.zeros((group, H * pw), dtype=np.int32)
+    wt = np.empty((group, H * pw), dtype=np.float32)
+    prod = np.empty((H, W), dtype=np.float32)
     num = np.zeros((H, W), dtype=np.float32)
     den = np.zeros((H, W), dtype=np.float32)
-    c0 = pf[pad : pad + H, pad : pad + W]
-    b2c = b2[s : s + H, s : s + W]  # patch-sq-sum at image centers
     for dy in range(-s, s + 1):
         # cooperative P4 deadline: one check per offset row (21 rows of
         # 21 offsets each — each row is a bounded slice of the ~441
         # full-frame passes that make this the costliest kernel)
         check_deadline(deadline, "nl_means_denoise")
-        for dx in range(-s, s + 1):
-            if dy == 0 and dx == 0:
-                num += c0
-                den += 1.0
-                continue
-            sh = pi[pad + dy - t : pad + dy + H + t, pad + dx - t : pad + dx + W + t]
-            cross = box(pi[pad - t : pad + H + t, pad - t : pad + W + t] * sh)
-            # exact integer distance (>= 0 by Cauchy-Schwarz, no clamp)
-            d2 = b2c + b2[s + dy : s + dy + H, s + dx : s + dx + W] - 2 * cross
-            w = np.exp(
-                d2.astype(np.float32) * np.float32(-inv_h2 / area),
-                dtype=np.float32,
-            )
-            num += w * pf[pad + dy : pad + dy + H, pad + dx : pad + dx + W]
-            den += w
+        for dx0 in range(-s, s + 1, group):
+            dxs = range(dx0, min(dx0 + group, s + 1))
+            n = len(dxs)
+            q = sq[:n]
+            for k, dx in enumerate(dxs):
+                np.subtract(
+                    pi[s + dy : s + dy + ph, s + dx : s + dx + pw], centre,
+                    out=q[k].reshape(ph, pw),
+                )
+            np.multiply(q, q, out=q)
+            _shift_sum(q, col[:n], template, pw)
+            _shift_sum(col[:n], d2[:n, : H * pw - (template - 1)], template, 1)
+            w = wt[:n]
+            np.multiply(d2[:n], scale, out=w, dtype=np.float32)
+            np.exp(w, out=w)
+            # the centre offset needs no special case: its distance is 0,
+            # its weight exp(-0.0) = 1.0 exactly, and 1.0 * c0 == c0
+            for k, dx in enumerate(dxs):
+                wk = w[k].reshape(H, pw)[:, :W]
+                np.multiply(
+                    wk, pf[pad + dy : pad + dy + H, pad + dx : pad + dx + W],
+                    out=prod,
+                )
+                num += prod
+                den += wk
     return np.clip(np.round(num / den), 0, 255).astype(np.uint8)
 
 
