@@ -551,11 +551,15 @@ def _page_order(data: bytes, objs: dict[int, _Obj]) -> list[int]:
             for m in _REF_RE.finditer(kids.group(1)):
                 walk(int(m.group(1)), depth + 1)
 
-    root = re.search(rb"/Root\s+(\d+)\s+\d+\s+R", data)
-    if root and int(root.group(1)) in objs:
-        cat = re.search(
-            rb"/Pages\s+(\d+)\s+\d+\s+R", objs[int(root.group(1))].body
-        )
+    # the last trailer's /Root wins (an incremental update may point it
+    # at a new catalog); the first /Root anywhere only when no trailer
+    # carries one
+    root = _trailer_ref(data, objs, b"Root")
+    if root is None:
+        m = re.search(rb"/Root\s+(\d+)\s+\d+\s+R", data)
+        root = int(m.group(1)) if m else None
+    if root in objs:
+        cat = re.search(rb"/Pages\s+(\d+)\s+\d+\s+R", objs[root].body)
         if cat:
             walk(int(cat.group(1)))
     if not pages:

@@ -391,6 +391,33 @@ def test_incremental_update_takes_latest_object():
     assert extract_pdf_text(data) == ["updated words"]
 
 
+def test_incremental_update_new_catalog_takes_last_trailer_root():
+    """An update that appends a new catalog and points the LAST trailer's
+    /Root at it replaces the page tree; the first /Root in the file
+    (the original trailer's) must not win."""
+    from mcp_ocr_server_spark.functions.pdf import extract_pdf_info
+    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
+
+    base = make_pdf_bytes([["one"], ["two"]])
+    assert extract_pdf_text(base) == ["one", "two"]
+    at9 = len(base)
+    obj9 = b"9 0 obj\n<< /Type /Catalog /Pages 10 0 R >>\nendobj\n"
+    at10 = at9 + len(obj9)
+    obj10 = b"10 0 obj\n<< /Type /Pages /Kids [6 0 R] /Count 1 >>\nendobj\n"
+    xref_at = at10 + len(obj10)
+    prev = base.rfind(b"startxref")
+    prev_off = int(base[prev:].split()[1])
+    data = (
+        base + obj9 + obj10
+        + b"xref\n9 2\n" + f"{at9:010d} 00000 n \n{at10:010d} 00000 n \n".encode()
+        + b"trailer\n<< /Size 11 /Root 9 0 R /Prev "
+        + str(prev_off).encode() + b" >>\nstartxref\n"
+        + str(xref_at).encode() + b"\n%%EOF\n"
+    )
+    assert extract_pdf_text(data) == ["two"]
+    assert extract_pdf_info(data)["n_pages"] == 1
+
+
 def test_filter_corpus_classes_extract_clean_text():
     """The pdf corpus's lzw and a85 classes (real /LZWDecode streams
     and the [/A85 /Fl] chain) extract ascii prose — they are TEXT
