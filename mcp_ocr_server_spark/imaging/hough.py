@@ -173,21 +173,20 @@ def hough_lines_p(
     The per-point replay is the floor for numpy, and on text pages it
     is most of the work: saturated text-row bins fire on almost every
     pixel of their row, so a trigger comes every ~16 replayed points
-    and nearly every chunk replays.  Per point the replay is one gather, add and
-    scatter on the accumulator plus an argmax.  Bins are intp: with
-    int32 bins every gather and scatter converted the index array
-    first, which made the vote ~2x dearer.  A consumed segment is
-    rasterised pixel by pixel, then the bins of all the pixels it
-    clears come from one block and are cancelled row by row.  Over the
-    116 edge maps of the benchmark's image library this call went
-    from ~6.1 s to ~3.2 s on one core.  Exact alternatives that
-    measured slower or no better: a vectorised search for each
-    chunk's first trigger (3x slower: it reruns after every trigger),
-    splitting points into ones whose bins can reach the threshold in
-    the chunk and ones whose bins cannot (no gain), 8-point mini-batch
-    replay (no gain), 16-, 32- and 64-point chunks (slower), and
-    take/put through a preallocated vote buffer (slower than intp
-    fancy indexing)."""
+    and nearly every chunk replays.  Per point the replay is one
+    gather, add and scatter on the accumulator plus an argmax.  Bins
+    are intp: with int32 bins every gather and scatter converted the
+    index array first, which made the vote ~2x dearer.  A consumed
+    segment is rasterised pixel by pixel, then the bins of all the
+    pixels it clears come from one block and are cancelled row by row.
+    The 116 edge maps of the benchmark's image library take ~3.2 s in
+    all on one core.  Exact alternatives that measured slower or no
+    better: a vectorised search for each chunk's first trigger (3x
+    slower: it reruns after every trigger), splitting points into ones
+    whose bins can reach the threshold in the chunk and ones whose
+    bins cannot (no gain), 8-point mini-batch replay (no gain), 16-,
+    32- and 64-point chunks (slower), and take/put through a
+    preallocated vote buffer (slower than intp fancy indexing)."""
     h, w = edges.shape
     n_theta = int(round(math.pi / theta_res))
     thetas = np.arange(n_theta) * theta_res
@@ -213,11 +212,12 @@ def hough_lines_p(
     # never as one (n_pts x n_theta) precompute: on a dense page that
     # table is ~40-80 MB, above glibc's mmap threshold, so every image
     # paid first-touch page faults for it (measured ~2-3 s per 80 MB)
-    # while a 128 x 180 chunk buffer is heap-reused for free.  One elementwise formula serves the vote and the cancel
-    # path, so a cancel hits exactly the voted bins: float64 coords
-    # (exact for pixel magnitudes), x*cos + y*sin, round, shift by
-    # max_rho, offset by theta*n_rho.  Bins are intp so fancy indexing
-    # into the accumulator needs no per-point index conversion.
+    # while a 128 x 180 chunk buffer is heap-reused for free.  One
+    # elementwise formula serves the vote and the cancel path, so a
+    # cancel hits exactly the voted bins: float64 coords (exact for
+    # pixel magnitudes), x*cos + y*sin, round, shift by max_rho, offset
+    # by theta*n_rho.  Bins are intp so fancy indexing into the
+    # accumulator needs no per-point index conversion.
     bin_base = np.arange(n_theta, dtype=np.intp) * n_rho + max_rho
 
     def bins_of(xf: np.ndarray, yf: np.ndarray) -> np.ndarray:

@@ -96,9 +96,12 @@ def nl_means_denoise(
     sums it with two separable shift-add passes, and turns the distances
     into float32 weights in one exp.  Then num/den accumulate offset by
     offset in (dy, dx) order, so the float32 sums see the same operands
-    in the same order as a plain per-offset loop.  ~0.1-0.2 s on
-    fixture-sized pages, run only for images the analyzer flags blurry
-    (sharpness < threshold)."""
+    in the same order as a plain per-offset loop (the reference in
+    tests/test_kernel_pins.py), and the output matches it bit for bit.
+    Run only for images the analyzer flags blurry (sharpness <
+    threshold).  Single core: the 13 blurry pages of the benchmark's
+    image library take ~1.6 s in all (the per-offset loop ~3.0 s); a
+    1024x1024 page takes ~5 s at a traced peak of ~45 MB."""
     gray = _ensure_gray(img)
     t = template // 2
     s = search // 2
@@ -107,9 +110,7 @@ def nl_means_denoise(
     # Patch distances are EXACT integers: a box sum of squared 8-bit
     # differences is at most template^2 * 255^2 (3,186,225 for 7x7), so
     # int32 never wraps, and since that is below 2^24 the conversion to
-    # float32 is exact too.  Only the weight exponential rounds.  (A
-    # float32 integral image would not be exact: the full-image cumsum
-    # passes float32's 24-bit mantissa on a large page.)
+    # float32 is exact too.  Only the weight exponential rounds.
     pi = np.pad(gray, pad, mode="reflect").astype(np.int32)
     pf = pi.astype(np.float32)
     scale = np.float32(-(1.0 / (h * h)) / float(template * template))
@@ -119,6 +120,8 @@ def nl_means_denoise(
     # large ones, so each int32 work buffer stays near 2^20 elements
     # (4 MB).  Batching a whole row of a 1024x1024 page would peak at
     # ~550 MB; one offset at a time keeps the same page under ~50 MB.
+    # Grouping pays because the per-offset work is a handful of numpy
+    # passes over the frame: on a 44x444 page a whole row is one group.
     group = max(1, min(search, 2**20 // (ph * pw)))
     # One flattened frame per offset, so both box passes are shift-adds
     # over contiguous rows: the vertical pass shifts by whole frame rows

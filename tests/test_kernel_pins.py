@@ -97,6 +97,56 @@ def test_nlmeans_output_pinned(name):
     assert _digest([out]) == NLMEANS_PINS[name]
 
 
+def _nl_means_reference(gray, h, template, search):
+    """The plain per-offset loop: int64 integral images and the
+    B2(x+v) + B2(x) - 2*box(I * I_v) distance identity.  The kernel must
+    match it bit for bit at any (odd) template and search size."""
+    t, s = template // 2, search // 2
+    H, W = gray.shape
+    pad = s + t
+    pi = np.pad(gray, pad, mode="reflect").astype(np.int64)
+    pf = pi.astype(np.float32)
+    scale = np.float32(-(1.0 / (h * h)) / float(template * template))
+
+    def box(a):
+        ii = np.pad(np.cumsum(np.cumsum(a, axis=0), axis=1), ((1, 0), (1, 0)))
+        T = template
+        return ii[T:, T:] - ii[:-T, T:] - ii[T:, :-T] + ii[:-T, :-T]
+
+    b2 = box(pi * pi)
+    centre = pi[pad - t : pad + H + t, pad - t : pad + W + t]
+    num = np.zeros((H, W), dtype=np.float32)
+    den = np.zeros((H, W), dtype=np.float32)
+    for dy in range(-s, s + 1):
+        for dx in range(-s, s + 1):
+            if dy == 0 and dx == 0:
+                num += pf[pad : pad + H, pad : pad + W]
+                den += 1.0
+                continue
+            sh = pi[pad + dy - t : pad + dy + H + t, pad + dx - t : pad + dx + W + t]
+            d2 = (b2[s : s + H, s : s + W] + b2[s + dy : s + dy + H, s + dx : s + dx + W]
+                  - 2 * box(centre * sh))
+            w = np.exp(d2.astype(np.float32) * scale, dtype=np.float32)
+            num += w * pf[pad + dy : pad + dy + H, pad + dx : pad + dx + W]
+            den += w
+    return np.clip(np.round(num / den), 0, 255).astype(np.uint8)
+
+
+@pytest.mark.parametrize("shape,h,template,search", [
+    ((23, 31), 3.0, 7, 21),
+    ((17, 40), 10.0, 3, 5),
+    ((30, 12), 5.0, 5, 9),
+    ((9, 50), 3.0, 1, 7),
+    ((60, 45), 4.0, 9, 3),
+])
+def test_nlmeans_matches_per_offset_reference(shape, h, template, search):
+    rng = np.random.default_rng(sum(shape) + template + search)
+    clean = np.where(rng.random(shape) < 0.5, 40, 220)
+    img = np.clip(clean + rng.normal(0, 25, shape), 0, 255).astype(np.uint8)
+    got = kernels.nl_means_denoise(img, h=h, template=template, search=search)
+    assert np.array_equal(got, _nl_means_reference(img, h, template, search))
+
+
 def test_nlmeans_peak_memory_bounded_on_large_page():
     """Offsets may be batched, but never so many at once that a large
     page's working set explodes: a 1024x1024 page stays under 80 MB of
