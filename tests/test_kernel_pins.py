@@ -150,12 +150,14 @@ def test_nlmeans_matches_per_offset_reference(shape, h, template, search):
 def test_nlmeans_peak_memory_bounded_on_large_page():
     """Offsets may be batched, but never so many at once that a large
     page's working set explodes: a 1024x1024 page stays under 80 MB of
-    traced peak (batching all 21 offsets of a row would take ~550 MB)."""
+    traced peak (batching all 21 offsets of a row would take ~550 MB).
+    Its output is pinned too."""
     img = np.random.default_rng(11).integers(0, 256, (1024, 1024), dtype=np.uint8)
     tracemalloc.start()
     try:
-        kernels.nl_means_denoise(img)
+        out = kernels.nl_means_denoise(img)
         _cur, peak = tracemalloc.get_traced_memory()
     finally:
         tracemalloc.stop()
     assert peak <= 80 * 2**20, peak / 2**20
+    assert _digest([out]) == "9b570b41fab50e6c"  # one offset per group here
