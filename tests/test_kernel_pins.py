@@ -2,10 +2,10 @@
 
 The committed goldens and the benchmark's span gate both compare
 against outputs computed by the code under test, so an exact rewrite
-of a kernel's inner loop could drift without either noticing.  These
-digests were taken from the straightforward implementations (the
-per-point Hough replay and the per-offset integral-image NL-means)
-and must not move: any change here means the kernel's output changed.
+of a kernel's inner loop could drift without either noticing.  The
+digests come from the kernels as they stood before their inner loops
+were rewritten for speed, and must not move: a change here means the
+kernel's output changed.
 """
 
 from __future__ import annotations
