@@ -16,7 +16,10 @@ Design notes, because this runs inside executors:
     so it is a scalar T-table implementation: four 256-entry uint32
     tables folding SubBytes+ShiftRows+MixColumns per FIPS-197 §5.1 /
     the classic Rijndael reference layout — ~4 table lookups + XORs
-    per column per round on plain Python ints.
+    per column per round on plain Python ints.  One word-state loop
+    serves ECB and CBC: the input is unpacked once into 32-bit words
+    and the CBC chain stays four ints, so Algorithm 2.B's ~130-block
+    chains pay no per-block bytes conversion.
   - All tables are DERIVED at import (GF(2^8) exp/log over generator
     0x03, the §5.1.1 affine map) rather than pasted as literals —
     self-checking against the FIPS-197 Appendix C vectors in
@@ -28,6 +31,8 @@ PDF uses CBC only.
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 
@@ -126,53 +131,62 @@ def _expand_key(key: bytes) -> list[int]:
     return w
 
 
-# --- scalar block encrypt (T-tables) -----------------------------------------
+# --- scalar encrypt (T-tables, word state) ---------------------------------
+
+# final round (no MixColumns): the S-box shifted into each byte lane
+_SB3 = [x << 24 for x in SBOX]
+_SB2 = [x << 16 for x in SBOX]
+_SB1 = [x << 8 for x in SBOX]
 
 
 def encrypt_block(key: bytes, block: bytes) -> bytes:
-    """One 16-byte block, ECB."""
-    return _encrypt_block_w(_expand_key(key), block)
+    """One 16-byte block, ECB (= one CBC block under a zero IV)."""
+    if len(block) != 16:
+        raise ValueError("AES block must be 16 bytes")
+    return _cbc_encrypt_words(key, bytes(16), block)
 
 
-def _encrypt_block_w(w: list[int], block: bytes) -> bytes:
+def _cbc_encrypt_words(key: bytes, iv: bytes, data: bytes) -> bytes:
+    """CBC-encrypt block-aligned `data`: the input is unpacked once into
+    32-bit words, the chain is four ints and the output is packed once,
+    so a block costs only the table lookups and int XORs of its rounds."""
+    w = _expand_key(key)
     nr = len(w) // 4 - 1
-    s0 = int.from_bytes(block[0:4], "big") ^ w[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ w[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ w[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ w[3]
-    for r in range(1, nr):
-        k = 4 * r
-        t0 = (
-            _TE0[(s0 >> 24) & 0xFF] ^ _TE1[(s1 >> 16) & 0xFF]
-            ^ _TE2[(s2 >> 8) & 0xFF] ^ _TE3[s3 & 0xFF] ^ w[k]
-        )
-        t1 = (
-            _TE0[(s1 >> 24) & 0xFF] ^ _TE1[(s2 >> 16) & 0xFF]
-            ^ _TE2[(s3 >> 8) & 0xFF] ^ _TE3[s0 & 0xFF] ^ w[k + 1]
-        )
-        t2 = (
-            _TE0[(s2 >> 24) & 0xFF] ^ _TE1[(s3 >> 16) & 0xFF]
-            ^ _TE2[(s0 >> 8) & 0xFF] ^ _TE3[s1 & 0xFF] ^ w[k + 2]
-        )
-        t3 = (
-            _TE0[(s3 >> 24) & 0xFF] ^ _TE1[(s0 >> 16) & 0xFF]
-            ^ _TE2[(s1 >> 8) & 0xFF] ^ _TE3[s2 & 0xFF] ^ w[k + 3]
-        )
-        s0, s1, s2, s3 = t0, t1, t2, t3
-    k = 4 * nr
-    out = bytearray(16)
-    for i, (a, b, c, d, rk) in enumerate((
-        (s0, s1, s2, s3, w[k]),
-        (s1, s2, s3, s0, w[k + 1]),
-        (s2, s3, s0, s1, w[k + 2]),
-        (s3, s0, s1, s2, w[k + 3]),
-    )):
-        v = (
-            (SBOX[(a >> 24) & 0xFF] << 24) | (SBOX[(b >> 16) & 0xFF] << 16)
-            | (SBOX[(c >> 8) & 0xFF] << 8) | SBOX[d & 0xFF]
-        ) ^ rk
-        out[4 * i:4 * i + 4] = v.to_bytes(4, "big")
-    return bytes(out)
+    k0, k1, k2, k3 = w[0:4]
+    rounds = [tuple(w[4 * r:4 * r + 4]) for r in range(1, nr)]
+    f0, f1, f2, f3 = w[4 * nr:4 * nr + 4]
+    te0, te1, te2, te3 = _TE0, _TE1, _TE2, _TE3
+    sb3, sb2, sb1, sb0 = _SB3, _SB2, _SB1, SBOX
+    n = len(data) // 4
+    words = struct.unpack(f">{n}I", data)
+    out = [0] * n
+    c0, c1, c2, c3 = struct.unpack(">4I", iv)
+    for i in range(0, n, 4):
+        s0 = words[i] ^ c0 ^ k0
+        s1 = words[i + 1] ^ c1 ^ k1
+        s2 = words[i + 2] ^ c2 ^ k2
+        s3 = words[i + 3] ^ c3 ^ k3
+        for r0, r1, r2, r3 in rounds:
+            s0, s1, s2, s3 = (
+                te0[s0 >> 24] ^ te1[(s1 >> 16) & 0xFF]
+                ^ te2[(s2 >> 8) & 0xFF] ^ te3[s3 & 0xFF] ^ r0,
+                te0[s1 >> 24] ^ te1[(s2 >> 16) & 0xFF]
+                ^ te2[(s3 >> 8) & 0xFF] ^ te3[s0 & 0xFF] ^ r1,
+                te0[s2 >> 24] ^ te1[(s3 >> 16) & 0xFF]
+                ^ te2[(s0 >> 8) & 0xFF] ^ te3[s1 & 0xFF] ^ r2,
+                te0[s3 >> 24] ^ te1[(s0 >> 16) & 0xFF]
+                ^ te2[(s1 >> 8) & 0xFF] ^ te3[s2 & 0xFF] ^ r3,
+            )
+        c0 = (sb3[s0 >> 24] | sb2[(s1 >> 16) & 0xFF]
+              | sb1[(s2 >> 8) & 0xFF] | sb0[s3 & 0xFF]) ^ f0
+        c1 = (sb3[s1 >> 24] | sb2[(s2 >> 16) & 0xFF]
+              | sb1[(s3 >> 8) & 0xFF] | sb0[s0 & 0xFF]) ^ f1
+        c2 = (sb3[s2 >> 24] | sb2[(s3 >> 16) & 0xFF]
+              | sb1[(s0 >> 8) & 0xFF] | sb0[s1 & 0xFF]) ^ f2
+        c3 = (sb3[s3 >> 24] | sb2[(s0 >> 16) & 0xFF]
+              | sb1[(s1 >> 8) & 0xFF] | sb0[s2 & 0xFF]) ^ f3
+        out[i], out[i + 1], out[i + 2], out[i + 3] = c0, c1, c2, c3
+    return struct.pack(f">{n}I", *out)
 
 
 # --- vectorized block decrypt ------------------------------------------------
@@ -247,15 +261,9 @@ def cbc_encrypt(key: bytes, iv: bytes, data: bytes,
         data = data + bytes([p]) * p
     elif len(data) % 16:
         raise ValueError("unpadded CBC input must be block-aligned")
-    w = _expand_key(key)  # one schedule for the whole chain
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        prev = _encrypt_block_w(
-            w, bytes(x ^ y for x, y in zip(data[i:i + 16], prev))
-        )
-        out += prev
-    return bytes(out)
+    if len(iv) != 16:
+        raise ValueError("AES-CBC IV must be 16 bytes")
+    return _cbc_encrypt_words(key, iv, data)
 
 
 def cbc_decrypt(key: bytes, iv: bytes, data: bytes,

@@ -1080,9 +1080,11 @@ def make_pdf_parse_map(ocr_cfg=None):
     """Build the mapInPandas stage over DISTINCT work units
     (content_hash, bytes) — the pipeline's pdf analogue of the OCR
     stage: one parse per distinct byte content, results joined back to
-    every referencing span (C2's shape, minus durable memo — the parse
-    is cheap enough that recomputation beats carrying a second memo
-    table).  ocr_cfg enables the scanned-PDF OCR fallback."""
+    every referencing span.  Parse cost is heavy-tailed (an R6/AESV3
+    document spends ~0.5 s in Algorithm 2.B, a born-digital one ~1 ms),
+    so the checkpoint loop keeps these rows as a durable memo (C2's
+    shape) and a later bucket never parses the same pdf again.  ocr_cfg
+    enables the scanned-PDF OCR fallback."""
 
     def pdf_parse_map(
         batches: Iterator[pd.DataFrame],

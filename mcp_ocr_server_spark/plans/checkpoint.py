@@ -23,9 +23,12 @@ Design (SURVEY.md §4 item 2):
   bucket is impossible; re-running a half-written bucket overwrites it
   (dynamic partition overwrite), so the invariant is exactly-once
   OUTPUT per bucket (C3 idempotency: same bytes+params => same rows).
-- The memo table (prior ocr_results) doubles as cross-bucket
-  memoization: hashes computed by committed buckets are never
-  recomputed by later ones.
+- The memo tables (prior ocr_results and pdf_results) double as
+  cross-bucket memoization: image hashes OCR'd and pdf hashes parsed by
+  committed buckets are never recomputed, nor their bytes shuffled, by
+  later ones.  A pdf memo row also records the OCR settings its
+  scanned-PDF fallback ran under (pipeline.ocr_params), so a run under
+  another language or engine parses again.
 
 Lineage: every watermark row records bucket id, run id, span/doc/error
 counts and wall time — the per-partition lineage + metrics table.
@@ -41,7 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, JobConfig
-from .pipeline import SPAN_COLS, extract, hash_media, hash_pdfs
+from .pipeline import PDF_MEMO_SCHEMA, extract, hash_media, hash_pdfs
 
 WATERMARK_SCHEMA = (
     "bucket int, run_id string, n_docs long, n_spans long, n_errors long,"
@@ -92,6 +95,7 @@ class CheckpointStore:
     Layout:
       root/spans/bucket=K/*.parquet     committed span rows
       root/ocr/bucket=K/*.parquet       committed ocr results (memo source)
+      root/pdf/bucket=K/*.parquet       committed pdf results (pdf memo source)
       root/metrics/bucket=K/*.parquet   per-compute-partition metrics
       root/watermarks/K.json            watermark row, written LAST
     """
@@ -100,6 +104,7 @@ class CheckpointStore:
         self.root = root
         self.spans_dir = os.path.join(root, "spans")
         self.ocr_dir = os.path.join(root, "ocr")
+        self.pdf_dir = os.path.join(root, "pdf")
         self.metrics_dir = os.path.join(root, "metrics")
         self.wm_dir = os.path.join(root, "watermarks")
         os.makedirs(self.wm_dir, exist_ok=True)
@@ -168,16 +173,18 @@ class CheckpointStore:
             spark.createDataFrame([], schema=WATERMARK_SCHEMA)
         )
 
-    def memo_df(self, spark: SparkSession) -> DataFrame | None:
-        if not os.path.isdir(self.ocr_dir) or not self.committed_buckets():
-            return None
-        # only committed buckets count as memo (half-written ones are
-        # re-run and overwritten)
-        paths = [
-            os.path.join(self.ocr_dir, f"bucket={b}")
+    def _committed_paths(self, table_dir: str) -> list[str]:
+        """`table_dir/bucket=K` of every committed bucket that wrote one:
+        only committed buckets count (half-written ones are re-run and
+        overwritten)."""
+        paths = (
+            os.path.join(table_dir, f"bucket={b}")
             for b in sorted(self.committed_buckets())
-            if os.path.isdir(os.path.join(self.ocr_dir, f"bucket={b}"))
-        ]
+        )
+        return [p for p in paths if os.path.isdir(p)]
+
+    def memo_df(self, spark: SparkSession) -> DataFrame | None:
+        paths = self._committed_paths(self.ocr_dir)
         if not paths:
             return None
         from ..operators.media_ocr import OCR_RESULT_SCHEMA
@@ -186,22 +193,20 @@ class CheckpointStore:
         # bucket loop builds this once per bucket)
         return spark.read.schema(OCR_RESULT_SCHEMA).parquet(*paths)
 
+    def pdf_memo_df(self, spark: SparkSession) -> DataFrame | None:
+        paths = self._committed_paths(self.pdf_dir)
+        if not paths:
+            return None
+        return spark.read.schema(PDF_MEMO_SCHEMA).parquet(*paths)
+
     def metrics_df(self, spark: SparkSession) -> DataFrame:
-        paths = [
-            os.path.join(self.metrics_dir, f"bucket={b}")
-            for b in sorted(self.committed_buckets())
-            if os.path.isdir(os.path.join(self.metrics_dir, f"bucket={b}"))
-        ]
+        paths = self._committed_paths(self.metrics_dir)
         if not paths:
             return spark.createDataFrame([], schema=METRICS_SCHEMA)
         return spark.read.parquet(*paths)
 
     def spans_df(self, spark: SparkSession) -> DataFrame:
-        paths = [
-            os.path.join(self.spans_dir, f"bucket={b}")
-            for b in sorted(self.committed_buckets())
-            if os.path.isdir(os.path.join(self.spans_dir, f"bucket={b}"))
-        ]
+        paths = self._committed_paths(self.spans_dir)
         if not paths:
             return spark.createDataFrame([], schema=SPANS_SCHEMA)
         return spark.read.parquet(*paths)
@@ -225,7 +230,8 @@ def run_checkpointed(
     (B ~ 100s-1000s, each covering ~1/B of the corpus); the loop is
     driver-side but O(B), never O(rows).  ``pdfs`` is the optional
     (media_ref, bytes) sidecar for pdf-kind spans (pipeline._pdf_branch),
-    threaded through every bucket's extract unchanged.
+    threaded through every bucket's extract unchanged; each bucket
+    parses only the distinct pdfs no committed bucket has parsed.
     """
     b = n_buckets or cfg.checkpoint_buckets
     store.check_bucket_count(b)  # refuse a store committed under a different B
@@ -322,22 +328,31 @@ def _bucket_loop(
             raise RuntimeError(f"injected failure after {committed} buckets")
         t0 = time.monotonic()
         part = docs_b.filter(F.col("bucket") == k).drop("bucket")
-        memo = store.memo_df(spark)
-        # ONE extract() per bucket.  The OCR stage output is persisted:
-        # `res.spans`' lookup join is built over the SAME ocr_results
-        # DataFrame subtree (pipeline.extract ties them), so the spans
-        # write hits the cache instead of re-running mapInPandas — the
-        # round-1 double-extract re-ran the whole explode/join plan and
-        # cost ~3-4 s of fixed overhead per bucket.
+        # ONE extract() per bucket.  The OCR and pdf stage outputs are
+        # persisted: `res.spans`' lookup joins are built over the SAME
+        # ocr_results / pdf_results DataFrame subtrees (pipeline.extract
+        # ties them), so the spans write hits the cache instead of
+        # re-running mapInPandas — the round-1 double-extract re-ran the
+        # whole explode/join plan and cost ~3-4 s of fixed overhead per
+        # bucket.  Neither result is coalesced before its first write: a
+        # coalesce above an unfilled cache would run every unit in one
+        # task.
         res = extract(
-            part, media, cfg, memo=memo,
+            part, media, cfg, memo=store.memo_df(spark),
             total_media_bytes=bucket_cost, media_hashed=media_hashed,
             pdfs=pdfs, pdfs_hashed=pdfs_hashed,
+            pdf_memo=store.pdf_memo_df(spark),
         )
         spans_path = os.path.join(store.spans_dir, f"bucket={k}")
         ocr_path = os.path.join(store.ocr_dir, f"bucket={k}")
         ocr = res.ocr_results.persist()
         ocr.write.mode("overwrite").parquet(ocr_path)
+        pdf = None
+        if res.pdf_results is not None:
+            pdf = res.pdf_results.persist()
+            pdf.write.mode("overwrite").parquet(
+                os.path.join(store.pdf_dir, f"bucket={k}")
+            )
         from .metrics import partition_metrics
 
         partition_metrics(ocr).write.mode("overwrite").parquet(
@@ -358,6 +373,8 @@ def _bucket_loop(
         # with NO Spark job (footer metadata, bytes of IO per file)
         n_ocr = _parquet_num_rows(ocr_path)
         ocr.unpersist()
+        if pdf is not None:
+            pdf.unpersist()
         stats = dict(
             bucket=k,
             run_id=run_id,

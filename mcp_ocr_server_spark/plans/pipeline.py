@@ -10,6 +10,9 @@ The Spark restatement of the reference's whole request lifecycle
                  content-hash (C1) -> dropDuplicates + memo anti-join (C2) ->
                  uniform repartition -> mapInPandas[analyze+preprocess+OCR]
                  -> join results back to every referencing span
+      pdf:       join pdf hashes -> dropDuplicates + pdf memo anti-join ->
+                 uniform repartition -> mapInPandas[parse (+ scanned OCR)]
+                 -> join results back to every referencing span
     --> union -> span rows (doc_id, order, kind, media_ref, text,
                  confidence, language, error_code, ...)
 
@@ -43,6 +46,7 @@ from ..config import (
     DEFAULT_CONFIG,
     JobConfig,
 )
+from ..functions.pdf import PDF_RESULT_SCHEMA, make_pdf_parse_map
 from ..functions.text_extract import extract_batch
 from ..operators.media_ocr import OCR_RESULT_SCHEMA, make_ocr_map
 from ..operators.partitioning import repartition_media
@@ -53,10 +57,18 @@ SPAN_COLS = [
 ]
 
 
+# pdf results table: the parse map's rows plus the OCR settings they
+# were computed under (see ocr_params)
+PDF_MEMO_SCHEMA = PDF_RESULT_SCHEMA + ", ocr_params string"
+
+
 @dataclass
 class ExtractResult:
     spans: DataFrame        # one row per input span, SPAN_COLS
     ocr_results: DataFrame  # one row per distinct content_hash actually computed
+    # one row per distinct pdf content_hash actually parsed
+    # (PDF_MEMO_SCHEMA); None without a pdf sidecar
+    pdf_results: DataFrame | None = None
 
 
 def _extract_main_udf():
@@ -127,6 +139,21 @@ def hash_media(media: DataFrame, cfg: JobConfig) -> DataFrame:
     )
 
 
+def ocr_params(cfg: JobConfig) -> str:
+    """The OCR half of the pdf memo key, stored per pdf result row.
+
+    A pdf's span `content_hash` is sha256(bytes) alone (the goldens pin
+    it), but its parse output also depends on the scanned-PDF fallback,
+    which OCRs page rasters under the configured language and the
+    resolved engine — the two settings `content_hash_col` adds to the
+    image key.  A memo row therefore answers only for (content_hash,
+    ocr_params) of the current run.  The engine comes first: its name
+    holds no ':', so the pair is unambiguous."""
+    from ..ocr.engine import resolved_engine
+
+    return f"{resolved_engine(cfg.ocr)}:{cfg.ocr.language}"
+
+
 def hash_pdfs(pdfs: DataFrame) -> DataFrame:
     """pdfs(media_ref, bytes) -> (media_ref, content_hash)."""
     return pdfs.select("media_ref", F.sha2("bytes", 256).alias("content_hash"))
@@ -145,6 +172,7 @@ def extract(
     media_hashed: DataFrame | None = None,
     pdfs: DataFrame | None = None,
     pdfs_hashed: DataFrame | None = None,
+    pdf_memo: DataFrame | None = None,
 ) -> ExtractResult:
     """Run the full extraction dataflow. Lazy — returns DataFrames.
 
@@ -169,7 +197,10 @@ def extract(
     identity path (legacy corpora contain none).  `pdfs_hashed` is the
     pdf analogue of `media_hashed`: a precomputed (media_ref,
     content_hash) projection the checkpoint loop persists once per run
-    so B buckets don't sha256 the pdf corpus B times.
+    so B buckets don't sha256 the pdf corpus B times.  `pdf_memo` is a
+    prior `pdf_results` table (PDF_MEMO_SCHEMA): distinct pdf hashes it
+    answers under this run's `ocr_params` are neither parsed nor
+    shuffled again, and `pdf_results` holds only the newly parsed rows.
     """
     spans = explode_spans(docs)
     routed_kinds = ["image", "pdf"] if pdfs is not None else ["image"]
@@ -271,10 +302,15 @@ def extract(
     )
 
     out = non_media.unionByName(media_out)
+    pdf_results = None
     if pdfs is not None:
-        out = out.unionByName(_pdf_branch(spans, pdfs, pdfs_hashed, cfg))
+        pdf_out, pdf_results = _pdf_branch(
+            spans, pdfs, pdfs_hashed, cfg, pdf_memo
+        )
+        out = out.unionByName(pdf_out)
     return ExtractResult(
-        spans=out.select(*SPAN_COLS), ocr_results=ocr_results
+        spans=out.select(*SPAN_COLS), ocr_results=ocr_results,
+        pdf_results=pdf_results,
     )
 
 
@@ -283,37 +319,50 @@ def _pdf_branch(
     pdfs: DataFrame,
     pdfs_hashed: DataFrame | None = None,
     cfg: JobConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """pdf-kind spans -> extracted-text span rows, image-branch shape:
-    the hash projection keeps bytes inside the pdf scan, distinct
-    hashes parse exactly once (hot refs and byte-dup refs collapse),
-    and only (hash, text) rows rejoin the span side.  Documents whose
-    content streams hold no text ride the scanned-PDF fallback inside
-    the same stage: embedded image-XObject rasters through the SAME
-    preprocess + OCR chain as the image branch (pdf_text_row ocr_cfg),
-    with the engine's mean confidence instead of the born-digital
-    1.0."""
+    pdf_memo: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """pdf-kind spans -> (extracted-text span rows, newly parsed
+    results), image-branch shape: the hash projection keeps bytes
+    inside the pdf scan, distinct hashes parse exactly once (hot refs
+    and byte-dup refs collapse), and only (hash, text) rows rejoin the
+    span side.  Hashes `pdf_memo` already answers under this run's
+    `ocr_params` leave the work set before the bytes join, so their
+    bytes are never shuffled into the parse stage; the span lookup is
+    the new results plus those memo rows.  Documents whose content
+    streams hold no text ride the scanned-PDF fallback inside the same
+    stage: embedded image-XObject rasters through the SAME preprocess +
+    OCR chain as the image branch (pdf_text_row ocr_cfg), with the
+    engine's mean confidence instead of the born-digital 100.0."""
     from ..config import PDF_PARSE_FAILED
-    from ..functions.pdf import PDF_RESULT_SCHEMA, make_pdf_parse_map
 
-    pdf_parse_map = make_pdf_parse_map(ocr_cfg=cfg)
-
+    params = ocr_params(cfg)
     pdf_hashed = pdfs_hashed if pdfs_hashed is not None else hash_pdfs(pdfs)
     pdf_spans = spans.filter(F.col("kind") == "pdf").join(
         pdf_hashed, "media_ref", "left"
     )
-    work = (
+    work_refs = (
         pdf_spans.filter(F.col("content_hash").isNotNull())
         .groupBy("content_hash")
         .agg(F.min("media_ref").alias("media_ref"))
-        .join(pdfs.select("media_ref", "bytes"), "media_ref")
-        .select("content_hash", "bytes")
+    )
+    if pdf_memo is not None:
+        pdf_memo = pdf_memo.filter(F.col("ocr_params") == params)
+        work_refs = work_refs.join(
+            pdf_memo.select("content_hash"), "content_hash", "left_anti"
+        )
+    work = work_refs.join(pdfs.select("media_ref", "bytes"), "media_ref").select(
+        "content_hash", "bytes"
     )
     work = repartition_media(work)
-    results = work.mapInPandas(pdf_parse_map, schema=PDF_RESULT_SCHEMA)
-    return (
+    results = work.mapInPandas(
+        make_pdf_parse_map(ocr_cfg=cfg), schema=PDF_RESULT_SCHEMA
+    ).withColumn("ocr_params", F.lit(params))
+    lookup = results
+    if pdf_memo is not None:
+        lookup = lookup.unionByName(pdf_memo.select(*results.columns))
+    spans_out = (
         pdf_spans.select("doc_id", "order", "kind", "media_ref", "content_hash")
-        .join(results, "content_hash", "left")
+        .join(lookup, "content_hash", "left")
         .select(
             "doc_id", "order", "kind", "media_ref",
             F.coalesce(F.col("text"), F.lit("")).alias("text"),
@@ -331,6 +380,7 @@ def _pdf_branch(
             "content_hash",
         )
     )
+    return spans_out, results
 
 
 def reassemble_docs(spans: DataFrame) -> DataFrame:

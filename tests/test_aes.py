@@ -59,6 +59,30 @@ def test_cbc_roundtrip_arbitrary_lengths(klen):
         assert aes.cbc_decrypt(key, iv, ct) == data
 
 
+SP800_38A_IV = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
+SP800_38A_PT = bytes.fromhex(
+    "6bc1bee22e409f96e93d7e117393172aae2d8a571e03ac9c9eb76fac45af8e51"
+    "30c81c46a35ce411e5fbc1191a0a52eff69f2445df4f9b17ad2b417be66c3710"
+)
+
+
+@pytest.mark.parametrize("key_hex, ct_hex", [
+    ("2b7e151628aed2a6abf7158809cf4f3c",
+     "7649abac8119b246cee98e9b12e9197d5086cb9b507219ee95db113a917678b2"
+     "73bed6b8e3c1743b7116e69e222295163ff1caa1681fac09120eca307586e1a7"),
+    ("603deb1015ca71be2b73aef0857d77811f352c073b6108d72d9810a30914dff4",
+     "f58c4c04d6e5f1ba779eabfb5f7bfbd69cfc4e967edb808d679f777bc6702c7d"
+     "39f23369a9d9bacfa530e26304231461b2eb05e2c39be9fcda6c19078c6a9d1b"),
+], ids=["F.2.1-aes128", "F.2.5-aes256"])
+def test_cbc_encrypt_sp800_38a(key_hex, ct_hex):
+    """NIST SP 800-38A F.2 CBC-encrypt vectors: a known answer, so a
+    bug shared by our encrypt and decrypt cannot pass as a round-trip."""
+    key = bytes.fromhex(key_hex)
+    ct = aes.cbc_encrypt(key, SP800_38A_IV, SP800_38A_PT, pad=False)
+    assert ct.hex() == ct_hex
+    assert aes.cbc_decrypt(key, SP800_38A_IV, ct, unpad=False) == SP800_38A_PT
+
+
 def test_cbc_nopad_mode_roundtrip():
     key, iv = bytes(32), bytes(16)
     data = os.urandom(48)

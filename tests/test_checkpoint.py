@@ -2,20 +2,62 @@
 without reprocessing committed buckets and produce exactly the same
 output rows as an uninterrupted run — no duplicates, no gaps."""
 
+import dataclasses
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from mcp_ocr_server_spark.plans.checkpoint import (
     CheckpointStore,
+    bucket_col,
     run_checkpointed,
 )
-from mcp_ocr_server_spark.plans.pipeline import extract
+from mcp_ocr_server_spark.plans.pipeline import explode_spans, extract, hash_pdfs
 from mcp_ocr_server_spark.sources import synthetic as S
 
 from conftest import FIXTURE_JOB
 
 CORPUS = S.CorpusConfig(n_docs=40)
 N_BUCKETS = 4
+
+
+def _tree(root):
+    """path -> (size, mtime_ns) of every file under root."""
+    out = {}
+    for d, _subdirs, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.join(d, f)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _pdf_refs_by_bucket(docs, pdfs, n_buckets):
+    """bucket -> distinct sha256 of the pdfs its docs reference."""
+    rows = (
+        explode_spans(docs)
+        .filter(F.col("kind") == "pdf")
+        .join(docs.select("doc_id", bucket_col(n_buckets).alias("bucket")),
+              "doc_id")
+        .join(hash_pdfs(pdfs), "media_ref")
+        .select("bucket", "content_hash").distinct().collect()
+    )
+    out = {}
+    for r in rows:
+        out.setdefault(r.bucket, set()).add(r.content_hash)
+    return out
+
+
+def _pdf_parsed_by_bucket(store):
+    """bucket -> content_hash list of its committed pdf results table."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for b in store.committed_buckets():
+        path = os.path.join(store.pdf_dir, f"bucket={b}")
+        out[b] = pq.read_table(path, columns=["content_hash"]).column(
+            "content_hash").to_pylist()
+    return out
 
 
 def _key_rows(df):
@@ -161,7 +203,9 @@ def test_interleaved_checkpoint_kill_resume_matches_monolithic(
     """The pdf sidecar threads through the bucket loop: a killed
     interleaved run (all four span kinds) resumes without reprocessing
     and its union equals the monolithic extract with the same pdfs —
-    no duplicates, no gaps, pdf error codes intact."""
+    no duplicates, no gaps, pdf error codes intact.  The pdf memo
+    parses each distinct referenced pdf exactly once across buckets,
+    and a no-op resume writes nothing."""
     cfg = S.CorpusConfig(n_docs=40, p_pdf=0.35)
     docs = S.docs_df(spark, cfg)
     media = S.media_df(spark, cfg)
@@ -185,3 +229,50 @@ def test_interleaved_checkpoint_kill_resume_matches_monolithic(
     assert kinds == {"text", "html", "image", "pdf"}
     codes = {e for (_d, _o, _k, _t, _m, e) in got if e}
     assert "PDF_PARSE_FAILED" in codes
+
+    # pdf memo: across every pdf/bucket=K table each hash appears once,
+    # and together they hold exactly the distinct pdfs the docs reference
+    parsed = [h for hs in _pdf_parsed_by_bucket(store).values() for h in hs]
+    referenced = set().union(*_pdf_refs_by_bucket(docs, pdfs, N_BUCKETS).values())
+    assert len(parsed) == len(set(parsed))
+    assert set(parsed) == referenced
+
+    # a no-op resume commits nothing and touches no file
+    before = _tree(store.root)
+    again = run_checkpointed(
+        spark, docs, media, store, FIXTURE_JOB,
+        n_buckets=N_BUCKETS, pdfs=pdfs,
+    )
+    assert again.buckets_committed == 0
+    assert _tree(store.root) == before
+
+
+def test_pdf_memo_keyed_on_ocr_config(spark, tmp_path):
+    """A pdf memo row answers only under the OCR settings it was parsed
+    with (the scanned-PDF fallback OCRs under them): resumed under a
+    different ocr.language, a bucket re-parses every pdf it references,
+    including those committed buckets parsed before the kill."""
+    cfg = S.CorpusConfig(n_docs=40, p_pdf=0.35)
+    docs = S.docs_df(spark, cfg)
+    media = S.media_df(spark, cfg)
+    pdfs = S.pdf_df(spark, cfg)
+    n_buckets = 2
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed(
+            spark, docs, media, store, FIXTURE_JOB,
+            n_buckets=n_buckets, fail_after_buckets=1, pdfs=pdfs,
+        )
+    other = dataclasses.replace(
+        FIXTURE_JOB, ocr=dataclasses.replace(FIXTURE_JOB.ocr, language="eng")
+    )
+    assert other.ocr.language != FIXTURE_JOB.ocr.language
+    run_checkpointed(
+        spark, docs, media, store, other, n_buckets=n_buckets, pdfs=pdfs,
+    )
+    refs = _pdf_refs_by_bucket(docs, pdfs, n_buckets)
+    parsed = _pdf_parsed_by_bucket(store)
+    # the buckets share pdfs, so a memo keyed on bytes alone would skip some
+    assert refs[0] & refs[1]
+    for b in range(n_buckets):
+        assert sorted(parsed[b]) == sorted(refs[b])
