@@ -65,6 +65,7 @@ def main() -> None:
         master=f"local[{cpus}]",
         cfg=FIXTURE_JOB,
         shuffle_partitions=max(cpus, 8),
+        jvm_heavy=True,
     )
 
     from mcp_ocr_server_spark.plans.pipeline import extract

@@ -12,30 +12,18 @@ quarter of a CPU second per task, more than many of the UDF bodies cost.
 The daemon skips the re-read while the archive is unchanged.  Python 3.13
 reads lazily, so the module can be deleted once that is the floor.
 
-The JVM this factory launches runs C1 only (`-XX:TieredStopAtLevel=1`).
-In local mode that JVM is driver and executor at once, but the per-image
-work runs in the Python workers; the JVM only glues their stages
-together.  Yet with tiered compilation HotSpot's C2 CompilerThreads were
-the largest CPU consumer of the checkpointed job, on the cores the
-Python workers need: on a 4-core host, 24.5 s of the 62.6 s of CPU the
-first job call in a session took, 7-15 s of each later one, and 2-5 s of
-each `images_cold` call of 15-20 s.  These settings cut perfbench's
-`checkpoint_interleaved` CPU per document by 41%.
-
-With C2 off, HotSpot's ergonomics shrink the code cache from 240 MB to
-48 MB.  Four job calls in one session then reach 47.8 MB: the sweeper
-flushes most of the cache and C1 compiles it all again, and a full cache
-stops the compiler ("CodeCache is full. Compiler has been disabled.").
-So the full-size cache is set explicitly; four job calls use about
-51 MB of it.  Spark's Janino class cache is sized above the job's
-working set (about 125 generated classes per `run_checkpointed` call
-against a default of 100), so repeated calls in one session reuse their
-compiled classes.
-
-The cost falls on the JVM-heavy registry queries: C1 runs Spark's
-generated loops more slowly, and the `bench.py` board at local[4] went
-from 244 s to 374 s (the dedup and text-statistics families 1.5-4x
-slower).
+The extraction job's JVM runs C1 only, with the full-size code cache.
+In local mode that JVM is driver and executor at once and only glues
+the Python workers' stages together, yet HotSpot's C2 compiler threads
+were its largest CPU consumer, on the cores the workers need.  With C2
+off, HotSpot's ergonomics shrink the code cache from 240 MB to 48 MB,
+which a few job calls in one session fill (the sweeper flushes it, and
+a full cache disables the compiler), so the size is set explicitly.
+Spark's codegen cache is sized above the job's working set of generated
+classes, so repeated calls in one session reuse them.  Sessions that run
+the JVM-heavy registry queries keep C2 (`jvm_heavy=True`): C1 runs
+Spark's generated loops several times slower there.  Measurements:
+CHANGES.md and ROADMAP item 4.
 """
 
 from __future__ import annotations
@@ -54,6 +42,8 @@ def get_spark(
     master: str | None = None,
     cfg: JobConfig = DEFAULT_CONFIG,
     shuffle_partitions: int | None = None,
+    *,
+    jvm_heavy: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the extraction pipeline.
 
@@ -64,19 +54,16 @@ def get_spark(
       executor memory (SURVEY.md §7 "Large binaries through Arrow").
     - PYTHONPATH propagated so python workers import this package when
       tests run from a checkout rather than an installed wheel.
-    - C1-only JIT with a 240 MB code cache, and a 1000-class codegen
-      cache, for the JVM this call launches (why: module docstring).
-      The code-cache size is required: a C1-only JVM otherwise gets
-      48 MB.  Only a JVM that PySpark launches from here gets these
-      (perfbench, `bench.py`, the tests, scripts run with `python`);
-      under `spark-submit` the driver JVM already runs, so pass
-      `--driver-java-options` there.  Cluster executors keep C2
-      (`spark.executor.extraJavaOptions` is left alone): their JVM-side
-      scans and joins are where it pays off.  A
-      `spark.driver.extraJavaOptions` in `PYSPARK_SUBMIT_ARGS` is
+    - Unless ``jvm_heavy``: C1-only JIT with a 240 MB code cache and a
+      1000-class codegen cache for the JVM this call launches (why:
+      module docstring).  The entry points that run registry queries
+      (`bench.py`, `scripts/run_query.py`, the tests) pass
+      ``jvm_heavy=True`` and get HotSpot's defaults.  Only a JVM that
+      PySpark launches from here gets the flags; under `spark-submit`
+      the driver JVM already runs (`scripts/run_extract.py` gives the
+      `--driver-java-options` equivalent).  Cluster executors keep C2.
+      A `spark.driver.extraJavaOptions` in `PYSPARK_SUBMIT_ARGS` is
       applied after these settings and replaces them: the caller wins.
-      Without C2 there are no Vector API intrinsics; nothing here uses
-      MLlib.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -117,13 +104,13 @@ def get_spark(
         .config("spark.task.reaper.killTimeout", "120s")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
-        )
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
+    if not jvm_heavy:
+        builder = builder.config(
+            "spark.driver.extraJavaOptions",
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
+        ).config("spark.sql.codegen.cache.maxEntries", "1000")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

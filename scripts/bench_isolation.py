@@ -62,6 +62,7 @@ def _worker(sf_dir: str, barrier_dir: str, idx: int) -> None:
         master=f"local[{ISO_CORES}]",
         cfg=FIXTURE_JOB,
         shuffle_partitions=max(ISO_CORES, 8),
+        jvm_heavy=True,
     )
     spark.sparkContext.setLogLevel("ERROR")
 

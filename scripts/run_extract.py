@@ -14,14 +14,11 @@ multi-executor clusters"):
 Under spark-submit the driver JVM is already running when this script
 builds its session, so `session.get_spark`'s C1-only JIT setting does
 not reach it.  For a local-mode submit, where the driver JVM is also the
-executor, pass it on the command line:
+executor, pass it on the command line (executors keep C2):
 
     spark-submit --master 'local[4]' \\
         --driver-java-options "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m" \\
         scripts/run_extract.py --out <root> --synthetic-docs 480
-
-Cluster executors keep C2 (no `spark.executor.extraJavaOptions`): their
-JVM-side scans and joins are where it pays off.
 
 Resumable by construction: rerunning with the same --out continues
 from the last committed bucket watermark (plans/checkpoint.py).  With

@@ -62,7 +62,7 @@ def main() -> None:
             f"unknown queries: {unknown}; --list shows the registry"
         )
 
-    spark = get_spark(app_name="run_query")
+    spark = get_spark(app_name="run_query", jvm_heavy=True)
     os.makedirs(args.out, exist_ok=True)
     manifest = os.path.join(args.out, "manifest.jsonl")
     for name in names:
