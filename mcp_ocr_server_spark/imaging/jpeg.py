@@ -281,7 +281,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         if marker == 0xD9:
             break
         seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        if pos + 2 + seglen > len(data):
+        if seglen < 2 or pos + 2 + seglen > len(data):
             raise ValueError("jpeg: truncated marker segment")
         seg = data[pos + 4 : pos + 2 + seglen]
         if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
@@ -293,17 +293,23 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             raise ValueError(f"jpeg: {kind} unsupported")
         if marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
             progressive = marker == 0xC2
+            if len(seg) < 6:
+                raise ValueError("jpeg: truncated SOF")
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise ValueError("jpeg: only 8-bit precision supported")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = struct.unpack(
-                    ">BBB", seg[6 + 3 * i : 9 + 3 * i]
-                )
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
             if nc not in (1, 3):
                 raise ValueError("jpeg: only 1 or 3 components supported")
+            if len(seg) < 6 + 3 * nc:
+                raise ValueError("jpeg: truncated SOF")
+            if not h or not w:
+                raise ValueError("jpeg: zero frame dimension")
+            comps = []
+            for i in range(nc):
+                cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0xF <= 4):
+                    raise ValueError("jpeg: sampling factor outside 1-4")
+                comps.append((cid, hv >> 4, hv & 0xF, tq))
             frame = (h, w, comps)
             pos += 2 + seglen
             continue
@@ -313,6 +319,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 tc_th = seg[p]
                 bits = list(seg[p + 1 : p + 17])
                 nv = sum(bits)
+                if len(bits) < 16 or p + 17 + nv > len(seg):
+                    raise ValueError("jpeg: DHT counts run past its values")
                 vals = list(seg[p + 17 : p + 17 + nv])
                 tbl = _HuffDecode(bits, vals)
                 if tc_th >> 4 == 0:
@@ -328,6 +336,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 pq_tq = seg[p]
                 if pq_tq >> 4 != 0:
                     raise ValueError("jpeg: 16-bit quant tables unsupported")
+                if p + 65 > len(seg):
+                    raise ValueError("jpeg: truncated DQT")
                 qz = np.frombuffer(
                     seg[p + 1 : p + 65], dtype=np.uint8
                 ).astype(np.int64)
@@ -338,29 +348,47 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             pos += 2 + seglen
             continue
         if marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("jpeg: truncated DRI")
             restart_interval = struct.unpack(">H", seg[:2])[0]
             pos += 2 + seglen
             continue
         if marker == 0xDA:  # SOS — scan follows
             if frame is None:
                 raise ValueError("jpeg: SOS before SOF")
-            ns = seg[0]
+            ns = seg[0] if seg else 0
+            if len(seg) < 4 + 2 * ns:
+                raise ValueError("jpeg: truncated SOS")
+            frame_ids = {c[0] for c in frame[2]}
             scan = []
             for i in range(ns):
                 cs, td_ta = seg[1 + 2 * i], seg[2 + 2 * i]
+                if cs not in frame_ids:
+                    raise ValueError(
+                        "jpeg: scan references unknown component"
+                    )
                 scan.append((cs, td_ta >> 4, td_ta & 0xF))
-            if not progressive:
-                return _decode_scan(
-                    data, pos + 2 + seglen, frame, scan, qt,
-                    huff_dc, huff_ac, restart_interval,
+            ss, se, ah_al = seg[1 + 2 * ns : 4 + 2 * ns]
+            if progressive and not ss <= se <= 63:
+                raise ValueError("jpeg: spectral selection outside 0-63")
+            # Header fields are checked above; what can still go wrong
+            # is in the entropy-coded data (a magnitude past int64, an
+            # index off the block), which surfaces here as one error.
+            try:
+                if not progressive:
+                    return _decode_scan(
+                        data, pos + 2 + seglen, frame, scan, qt,
+                        huff_dc, huff_ac, restart_interval,
+                    )
+                _progressive_scan(
+                    data, pos + 2 + seglen, frame, scan, qt, huff_dc,
+                    huff_ac, restart_interval, prog_state,
+                    ss, se, ah_al >> 4, ah_al & 0xF,
                 )
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah_al = seg[3 + 2 * ns]
-            _progressive_scan(
-                data, pos + 2 + seglen, frame, scan, qt, huff_dc,
-                huff_ac, restart_interval, prog_state,
-                ss, se, ah_al >> 4, ah_al & 0xF,
-            )
+            except (IndexError, OverflowError) as e:
+                raise ValueError(
+                    f"jpeg: corrupt entropy-coded data ({e})"
+                ) from e
             scans_seen += 1
             pos = _next_marker(data, pos + 2 + seglen)
             continue
@@ -411,8 +439,6 @@ def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac, dri):
     # per scan component: sampling, tables, coefficient store
     parts = []
     for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ValueError("jpeg: scan references unknown component")
         hs, vs, tq = by_id[cs]
         if tq not in qt or td not in huff_dc or ta not in huff_ac:
             raise ValueError("jpeg: missing quant/Huffman table")
@@ -517,8 +543,6 @@ def _progressive_scan(data, pos, frame, scan, qt, huff_dc, huff_ac,
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
     by_id = {cid: (hs, vs, tq) for cid, hs, vs, tq in comps}
     for cs, _td, _ta in scan:
-        if cs not in by_id:
-            raise ValueError("jpeg: scan references unknown component")
         hs, vs, _ = by_id[cs]
         if cs not in state:
             state[cs] = dict(

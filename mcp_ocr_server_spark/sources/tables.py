@@ -360,8 +360,8 @@ def compact_table(
     Iceberg's rewrite_data_files (binpack / sort strategy).  Returns
     (n_files_before, n_files_after).
 
-    Why it exists at 100 TB: every micro-batch append, checkpointed
-    bucket commit, and per-task write leaves files far below the
+    Why it exists at 100 TB: every append, checkpointed bucket
+    commit, and per-task write leaves files far below the
     row-group sweet spot; a scan over 10^7 tiny files pays open/footer
     costs per file and schedulers drown in splits.  Compaction is the
     standing maintenance job that keeps read amplification flat.
@@ -374,15 +374,14 @@ def compact_table(
     same maintenance job); without either a plain repartition binpacks.
     cluster_col and zorder_cols are mutually exclusive.
 
-    Crash safety (same discipline as streaming compact_memo): the
-    rewrite lands in a sibling `<location>.__compact_tmp` first and is
-    swapped in with two renames after the new data is fully written.
-    POSIX has no atomic directory exchange, so there is a one-syscall
-    window where `location` is absent (data safe at `__compact_old`);
-    the function self-heals on entry — a missing location with a
-    surviving old dir is restored, and stale tmp/old artifacts from
-    any earlier crash are swept — so re-running compaction after a
-    crash always converges."""
+    Crash safety: the rewrite lands in a sibling
+    `<location>.__compact_tmp` first and is swapped in with two renames
+    after the new data is fully written.  POSIX has no atomic directory
+    exchange, so there is a one-syscall window where `location` is
+    absent (data safe at `__compact_old`); the function self-heals on
+    entry — a missing location with a surviving old dir is restored,
+    and stale tmp/old artifacts from any earlier crash are swept — so
+    re-running compaction after a crash always converges."""
     import math
     import os
     import shutil

@@ -51,7 +51,8 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output + checkpoint root")
     ap.add_argument("--buckets", type=int, default=None,
                     help="checkpoint buckets (default: config file's "
-                         "spark.checkpoint_buckets, else 32)")
+                         "spark.checkpoint_buckets, else "
+                         f"{DEFAULT_CONFIG.checkpoint_buckets})")
     ap.add_argument("--synthetic-docs", type=int, default=0,
                     help="generate N synthetic docs instead of reading --docs")
     ap.add_argument("--pdfs", help="optional pdf sidecar table path "
@@ -75,11 +76,9 @@ def main() -> None:
         file_cfg = load_job_config(args.config)
 
     # bucket-count resolution order: --buckets flag > config file's
-    # spark.checkpoint_buckets > default 32 (round-1 bug: the flag's
-    # hard default silently shadowed the documented config knob)
-    n_buckets = args.buckets or (
-        file_cfg.checkpoint_buckets if file_cfg else 32
-    )
+    # spark.checkpoint_buckets > JobConfig's default (round-1 bug: the
+    # flag's hard default silently shadowed the documented config knob)
+    n_buckets = args.buckets or (file_cfg or DEFAULT_CONFIG).checkpoint_buckets
 
     spark = get_spark(app_name="extract", cfg=file_cfg or DEFAULT_CONFIG)
     if args.synthetic_docs:

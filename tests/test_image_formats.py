@@ -376,6 +376,26 @@ def test_decode_image_truncation_fuzz(cut, which):
     _contract(blob[: min(cut, max(0, len(blob) - 1))])
 
 
+@pytest.mark.parametrize("progressive", [False, True])
+def test_decode_image_jpeg_point_mutations(progressive):
+    # one byte of a valid JPEG set to a seeded value: reaches every
+    # segment parser and the entropy decoder, which once leaked
+    # IndexError / struct.error / OverflowError past the contract
+    from mcp_ocr_server_spark.imaging.jpeg import (
+        encode_jpeg,
+        encode_jpeg_progressive,
+    )
+
+    enc = encode_jpeg_progressive if progressive else encode_jpeg
+    blob = enc(GRAY[:24, :32], 90)
+    rng = np.random.default_rng(20261019)
+    for at, value in zip(rng.integers(0, len(blob), 300),
+                         rng.integers(0, 256, 300)):
+        mutated = bytearray(blob)
+        mutated[at] = value
+        _contract(bytes(mutated))
+
+
 # --- tiled TIFF ----------------------------------------------------------------
 
 
