@@ -372,8 +372,9 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             if progressive and not ss <= se <= 63:
                 raise ValueError("jpeg: spectral selection outside 0-63")
             # Header fields are checked above; what can still go wrong
-            # is in the entropy-coded data (a magnitude past int64, an
-            # index off the block), which surfaces here as one error.
+            # comes from the entropy-coded data (a magnitude past int64,
+            # an index off a coefficient store) and surfaces here as one
+            # error, so the per-coefficient loops carry no checks.
             try:
                 if not progressive:
                     return _decode_scan(
@@ -387,7 +388,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 )
             except (IndexError, OverflowError) as e:
                 raise ValueError(
-                    f"jpeg: corrupt entropy-coded data ({e})"
+                    f"jpeg: corrupt scan data ({e})"
                 ) from e
             scans_seen += 1
             pos = _next_marker(data, pos + 2 + seglen)

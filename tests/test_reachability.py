@@ -9,6 +9,7 @@ literal counts as reached too: ``session.get_spark`` names
 ``spark_daemon`` that way in ``spark.python.daemon.module``."""
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -29,13 +30,23 @@ def _package_modules() -> dict[str, Path]:
     return out
 
 
-def _named(path: Path, name: str, modules: dict[str, Path]):
+def _statements(body):
+    """Every statement under `body`, nested bodies included (so an
+    import inside a function or an `if` is seen)."""
+    for stmt in body:
+        yield stmt
+        for field in ("body", "orelse", "finalbody", "handlers", "cases"):
+            yield from _statements(getattr(stmt, field, ()))
+
+
+def _named(path: Path, name: str):
     """Dotted names that the file at `path` (module `name`, "" for an
     entry point) imports or spells out as a string literal."""
+    text = path.read_text()
     here = name.split(".")
     if path.name != "__init__.py":
         here = here[:-1]
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+    for node in _statements(ast.parse(text, str(path)).body):
         if isinstance(node, ast.Import):
             yield from (alias.name for alias in node.names)
         elif isinstance(node, ast.ImportFrom):
@@ -45,8 +56,7 @@ def _named(path: Path, name: str, modules: dict[str, Path]):
                 base = ".".join(anchor + ([base] if base else []))
             yield base
             yield from (f"{base}.{alias.name}" for alias in node.names)
-        elif isinstance(node, ast.Constant) and node.value in modules:
-            yield node.value
+    yield from re.findall(rf"""["']({PKG}[\w.]*)["']""", text)
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -55,7 +65,7 @@ def test_every_package_module_is_reached_from_an_entry_point():
     todo = [(path, "") for path in ENTRY_POINTS]
     while todo:
         path, name = todo.pop()
-        for dotted in _named(path, name, modules):
+        for dotted in _named(path, name):
             parts = dotted.split(".")
             # importing a.b.c runs a/__init__ and a/b/__init__ first
             for i in range(1, len(parts) + 1):
