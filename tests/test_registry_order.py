@@ -1,6 +1,7 @@
-"""The driver's correctness gate reads the first 50 registry entries.
-Every query that no committed driver round (``CORRECTNESS_r*.json``)
-has checked must sit inside that window, so the next round checks it."""
+"""Each external correctness round (``CORRECTNESS_r*.json``) checks
+only the first 50 registry entries.  Every query that no committed
+round has checked must sit inside that window, so the next round
+checks it."""
 
 import glob
 import json
@@ -12,9 +13,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
 
 
-def test_never_checked_queries_sit_in_the_driver_window():
+def test_never_checked_queries_sit_in_the_checked_window():
     rounds = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
-    assert rounds, "no committed driver rounds to read"
+    assert rounds, "no committed correctness rounds to read"
     checked: set[str] = set()
     for path in rounds:
         with open(path) as f:
