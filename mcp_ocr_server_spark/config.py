@@ -94,18 +94,6 @@ INTERNAL_ERROR = "INTERNAL_ERROR"
 # reference codes above.
 PDF_PARSE_FAILED = "PDF_PARSE_FAILED"
 
-ERROR_CODES = (
-    INVALID_INPUT,
-    FILE_NOT_FOUND,
-    UNSUPPORTED_FORMAT,
-    IMAGE_TOO_LARGE,
-    PREPROCESSING_FAILED,
-    OCR_ENGINE_FAILED,
-    TIMEOUT,
-    INTERNAL_ERROR,
-    PDF_PARSE_FAILED,  # ninth: the north-rule pdf extension (above)
-)
-
 # Supported languages: internal/ocr/tesseract.go:26,153-157.
 SUPPORTED_LANGUAGES = ("eng", "chi_sim", "chi_tra", "jpn")
 

@@ -89,7 +89,6 @@ _TE2 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _TE1]
 _TE3 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _TE2]
 
 # decrypt byte tables for the vectorized InvMixColumns
-_SBOX_NP = np.array(SBOX, dtype=np.uint8)
 _ISBOX_NP = np.array(INV_SBOX, dtype=np.uint8)
 _M9 = np.array([_gmul(a, 9) for a in range(256)], dtype=np.uint8)
 _M11 = np.array([_gmul(a, 11) for a in range(256)], dtype=np.uint8)

@@ -348,7 +348,6 @@ def sniff_audio(data: bytes) -> dict:
 # frames for mp3, RIFF LIST/INFO for wav.  A curation pipeline dedups
 # and routes on these long before any PCM exists.
 
-_TAG_KEYS = ("title", "artist", "album")
 # RIFF INFO fourcc -> canonical tag key (the subset a pipeline uses)
 _RIFF_INFO = {b"INAM": "title", b"IART": "artist", b"IPRD": "album"}
 # ID3v2 text-frame ids (v2.3/v2.4)

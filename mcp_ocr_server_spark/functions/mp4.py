@@ -33,7 +33,6 @@ import struct
 __all__ = ["encode_mp4", "mp4_metadata", "parse_mp4_frames",
            "walk_boxes"]
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 _EBML_MAGIC = b"\x1a\x45\xdf\xa3"
 
 

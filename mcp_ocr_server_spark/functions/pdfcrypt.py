@@ -36,11 +36,11 @@ Documented scope (refusals name the feature):
     XObjects — everything the extractors read.  Top-level literal
     strings (document info) stay encrypted; no extractor reads them.
 
-The writer half (encrypt_pdf_bytes) encrypts an existing classic-xref
-file and appends the /Encrypt dict + /ID, deriving /O, /U (and for
-V5: /OE, /UE, /Perms) with the same key schedule — corpus classes and
-the decryptor are pinned against each other, not against copied
-constants.
+The writer half (writer_material) derives /O, /U (and for V5: /OE,
+/UE, /Perms) and the per-object cipher with the same key schedule;
+the corpus writers in sources/synthetic encrypt with it, so corpus
+classes and the decryptor are pinned against each other, not against
+copied constants.
 """
 
 from __future__ import annotations
@@ -326,77 +326,14 @@ def trailer_id0(data: bytes) -> bytes:
     return b""
 
 
-def encrypt_pdf_bytes(
-    data: bytes,
-    user_pw: bytes = b"",
-    owner_pw: bytes = b"",
-    r: int = 2,
-    length: int = 40,
-    file_id: bytes = b"\x01" * 16,
-) -> bytes:
-    """Encrypt a classic-xref PDF produced by the in-repo writers:
-    every stream payload is ciphered under its per-object key, an
-    /Encrypt dict is appended, and the trailer gains /Encrypt + /ID.
-    r=2/3 → RC4 (V1/V2), r=4 → AES-128 crypt filter (V4 /AESV2),
-    r=6 → AES-256 (V5 /AESV3).  Deterministic (AES IVs are derived
-    from the file id + object number); the corpus/test half of the
-    decryptor above."""
-    from .pdf import _objects
-
-    enc_dict, _cipher = writer_material(
-        r, length, user_pw, owner_pw, file_id
-    )
-    from .pdf import _objects
-
-    objs = _objects(data)
-    bodies: list[tuple[int, bytes]] = []
-    for num in sorted(objs):
-        o = objs[num]
-        if o.stream is None:
-            bodies.append((num, o.body))
-        else:
-            enc = _cipher(num, o.stream)
-            body = re.sub(
-                rb"/Length\s+\d+(?!\d)",
-                b"/Length " + str(len(enc)).encode(),
-                o.body, count=1,
-            )
-            bodies.append(
-                (num, body + b"\nstream\n" + enc + b"\nendstream")
-            )
-    enc_num = max(objs) + 1
-    bodies.append((enc_num, enc_dict))
-    root = re.search(rb"/Root\s+(\d+)\s+\d+\s+R", data)
-    root_ref = root.group(0) if root else b"/Root 1 0 R"
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-    for num, body in bodies:
-        offsets[num] = len(out)
-        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    top = max(offsets)
-    out += f"xref\n0 {top + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for num in range(1, top + 1):
-        out += f"{offsets.get(num, 0):010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(top + 1).encode()
-        + b" " + root_ref
-        + b" /Encrypt " + str(enc_num).encode() + b" 0 R"
-        + b" /ID [<" + file_id.hex().encode() + b"> <"
-        + file_id.hex().encode() + b">] >>\nstartxref\n"
-        + str(xref_at).encode() + b"\n%%EOF\n"
-    )
-    return bytes(out)
-
-
 def writer_material(
     r: int, length: int, user_pw: bytes, owner_pw: bytes,
     file_id: bytes,
 ):
     """(/Encrypt dict body, cipher(num, payload) -> bytes) — the key
-    schedule shared by the classic-xref writer above and the 1.5
-    XRef-stream-layout writer (sources/synthetic.make_pdf15_bytes)."""
+    schedule shared by the classic-xref writer and the 1.5
+    XRef-stream-layout writer (sources/synthetic.encrypt_pdf_bytes and
+    make_pdf15_bytes)."""
     if r == 4:
         length = 128
     elif r == 6:

@@ -160,7 +160,6 @@ def _resolve_colorspace(
 _BEZIER_STEPS = 16  # fixed deterministic cubic flattening
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIMS = b"()<>[]{}/%"
 
 
 def _extract_inline_images(

@@ -153,12 +153,6 @@ def parse_subtitles(data: bytes) -> tuple[str, list[dict]]:
     )
 
 
-SUBTITLE_SCHEMA = (
-    "media_ref string, format string, cue_idx int, start_s double,"
-    " end_s double, text string, error string"
-)
-
-
 def subtitle_rows(ref: str, data: bytes) -> list[dict]:
     """Cue rows for one payload — shared VERBATIM by the Spark stage
     (queries.q_subtitle_cues) and the golden-fixture generator.

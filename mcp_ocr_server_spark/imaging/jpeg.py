@@ -165,6 +165,13 @@ class _HuffDecode:
         )
 
 
+# zero bytes the reader may feed past a marker before it refuses: a
+# valid scan pads only its look-ahead (at most 3 bytes measured on the
+# in-repo encoders), while a frame that claims MCUs its data lacks
+# would otherwise decode them all from zeros
+_MAX_PAD_BYTES = 64
+
+
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00
     unstuffing; stops at any non-RST marker.  T.81 §F.2.2.5."""
@@ -175,12 +182,18 @@ class _BitReader:
         self.acc = 0
         self.nbits = 0
         self.marker: int | None = None  # marker that ended the segment
+        self.padded = 0  # zero bytes fed since that marker
 
     def _fill(self) -> None:
         d = self.data
         while self.nbits <= 24:
             if self.marker is not None:
                 # past a marker: feed 0 bits (spec: decoder pads)
+                self.padded += 1
+                if self.padded > _MAX_PAD_BYTES:
+                    raise ValueError(
+                        "jpeg: scan data ends before the frame's last MCU"
+                    )
                 self.acc = (self.acc << 8) & 0xFFFFFFFF
                 self.nbits += 8
                 continue
@@ -240,6 +253,7 @@ class _BitReader:
             # skip the 0xFF RSTn pair in the byte stream
             self.pos += 2
             self.marker = None
+            self.padded = 0
         else:
             raise ValueError("jpeg: expected restart marker")
 

@@ -20,12 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-PARTITION_METRICS_COLS = [
-    "partition_id", "n_images", "n_errors", "total_duration_s",
-    "avg_duration_s", "max_duration_s", "avg_sharpness", "avg_contrast",
-    "avg_brightness", "n_preprocessed",
-]
-
 
 def partition_metrics(ocr_results: DataFrame) -> DataFrame:
     """Aggregate the OCR stage output by the partition that computed it.

@@ -35,6 +35,7 @@ missing media rows (FILE_NOT_FOUND path, handler.go:304-306).
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from functools import lru_cache
 
@@ -1839,8 +1840,9 @@ def warc_df(spark, cfg: CorpusConfig, n: int = N_WARC_FILES):
 
 
 # ---------------------------------------------------------------------------
-# PDF corpus (for functions/pdf.pdf_text) — a deterministic minimal
-# writer (classic xref, FlateDecode or stored) + per-class degradations
+# PDF corpus (for functions/pdf.pdf_text) — deterministic minimal
+# writers (one classic-xref serializer, stream-object helper and
+# text-page skeleton; FlateDecode or stored) + per-class degradations
 
 PDF_MEDIA_SCHEMA = "media_ref string, bytes binary, kind string"
 
@@ -1849,7 +1851,9 @@ N_PDF_DOCS = 48  # fixed: goldens for this corpus are committed
 # Bump when any generator's OUTPUT changes: consumers that cache a
 # materialized corpus on disk (bench.py's /tmp parquet) key their cache
 # dirs on this, so a generator edit cannot silently benchmark (or
-# golden-check) a stale corpus.
+# golden-check) a stale corpus.  tests/test_corpus_pins.py pins the
+# bytes of every PDF corpus and writer option, so an unbumped change
+# to a PDF writer's output fails there.
 CORPUS_VERSION = 2
 
 # The four-kind interleaved corpus (text/html/image/pdf in one doc
@@ -1863,17 +1867,13 @@ def pdf_ref(j: int) -> str:
     return f"pdf-{j:06d}"
 
 
-def _pdf_escape(s: str) -> bytes:
-    return (
-        s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    ).encode("latin-1")
-
-
-def _pdf_escape_bytes(b: bytes) -> bytes:
-    return (
-        b.replace(b"\\", b"\\\\")
-        .replace(b"(", b"\\(").replace(b")", b"\\)")
-    )
+def _pdf_string(s: str | bytes) -> bytes:
+    """A PDF literal string `(…)`: str is latin-1, and backslash and
+    parentheses are escaped."""
+    b = s.encode("latin-1") if isinstance(s, str) else s
+    return b"(" + (
+        b.replace(b"\\", b"\\\\").replace(b"(", b"\\(").replace(b")", b"\\)")
+    ) + b")"
 
 
 def _rl_encode(data: bytes) -> bytes:
@@ -1905,25 +1905,120 @@ def _rl_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _filtered_stream(content: bytes, mode: str) -> tuple[bytes, bytes]:
-    """(payload, /Filter head fragment) for a content stream under a
-    named decode pipeline — the writer half of functions/pdf's filter
-    chain ('flate', 'lzw', 'a85flate', 'rl')."""
+def classic_pdf_bytes(
+    objs: list[bytes | None], trailer: bytes = b"/Root 1 0 R"
+) -> bytes:
+    """The one classic-xref file layout every `%PDF-1.4` writer here
+    emits: object k + 1 is `objs[k]`, then the xref table, the trailer
+    (/Size, then the `trailer` entries) and startxref.  A None slot
+    writes no object, and its xref row reads offset 0."""
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(objs, 1):
+        offsets.append(0 if body is None else len(out))
+        if body is not None:
+            out += b"%d 0 obj\n" % num + body + b"\nendobj\n"
+    xref_at = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    out += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    out += b"trailer\n<< /Size %d %s >>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, trailer, xref_at)
+    return bytes(out)
+
+
+def _stream(payload: bytes, head: bytes = b"", tail: bytes = b"") -> bytes:
+    """A stream object body, `<< head/Length n tail >>` + the payload:
+    `head` entries end in a space, `tail` entries start with one."""
+    return (b"<< " + head + b"/Length %d" % len(payload) + tail
+            + b" >>\nstream\n" + payload + b"\nendstream")
+
+
+def _image(payload: bytes, w: int, h: int, cs: bytes = b"/DeviceGray",
+           bpc: int = 8, entries: bytes = b" /Filter /FlateDecode") -> bytes:
+    """An image XObject body; `entries` follow /BitsPerComponent."""
+    return _stream(payload, b"/Subtype /Image /Width %d /Height %d"
+                   b" /ColorSpace %s /BitsPerComponent %d%s "
+                   % (w, h, cs, bpc, entries))
+
+
+def _filtered_stream(content: bytes, mode: str | None) -> bytes:
+    """A content stream object under a named decode pipeline — the
+    writer half of functions/pdf's filter chain ('flate', 'lzw',
+    'a85flate', 'rl'); None stores it unfiltered."""
     import base64
     import zlib
 
+    if mode is None:
+        return _stream(content)
     if mode == "flate":
-        return zlib.compress(content), b" /Filter /FlateDecode"
+        return _stream(zlib.compress(content), tail=b" /Filter /FlateDecode")
     if mode == "lzw":
         from ..imaging.tiff import lzw_encode
 
-        return lzw_encode(content), b" /Filter /LZWDecode"
+        return _stream(lzw_encode(content), tail=b" /Filter /LZWDecode")
     if mode == "a85flate":
         payload = base64.a85encode(zlib.compress(content)) + b"~>"
-        return payload, b" /Filter [/ASCII85Decode /FlateDecode]"
+        return _stream(payload,
+                       tail=b" /Filter [/ASCII85Decode /FlateDecode]")
     if mode == "rl":
-        return _rl_encode(content), b" /Filter /RunLengthDecode"
+        return _stream(_rl_encode(content), tail=b" /Filter /RunLengthDecode")
     raise ValueError(f"unknown stream filter mode {mode!r}")
+
+
+def _page_tree(kids: list[int]) -> list[bytes]:
+    """Objects 1 and 2: the catalog and the page tree over `kids`."""
+    return [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [" + b" ".join(b"%d 0 R" % k for k in kids)
+        + b"] /Count %d >>" % len(kids),
+    ]
+
+
+def _tj_lines(lines: list[str], operand=_pdf_string) -> bytes:
+    """One text page's content: one Tj per line from 72 720, 14 pt
+    apart, in font /F1 at 12 pt.  `operand(line)` is the Tj string."""
+    parts = [b"BT /F1 12 Tf 72 720 Td"]
+    for k, line in enumerate(lines):
+        if k:
+            parts.append(b"0 -14 Td")
+        parts.append(operand(line) + b" Tj")
+    parts.append(b"ET")
+    return b" ".join(parts)
+
+
+def _text_pdf(contents: list[bytes], fonts: list[bytes]) -> list[bytes]:
+    """Object bodies of a text PDF: catalog, page tree, the `fonts`
+    (object 3 is the pages' /F1), then per page a US Letter page dict
+    and its content stream object from `contents`."""
+    objs = _page_tree([3 + len(fonts) + 2 * i for i in range(len(contents))])
+    objs += fonts
+    for content in contents:
+        objs += [
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
+            % (len(objs) + 2),
+            content,
+        ]
+    return objs
+
+
+_HELVETICA = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+_INFO_KEYS = (("title", b"/Title"), ("author", b"/Author"),
+              ("subject", b"/Subject"), ("producer", b"/Producer"),
+              ("created", b"/CreationDate"))
+
+# (key, open, close) of each XMP field, in packet order
+_XMP_FIELDS = (
+    ("title", b"<dc:title><rdf:Alt><rdf:li xml:lang=\"x-default\">",
+     b"</rdf:li></rdf:Alt></dc:title>"),
+    ("author", b"<dc:creator><rdf:Seq><rdf:li>",
+     b"</rdf:li></rdf:Seq></dc:creator>"),
+    ("subject", b"<dc:description><rdf:Alt><rdf:li>",
+     b"</rdf:li></rdf:Alt></dc:description>"),
+    ("producer", b"<pdf:Producer>", b"</pdf:Producer>"),
+    ("created", b"<xmp:CreateDate>", b"Z</xmp:CreateDate>"),
+)
 
 
 def make_pdf_bytes(
@@ -1943,86 +2038,28 @@ def make_pdf_bytes(
     BOM-led UTF-16BE hex string (§7.9.2.2's other branch).  `xmp`
     (same keys, created as ISO-8601) writes a catalog /Metadata XMP
     packet instead — the modern-generator metadata channel."""
-    import zlib
+    from xml.sax.saxutils import escape
 
-    objs: list[bytes] = []  # object number = index + 1
-    page_nums = [4 + 2 * i for i in range(len(pages))]
-    kids = " ".join(f"{n} 0 R" for n in page_nums).encode()
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count "
-        + str(len(pages)).encode() + b" >>"
+    mode = stream_filter or ("flate" if compress else None)
+    objs = _text_pdf(
+        [_filtered_stream(_tj_lines(lines), mode) for lines in pages],
+        [_HELVETICA],
     )
-    objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    for i, lines in enumerate(pages):
-        cnum = page_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents "
-            + str(cnum).encode() + b" 0 R >>"
-        )
-        parts = [b"BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(lines):
-            if k:
-                parts.append(b"0 -14 Td")
-            parts.append(b"(" + _pdf_escape(line) + b") Tj")
-        parts.append(b"ET")
-        content = b" ".join(parts)
-        mode = stream_filter if stream_filter else (
-            "flate" if compress else None
-        )
-        if mode is not None:
-            payload, filt = _filtered_stream(content, mode)
-            head = (b"<< /Length " + str(len(payload)).encode()
-                    + filt + b" >>")
-        else:
-            payload = content
-            head = b"<< /Length " + str(len(payload)).encode() + b" >>"
-        objs.append(head + b"\nstream\n" + payload + b"\nendstream")
-    info_frag = b""
+    trailer = b"/Root 1 0 R"
     if info:
-        parts2 = []
-        keymap = (("title", b"/Title"), ("author", b"/Author"),
-                  ("subject", b"/Subject"), ("producer", b"/Producer"),
-                  ("created", b"/CreationDate"))
-        for field, key in keymap:
+        entries = []
+        for field, key in _INFO_KEYS:
             v = info.get(field)
             if v is None:
                 continue
             if field == "title" and info_utf16:
                 hx = (b"\xfe\xff" + v.encode("utf-16-be")).hex()
-                parts2.append(key + b" <" + hx.encode() + b">")
+                entries.append(key + b" <" + hx.encode() + b">")
             else:
-                parts2.append(key + b" (" + _pdf_escape(v) + b")")
-        objs.append(b"<< " + b" ".join(parts2) + b" >>")
-        info_frag = b" /Info " + str(len(objs)).encode() + b" 0 R"
+                entries.append(key + b" " + _pdf_string(v))
+        objs.append(b"<< " + b" ".join(entries) + b" >>")
+        trailer += b" /Info %d 0 R" % len(objs)
     if xmp:
-        def _xesc(s: str) -> bytes:
-            return (s.replace("&", "&amp;").replace("<", "&lt;")
-                    .replace(">", "&gt;")).encode("utf-8")
-
-        frags = []
-        if xmp.get("title"):
-            frags.append(
-                b"<dc:title><rdf:Alt><rdf:li xml:lang=\"x-default\">"
-                + _xesc(xmp["title"])
-                + b"</rdf:li></rdf:Alt></dc:title>")
-        if xmp.get("author"):
-            frags.append(
-                b"<dc:creator><rdf:Seq><rdf:li>"
-                + _xesc(xmp["author"])
-                + b"</rdf:li></rdf:Seq></dc:creator>")
-        if xmp.get("subject"):
-            frags.append(
-                b"<dc:description><rdf:Alt><rdf:li>"
-                + _xesc(xmp["subject"])
-                + b"</rdf:li></rdf:Alt></dc:description>")
-        if xmp.get("producer"):
-            frags.append(b"<pdf:Producer>" + _xesc(xmp["producer"])
-                         + b"</pdf:Producer>")
-        if xmp.get("created"):
-            frags.append(b"<xmp:CreateDate>" + _xesc(xmp["created"])
-                         + b"Z</xmp:CreateDate>")
         xml = (
             b"<?xpacket begin=\"\xef\xbb\xbf\""
             b" id=\"W5M0MpCehiHzreSzNTczkc9d\"?>\n"
@@ -2033,33 +2070,17 @@ def make_pdf_bytes(
             b" xmlns:dc=\"http://purl.org/dc/elements/1.1/\""
             b" xmlns:xmp=\"http://ns.adobe.com/xap/1.0/\""
             b" xmlns:pdf=\"http://ns.adobe.com/pdf/1.3/\">"
-            + b"".join(frags)
+            + b"".join(
+                open_ + escape(xmp[field]).encode("utf-8") + close
+                for field, open_, close in _XMP_FIELDS if xmp.get(field)
+            )
             + b"</rdf:Description></rdf:RDF></x:xmpmeta>\n"
             b"<?xpacket end=\"w\"?>"
         )
-        objs.append(
-            b"<< /Type /Metadata /Subtype /XML /Length "
-            + str(len(xml)).encode() + b" >>\nstream\n" + xml
-            + b"\nendstream"
-        )
-        objs[0] = (b"<< /Type /Catalog /Pages 2 0 R /Metadata "
-                   + str(len(objs)).encode() + b" 0 R >>")
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R" + info_frag + b" >>\nstartxref\n"
-        + str(xref_at).encode() + b"\n%%EOF\n"
-    )
-    return bytes(out)
+        objs.append(_stream(xml, b"/Type /Metadata /Subtype /XML "))
+        objs[0] = b"<< /Type /Catalog /Pages 2 0 R /Metadata %d 0 R >>" % (
+            len(objs))
+    return classic_pdf_bytes(objs, trailer)
 
 
 def make_type0_pdf_bytes(
@@ -2074,8 +2095,6 @@ def make_type0_pdf_bytes(
     every other character used — so the extractor's range and char
     paths are each load-bearing.  Same object skeleton as
     make_pdf_bytes."""
-    import zlib
-
     used = sorted({ch for pg in pages for ln in pg for ch in ln})
     bfchars = [ch for ch in used if not ("a" <= ch <= "z")]
     cmap = bytearray(
@@ -2093,61 +2112,17 @@ def make_type0_pdf_bytes(
                      .encode())
         cmap += b"endbfchar\n"
     cmap += b"endcmap\nend\n"
-    objs: list[bytes] = []
-    page_nums = [5 + 2 * i for i in range(len(pages))]
-    kids = " ".join(f"{n} 0 R" for n in page_nums).encode()
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count "
-        + str(len(pages)).encode() + b" >>"
-    )
-    objs.append(
-        b"<< /Type /Font /Subtype /Type0 /BaseFont /Synth-Identity-H"
-        b" /Encoding /Identity-H /ToUnicode 4 0 R >>"
-    )
-    objs.append(
-        b"<< /Length " + str(len(cmap)).encode() + b" >>\nstream\n"
-        + bytes(cmap) + b"\nendstream"
-    )
-    for i, lines in enumerate(pages):
-        cnum = page_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents "
-            + str(cnum).encode() + b" 0 R >>"
-        )
-        parts = [b"BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(lines):
-            if k:
-                parts.append(b"0 -14 Td")
-            hexs = "".join(f"{ord(ch) + 0x100:04x}" for ch in line)
-            parts.append(b"<" + hexs.encode() + b"> Tj")
-        parts.append(b"ET")
-        content = b" ".join(parts)
-        if compress:
-            payload = zlib.compress(content)
-            head = b"<< /Length " + str(len(payload)).encode() + \
-                b" /Filter /FlateDecode >>"
-        else:
-            payload = content
-            head = b"<< /Length " + str(len(payload)).encode() + b" >>"
-        objs.append(head + b"\nstream\n" + payload + b"\nendstream")
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_at).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)
+
+    def gids(line: str) -> bytes:
+        return b"<" + "".join(f"{ord(ch) + 0x100:04x}" for ch in line
+                              ).encode() + b">"
+
+    mode = "flate" if compress else None
+    return classic_pdf_bytes(_text_pdf(
+        [_filtered_stream(_tj_lines(lines, gids), mode) for lines in pages],
+        [b"<< /Type /Font /Subtype /Type0 /BaseFont /Synth-Identity-H"
+         b" /Encoding /Identity-H /ToUnicode 4 0 R >>", _stream(bytes(cmap))],
+    ))
 
 
 def make_differences_pdf_bytes(pages: list[list[str]]) -> bytes:
@@ -2172,54 +2147,14 @@ def make_differences_pdf_bytes(pages: list[list[str]]) -> bytes:
     diffs = b"128 " + b" ".join(
         b"/" + glyph_of[ch].encode("ascii") for ch in used
     )
-    objs: list[bytes] = []
-    page_nums = [4 + 2 * i for i in range(len(pages))]
-    kids = " ".join(f"{n} 0 R" for n in page_nums).encode()
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count "
-        + str(len(pages)).encode() + b" >>"
-    )
-    objs.append(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Synth-Subset"
-        b" /Encoding << /Type /Encoding /Differences [" + diffs
-        + b"] >> >>"
-    )
-    for i, lines in enumerate(pages):
-        cnum = page_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents "
-            + str(cnum).encode() + b" 0 R >>"
-        )
-        parts = [b"BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(lines):
-            if k:
-                parts.append(b"0 -14 Td")
-            encoded = bytes(code_of[ch] for ch in line)
-            parts.append(b"(" + _pdf_escape_bytes(encoded) + b") Tj")
-        parts.append(b"ET")
-        content = b" ".join(parts)
-        objs.append(
-            b"<< /Length " + str(len(content)).encode()
-            + b" >>\nstream\n" + content + b"\nendstream"
-        )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_at).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)
+    return classic_pdf_bytes(_text_pdf(
+        [_stream(_tj_lines(
+            lines, lambda ln: _pdf_string(bytes(code_of[ch] for ch in ln))))
+         for lines in pages],
+        [b"<< /Type /Font /Subtype /Type1 /BaseFont /Synth-Subset"
+         b" /Encoding << /Type /Encoding /Differences [" + diffs
+         + b"] >> >>"],
+    ))
 
 
 def make_pdf15_bytes(
@@ -2244,6 +2179,7 @@ def make_pdf15_bytes(
     import struct
     import zlib
 
+    flate = b" /Filter /FlateDecode"
     n = len(pages)
     # object numbering: 1..n content streams, n+1 ObjStm, then the
     # ObjStm members (catalog n+2, pages n+3, font n+4, page dicts
@@ -2266,29 +2202,17 @@ def make_pdf15_bytes(
     else:
         enc_dict, cipher = b"", lambda _num, payload: payload
 
-    contents: list[bytes] = []
-    for i, lines in enumerate(pages):
-        parts = [b"BT /F1 12 Tf 72 720 Td"]
-        for k, line in enumerate(lines):
-            if k:
-                parts.append(b"0 -14 Td")
-            parts.append(b"(" + _pdf_escape(line) + b") Tj")
-        parts.append(b"ET")
-        payload = cipher(i + 1, zlib.compress(b" ".join(parts)))
-        contents.append(
-            b"<< /Length " + str(len(payload)).encode()
-            + b" /Filter /FlateDecode >>\nstream\n" + payload
-            + b"\nendstream"
-        )
-
+    contents = [
+        _stream(cipher(i + 1, zlib.compress(_tj_lines(lines))), tail=flate)
+        for i, lines in enumerate(pages)
+    ]
     kids = " ".join(f"{p} 0 R" for p in page_nums).encode()
     members: list[tuple[int, bytes]] = [
         (cat, b"<< /Type /Catalog /Pages " + str(pgs).encode()
          + b" 0 R >>"),
         (pgs, b"<< /Type /Pages /Kids [" + kids + b"] /Count "
          + str(n).encode() + b" >>"),
-        (font, b"<< /Type /Font /Subtype /Type1 /BaseFont"
-         b" /Helvetica >>"),
+        (font, _HELVETICA),
     ]
     for i, p in enumerate(page_nums):
         members.append((
@@ -2306,13 +2230,10 @@ def make_pdf15_bytes(
     header = " ".join(
         f"{num} {off}" for (num, _), off in zip(members, offs)
     ).encode() + b"\n"
-    stm_payload = cipher(objstm_num, zlib.compress(header + bodies))
-    objstm = (
-        b"<< /Type /ObjStm /N " + str(len(members)).encode()
-        + b" /First " + str(len(header)).encode()
-        + b" /Length " + str(len(stm_payload)).encode()
-        + b" /Filter /FlateDecode >>\nstream\n" + stm_payload
-        + b"\nendstream"
+    objstm = _stream(
+        cipher(objstm_num, zlib.compress(header + bodies)),
+        b"/Type /ObjStm /N %d /First %d " % (len(members), len(header)),
+        flate,
     )
 
     out = bytearray(b"%PDF-1.5\n")
@@ -2341,23 +2262,57 @@ def make_pdf15_bytes(
             rows.append(row(2, objstm_num, idx))
     # the XRef stream itself is NEVER encrypted (§7.5.8.2) — a reader
     # must parse it before it can know the document is encrypted
-    xdata = zlib.compress(b"".join(rows))
     enc_entry = (
         b" /Encrypt " + str(enc_num).encode() + b" 0 R /ID [<"
         + file_id.hex().encode() + b"> <" + file_id.hex().encode()
         + b">]"
     ) if enc_num is not None else b""
-    out += (
-        f"{xref_num} 0 obj\n".encode()
-        + b"<< /Type /XRef /Size " + str(size).encode()
-        + b" /Root " + str(cat).encode() + b" 0 R" + enc_entry
-        + b" /W [1 2 2] /Index [0 "
-        + str(size).encode() + b"] /Length " + str(len(xdata)).encode()
-        + b" /Filter /FlateDecode >>\nstream\n" + xdata
-        + b"\nendstream\nendobj\n"
-    )
+    out += b"%d 0 obj\n" % xref_num + _stream(
+        zlib.compress(b"".join(rows)),
+        b"/Type /XRef /Size %d /Root %d 0 R%s /W [1 2 2] /Index [0 %d] "
+        % (size, cat, enc_entry, size),
+        flate,
+    ) + b"\nendobj\n"
     out += b"startxref\n" + str(xref_at).encode() + b"\n%%EOF\n"
     return bytes(out)
+
+
+def encrypt_pdf_bytes(
+    data: bytes,
+    user_pw: bytes = b"",
+    owner_pw: bytes = b"",
+    r: int = 2,
+    length: int = 40,
+    file_id: bytes = b"\x01" * 16,
+) -> bytes:
+    """Encrypt a classic-xref PDF produced by the writers above: every
+    stream payload is ciphered under its per-object key, an /Encrypt
+    dict is appended, and the trailer gains /Encrypt + /ID.  r=2/3 →
+    RC4 (V1/V2), r=4 → AES-128 crypt filter (V4 /AESV2), r=6 → AES-256
+    (V5 /AESV3).  Object numbers are kept, holes included.
+    Deterministic (AES IVs are derived from the file id + object
+    number); the key schedule is functions/pdfcrypt's, so the corpus
+    and the decryptor are pinned against each other, not against
+    copied constants."""
+    from ..functions.pdf import _objects
+    from ..functions.pdfcrypt import writer_material
+
+    enc_dict, cipher = writer_material(r, length, user_pw, owner_pw, file_id)
+    objs = _objects(data)
+    bodies: list[bytes | None] = [None] * max(objs) + [enc_dict]
+    for num, o in objs.items():
+        bodies[num - 1] = o.body
+        if o.stream is not None:
+            enc = cipher(num, o.stream)
+            bodies[num - 1] = re.sub(
+                rb"/Length\s+\d+(?!\d)", b"/Length %d" % len(enc), o.body,
+                count=1,
+            ) + b"\nstream\n" + enc + b"\nendstream"
+    root = re.search(rb"/Root\s+(\d+)\s+\d+\s+R", data)
+    hx = file_id.hex().encode()
+    return classic_pdf_bytes(bodies, (
+        root.group(0) if root else b"/Root 1 0 R"
+    ) + b" /Encrypt %d 0 R /ID [<%s> <%s>]" % (len(bodies), hx, hx))
 
 
 def pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
@@ -2428,8 +2383,6 @@ def pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
         # print/copy-restricted shape): fully decryptable, text must
         # come out identical to the unencrypted twin — rotating R2/40
         # and R3/128 key schedules
-        from ..functions.pdfcrypt import encrypt_pdf_bytes
-
         r, ln = (2, 40) if j % 2 == 0 else (3, 128)
         return pdf_ref(j), encrypt_pdf_bytes(
             data, owner_pw=b"owner", r=r, length=ln
@@ -2437,8 +2390,6 @@ def pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
     if j % 13 == 2:
         # a REAL user password: the refusal class (the engine has no
         # secret to verify with)
-        from ..functions.pdfcrypt import encrypt_pdf_bytes
-
         return pdf_ref(j), encrypt_pdf_bytes(
             data, user_pw=b"secret", owner_pw=b"owner", r=3, length=128
         ), "locked"
@@ -2447,8 +2398,6 @@ def pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
         # rotating V4/AESV2-128 and V5/R6/AESV3-256 crypt-filter
         # layouts, EMPTY user password — decrypts, text identical to
         # the unencrypted twin
-        from ..functions.pdfcrypt import encrypt_pdf_bytes
-
         return pdf_ref(j), encrypt_pdf_bytes(
             data, owner_pw=b"owner", r=4 if j % 2 == 0 else 6
         ), "aes"
@@ -2546,28 +2495,17 @@ def make_scanned_pdf_bytes(
     Up predictor via /DecodeParms).  Deterministic."""
     import zlib
 
-    objs: list[bytes] = []
-    page_nums = [3 + 3 * i for i in range(len(images))]
-    kids = " ".join(f"{n} 0 R" for n in page_nums).encode()
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count "
-        + str(len(images)).encode() + b" >>"
-    )
-    smask_nums = {
-        i: 2 + 3 * len(images) + 1 + i for i in range(len(images))
-    } if variant == "smask" else {}
-    smask_objs: list[bytes] = []
+    n = len(images)
+    objs = _page_tree([3 + 3 * i for i in range(n)])
+    smasks: list[bytes] = []
     for i, img in enumerate(images):
         h, w = img.shape[:2]
-        pnum = page_nums[i]
-        extra = b""
+        cs, bpc, extra = b"/DeviceGray", 8, b""
         if dct:
             from ..imaging.jpeg import encode_jpeg
 
             payload = encode_jpeg(img, quality=95)
             filt = b" /Filter /DCTDecode"
-            cs, bpc = b"/DeviceGray", b"8"
         elif variant == "indexed":
             idx = (img >> 4).astype(np.uint8)
             stride = (w + 1) // 2
@@ -2578,104 +2516,52 @@ def make_scanned_pdf_bytes(
             pal = bytes(
                 v for k in range(16) for v in (k * 17, k * 17, k * 17)
             )
-            cs = (b"[/Indexed /DeviceRGB 15 <"
-                  + pal.hex().encode() + b">]")
-            bpc = b"4"
+            cs = b"[/Indexed /DeviceRGB 15 <" + pal.hex().encode() + b">]"
+            bpc = 4
         elif variant == "invert":
             samples = (255 - img).tobytes()
-            cs, bpc = b"/DeviceGray", b"8"
-            extra += b" /Decode [1 0]"
+            extra = b" /Decode [1 0]"
         elif variant == "smask":
             samples = np.zeros((h, w), dtype=np.uint8).tobytes()
-            cs, bpc = b"/DeviceGray", b"8"
-            extra += (b" /SMask " + str(smask_nums[i]).encode()
-                      + b" 0 R")
-            mask_payload = zlib.compress((255 - img).tobytes())
-            smask_objs.append(
-                b"<< /Subtype /Image /Width " + str(w).encode()
-                + b" /Height " + str(h).encode()
-                + b" /ColorSpace /DeviceGray /BitsPerComponent 8"
-                + b" /Filter /FlateDecode /Length "
-                + str(len(mask_payload)).encode()
-                + b" >>\nstream\n" + mask_payload + b"\nendstream"
-            )
+            extra = b" /SMask %d 0 R" % (3 + 3 * n + i)
+            smasks.append(_image(zlib.compress((255 - img).tobytes()), w, h))
         elif bits == 1:
-            stride = (w + 7) // 8
             rowbits = (img >= 128).astype(np.uint8)
-            packed = np.packbits(rowbits, axis=1)
-            assert packed.shape == (h, stride)
-            samples = packed.tobytes()
-            cs, bpc = b"/DeviceGray", b"1"
+            samples = np.packbits(rowbits, axis=1).tobytes()
+            bpc = 1
         elif color == "rgb":
             samples = np.repeat(img.reshape(h, w, 1), 3, axis=2).tobytes()
-            cs, bpc = b"/DeviceRGB", b"8"
+            cs = b"/DeviceRGB"
         else:
             samples = img.tobytes()
-            cs, bpc = b"/DeviceGray", b"8"
-        if not dct:
-            if variant == "rl":
-                payload = _rl_encode(samples)
-                filt = b" /Filter /RunLengthDecode"
-            elif variant == "pred":
-                rowlen = len(samples) // h
-                rows = np.frombuffer(
-                    samples, dtype=np.uint8
-                ).reshape(h, rowlen)
-                prior = np.zeros(rowlen, dtype=np.uint8)
-                enc = bytearray()
-                for r in range(h):
-                    enc.append(2)  # PNG Up row filter
-                    enc += (rows[r] - prior).tobytes()
-                    prior = rows[r]
-                payload = zlib.compress(bytes(enc))
-                filt = b" /Filter /FlateDecode"
-                extra += (b" /DecodeParms << /Predictor 12 /Columns "
-                          + str(rowlen).encode() + b" >>")
-            elif flate:
-                payload = zlib.compress(samples)
-                filt = b" /Filter /FlateDecode"
-            else:
-                payload = samples
-                filt = b""
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 "
-            + str(w).encode() + b" " + str(h).encode()
-            + b"] /Resources << /XObject << /Im0 "
-            + str(pnum + 1).encode() + b" 0 R >> >> /Contents "
-            + str(pnum + 2).encode() + b" 0 R >>"
-        )
-        objs.append(
-            b"<< /Subtype /Image /Width " + str(w).encode()
-            + b" /Height " + str(h).encode()
-            + b" /ColorSpace " + cs + b" /BitsPerComponent " + bpc
-            + extra + filt + b" /Length " + str(len(payload)).encode()
-            + b" >>\nstream\n" + payload + b"\nendstream"
-        )
-        content = (
-            b"q " + str(w).encode() + b" 0 0 " + str(h).encode()
-            + b" 0 0 cm /Im0 Do Q"
-        )
-        objs.append(
-            b"<< /Length " + str(len(content)).encode() + b" >>\nstream\n"
-            + content + b"\nendstream"
-        )
-    objs.extend(smask_objs)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_at).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)
+        if dct:
+            pass  # the payload is the JPEG
+        elif variant == "rl":
+            payload, filt = _rl_encode(samples), b" /Filter /RunLengthDecode"
+        elif variant == "pred":
+            rowlen = len(samples) // h
+            rows = np.frombuffer(samples, dtype=np.uint8).reshape(h, rowlen)
+            prior = np.zeros(rowlen, dtype=np.uint8)
+            enc = bytearray()
+            for r in range(h):
+                enc.append(2)  # PNG Up row filter
+                enc += (rows[r] - prior).tobytes()
+                prior = rows[r]
+            payload = zlib.compress(bytes(enc))
+            filt = b" /Filter /FlateDecode"
+            extra += b" /DecodeParms << /Predictor 12 /Columns %d >>" % rowlen
+        elif flate:
+            payload, filt = zlib.compress(samples), b" /Filter /FlateDecode"
+        else:
+            payload, filt = samples, b""
+        objs += [
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 %d %d]"
+            b" /Resources << /XObject << /Im0 %d 0 R >> >>"
+            b" /Contents %d 0 R >>" % (w, h, len(objs) + 2, len(objs) + 3),
+            _image(payload, w, h, cs, bpc, extra + filt),
+            _stream(b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h)),
+        ]
+    return classic_pdf_bytes(objs + smasks)
 
 
 # degradations safe for each sample class: 1-bit re-thresholds at the
@@ -2779,50 +2665,14 @@ def make_positioned_pdf_bytes(
     Tm — runs are emitted in the LIST ORDER given, which need not be
     reading order (that is the point).  Same object skeleton as
     make_pdf_bytes."""
-    objs: list[bytes] = []
-    page_nums = [4 + 2 * i for i in range(len(pages))]
-    kids = " ".join(f"{n} 0 R" for n in page_nums).encode()
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count "
-        + str(len(pages)).encode() + b" >>"
-    )
-    objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    for i, runs in enumerate(pages):
-        cnum = page_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents "
-            + str(cnum).encode() + b" 0 R >>"
-        )
-        parts = []
-        for x, y, text in runs:
-            parts.append(
-                b"BT /F1 12 Tf 1 0 0 1 " + f"{x:g}".encode() + b" "
-                + f"{y:g}".encode() + b" Tm ("
-                + _pdf_escape(text) + b") Tj ET"
-            )
-        content = b" ".join(parts)
-        objs.append(
-            b"<< /Length " + str(len(content)).encode()
-            + b" >>\nstream\n" + content + b"\nendstream"
-        )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_at).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)
+    return classic_pdf_bytes(_text_pdf([
+        _stream(b" ".join(
+            b"BT /F1 12 Tf 1 0 0 1 %s %s Tm %s Tj ET"
+            % (f"{x:g}".encode(), f"{y:g}".encode(), _pdf_string(text))
+            for x, y, text in runs
+        ))
+        for runs in pages
+    ], [_HELVETICA]))
 
 
 def layout_pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str]:
@@ -2980,7 +2830,6 @@ def sitemap_df(spark, cfg: CorpusConfig, n: int = N_SITEMAPS):
 # same-agent group combination, '*'/'$' wildcard patterns, messy
 # real-world formatting, Sitemap: discovery lines, and the refusals.
 
-_S_ROBOTS = 17
 N_ROBOTS = 10
 
 
@@ -3157,42 +3006,52 @@ def make_composite_pdf_bytes(
       ("raw", content_bytes)               verbatim content (refusal
                                            classes build from this)
     Same one-shot object skeleton as make_scanned_pdf_bytes."""
-    import zlib as _z
+    import zlib
 
-    objs: list[bytes] = [b"", b""]  # placeholders: catalog, pages
+    objs: list[bytes] = [b"", b""]  # catalog and page tree, set last
     kids: list[int] = []
+
+    def shading(kind: int, coords, extend: bool, fn: bytes) -> bytes:
+        return (
+            b"<< /ShadingType %d /ColorSpace /DeviceGray /Coords [%s]"
+            b" /Extend [%s] /Function %s >>"
+            % (kind, b" ".join(_fnum(v) for v in coords),
+               b"true true" if extend else b"false false", fn)
+        )
+
+    def ramp(g0: float, g1: float) -> bytes:
+        return (b"<< /FunctionType 2 /Domain [0 1] /C0 [%s] /C1 [%s] /N 1 >>"
+                % (_fnum(g0), _fnum(g1)))
+
     for elements in pages:
         content = bytearray()
-        img_entries: list[tuple[bytes, int]] = []
-        sh_entries: list[tuple[bytes, int]] = []
-        gs_entries: list[tuple[bytes, int]] = []
+        # resource category -> "/Name n 0 R" entries, in draw order
+        res: dict[bytes, list[bytes]] = {
+            b"XObject": [], b"Shading": [], b"ExtGState": []}
+
+        def use(category: bytes, prefix: bytes, body: bytes) -> bytes:
+            """Append `body` as an object and name it in `category`."""
+            objs.append(body)
+            entries = res[category]
+            name = b"/%s%d" % (prefix, len(entries))
+            entries.append(b"%s %d 0 R" % (name, len(objs)))
+            return name
+
         for el in elements:
             tag = el[0]
             if tag == "image":
                 _t, img, x, y = el
                 h, w = img.shape
-                payload = _z.compress(img.tobytes())
-                objs.append(
-                    b"<< /Subtype /Image /Width " + str(w).encode()
-                    + b" /Height " + str(h).encode()
-                    + b" /ColorSpace /DeviceGray /BitsPerComponent 8"
-                    + b" /Filter /FlateDecode /Length "
-                    + str(len(payload)).encode()
-                    + b" >>\nstream\n" + payload + b"\nendstream"
-                )
-                name = f"/Im{len(img_entries)}".encode()
-                img_entries.append((name, len(objs)))
-                content += (
-                    b"q %d 0 0 %d %s %s cm %s Do Q\n"
-                    % (w, h, _fnum(x), _fnum(y), name)
-                )
+                name = use(b"XObject", b"Im",
+                           _image(zlib.compress(img.tobytes()), w, h))
+                content += (b"q %d 0 0 %d %s %s cm %s Do Q\n"
+                            % (w, h, _fnum(x), _fnum(y), name))
             elif tag in ("text", "hidden"):
                 _t, s, x, y, size = el
-                mode = b"3 Tr " if tag == "hidden" else b"0 Tr "
                 content += (
-                    b"BT /F1 %s Tf " % _fnum(size) + mode
-                    + b"%s %s Td " % (_fnum(x), _fnum(y))
-                    + b"(" + _pdf_escape(s) + b") Tj ET\n"
+                    b"BT /F1 %s Tf %d Tr %s %s Td %s Tj ET\n"
+                    % (_fnum(size), 3 if tag == "hidden" else 0,
+                       _fnum(x), _fnum(y), _pdf_string(s))
                 )
             elif tag == "rect":
                 _t, x, y, w, h, gray = el
@@ -3206,19 +3065,13 @@ def make_composite_pdf_bytes(
                 #  bbox4_or_None): a /Subtype /Form XObject invoked
                 # with a bare Do — the logo/header reuse shape
                 _t, inner, matrix, bbox = el
-                head = b"<< /Type /XObject /Subtype /Form"
-                if matrix is not None:
-                    head += (b" /Matrix [" + b" ".join(
-                        _fnum(v) for v in matrix) + b"]")
-                if bbox is not None:
-                    head += (b" /BBox [" + b" ".join(
-                        _fnum(v) for v in bbox) + b"]")
-                head += (b" /Length " + str(len(inner)).encode()
-                         + b" >>\nstream\n" + inner + b"\nendstream")
-                objs.append(head)
-                name = f"/Im{len(img_entries)}".encode()
-                img_entries.append((name, len(objs)))
-                content += b"%s Do\n" % name
+                head = b"/Type /XObject /Subtype /Form"
+                for key, vals in ((b"Matrix", matrix), (b"BBox", bbox)):
+                    if vals is not None:
+                        head += b" /%s [%s]" % (
+                            key, b" ".join(_fnum(v) for v in vals))
+                content += b"%s Do\n" % use(
+                    b"XObject", b"Im", _stream(inner, head + b" "))
             elif tag == "stencil":
                 # ("stencil", bool_hw_array, x, y, invert): an
                 # /ImageMask true XObject painted at native size —
@@ -3230,164 +3083,70 @@ def make_composite_pdf_bytes(
                     (~mask if not invert else mask).astype(np.uint8),
                     axis=1,
                 )
-                payload = _z.compress(bits.tobytes())
-                head = (
-                    b"<< /Subtype /Image /ImageMask true /Width "
-                    + str(w).encode() + b" /Height " + str(h).encode()
-                    + b" /BitsPerComponent 1"
-                    + (b" /Decode [1 0]" if invert else b"")
-                    + b" /Filter /FlateDecode /Length "
-                    + str(len(payload)).encode()
-                    + b" >>\nstream\n" + payload + b"\nendstream"
-                )
-                objs.append(head)
-                name = f"/Im{len(img_entries)}".encode()
-                img_entries.append((name, len(objs)))
-                content += (
-                    b"q %d 0 0 %d %s %s cm %s Do Q\n"
-                    % (w, h, _fnum(x), _fnum(y), name)
-                )
+                name = use(b"XObject", b"Im", _stream(
+                    zlib.compress(bits.tobytes()),
+                    b"/Subtype /Image /ImageMask true /Width %d /Height %d"
+                    b" /BitsPerComponent 1%s /Filter /FlateDecode "
+                    % (w, h, b" /Decode [1 0]" if invert else b""),
+                ))
+                content += (b"q %d 0 0 %d %s %s cm %s Do Q\n"
+                            % (w, h, _fnum(x), _fnum(y), name))
             elif tag == "extg":
                 # ("extg", dict_body_bytes): an /ExtGState resource
                 # applied with gs
-                _t, body_b = el
-                objs.append(body_b)
-                name = b"/G%d" % len(gs_entries)
-                gs_entries.append((name, len(objs)))
-                content += b"%s gs\n" % name
+                content += b"%s gs\n" % use(b"ExtGState", b"G", el[1])
             elif tag == "axial":
                 # ("axial", x0, y0, x1, y1, g0, g1, extend): a
                 # /ShadingType 2 gradient painted with sh over the
                 # current clip
                 _t, x0, y0, x1, y1, g0, g1, ext = el
-                ext_s = b"true true" if ext else b"false false"
-                objs.append(
-                    b"<< /ShadingType 2 /ColorSpace /DeviceGray"
-                    b" /Coords [" + b" ".join(
-                        _fnum(v) for v in (x0, y0, x1, y1))
-                    + b"] /Extend [" + ext_s + b"]"
-                    b" /Function << /FunctionType 2 /Domain [0 1]"
-                    b" /C0 [" + _fnum(g0) + b"] /C1 [" + _fnum(g1)
-                    + b"] /N 1 >> >>"
-                )
-                name = b"/Sh%d" % len(sh_entries)
-                sh_entries.append((name, len(objs)))
-                content += b"%s sh\n" % name
+                content += b"%s sh\n" % use(b"Shading", b"Sh", shading(
+                    2, (x0, y0, x1, y1), ext, ramp(g0, g1)))
             elif tag == "radial":
                 # ("radial", x0, y0, r0, x1, y1, r1, g0, g1, extend):
                 # a /ShadingType 3 circle blend painted with sh
                 _t, x0, y0, r0, x1, y1, r1, g0, g1, ext = el
-                ext_s = b"true true" if ext else b"false false"
-                objs.append(
-                    b"<< /ShadingType 3 /ColorSpace /DeviceGray"
-                    b" /Coords [" + b" ".join(
-                        _fnum(v) for v in (x0, y0, r0, x1, y1, r1))
-                    + b"] /Extend [" + ext_s + b"]"
-                    b" /Function << /FunctionType 2 /Domain [0 1]"
-                    b" /C0 [" + _fnum(g0) + b"] /C1 [" + _fnum(g1)
-                    + b"] /N 1 >> >>"
-                )
-                name = b"/Sh%d" % len(sh_entries)
-                sh_entries.append((name, len(objs)))
-                content += b"%s sh\n" % name
+                content += b"%s sh\n" % use(b"Shading", b"Sh", shading(
+                    3, (x0, y0, r0, x1, y1, r1), ext, ramp(g0, g1)))
             elif tag == "shstitch":
                 # ("shstitch", x0, y0, x1, y1): an axial gradient
                 # under a /FunctionType 3 STITCHING function — a V
                 # ramp (1 -> 0 on [0, .5], 0 -> 1 on [.5, 1]) from
                 # two exponential subfunctions
-                _t, x0, y0, x1, y1 = el
-                objs.append(
-                    b"<< /ShadingType 2 /ColorSpace /DeviceGray"
-                    b" /Coords [" + b" ".join(
-                        _fnum(v) for v in (x0, y0, x1, y1))
-                    + b"] /Extend [true true]"
-                    b" /Function << /FunctionType 3 /Domain [0 1]"
-                    b" /Functions ["
-                    b" << /FunctionType 2 /Domain [0 1] /C0 [1]"
-                    b" /C1 [0] /N 1 >>"
-                    b" << /FunctionType 2 /Domain [0 1] /C0 [0]"
-                    b" /C1 [1] /N 1 >> ]"
-                    b" /Bounds [0.5] /Encode [0 1 0 1] >> >>"
-                )
-                name = b"/Sh%d" % len(sh_entries)
-                sh_entries.append((name, len(objs)))
-                content += b"%s sh\n" % name
+                content += b"%s sh\n" % use(b"Shading", b"Sh", shading(
+                    2, el[1:5], True,
+                    b"<< /FunctionType 3 /Domain [0 1] /Functions [ "
+                    + ramp(1, 0) + b" " + ramp(0, 1)
+                    + b" ] /Bounds [0.5] /Encode [0 1 0 1] >>"))
             elif tag == "shsampled":
                 # ("shsampled", x0, y0, x1, y1, samples): an axial
                 # gradient under an indirect /FunctionType 0 SAMPLED
                 # stream (8-bit, /Domain [0 1] /Range [0 1], linear
                 # interpolation between table entries)
-                _t, x0, y0, x1, y1, samples = el
-                tab = bytes(samples)
-                objs.append(
-                    b"<< /FunctionType 0 /Domain [0 1] /Range [0 1]"
-                    b" /Size [" + str(len(tab)).encode() + b"]"
-                    b" /BitsPerSample 8 /Length "
-                    + str(len(tab)).encode()
-                    + b" >>\nstream\n" + tab + b"\nendstream"
-                )
-                fn_num = len(objs)
-                objs.append(
-                    b"<< /ShadingType 2 /ColorSpace /DeviceGray"
-                    b" /Coords [" + b" ".join(
-                        _fnum(v) for v in (x0, y0, x1, y1))
-                    + b"] /Extend [true true]"
-                    b" /Function " + str(fn_num).encode() + b" 0 R >>"
-                )
-                name = b"/Sh%d" % len(sh_entries)
-                sh_entries.append((name, len(objs)))
-                content += b"%s sh\n" % name
+                tab = bytes(el[5])
+                objs.append(_stream(
+                    tab, b"/FunctionType 0 /Domain [0 1] /Range [0 1]"
+                    b" /Size [%d] /BitsPerSample 8 " % len(tab)))
+                content += b"%s sh\n" % use(b"Shading", b"Sh", shading(
+                    2, el[1:5], True, b"%d 0 R" % len(objs)))
             elif tag == "raw":
                 content += el[1] + b"\n"
             else:  # pragma: no cover - writer misuse
                 raise ValueError(f"unknown element {tag}")
-        objs.append(
-            b"<< /Length " + str(len(content)).encode()
-            + b" >>\nstream\n" + bytes(content) + b"\nendstream"
-        )
-        cnum = len(objs)
-        xdict = b" ".join(
-            b"%s %d 0 R" % (nm, num) for nm, num in img_entries
-        )
-        shdict = b" ".join(
-            b"%s %d 0 R" % (nm, num) for nm, num in sh_entries
-        )
-        res = b" /Resources << /XObject << " + xdict + b" >>"
-        if sh_entries:
-            res += b" /Shading << " + shdict + b" >>"
-        if gs_entries:
-            res += b" /ExtGState << " + b" ".join(
-                b"%s %d 0 R" % (nm, num) for nm, num in gs_entries
-            ) + b" >>"
-        res += b" >>"
+        objs.append(_stream(bytes(content)))
+        resources = b" /XObject << " + b" ".join(res[b"XObject"]) + b" >>"
+        for category in (b"Shading", b"ExtGState"):
+            if res[category]:
+                resources += b" /%s << %s >>" % (
+                    category, b" ".join(res[category]))
         objs.append(
             b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]"
-            + res
-            + b" /Contents " + str(cnum).encode() + b" 0 R >>"
+            b" /Resources <<%s >> /Contents %d 0 R >>"
+            % (resources, len(objs))
         )
         kids.append(len(objs))
-    objs[0] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objs[1] = (
-        b"<< /Type /Pages /Kids ["
-        + b" ".join(b"%d 0 R" % k for k in kids)
-        + b"] /Count " + str(len(kids)).encode() + b" >>"
-    )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_at).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)
+    objs[:2] = _page_tree(kids)
+    return classic_pdf_bytes(objs)
 
 
 def _fnum(v: float) -> bytes:
@@ -3417,8 +3176,8 @@ def comp_pdf_item(cfg: CorpusConfig, j: int) -> tuple[str, bytes, str, str]:
     if j % 11 == 10:
         return comp_pdf_ref(j), b"\x89not-a-pdf\x00" * 4, "garbage", ""
     if j % 9 == 8:
-        raw = (b"BT /F1 20 Tf 0.7 0.7 -0.7 0.7 100 400 Tm ("
-               + _pdf_escape(line_a) + b") Tj ET")
+        raw = (b"BT /F1 20 Tf 0.7 0.7 -0.7 0.7 100 400 Tm "
+               + _pdf_string(line_a) + b" Tj ET")
         data = make_composite_pdf_bytes([[("raw", raw)]])
         return comp_pdf_ref(j), data, "rotated", ""
     img = render_text(line_a, scale=2)

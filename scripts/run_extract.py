@@ -29,6 +29,7 @@ of reading tables (benchmark / smoke mode).
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -42,6 +43,36 @@ from mcp_ocr_server_spark.plans.checkpoint import (  # noqa: E402
 )
 from mcp_ocr_server_spark.session import get_spark  # noqa: E402
 from mcp_ocr_server_spark.sources import synthetic as S  # noqa: E402
+
+
+def _corpus_current(in_dir: str, tables: tuple, out: str,
+                    identity: dict) -> bool:
+    """True when `in_dir` holds the materialized corpus `identity`
+    (n_docs, pdf_frac, buckets — each changes the docs or their bucket
+    partitioning): its CORPUS marker, written after every table,
+    matches and every table has its _SUCCESS file.  False asks for
+    rematerialization, unless the checkpoint store already committed
+    buckets: resuming would then mix two corpora in one output, so a
+    mismatch refuses.  An absent or corrupt marker is a mismatch."""
+    try:
+        with open(os.path.join(in_dir, "CORPUS")) as fh:
+            stored = json.load(fh)
+    except (OSError, ValueError):
+        stored = None
+    if stored == identity:
+        return all(
+            os.path.exists(os.path.join(in_dir, t, "_SUCCESS"))
+            for t in tables
+        )
+    if CheckpointStore(out).committed_buckets():
+        raise SystemExit(
+            f"the requested corpus {identity} does not match the "
+            f"materialized one ({stored or 'unrecorded'}) and the "
+            "checkpoint store already has committed buckets; resuming "
+            "would mix two corpora — rerun with the original "
+            "--synthetic-docs / --pdf-frac / --buckets or use a fresh --out"
+        )
+    return False
 
 
 def main() -> None:
@@ -85,10 +116,7 @@ def main() -> None:
         # materialize the synthetic corpus to parquet once — the bucket
         # loop scans each table several times per bucket, which is cheap
         # against columnar storage but would re-render every image if
-        # read straight from the generator.  Both tables must be
-        # complete before reuse: a crash between the two writes would
-        # otherwise leave a half-materialized input dir that resume runs
-        # never repair, so gate on BOTH _SUCCESS markers.
+        # read straight from the generator
         corpus = S.CorpusConfig(
             n_docs=args.synthetic_docs, p_pdf=args.pdf_frac
         )
@@ -96,61 +124,14 @@ def main() -> None:
         tables = ("docs", "media") + (
             ("pdfs",) if args.pdf_frac > 0 else ()
         )
-        bmarker = os.path.join(in_dir, "BUCKETS")
-        complete = all(
-            os.path.exists(os.path.join(in_dir, t, "_SUCCESS"))
-            for t in tables
-        )
-        # --pdf-frac is part of the corpus identity: p_pdf changes every
-        # doc's rng draws, so resuming a store built under a different
-        # value would mix two corpora in one output (committed buckets
-        # from the old corpus, new buckets from the rematerialized one).
-        # The marker records it; a mismatch over a store that already
-        # has commits must refuse, not silently rematerialize.
-        fmarker = os.path.join(in_dir, "PDF_FRAC")
-        if os.path.exists(fmarker):
-            try:
-                with open(fmarker) as fh:
-                    prev_frac = float(fh.read().strip())
-            except (ValueError, OSError):
-                prev_frac = None
-                complete = False
-            if prev_frac is not None and prev_frac != args.pdf_frac:
-                if CheckpointStore(args.out).committed_buckets():
-                    raise SystemExit(
-                        f"--pdf-frac {args.pdf_frac} does not match the "
-                        f"materialized corpus (PDF_FRAC={prev_frac}) and "
-                        "the checkpoint store already has committed "
-                        "buckets; resuming would mix two corpora — rerun "
-                        "with the original --pdf-frac or use a fresh --out"
-                    )
-                complete = False
-        elif complete and args.pdf_frac != 0.0:
-            # legacy input dir (pre-PDF_FRAC marker) == a frac-0 corpus;
-            # a frac>0 run may not silently rematerialize over a store
-            # that already committed buckets from it
-            if CheckpointStore(args.out).committed_buckets():
-                raise SystemExit(
-                    f"--pdf-frac {args.pdf_frac} requested but the "
-                    "materialized corpus predates pdf support (frac 0) "
-                    "and the checkpoint store already has committed "
-                    "buckets — use a fresh --out"
-                )
-            complete = False
-        # the docs partitioning bakes in the bucket count; a resume with
-        # a different bucket count must rematerialize, not misroute.
-        # Corrupt/empty marker (crash mid-write) => treat as incomplete.
-        if complete and os.path.exists(bmarker):
-            try:
-                with open(bmarker) as fh:
-                    complete = int(fh.read().strip()) == n_buckets
-            except (ValueError, OSError):
-                complete = False
-        elif complete:
-            complete = False
-        if not complete:
+        identity = {"n_docs": args.synthetic_docs,
+                    "pdf_frac": args.pdf_frac, "buckets": n_buckets}
+        if not _corpus_current(in_dir, tables, args.out, identity):
             from mcp_ocr_server_spark.plans.checkpoint import bucket_col
 
+            marker = os.path.join(in_dir, "CORPUS")
+            if os.path.exists(marker):
+                os.remove(marker)  # a crash mid-rewrite leaves none
             # partitionBy the checkpoint bucket key: the bucket loop's
             # per-bucket filter then PRUNES to 1/B of the files instead
             # of scanning the corpus B times (Iceberg bucket transform
@@ -167,14 +148,10 @@ def main() -> None:
                 S.pdf_df(spark, corpus).write.mode("overwrite").parquet(
                     os.path.join(in_dir, "pdfs")
                 )
-            tmp = bmarker + ".tmp"
+            tmp = marker + ".tmp"
             with open(tmp, "w") as fh:
-                fh.write(str(n_buckets))
-            os.replace(tmp, bmarker)  # atomic: no empty/partial marker
-            tmp = fmarker + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(str(args.pdf_frac))
-            os.replace(tmp, fmarker)
+                json.dump(identity, fh)
+            os.replace(tmp, marker)  # atomic: no empty/partial marker
         docs = spark.read.parquet(os.path.join(in_dir, "docs"))
         media = spark.read.parquet(os.path.join(in_dir, "media"))
         pdfs = (

@@ -396,6 +396,24 @@ def test_decode_image_jpeg_point_mutations(progressive):
         _contract(bytes(mutated))
 
 
+@pytest.mark.parametrize("restart_interval", [0, 1, 5, 100])
+def test_jpeg_frame_taller_than_its_scan_refuses(restart_interval):
+    # the SOF height high byte set to 176 claims 45,080 rows over a
+    # scan that codes 24: the decoder must not zero-fill the rest
+    import time
+
+    from mcp_ocr_server_spark.imaging.jpeg import decode_jpeg, encode_jpeg
+
+    blob = bytearray(encode_jpeg(GRAY[:24, :32], 90,
+                                 restart_interval=restart_interval))
+    assert blob[89:91] == b"\xff\xc0" and blob[94:96] == b"\x00\x18"
+    blob[94] = 176
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="scan data ends|restart marker"):
+        decode_jpeg(bytes(blob))
+    assert time.perf_counter() - t0 < 0.5
+
+
 # --- tiled TIFF ----------------------------------------------------------------
 
 

@@ -9,72 +9,9 @@ import zlib
 import pytest
 
 from mcp_ocr_server_spark.functions.pdf import extract_pdf_text, pdf_text
-
-
-def _esc(s: str) -> bytes:
-    return (
-        s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    ).encode("latin-1")
-
-
-def make_pdf(pages: list[list[str]], compress: bool = False) -> bytes:
-    """Minimal but structurally-correct PDF: catalog -> page tree ->
-    per-page content streams (one Tj per line, Td line moves), valid
-    xref + trailer.  Deterministic for identical input."""
-    objs: list[bytes] = []  # bodies; object number = index + 1
-    n_pages = len(pages)
-    page_nums = [4 + 2 * i for i in range(n_pages)]
-    kids = " ".join(f"{n} 0 R" for n in page_nums).encode()
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")  # 1
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count "
-        + str(n_pages).encode() + b" >>"
-    )  # 2
-    objs.append(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    )  # 3
-    for i, lines in enumerate(pages):
-        pnum, cnum = page_nums[i], page_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents "
-            + str(cnum).encode() + b" 0 R >>"
-        )
-        parts = [b"BT /F1 12 Tf 72 720 Td"]
-        for j, line in enumerate(lines):
-            if j:
-                parts.append(b"0 -14 Td")
-            parts.append(b"(" + _esc(line) + b") Tj")
-        parts.append(b"ET")
-        content = b" ".join(parts)
-        if compress:
-            comp = zlib.compress(content)
-            objs.append(
-                b"<< /Length " + str(len(comp)).encode()
-                + b" /Filter /FlateDecode >>\nstream\n" + comp
-                + b"\nendstream"
-            )
-        else:
-            objs.append(
-                b"<< /Length " + str(len(content)).encode()
-                + b" >>\nstream\n" + content + b"\nendstream"
-            )
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs):
-        offsets.append(len(out))
-        out += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_at).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)
+from mcp_ocr_server_spark.sources.synthetic import (
+    encrypt_pdf_bytes, make_pdf_bytes,
+)
 
 
 PAGES = [
@@ -84,7 +21,7 @@ PAGES = [
 
 
 def test_roundtrip_uncompressed():
-    assert extract_pdf_text(make_pdf(PAGES)) == [
+    assert extract_pdf_text(make_pdf_bytes(PAGES)) == [
         "\n".join(p) for p in PAGES
     ]
 
@@ -92,7 +29,7 @@ def test_roundtrip_uncompressed():
 def test_roundtrip_flate():
     """zlib IS the FlateDecode codec: compressed streams decode for
     real, byte-identical text to the uncompressed variant."""
-    assert extract_pdf_text(make_pdf(PAGES, compress=True)) == [
+    assert extract_pdf_text(make_pdf_bytes(PAGES, compress=True)) == [
         "\n".join(p) for p in PAGES
     ]
 
@@ -105,7 +42,7 @@ def test_octal_hex_and_tj_array():
         b"0 -14 Td <48656C6C6F> Tj "
         b"0 -14 Td [(wor) -80 (d) -300 (gap)] TJ ET"
     )
-    body = make_pdf([["x"]])
+    body = make_pdf_bytes([["x"]])
     start = body.index(b"stream\n") + 7
     end = body.index(b"\nendstream")
     patched = body.replace(body[start:end], content, 1)
@@ -116,7 +53,7 @@ def test_octal_hex_and_tj_array():
 def test_non_pdf_and_encrypted_raise():
     with pytest.raises(ValueError, match="not a PDF"):
         extract_pdf_text(b"plain text, no header")
-    enc = make_pdf(PAGES).replace(
+    enc = make_pdf_bytes(PAGES).replace(
         b"/Root 1 0 R", b"/Root 1 0 R /Encrypt 9 0 R"
     )
     with pytest.raises(ValueError, match="encrypted"):
@@ -126,7 +63,7 @@ def test_non_pdf_and_encrypted_raise():
 def test_page_tree_order_not_object_order():
     """Pages come back in /Kids order even when object numbers would
     sort differently."""
-    pdf = make_pdf(PAGES)
+    pdf = make_pdf_bytes(PAGES)
     kids_fwd = b"/Kids [4 0 R 6 0 R]"
     kids_rev = b"/Kids [6 0 R 4 0 R]"
     assert kids_fwd in pdf
@@ -138,7 +75,7 @@ def test_page_tree_order_not_object_order():
 
 def test_spark_stage_error_isolation(spark):
     rows = [
-        ("doc-ok", bytearray(make_pdf(PAGES, compress=True))),
+        ("doc-ok", bytearray(make_pdf_bytes(PAGES, compress=True))),
         ("doc-bad", bytearray(b"not a pdf at all")),
     ]
     df = spark.createDataFrame(rows, "media_ref string, bytes binary")
@@ -152,7 +89,7 @@ def test_spark_stage_error_isolation(spark):
 
 def _patch_content(content: bytes) -> bytes:
     """Writer page with its content stream replaced by raw operators."""
-    body = make_pdf([["x"]])
+    body = make_pdf_bytes([["x"]])
     start = body.index(b"stream\n") + 7
     end = body.index(b"\nendstream")
     return body.replace(body[start:end], content, 1)
@@ -199,7 +136,7 @@ def test_unsupported_filter_errors_not_garbage():
     row), never feed raw compressed bytes to the interpreter as
     'text' (review finding).  JPX/JBIG2/CCITT/Crypt are the refusal
     set now that Flate/LZW/A85/AHx/RL chains decode for real."""
-    pdf = make_pdf(PAGES, compress=True)
+    pdf = make_pdf_bytes(PAGES, compress=True)
     for name in (b"/JPXDecode", b"/JBIG2Decode", b"/CCITTFaxDecode",
                  b"/Crypt"):
         bad = pdf.replace(b"/Filter /FlateDecode", b"/Filter " + name)
@@ -222,7 +159,6 @@ def _reader_filters():
 def test_filtered_content_streams_roundtrip(mode, kinds):
     """The writer's alternate filter pipelines (LZW, the A85+Flate
     chain, RunLength) extract the same text as the Flate twin."""
-    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
 
     pdf = make_pdf_bytes(PAGES, stream_filter=mode)
     for k in kinds:
@@ -369,10 +305,10 @@ def test_incremental_update_takes_latest_object():
     offset, its own xref + /Prev trailer) must win: the sequential
     scan's last-overwrites-first is exactly §7.5.6 update
     semantics."""
-    base = make_pdf([["original words"]])
+    base = make_pdf_bytes([["original words"]])
     assert extract_pdf_text(base) == ["original words"]
     new_content = b"BT /F1 12 Tf 72 720 Td (updated words) Tj ET"
-    # the content stream of page 1 is object 5 in make_pdf's skeleton
+    # the content stream of page 1 is object 5 in make_pdf_bytes' skeleton
     obj_at = len(base)
     update = (
         b"5 0 obj\n<< /Length " + str(len(new_content)).encode()
@@ -396,7 +332,6 @@ def test_incremental_update_new_catalog_takes_last_trailer_root():
     /Root at it replaces the page tree; the first /Root in the file
     (the original trailer's) must not win."""
     from mcp_ocr_server_spark.functions.pdf import extract_pdf_info
-    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
 
     base = make_pdf_bytes([["one"], ["two"]])
     assert extract_pdf_text(base) == ["one", "two"]
@@ -568,7 +503,6 @@ def test_pdf_info_metadata():
     error-row contract."""
     from mcp_ocr_server_spark.functions.pdf import (
         extract_pdf_info, pdf_info_rows)
-    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
 
     pdf = make_pdf_bytes([["body"], ["p2"]], info=dict(
         title="Ünïcode Tïtle", author="A. Writer",
@@ -597,7 +531,6 @@ def test_pdf_info_from_trailer_not_content():
     shows "/Info 6 0 R" must not pull in object 6 as the document's
     metadata once the trailer carries no /Info."""
     from mcp_ocr_server_spark.functions.pdf import extract_pdf_info
-    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
 
     # objects: 1 catalog, 2 pages, 3 font, 4 page, 5 content, 6 /Info
     pdf = make_pdf_bytes([["see /Info 6 0 R"]], info=dict(title="Smuggled"))
@@ -614,7 +547,6 @@ def test_pdf_info_xmp_fallback():
     /Info winning where both exist), with XML entities unescaped and
     the xpacket date normalized."""
     from mcp_ocr_server_spark.functions.pdf import extract_pdf_info
-    from mcp_ocr_server_spark.sources.synthetic import make_pdf_bytes
 
     xonly = make_pdf_bytes([["b"]], xmp=dict(
         title="XMP & Títle", author="Creator X", subject="Sub",
@@ -633,7 +565,7 @@ def test_lzw_mislabel_still_errors():
     """zlib bytes labeled /LZWDecode must raise (invalid code stream),
     not silently decode to garbage — the corpus's historical lzw
     error-class contract, now enforced by the decoder itself."""
-    pdf = make_pdf(PAGES, compress=True)
+    pdf = make_pdf_bytes(PAGES, compress=True)
     mislabeled = pdf.replace(b"/Filter /FlateDecode",
                              b"/Filter /LZWDecode")
     with pytest.raises(ValueError):
@@ -662,7 +594,7 @@ def test_roundtrip_property():
         compress=st.booleans(),
     )
     def run(pages, compress):
-        assert extract_pdf_text(make_pdf(pages, compress)) == [
+        assert extract_pdf_text(make_pdf_bytes(pages, compress)) == [
             "\n".join(p) for p in pages
         ]
 
@@ -680,7 +612,7 @@ def test_payload_containing_endstream_bytes():
     )
     comp = zlib.compress(content, 0)  # stored blocks: markers verbatim
     assert b"endstream" in comp and b"endobj" in comp
-    body = make_pdf([["x"]], compress=True)
+    body = make_pdf_bytes([["x"]], compress=True)
     start = body.index(b"stream\n") + 7
     end = body.index(b"\nendstream")
     old_len = f"/Length {end - start}".encode()
@@ -695,7 +627,7 @@ def test_indirect_length_falls_back_to_marker_scan():
     """'/Length N 0 R' (indirect) cannot be sliced directly — the
     scanner must fall back to the endstream marker, not treat the
     object NUMBER as a byte count."""
-    pdf = make_pdf(PAGES)
+    pdf = make_pdf_bytes(PAGES)
     assert b"/Length " in pdf
     patched = re.sub(rb"/Length \d+", b"/Length 99 0 R", pdf)
     assert extract_pdf_text(patched) == ["\n".join(p) for p in PAGES]
@@ -733,7 +665,7 @@ def test_pdf15_encrypted_and_corrupt_objstm_refused():
         b"/Type /ObjStm /N",
         b"/Type /ObjStm /DecodeParms << >> /N")) \
         == ["\n".join(p) for p in PAGES]
-    headless = make_pdf(PAGES).replace(b"trailer", b"trailex")
+    headless = make_pdf_bytes(PAGES).replace(b"trailer", b"trailex")
     with pytest.raises(ValueError, match="no trailer keyword"):
         extract_pdf_text(headless)
 
@@ -861,9 +793,8 @@ def test_rc4_known_answer_vector():
     (6, 256),            # AES-256 (V5 /R6 /AESV3)
 ])
 def test_empty_user_password_decrypts(r, length):
-    from mcp_ocr_server_spark.functions.pdfcrypt import encrypt_pdf_bytes
     pages = [["owner locked body", "line two"], ["page two"]]
-    plain = make_pdf(pages, compress=True)
+    plain = make_pdf_bytes(pages, compress=True)
     want = extract_pdf_text(plain)
     enc = encrypt_pdf_bytes(plain, owner_pw=b"ownersecret",
                             r=r, length=length)
@@ -873,8 +804,7 @@ def test_empty_user_password_decrypts(r, length):
 
 @pytest.mark.parametrize("r", [3, 4, 6])
 def test_real_user_password_refuses(r):
-    from mcp_ocr_server_spark.functions.pdfcrypt import encrypt_pdf_bytes
-    enc = encrypt_pdf_bytes(make_pdf([["x"]]), user_pw=b"hunter2",
+    enc = encrypt_pdf_bytes(make_pdf_bytes([["x"]]), user_pw=b"hunter2",
                             owner_pw=b"o", r=r, length=128)
     with pytest.raises(ValueError, match="password required"):
         extract_pdf_text(enc)
@@ -907,15 +837,14 @@ def test_v5_r5_interim_revision_decrypts():
 
 
 def test_unknown_crypt_filter_refuses_by_name():
-    from mcp_ocr_server_spark.functions.pdfcrypt import encrypt_pdf_bytes
-    enc = encrypt_pdf_bytes(make_pdf([["x"]]))
+    enc = encrypt_pdf_bytes(make_pdf_bytes([["x"]]))
     # a V4 layout with no /CF dict at all: the CFM is unknowable
     broken = enc.replace(b"/Filter /Standard /V 1 /R 2",
                          b"/Filter /Standard /V 4 /R 4")
     with pytest.raises(ValueError, match="crypt filter"):
         extract_pdf_text(broken)
     # an explicitly foreign CFM refuses with its name
-    aes_enc = encrypt_pdf_bytes(make_pdf([["x"]]), r=4)
+    aes_enc = encrypt_pdf_bytes(make_pdf_bytes([["x"]]), r=4)
     with pytest.raises(ValueError, match="AESV1"):
         extract_pdf_text(aes_enc.replace(b"/CFM /AESV2", b"/CFM /AESV1"))
 
@@ -923,8 +852,7 @@ def test_unknown_crypt_filter_refuses_by_name():
 def test_v5_perms_sentinel_guards_the_file_key():
     """A corrupted /Perms must refuse rather than silently emitting
     noise streams under a wrong key."""
-    from mcp_ocr_server_spark.functions.pdfcrypt import encrypt_pdf_bytes
-    enc = encrypt_pdf_bytes(make_pdf([["x"]]), owner_pw=b"o", r=6)
+    enc = encrypt_pdf_bytes(make_pdf_bytes([["x"]]), owner_pw=b"o", r=6)
     m = re.search(rb"/Perms <([0-9a-f]{32})>", enc)
     assert m is not None
     flipped = bytearray(bytes.fromhex(m.group(1).decode()))
@@ -1010,7 +938,7 @@ def test_hash_2b_known_answers(pw, salt, udata, expected):
 
 
 def test_dangling_encrypt_ref_still_refuses():
-    data = make_pdf([["x"]])
+    data = make_pdf_bytes([["x"]])
     data = data.replace(b"/Root 1 0 R", b"/Root 1 0 R /Encrypt 99 0 R")
     with pytest.raises(ValueError, match="decryption unsupported"):
         extract_pdf_text(data)
@@ -1025,7 +953,6 @@ def test_decryption_reaches_every_extractor_surface(r):
     from mcp_ocr_server_spark.functions.pdf import (
         extract_pdf_page_rasters,
     )
-    from mcp_ocr_server_spark.functions.pdfcrypt import encrypt_pdf_bytes
     from mcp_ocr_server_spark.imaging.font import render_text
     from mcp_ocr_server_spark.sources.synthetic import (
         make_scanned_pdf_bytes, make_type0_pdf_bytes)
@@ -1066,7 +993,7 @@ def test_indirect_filter_refuses_not_raw_bytes():
     bytes would pass for decoded content."""
     from mcp_ocr_server_spark.functions.pdf import pdf_text_row
 
-    data = make_pdf(PAGES, compress=True)
+    data = make_pdf_bytes(PAGES, compress=True)
     assert pdf_text_row("ok", data)["error"] is None
     for ref in (b"/Filter 9 0 R", b"/Filter [9 0 R]"):
         row = pdf_text_row("r", data.replace(b"/Filter /FlateDecode", ref))

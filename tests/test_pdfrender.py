@@ -826,6 +826,8 @@ def test_cs_scn_device_equivalent_colorspaces():
     assert out[792 - 110, 120] == 128
     # resource-resolved ICCBased (N=3) through a hand-built skeleton
     def icc_pdf(n_comps: int, ops: bytes) -> bytes:
+        from mcp_ocr_server_spark.sources.synthetic import classic_pdf_bytes
+
         objs = [
             b"<< /Type /Catalog /Pages 2 0 R >>",
             b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
@@ -838,20 +840,7 @@ def test_cs_scn_device_equivalent_colorspaces():
             b"<< /N " + str(n_comps).encode()
             + b" /Length 4 >>\nstream\nICCP\nendstream",
         ]
-        out_b = bytearray(b"%PDF-1.4\n")
-        offsets = []
-        for i, body in enumerate(objs):
-            offsets.append(len(out_b))
-            out_b += f"{i + 1} 0 obj\n".encode() + body + b"\nendobj\n"
-        xref_at = len(out_b)
-        out_b += f"xref\n0 {len(objs) + 1}\n".encode()
-        out_b += b"0000000000 65535 f \n"
-        for off in offsets:
-            out_b += f"{off:010d} 00000 n \n".encode()
-        out_b += (b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-                  + b" /Root 1 0 R >>\nstartxref\n"
-                  + str(xref_at).encode() + b"\n%%EOF\n")
-        return bytes(out_b)
+        return classic_pdf_bytes(objs)
 
     ops = b"/CS0 cs 1 0 0 scn 50 50 100 40 re f"
     (img,) = render_pdf_pages(icc_pdf(3, ops))

@@ -144,3 +144,64 @@ def test_run_query_cli(spark, tmp_path, monkeypatch):
     import pytest as _pytest
     with _pytest.raises(SystemExit, match="unknown queries"):
         run_query.main()
+
+
+class _Frame:
+    """Stands in for the session, its DataFrames and their writers:
+    every attribute and call returns itself, and parquet(path) leaves
+    the `_SUCCESS` file a finished write leaves."""
+
+    def __getattr__(self, name):
+        return self
+
+    def __call__(self, *args, **kwargs):
+        return self
+
+    def parquet(self, path):
+        os.makedirs(path, exist_ok=True)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+        return self
+
+
+def test_synthetic_rerun_with_other_n_docs_rematerializes(tmp_path,
+                                                          monkeypatch):
+    """--synthetic-docs is part of the materialized corpus's identity: a
+    rerun on the same --out with another N rebuilds input/ while no
+    bucket is committed and refuses once one is.  Spark is faked; only
+    the marker logic in main() runs."""
+    import importlib.util
+    import sys
+    import types
+
+    from mcp_ocr_server_spark.plans import checkpoint
+
+    spec = importlib.util.spec_from_file_location(
+        "run_extract_main", os.path.join(REPO, "scripts", "run_extract.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    built = []
+    monkeypatch.setattr(mod, "get_spark", lambda **kw: _Frame())
+    monkeypatch.setattr(mod, "run_checkpointed", lambda *a, **kw:
+                        types.SimpleNamespace(buckets_committed=0,
+                                              buckets_done_before=0,
+                                              spans_written=0))
+    monkeypatch.setattr(checkpoint, "bucket_col", lambda n: None)
+    monkeypatch.setattr(mod.S, "docs_df", lambda spark, corpus:
+                        built.append(corpus.n_docs) or _Frame())
+    monkeypatch.setattr(mod.S, "media_df", lambda spark, corpus: _Frame())
+
+    def run(n_docs):
+        monkeypatch.setattr(sys, "argv", [
+            "run_extract.py", "--out", str(tmp_path),
+            "--synthetic-docs", str(n_docs), "--buckets", "2"])
+        mod.main()
+
+    run(40)
+    run(40)
+    run(80)
+    assert built == [40, 80]
+    checkpoint.CheckpointStore(str(tmp_path)).commit(0, {})
+    with pytest.raises(SystemExit, match="committed buckets"):
+        run(40)
+    run(80)
+    assert built == [40, 80]
