@@ -16,9 +16,14 @@ import tracemalloc
 import numpy as np
 import pytest
 
-from mcp_ocr_server_spark.imaging import hough, kernels
+from mcp_ocr_server_spark.config import FIXTURE_JOB
+from mcp_ocr_server_spark.imaging import analyzer, hough, kernels
 from mcp_ocr_server_spark.imaging.png import decode_png
-from mcp_ocr_server_spark.sources.synthetic import CorpusConfig, media_item
+from mcp_ocr_server_spark.sources.synthetic import (
+    CorpusConfig,
+    media_exists,
+    media_item,
+)
 
 # the images_cold library (perfbench/workloads.py builds the same corpus)
 LIBRARY = CorpusConfig(n_docs=384, n_media=128)
@@ -70,6 +75,57 @@ def test_hough_segments_pinned_on_random_maps(gap):
         for edges, thr in _random_maps()
     ]
     assert _digest(segs) == HOUGH_RANDOM_PINS[gap]
+
+
+# -- K5+K6 deskew --------------------------------------------------------------
+
+def _distinct_library_pages() -> list[int]:
+    """The images_cold work units: media indices below n_media that exist,
+    fit the fixture job's max_image_size and whose bytes no lower index
+    already holds (the OCR stage hash-dedups media)."""
+    seen, pages = set(), []
+    for j in range(LIBRARY.n_media):
+        if not media_exists(LIBRARY, j):
+            continue
+        data = media_item(LIBRARY, j)[1]
+        digest = hashlib.sha256(data).digest()
+        if len(data) <= FIXTURE_JOB.ocr.max_image_size and digest not in seen:
+            seen.add(digest)
+            pages.append(j)
+    return pages
+
+
+@pytest.fixture(scope="module")
+def deskew_inputs() -> list[tuple[int, np.ndarray]]:
+    """Each distinct library page as the OCR stage hands it to deskew:
+    the analyzer's suggested steps before "deskew" (grayscale, then
+    brighten/darken, CLAHE or NL-means as the page needs, then Otsu)."""
+    cfg = FIXTURE_JOB.preprocessing
+    out = []
+    for j in _distinct_library_pages():
+        img = decode_png(media_item(LIBRARY, j)[1])
+        steps = analyzer.analyze(img, cfg).suggested_pipeline
+        for step in steps[: steps.index("deskew")]:
+            img = analyzer.apply_step(img, step, cfg)
+        out.append((j, img))
+    return out
+
+
+def test_deskew_output_pinned_on_library_pages(deskew_inputs):
+    assert len(deskew_inputs) == 108
+    limit = FIXTURE_JOB.preprocessing.deskew_angle_limit
+    outs = [kernels.deskew(img, limit) for _j, img in deskew_inputs]
+    assert _digest(outs) == "e155c17d72a49cbd"
+
+
+def test_hough_skew_angle_pinned_on_library_pages(deskew_inputs):
+    """The reference estimator fires on two pages only: 12.67 deg on
+    j=18 (past the 10 deg limit, so deskew does not rotate it) and
+    9.46 deg on j=102 (rotated)."""
+    angles = [hough.skew_angle_hough(img) for _j, img in deskew_inputs]
+    assert _digest(angles) == "397bd4c9baea0da8"
+    fired = {j: round(a, 2) for (j, _img), a in zip(deskew_inputs, angles) if a}
+    assert fired == {18: 12.67, 102: 9.46}
 
 
 # -- K2 NL-means ---------------------------------------------------------------
