@@ -1,7 +1,9 @@
 """K5 reference-parity skew estimator: Canny -> HoughLinesP -> median.
 
-From-scratch numpy implementation of the reference's live deskew
-estimator chain (internal/preprocessing/analyzer.go:169-232):
+From-scratch implementation of the reference's live deskew estimator
+chain (internal/preprocessing/analyzer.go:169-232), in numpy except
+for the sequential Hough vote-and-walk loop, which runs in C
+(`hough_native`) with this module's numpy body as fallback:
 
   CalculateSkewAngle:
     Canny(img, 50, 150)                           analyzer.go:172-174
@@ -34,6 +36,7 @@ import math
 import numpy as np
 
 from ..deadline import check_deadline
+from . import hough_native
 
 # --------------------------------------------------------------------------
 # Canny edge detector (aperture-3 Sobel, L1 gradient norm — OpenCV's
@@ -157,18 +160,91 @@ def hough_lines_p(
 ) -> list[tuple[int, int, int, int]]:
     """Line segments (x1, y1, x2, y2) from a boolean edge map.
 
+    The progressive loop visits the edge points in scan order.  Each
+    live point votes into one bin per theta; when its best bin (the
+    first maximum) reaches `threshold`, the line through it is walked
+    both ways until more than `max_line_gap` pixels in a row are off,
+    the segment between the walk's ends is consumed (its pixels are
+    cleared and their votes cancelled, whether or not they have voted
+    yet), and it is kept if it spans `min_line_length` pixels.  The
+    loop is sequential: every point's argmax depends on what earlier
+    points voted and consumed.
+
+    It runs in C (`hough_native`), `chunk` points per call, with the
+    cooperative deadline checked between calls.  Where the C loop
+    cannot be built or loaded, `_hough_lines_p_numpy` runs instead; it
+    is also the reference the native loop must match bit for bit."""
+    h, w = edges.shape
+    n_theta = int(round(math.pi / theta_res))
+    thetas = np.arange(n_theta) * theta_res
+    cos_t = np.cos(thetas)
+    sin_t = np.sin(thetas)
+    lib = hough_native.load()
+    if (
+        lib is None
+        # the C loop's bounds argument needs |cos|, |sin| <= 1 and
+        # integer parameters that fit its int64 arguments
+        or n_theta < 1
+        or np.abs(cos_t).max() > 1
+        or np.abs(sin_t).max() > 1
+        or not all(
+            type(v) is int and abs(v) < 2**62
+            for v in (threshold, min_line_length, max_line_gap, max_lines)
+        )
+    ):
+        return _hough_lines_p_numpy(
+            edges, rho_res, theta_res, threshold, min_line_length,
+            max_line_gap, max_lines, chunk, deadline,
+        )
+    max_rho = int(math.ceil((h + w) / rho_res))  # rho in [-max_rho, max_rho]
+    n_rho = 2 * max_rho + 1
+    acc = np.zeros(n_theta * n_rho, dtype=np.int32)
+    mask = np.array(edges, dtype=bool, order="C")
+    ys, xs = np.nonzero(mask)  # row-major: the deterministic scan order
+    xs = xs.astype(np.int64)
+    ys = ys.astype(np.int64)
+    segs = np.empty((chunk, 4), dtype=np.int64)
+    out: list[tuple[int, int, int, int]] = []
+    for i in range(0, xs.size, chunk):
+        check_deadline(deadline, "hough_lines_p")
+        got = lib.hough_ppht(
+            mask.ctypes.data, h, w,
+            xs.ctypes.data + 8 * i, ys.ctypes.data + 8 * i, min(chunk, xs.size - i),
+            cos_t.ctypes.data, sin_t.ctypes.data, n_theta,
+            rho_res, max_rho, n_rho,
+            acc.ctypes.data, threshold, min_line_length, max_line_gap,
+            max(max_lines - len(out), 1), segs.ctypes.data,
+        )
+        out.extend(map(tuple, segs[:got].tolist()))
+        if len(out) >= max_lines:
+            break
+    return out
+
+
+def _hough_lines_p_numpy(
+    edges: np.ndarray,
+    rho_res: float = 1.0,
+    theta_res: float = math.pi / 180.0,
+    threshold: int = 100,
+    min_line_length: int = 0,
+    max_line_gap: int = 0,
+    max_lines: int = 2000,
+    chunk: int = 128,
+    deadline: float | None = None,
+) -> list[tuple[int, int, int, int]]:
+    """`hough_lines_p` in numpy: the fallback where the C loop cannot be
+    built, and the reference the C loop is tested against.
+
     Execution strategy (output is IDENTICAL to the naive per-point
     progressive loop): points are processed in deterministic scan order
     in chunks.  A chunk's votes are applied in one vectorized bincount;
     since progressive per-point counts are bounded above by the
     post-chunk counts (votes within a chunk only accumulate), a chunk
     whose touched bins all stay below the threshold provably contains
-    no trigger point — commit and move on (the common case: ~most text
-    pages trigger on a handful of points).  A chunk that MIGHT trigger
+    no trigger point — commit and move on.  A chunk that MIGHT trigger
     is rolled back and replayed point-by-point with the exact
     sequential semantics (vote, argmax, threshold, walk, consume,
-    cancel votes).  Measured ~5-8x faster on fixture pages with zero
-    output change.
+    cancel votes).
 
     The per-point replay is the floor for numpy, and on text pages it
     is most of the work: saturated text-row bins fire on almost every
@@ -179,14 +255,13 @@ def hough_lines_p(
     index array first, which made the vote ~2x dearer.  A consumed
     segment is rasterised pixel by pixel, then the bins of all the
     pixels it clears come from one block and are cancelled row by row.
-    The 116 edge maps of the benchmark's image library take ~3.2 s in
-    all on one core.  Exact alternatives that measured slower or no
-    better: a vectorised search for each chunk's first trigger (3x
-    slower: it reruns after every trigger), splitting points into ones
-    whose bins can reach the threshold in the chunk and ones whose
-    bins cannot (no gain), 8-point mini-batch replay (no gain), 16-,
-    32- and 64-point chunks (slower), and take/put through a
-    preallocated vote buffer (slower than intp fancy indexing)."""
+    Exact alternatives that measured slower or no better: a vectorised
+    search for each chunk's first trigger (3x slower: it reruns after
+    every trigger), splitting points into ones whose bins can reach
+    the threshold in the chunk and ones whose bins cannot (no gain),
+    8-point mini-batch replay (no gain), 16-, 32- and 64-point chunks
+    (slower), and take/put through a preallocated vote buffer (slower
+    than intp fancy indexing)."""
     h, w = edges.shape
     n_theta = int(round(math.pi / theta_res))
     thetas = np.arange(n_theta) * theta_res
@@ -354,11 +429,11 @@ def skew_angle_hough(gray: np.ndarray, deadline: float | None = None) -> float:
     """Skew estimate in degrees, reference guard semantics literal:
     <10 Hough lines => 0.0; only |angle| < 45 deg lines count; median.
 
-    No separate pre-filter: hough_lines_p's chunked voting already
-    handles below-threshold pages in vectorized bincounts, so a
-    duplicate full-accumulator check would re-implement the same bin
-    arithmetic a second time (a drift hazard for the exactness proof)
-    for no measurable win."""
+    No separate pre-filter for pages that cannot reach the vote
+    threshold: it would re-implement the bin arithmetic a third time
+    (a drift hazard for the exactness proof), and both Hough paths
+    already pass such pages quickly (the C loop votes each point once;
+    the numpy body votes whole chunks in one bincount)."""
     edges = canny(gray, 50.0, 150.0, deadline=deadline)
     lines = hough_lines_p(edges, 1.0, math.pi / 180.0, 100, deadline=deadline)
     if len(lines) < 10:

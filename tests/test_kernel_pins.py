@@ -53,14 +53,27 @@ def _random_maps():
 
 
 # -- K5 Hough ----------------------------------------------------------------
+# Each pin is checked on the live path (the native loop where it builds)
+# and on `_hough_lines_p_numpy`, the reference the native loop must match.
 
-def test_hough_segments_pinned_on_library_pages():
+def _library_segments(impl):
     """Canny maps of the first 48 binarised library pages, with the
     reference's deskew parameters."""
     segs = []
     for j in range(48):
         edges = hough.canny(kernels.binarize_otsu(_library_gray(j)))
-        segs.append(hough.hough_lines_p(edges))
+        segs.append(impl(edges))
+    return segs
+
+
+def test_hough_segments_pinned_on_library_pages():
+    segs = _library_segments(hough.hough_lines_p)
+    assert sum(map(len, segs)) == 17957
+    assert _digest(segs) == "ad1c29472144eea2"
+
+
+def test_numpy_hough_segments_pinned_on_library_pages():
+    segs = _library_segments(hough._hough_lines_p_numpy)
     assert sum(map(len, segs)) == 17957
     assert _digest(segs) == "ad1c29472144eea2"
 
@@ -68,12 +81,22 @@ def test_hough_segments_pinned_on_library_pages():
 HOUGH_RANDOM_PINS = {0: "bb39942431f0364c", 2: "1f06a4fd05cf4fcf"}
 
 
-@pytest.mark.parametrize("gap", list(HOUGH_RANDOM_PINS))
-def test_hough_segments_pinned_on_random_maps(gap):
-    segs = [
-        hough.hough_lines_p(edges, threshold=thr, max_line_gap=gap)
+def _random_segments(impl, gap):
+    return [
+        impl(edges, threshold=thr, max_line_gap=gap)
         for edges, thr in _random_maps()
     ]
+
+
+@pytest.mark.parametrize("gap", list(HOUGH_RANDOM_PINS))
+def test_hough_segments_pinned_on_random_maps(gap):
+    segs = _random_segments(hough.hough_lines_p, gap)
+    assert _digest(segs) == HOUGH_RANDOM_PINS[gap]
+
+
+@pytest.mark.parametrize("gap", list(HOUGH_RANDOM_PINS))
+def test_numpy_hough_segments_pinned_on_random_maps(gap):
+    segs = _random_segments(hough._hough_lines_p_numpy, gap)
     assert _digest(segs) == HOUGH_RANDOM_PINS[gap]
 
 
