@@ -182,11 +182,12 @@ def hough_lines_p(
     lib = hough_native.load()
     if (
         lib is None
-        # the C loop's bounds argument needs float64 |cos|, |sin| <= 1
-        # and parameters that fit its double and int64 arguments
+        # the C loop's bounds argument needs float64 |cos|, |sin| <= 1,
+        # rho_res > 0 and parameters that fit its int64 arguments
         or n_theta < 1
         or cos_t.dtype != np.float64
         or not isinstance(rho_res, (int, float))
+        or not rho_res > 0
         or np.abs(cos_t).max() > 1
         or np.abs(sin_t).max() > 1
         or not all(

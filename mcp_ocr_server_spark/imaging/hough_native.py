@@ -8,11 +8,12 @@ point left, so numpy can only replay it point by point.  `SOURCE` is
 that loop in C, the naive per-point algorithm with no speculation.
 
 The C source lives in this module as a string because the package is
-shipped to Spark's Python workers as a zip of its `*.py` files.  On
-first use `load()` compiles it with the host's `cc` into a per-user
-cache directory and loads it with `ctypes`; a missing compiler, a
-failed build or no safe cache directory make `load()` return None (one
-logged warning per process), and the caller runs its numpy body.
+shipped to Spark's Python workers as a zip of its `*.py` files.
+`load()` loads it with `ctypes` from a per-user cache directory,
+compiling it there with the host's `cc` first if no process has yet; a
+missing compiler, a failed build or no safe cache directory make
+`load()` return None (one logged warning per process), and the caller
+runs its numpy body.
 
 Exactness: the C loop must give the numpy body's segment list bit for
 bit.  It takes cos/sin from numpy (no libm `cos`/`sin`); computes a bin
@@ -190,7 +191,7 @@ def _owned_private(path: str, kind: int) -> bool:
     )
 
 
-def cache_dir() -> str | None:
+def _cache_dir() -> str | None:
     """The first usable private cache directory: `$XDG_CACHE_HOME` or
     `~/.cache`, then the system temp dir (per-user name), each created
     with mode 0700.  None if neither exists or is safe to load from."""
@@ -235,7 +236,7 @@ def load() -> ctypes.CDLL | None:
     """The compiled loop, built on first use; None (and one warning per
     process) when it cannot be built or safely loaded."""
     try:
-        d = cache_dir()
+        d = _cache_dir()
         if d is None:
             raise OSError("no private cache directory")
         path = os.path.join(d, _library_name())

@@ -92,6 +92,23 @@ def test_native_matches_numpy_reference(native):
     assert any(len(s) == 5 and kw.get("max_lines") == 5 for s, (_e, kw) in zip(segs, cases))
 
 
+def test_parameters_outside_the_native_bounds_use_the_numpy_body():
+    """The C loop indexes its accumulator unchecked, so parameters its
+    bounds argument does not cover go to the numpy body.  A negative
+    rho_res below -(h + w) gives max_rho 0 while |rho| rounds to 1, one
+    bin past the last theta's row; the numpy body refuses it."""
+    edges = np.random.default_rng(6).random((40, 50)) < 0.3
+    with pytest.raises(ValueError, match="negative"):
+        hough.hough_lines_p(edges, rho_res=-91.0, threshold=10)
+    for kw in (
+        dict(theta_res=np.longdouble(math.pi / 180)),
+        dict(threshold=np.int64(10)),
+        dict(max_line_gap=2**70),
+    ):
+        kw = {"threshold": 10, **kw}
+        assert hough.hough_lines_p(edges, **kw) == _NUMPY(edges, **kw)
+
+
 @needs_cc
 def test_native_expired_deadline_raises(native):
     edges = np.random.default_rng(3).random((80, 80)) < 0.3
