@@ -1,6 +1,6 @@
 """K5 reference-parity skew estimator: Canny -> HoughLinesP -> median.
 
-From-scratch implementation of the reference's live deskew estimator
+An independent implementation of the reference's live deskew estimator
 chain (internal/preprocessing/analyzer.go:169-232), in numpy except
 for the sequential Hough vote-and-walk loop, which runs in C
 (`hough_native`) with this module's numpy body as fallback:
