@@ -3,7 +3,7 @@
 An independent implementation of the reference's live deskew estimator
 chain (internal/preprocessing/analyzer.go:169-232), in numpy except
 for the sequential Hough vote-and-walk loop, which runs in C
-(`hough_native`) with this module's numpy body as fallback:
+(`native`) with this module's numpy body as fallback:
 
   CalculateSkewAngle:
     Canny(img, 50, 150)                           analyzer.go:172-174
@@ -36,7 +36,7 @@ import math
 import numpy as np
 
 from ..deadline import check_deadline
-from . import hough_native
+from . import native
 
 # --------------------------------------------------------------------------
 # Canny edge detector (aperture-3 Sobel, L1 gradient norm — OpenCV's
@@ -147,6 +147,12 @@ def canny(
 # algorithm behind cv::HoughLinesP — deterministic scan-order variant.
 
 
+def _check_chunk(chunk: int) -> None:
+    # a chunk of 0 never advances the numpy body's loop
+    if not chunk >= 1:
+        raise ValueError(f"hough_lines_p: chunk must be >= 1, got {chunk!r}")
+
+
 def hough_lines_p(
     edges: np.ndarray,
     rho_res: float = 1.0,
@@ -170,16 +176,18 @@ def hough_lines_p(
     loop is sequential: every point's argmax depends on what earlier
     points voted and consumed.
 
-    It runs in C (`hough_native`), `chunk` points per call, with the
+    It runs in C (`native.hough_ppht`), `chunk` points per call, with the
     cooperative deadline checked between calls.  Where the C loop
     cannot be built or loaded, `_hough_lines_p_numpy` runs instead; it
-    is also the reference the native loop must match bit for bit."""
+    is also the reference the native loop must match bit for bit.
+    `chunk` < 1 raises ValueError on either path."""
+    _check_chunk(chunk)
     h, w = edges.shape
     n_theta = int(round(math.pi / theta_res))
     thetas = np.arange(n_theta) * theta_res
     cos_t = np.cos(thetas)
     sin_t = np.sin(thetas)
-    lib = hough_native.load()
+    lib = native.load()
     if (
         lib is None
         # the C loop's bounds argument needs float64 |cos|, |sin| <= 1,
@@ -265,6 +273,7 @@ def _hough_lines_p_numpy(
     8-point mini-batch replay (no gain), 16-, 32- and 64-point chunks
     (slower), and take/put through a preallocated vote buffer (slower
     than intp fancy indexing)."""
+    _check_chunk(chunk)
     h, w = edges.shape
     n_theta = int(round(math.pi / theta_res))
     thetas = np.arange(n_theta) * theta_res

@@ -1,4 +1,5 @@
-"""Per-image raster kernels K1-K9 (SURVEY.md §2.3), numpy-only.
+"""Per-image raster kernels K1-K9 (SURVEY.md §2.3), in numpy; the NL-means
+offset loop runs in C where it builds (`native`).
 
 Semantics mirror the reference's live path
 (internal/preprocessing/preprocessor.go:129-339); implementations are
@@ -13,9 +14,14 @@ reference's `Mat -> Mat` stage contract, and is dispatched by name
 
 from __future__ import annotations
 
+import functools
+import math
+import numbers
+
 import numpy as np
 
 from ..deadline import check_deadline
+from . import native
 
 # --------------------------------------------------------------------------
 # K1 grayscale — preprocessor.go:133-138 (CvtColor BGR2GRAY if channels>1).
@@ -59,15 +65,114 @@ def darken(img: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 # K2 denoise — the live path uses FastNlMeansDenoising with OpenCV
 # defaults h=3, template 7, search 21 (preprocessor.go:140-150);
-# `nl_means_denoise` is a from-scratch numpy implementation of the
-# underlying Buades/Coll/Morel 2005 algorithm with those parameters.
+# `nl_means_denoise` is a from-scratch implementation of the underlying
+# Buades/Coll/Morel 2005 algorithm with those parameters.
 # Known divergence from OpenCV (documented for the parity audit):
-# OpenCV's "fast" variant uses integer LUT-approximated exponentials
-# and a sliding-sum recurrence; we compute exact float weights, so
-# outputs differ at the unit-rounding level but follow the same
-# weighting semantics.  This is the one denoise kernel: the reference's
-# median blur (internal/preprocessing/denoise.go:44-57) is a dead path
-# there and has no counterpart here.
+# OpenCV's "fast" variant uses integer LUT-approximated exponentials;
+# our weights are numpy's float32 exp of the exact integer patch
+# distance, so outputs differ at the unit-rounding level but follow the
+# same weighting semantics.  This is the one denoise kernel: the
+# reference's median blur (internal/preprocessing/denoise.go:44-57) is a
+# dead path there and has no counterpart here.
+
+# The native loop takes templates up to 11: its weight table is built
+# over every possible distance, 121 * 255**2 + 1 < 2**23 of them.
+_NATIVE_MAX_TEMPLATE = 11
+
+
+def _nl_means_scale(h: float, template: int) -> np.float32:
+    return np.float32(-(1.0 / (h * h)) / float(template * template))
+
+
+@functools.lru_cache(maxsize=4)
+def _nl_means_weights(scale: np.float32, template: int) -> np.ndarray:
+    """numpy's float32 weight of every patch distance d in
+    0..template**2 * 255**2, computed as the numpy body computes it,
+    cut after the last nonzero weight, plus one +0.0 for the distances
+    past it.  Built in blocks, so the transient arrays stay small; for
+    h=3 and a 7x7 template it holds 45,852 weights (179 KB)."""
+    n = template * template * 255 * 255 + 1
+    blocks, zeros = [], 0
+    for lo in range(0, n, 2**16):
+        d = np.arange(lo, min(lo + 2**16, n), dtype=np.int32)
+        w = np.exp(np.multiply(d, scale, dtype=np.float32))
+        if w.any():
+            blocks += [np.zeros(zeros, dtype=np.float32), w]
+            zeros = 0
+        else:
+            zeros += w.size
+    table = np.concatenate(blocks)  # d = 0 weighs exp(-0.0) = 1: not empty
+    nonzero = np.flatnonzero(table)
+    return np.append(table[: nonzero[-1] + 1], np.float32(0.0))
+
+
+def _check_nl_means_args(h, template, search) -> None:
+    for name, v in (("template", template), ("search", search)):
+        if isinstance(v, bool) or not (
+            isinstance(v, (int, np.integer)) and v > 0 and v % 2 == 1
+        ):
+            raise ValueError(
+                f"nl_means_denoise: {name} must be an odd positive int, got {v!r}"
+            )
+    if not (isinstance(h, numbers.Real) and math.isfinite(h) and h > 0):
+        raise ValueError(f"nl_means_denoise: h must be finite and > 0, got {h!r}")
+    # an h so small that the float32 scale overflows to -inf would give
+    # the centre weight 0 * -inf = nan and a page of garbage
+    with np.errstate(over="ignore"):
+        scale = _nl_means_scale(h, template)
+    if not np.isfinite(scale):
+        raise ValueError(f"nl_means_denoise: h is too small, got {h!r}")
+
+
+def nl_means_denoise(
+    img: np.ndarray,
+    h: float = 3.0,
+    template: int = 7,
+    search: int = 21,
+    deadline: float | None = None,
+) -> np.ndarray:
+    """Non-local means: each pixel is the weight-averaged value of every
+    pixel in its `search` x `search` window, weighted by the similarity
+    of the `template` x `template` patches around the two pixels.  Run
+    only for images the analyzer flags blurry (sharpness < threshold).
+
+    The offset loop runs in C (`native.nlm_offset_row`), one offset row
+    `dy` per call, with the cooperative deadline checked between calls.
+    Where the C loop cannot be built or loaded, where the input is not
+    uint8 or the template is larger than 11, `_nl_means_denoise_numpy`
+    runs instead; it is also the reference the C loop must match.
+
+    The C loop matches it bit for bit on any host:
+    - a patch distance is an exact integer (a sum of squared 8-bit
+      differences), whatever the order of its additions;
+    - its weight is read from a table of numpy's own
+      `exp(d * scale)` in float32 over every possible distance, cut
+      after the last nonzero weight, so every distance past the table
+      weighs +0.0 in the numpy body too, and adding +0.0 to the
+      non-negative sums changes nothing;
+    - `num += w * p` and `den += w` run in float32, per pixel in the
+      same (dy, dx) order, with no fused multiply-add;
+    - `num / den`, `round` and `clip` stay in numpy."""
+    _check_nl_means_args(h, template, search)
+    gray = _ensure_gray(img)
+    lib = native.load()
+    if lib is None or gray.dtype != np.uint8 or template > _NATIVE_MAX_TEMPLATE:
+        return _nl_means_denoise_numpy(gray, h, template, search, deadline)
+    t, s = template // 2, search // 2
+    H, W = gray.shape
+    padded = np.pad(gray, s + t, mode="reflect")
+    table = _nl_means_weights(_nl_means_scale(h, template), template)
+    col = np.empty(W + template - 1, dtype=np.int32)
+    num = np.zeros((H, W), dtype=np.float32)
+    den = np.zeros((H, W), dtype=np.float32)
+    for dy in range(-s, s + 1):
+        check_deadline(deadline, "nl_means_denoise")
+        lib.nlm_offset_row(
+            padded.ctypes.data, padded.shape[1], H, W, template, s, dy,
+            table.ctypes.data, table.size - 1,
+            col.ctypes.data, num.ctypes.data, den.ctypes.data,
+        )
+    return np.clip(np.round(num / den), 0, 255).astype(np.uint8)
 
 
 def _shift_sum(src: np.ndarray, out: np.ndarray, taps: int, step: int) -> None:
@@ -81,15 +186,15 @@ def _shift_sum(src: np.ndarray, out: np.ndarray, taps: int, step: int) -> None:
         out += src[:, k * step : k * step + n]
 
 
-def nl_means_denoise(
+def _nl_means_denoise_numpy(
     img: np.ndarray,
     h: float = 3.0,
     template: int = 7,
     search: int = 21,
     deadline: float | None = None,
 ) -> np.ndarray:
-    """Non-local means: each pixel is the weight-averaged value of every
-    pixel in its search window, weighted by 7x7 patch similarity.
+    """`nl_means_denoise` in numpy: the fallback where the C loop cannot
+    be built, and the reference the C loop is tested against.
 
     One offset row `dy` at a time, its `dx` offsets in groups: each
     group forms (shifted - centre)^2 over the patch-padded frame, box-
@@ -97,11 +202,7 @@ def nl_means_denoise(
     into float32 weights in one exp.  Then num/den accumulate offset by
     offset in (dy, dx) order, so the float32 sums see the same operands
     in the same order as a plain per-offset loop (the reference in
-    tests/test_kernel_pins.py), and the output matches it bit for bit.
-    Run only for images the analyzer flags blurry (sharpness <
-    threshold).  Single core: the 13 blurry pages of the benchmark's
-    image library take ~1.6 s in all (the per-offset loop ~3.0 s); a
-    1024x1024 page takes ~5 s at a traced peak of ~45 MB."""
+    tests/test_kernel_pins.py), and the output matches it bit for bit."""
     gray = _ensure_gray(img)
     t = template // 2
     s = search // 2
@@ -113,7 +214,7 @@ def nl_means_denoise(
     # float32 is exact too.  Only the weight exponential rounds.
     pi = np.pad(gray, pad, mode="reflect").astype(np.int32)
     pf = pi.astype(np.float32)
-    scale = np.float32(-(1.0 / (h * h)) / float(template * template))
+    scale = _nl_means_scale(h, template)
     ph, pw = H + 2 * t, W + 2 * t  # patch-padded frame around the centres
     centre = pi[s : s + ph, s : s + pw]
     # Offsets per group: all `search` of a row on small pages, fewer on

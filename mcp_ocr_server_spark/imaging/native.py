@@ -1,28 +1,43 @@
-"""Native build of the progressive probabilistic Hough loop (K5).
+"""Native builds of the two sequential preprocess loops (K5 and K2).
 
-`hough.hough_lines_p` spends nearly all of its time in one sequential
-loop: vote a point into every theta bin, take the argmax, and when it
-reaches the threshold walk the line, consume its pixels and cancel
-their votes.  Each step depends on the accumulator state the previous
-point left, so numpy can only replay it point by point.  `SOURCE` is
-that loop in C, the naive per-point algorithm with no speculation.
+Two kernels spend nearly all of their time in loops that numpy can
+only run as many small passes:
+
+- `hough.hough_lines_p`: vote a point into every theta bin, take the
+  argmax, and when it reaches the threshold walk the line, consume its
+  pixels and cancel their votes.  Each step depends on the accumulator
+  state the previous point left, so numpy replays it point by point.
+  `hough_ppht` is that loop in C, the naive per-point algorithm with
+  no speculation.
+- `kernels.nl_means_denoise`: for each offset of the search window,
+  the patch distance of every pixel, its weight and the weighted sums.
+  `nlm_offset_row` runs one offset row `dy` of that loop.
 
 The C source lives in this module as a string because the package is
 shipped to Spark's Python workers as a zip of its `*.py` files.
 `load()` loads it with `ctypes` from a per-user cache directory,
 compiling it there with the host's `cc` first if no process has yet; a
 missing compiler, a failed build or no safe cache directory make
-`load()` return None (one logged warning per process), and the caller
-runs its numpy body.
+`load()` return None (one logged warning per process), and both
+callers run their numpy bodies.
 
-Exactness: the C loop must give the numpy body's segment list bit for
-bit.  It takes cos/sin from numpy (no libm `cos`/`sin`); computes a bin
-as `r = x*c; r += y*s; r /= rho_res; rint(r)`, the order of the numpy
-expression, with `-ffp-contract=off` so nothing fuses into an FMA and
-no `-march`/`-ffast-math`; rounds with `rint` under the default rounding
-mode, which is Python's half-to-even `round`; keeps the first maximum
-in the argmax (strict `>`); and cancels the votes of every pixel a
-consumed segment clears, including pixels that have not voted yet.
+Exactness: each C loop must give its numpy body's output bit for bit.
+The flags keep `-ffp-contract=off`, so nothing fuses into an FMA, and
+no `-march`/`-ffast-math`, so nothing reassociates and the `.so` runs
+on any x86-64.
+
+- Hough: takes cos/sin from numpy (no libm `cos`/`sin`); computes a bin
+  as `r = x*c; r += y*s; r /= rho_res; rint(r)`, the order of the numpy
+  expression; rounds with `rint` under the default rounding mode, which
+  is Python's half-to-even `round`; keeps the first maximum in the
+  argmax (strict `>`); and cancels the votes of every pixel a consumed
+  segment clears, including pixels that have not voted yet.
+- NL-means: patch distances are exact integers, so any summation order
+  gives the numpy body's; weights come from a table the caller builds
+  with numpy's own `exp`, one entry per distance up to the last nonzero
+  one, and every distance past it weighs exactly +0.0 in numpy too;
+  `num += w * p` and `den += w` run in float32 per pixel in the numpy
+  body's (dy, dx) order.
 """
 
 from __future__ import annotations
@@ -40,7 +55,9 @@ import tempfile
 log = logging.getLogger(__name__)
 
 # Bounds (an out-of-range access here kills the Python worker, so every
-# index must be in range by construction):
+# index must be in range by construction).
+#
+# hough_ppht:
 # - bins: the caller passes pixels 0 <= x < w, 0 <= y < h, |cos|, |sin|
 #   <= 1 and max_rho = ceil((h + w) / rho_res) with rho_res > 0.
 #   IEEE rounding is monotone, so |x*c + y*s| <= x + y < h + w and
@@ -56,6 +73,24 @@ log = logging.getLogger(__name__)
 #   n_pts points writes at most min(n_pts, max_out) rows of 4.
 # Votes are int32 like the numpy accumulator; a bin holds at most one
 # vote per pixel of the map, far below 2**31.
+#
+# nlm_offset_row (the caller refuses template and search sizes that are
+# not odd positive ints, and passes uint8 pixels only):
+# - img is the h x w page reflect-padded by pad = s + t on each side
+#   (t = template // 2, s = search // 2), so its rows and columns run
+#   over [0, h + 2*pad) and [0, w + 2*pad), with `stride` = w + 2*pad.
+# - patches: with |dy|, |dx| <= s, a centre patch row is s + y + i and a
+#   shifted one s + dy + y + i for y < h, i < template, so both lie in
+#   [0, 2*s + h + 2*t - 1] = [0, h + 2*pad - 1]; columns likewise with
+#   x < w + template - 1 (col's length).
+# - pixels: pad + dy + y lies in [t, h + 2*s + t - 1], and likewise for
+#   columns.
+# - weights: a distance is a sum of template**2 squares of 8-bit
+#   differences, so 0 <= d <= template**2 * 255**2; the caller takes
+#   templates up to 11, below 2**23, so no int32 sum (a distance plus
+#   one more column while it slides) can wrap.  The index
+#   min(d, n_table) reads table[0..n_table], n_table + 1 entries.
+# - num and den are h x w.
 SOURCE = r"""
 #include <math.h>
 #include <stdint.h>
@@ -164,9 +199,65 @@ int64_t hough_ppht(uint8_t *mask, int64_t h, int64_t w,
     }
     return n_out;
 }
+
+void nlm_offset_row(const uint8_t *restrict img, int64_t stride,
+                    int64_t h, int64_t w, int64_t tsize, int64_t s,
+                    int64_t dy, const float *restrict table,
+                    int64_t n_table, int32_t *restrict col,
+                    float *restrict num, float *restrict den)
+{
+    int64_t pw = w + tsize - 1, pad = s + tsize / 2;
+    const uint8_t *c0 = img + s * stride + s; /* centre patches' frame */
+    for (int64_t dx = -s; dx <= s; dx++) {
+        const uint8_t *c1 = img + (s + dy) * stride + (s + dx);
+        const uint8_t *pv = img + (pad + dy) * stride + (pad + dx);
+
+        /* col[x]: vertical sum of squared differences over the template
+           rows of output row y, slid down one row at a time */
+        for (int64_t x = 0; x < pw; x++)
+            col[x] = 0;
+        for (int64_t i = 0; i < tsize; i++) {
+            const uint8_t *a = c1 + i * stride, *b = c0 + i * stride;
+            for (int64_t x = 0; x < pw; x++) {
+                int32_t d = (int32_t)a[x] - (int32_t)b[x];
+                col[x] += d * d;
+            }
+        }
+        for (int64_t y = 0; y < h; y++) {
+            if (y > 0) {
+                const uint8_t *a1 = c1 + (y + tsize - 1) * stride;
+                const uint8_t *a0 = c0 + (y + tsize - 1) * stride;
+                const uint8_t *b1 = c1 + (y - 1) * stride;
+                const uint8_t *b0 = c0 + (y - 1) * stride;
+                for (int64_t x = 0; x < pw; x++) {
+                    int32_t da = (int32_t)a1[x] - (int32_t)a0[x];
+                    int32_t db = (int32_t)b1[x] - (int32_t)b0[x];
+                    col[x] += da * da - db * db;
+                }
+            }
+            /* d: horizontal sum of col over the template columns of x,
+               slid right one column at a time */
+            int32_t d = 0;
+            for (int64_t j = 0; j < tsize - 1; j++)
+                d += col[j];
+            float *nr = num + y * w, *dr = den + y * w;
+            const uint8_t *pr = pv + y * stride;
+            for (int64_t x = 0; x < w; x++) {
+                d += col[x + tsize - 1];
+                float wt = table[d < n_table ? d : n_table];
+                nr[x] += wt * (float)pr[x];
+                dr[x] += wt;
+                d -= col[x];
+            }
+        }
+    }
+}
 """
 
-CFLAGS = ("-O2", "-fPIC", "-shared", "-ffp-contract=off")
+# -O3 vectorises nlm_offset_row's integer column sums; -O2 leaves them
+# scalar (46 ms against 32 ms per blurry library page).  Neither level
+# reassociates floating point.
+CFLAGS = ("-O3", "-fPIC", "-shared", "-ffp-contract=off")
 _CACHE_NAME = "spark-extract"
 
 
@@ -174,7 +265,7 @@ def _library_name() -> str:
     key = hashlib.sha256(
         (SOURCE + "\0" + " ".join(("cc",) + CFLAGS)).encode()
     ).hexdigest()
-    return f"hough-{key[:16]}.so"
+    return f"kernels-{key[:16]}.so"
 
 
 def _owned_private(path: str, kind: int) -> bool:
@@ -233,8 +324,8 @@ def _build(cc: str, d: str, path: str) -> None:
 
 @functools.lru_cache(maxsize=None)
 def load() -> ctypes.CDLL | None:
-    """The compiled loop, built on first use; None (and one warning per
-    process) when it cannot be built or safely loaded."""
+    """The compiled loops, built on first use; None (and one warning per
+    process) when they cannot be built or safely loaded."""
     try:
         d = _cache_dir()
         if d is None:
@@ -249,7 +340,7 @@ def load() -> ctypes.CDLL | None:
             raise OSError(f"{path} is not a private file of this user")
         lib = ctypes.CDLL(path)
     except (OSError, subprocess.SubprocessError) as exc:
-        log.warning("native Hough loop unavailable, using numpy: %s", exc)
+        log.warning("native kernels unavailable, using numpy: %s", exc)
         return None
     fn = lib.hough_ppht
     i64, ptr = ctypes.c_int64, ctypes.c_void_p
@@ -261,4 +352,11 @@ def load() -> ctypes.CDLL | None:
         ptr, i64, i64, i64, i64, ptr,           # acc, threshold, min length,
     ]                                           # max gap, max_out, out
     fn.restype = i64
+    fn = lib.nlm_offset_row
+    fn.argtypes = [
+        ptr, i64, i64, i64,                     # img, stride, h, w
+        i64, i64, i64,                          # template, s, dy
+        ptr, i64, ptr, ptr, ptr,                # table, n_table, col, num, den
+    ]
+    fn.restype = None
     return lib

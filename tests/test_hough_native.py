@@ -1,5 +1,6 @@
-"""The native Hough loop (imaging/hough_native.py) against its numpy
-reference, its deadline and its build, cache and fallback rules.
+"""The native Hough loop (imaging/native.py) against its numpy
+reference, its deadline, and the native library's build, cache and
+fallback rules (shared with the NL-means loop, test_nlmeans_native.py).
 
 `hough.hough_lines_p` runs the C loop wherever it builds and
 `hough._hough_lines_p_numpy` otherwise; both must give the same
@@ -20,7 +21,7 @@ import numpy as np
 import pytest
 
 from mcp_ocr_server_spark import deadline as deadline_mod
-from mcp_ocr_server_spark.imaging import hough, hough_native
+from mcp_ocr_server_spark.imaging import hough, native as native_mod
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -32,7 +33,7 @@ _NUMPY = hough._hough_lines_p_numpy  # kept before `native` patches the name
 @pytest.fixture
 def native(monkeypatch):
     """hough_lines_p on the C loop only: fail rather than fall back."""
-    assert hough_native.load() is not None, "cc is present but the loop did not build"
+    assert native_mod.load() is not None, "cc is present but the loop did not build"
 
     def no_fallback(*_a, **_k):
         raise AssertionError("hough_lines_p fell back to numpy")
@@ -109,6 +110,16 @@ def test_parameters_outside_the_native_bounds_use_the_numpy_body():
         assert hough.hough_lines_p(edges, **kw) == _NUMPY(edges, **kw)
 
 
+@pytest.mark.parametrize("impl", ["live", "numpy"])
+@pytest.mark.parametrize("chunk", [0, -1, -128])
+def test_chunk_below_one_is_refused(impl, chunk):
+    """A chunk of 0 never advanced the numpy body's loop; both paths
+    refuse it, and negative sizes, before any work."""
+    fn = hough.hough_lines_p if impl == "live" else _NUMPY
+    with pytest.raises(ValueError, match="chunk must be >= 1"):
+        fn(np.ones((5, 5), dtype=bool), threshold=1, chunk=chunk)
+
+
 @needs_cc
 def test_native_expired_deadline_raises(native):
     edges = np.random.default_rng(3).random((80, 80)) < 0.3
@@ -131,13 +142,13 @@ def test_native_checks_deadline_between_chunks(native, monkeypatch):
 def test_source_compiles_without_warnings(tmp_path):
     # no flag may let the compiler fuse x*c + y*s or reassociate: the
     # grid above cannot see a one-ulp change in a bin's rho
-    assert "-ffp-contract=off" in hough_native.CFLAGS
-    assert not any(f.startswith(("-march", "-ffast-math", "-Ofast")) for f in hough_native.CFLAGS)
-    src = tmp_path / "hough.c"
-    src.write_text(hough_native.SOURCE)
+    assert "-ffp-contract=off" in native_mod.CFLAGS
+    assert not any(f.startswith(("-march", "-ffast-math", "-Ofast")) for f in native_mod.CFLAGS)
+    src = tmp_path / "kernels.c"
+    src.write_text(native_mod.SOURCE)
     proc = subprocess.run(
-        ["cc", *hough_native.CFLAGS, "-Wall", "-Wextra", "-Werror",
-         "-o", str(tmp_path / "hough.so"), str(src), "-lm"],
+        ["cc", *native_mod.CFLAGS, "-Wall", "-Wextra", "-Werror",
+         "-o", str(tmp_path / "kernels.so"), str(src), "-lm"],
         capture_output=True, text=True,
     )
     assert proc.returncode == 0, proc.stderr
@@ -147,10 +158,14 @@ _FALLBACK_SCRIPT = textwrap.dedent("""
     import logging, sys
     sys.path[:0] = [sys.argv[1], sys.argv[1] + "/tests"]
     logging.basicConfig(level=logging.WARNING, format="WARNING %(name)s %(message)s")
-    from mcp_ocr_server_spark.imaging import hough, hough_native
-    from test_kernel_pins import HOUGH_RANDOM_PINS, _digest, _random_segments
-    print("loaded", hough_native.load() is not None)
+    from mcp_ocr_server_spark.imaging import hough, kernels, native
+    from test_kernel_pins import (
+        HOUGH_RANDOM_PINS, NLMEANS_PINS, _digest, _nlmeans_input, _random_segments,
+    )
+    print("loaded", native.load() is not None)
     print("digest ok", _digest(_random_segments(hough.hough_lines_p, 0)) == HOUGH_RANDOM_PINS[0])
+    out = kernels.nl_means_denoise(_nlmeans_input("blurry_44x444"))
+    print("nl-means ok", _digest([out]) == NLMEANS_PINS["blurry_44x444"])
 """)
 
 
@@ -176,9 +191,11 @@ def _warnings(proc) -> list[str]:
 
 
 def test_fallback_without_cc_gives_pinned_segments_and_one_warning(tmp_path):
+    """Both kernels fall back to their numpy bodies with the pinned
+    outputs, and the process warns once for the shared library."""
     proc = _run_without_cc(tmp_path)
     assert proc.returncode == 0, proc.stderr
-    assert proc.stdout.split("\n")[:2] == ["loaded False", "digest ok True"]
+    assert proc.stdout.split("\n")[:3] == ["loaded False", "digest ok True", "nl-means ok True"]
     warnings = _warnings(proc)
     assert len(warnings) == 1, proc.stderr
     assert "no C compiler" in warnings[0]
@@ -191,13 +208,13 @@ def test_library_in_unsafe_place_is_not_loaded(tmp_path, unsafe):
     refused, even though it is present and nothing can rebuild it."""
     cache = tmp_path / "xdg" / "spark-extract"
     cache.mkdir(parents=True, mode=0o700)
-    path = str(cache / hough_native._library_name())
-    hough_native._build("cc", str(cache), path)
+    path = str(cache / native_mod._library_name())
+    native_mod._build("cc", str(cache), path)
     if unsafe == "dir_mode_0777":
         os.chmod(cache, 0o777)
     else:
         os.chmod(path, 0o666)
     proc = _run_without_cc(tmp_path)
     assert proc.returncode == 0, proc.stderr
-    assert proc.stdout.split("\n")[:2] == ["loaded False", "digest ok True"]
+    assert proc.stdout.split("\n")[:3] == ["loaded False", "digest ok True", "nl-means ok True"]
     assert len(_warnings(proc)) == 1, proc.stderr

@@ -5,7 +5,9 @@ against outputs computed by the code under test, so an exact rewrite
 of a kernel's inner loop could drift without either noticing.  The
 digests come from the kernels as they stood before their inner loops
 were rewritten for speed, and must not move: a change here means the
-kernel's output changed.
+kernel's output changed.  Each Hough and NL-means pin is checked on the
+live path (the native loop where it builds) and on the numpy body the
+native loop must match.
 """
 
 from __future__ import annotations
@@ -53,8 +55,6 @@ def _random_maps():
 
 
 # -- K5 Hough ----------------------------------------------------------------
-# Each pin is checked on the live path (the native loop where it builds)
-# and on `_hough_lines_p_numpy`, the reference the native loop must match.
 
 def _library_segments(impl):
     """Canny maps of the first 48 binarised library pages, with the
@@ -161,18 +161,28 @@ NLMEANS_PINS = {
 }
 
 
-@pytest.mark.parametrize("name", list(NLMEANS_PINS))
-def test_nlmeans_output_pinned(name):
+def _nlmeans_input(name: str) -> np.ndarray:
     rng = np.random.default_rng(7)
-    img = {
+    return {
         "random_11x11": lambda: rng.integers(0, 256, (11, 11), dtype=np.uint8),
         "flat_40x40": lambda: np.full((40, 40), 128, dtype=np.uint8),
         "random_300x400": lambda: rng.integers(0, 256, (300, 400), dtype=np.uint8),
         # library page 6: the first blurry page, the case the analyzer denoises
         "blurry_44x444": lambda: _library_gray(6),
     }[name]()
+
+
+@pytest.mark.parametrize("name", list(NLMEANS_PINS))
+def test_nlmeans_output_pinned(name):
+    img = _nlmeans_input(name)
     out = kernels.nl_means_denoise(img)
     assert out.shape == img.shape and out.dtype == np.uint8
+    assert _digest([out]) == NLMEANS_PINS[name]
+
+
+@pytest.mark.parametrize("name", list(NLMEANS_PINS))
+def test_numpy_nlmeans_output_pinned(name):
+    out = kernels._nl_means_denoise_numpy(_nlmeans_input(name))
     assert _digest([out]) == NLMEANS_PINS[name]
 
 
@@ -226,17 +236,28 @@ def test_nlmeans_matches_per_offset_reference(shape, h, template, search):
     assert np.array_equal(got, _nl_means_reference(img, h, template, search))
 
 
+def _large_page_peak_and_digest(impl) -> tuple[int, str]:
+    img = np.random.default_rng(11).integers(0, 256, (1024, 1024), dtype=np.uint8)
+    tracemalloc.start()
+    try:
+        out = impl(img)
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    return peak, _digest([out])
+
+
 def test_nlmeans_peak_memory_bounded_on_large_page():
     """Offsets may be batched, but never so many at once that a large
     page's working set explodes: a 1024x1024 page stays under 80 MB of
     traced peak (batching all 21 offsets of a row would take ~550 MB).
     Its output is pinned too."""
-    img = np.random.default_rng(11).integers(0, 256, (1024, 1024), dtype=np.uint8)
-    tracemalloc.start()
-    try:
-        out = kernels.nl_means_denoise(img)
-        _cur, peak = tracemalloc.get_traced_memory()
-    finally:
-        tracemalloc.stop()
+    peak, digest = _large_page_peak_and_digest(kernels.nl_means_denoise)
     assert peak <= 80 * 2**20, peak / 2**20
-    assert _digest([out]) == "9b570b41fab50e6c"  # one offset per group here
+    assert digest == "9b570b41fab50e6c"
+
+
+def test_numpy_nlmeans_peak_memory_bounded_on_large_page():
+    peak, digest = _large_page_peak_and_digest(kernels._nl_means_denoise_numpy)
+    assert peak <= 80 * 2**20, peak / 2**20
+    assert digest == "9b570b41fab50e6c"  # one offset per group here
