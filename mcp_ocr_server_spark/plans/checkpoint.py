@@ -31,7 +31,11 @@ Design (SURVEY.md §4 item 2):
   another language or engine parses again.
 
 Lineage: every watermark row records bucket id, run id, span/doc/error
-counts and wall time — the per-partition lineage + metrics table.
+counts, the number of images OCR'd and wall time.  The counts are
+observed while the bucket's tables are written, so each table is
+written once and read back never.  Per-partition metrics are a view
+over the committed OCR results (``CheckpointStore.metrics_df``), keyed
+by (bucket, partition_id): no second table restates them.
 """
 
 from __future__ import annotations
@@ -41,9 +45,11 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, JobConfig
+from ..operators.media_ocr import OCR_RESULT_SCHEMA
+from .metrics import partition_metrics
 from .pipeline import PDF_MEMO_SCHEMA, extract, hash_media, hash_pdfs
 
 WATERMARK_SCHEMA = (
@@ -51,33 +57,17 @@ WATERMARK_SCHEMA = (
     " n_ocr_computed long, wall_s double, committed_at double"
 )
 
-# Typed empty-result schemas: reading an empty store must yield an empty
-# DataFrame of the right shape, not an opaque "empty path list" error.
+# Read under an explicit schema (no footer-inference job); an empty store
+# yields an empty DataFrame of this shape, not an "empty path list" error.
 SPANS_SCHEMA = (
     "doc_id string, order int, kind string, media_ref string, text string,"
     " confidence double, language string, error_code string,"
     " error_msg string, content_hash string"
 )
-METRICS_SCHEMA = (
-    "partition_id int, n_images long, n_errors long, total_duration_s double,"
-    " avg_duration_s double, max_duration_s double, avg_sharpness double,"
-    " avg_contrast double, avg_brightness double, n_preprocessed long"
-)
 
 
 def bucket_col(b: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(b)).cast("int")
-
-
-def _parquet_num_rows(path: str) -> int:
-    """Exact row count from parquet footers — no Spark job."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
 
 
 @dataclass
@@ -94,9 +84,9 @@ class CheckpointStore:
 
     Layout:
       root/spans/bucket=K/*.parquet     committed span rows
-      root/ocr/bucket=K/*.parquet       committed ocr results (memo source)
+      root/ocr/bucket=K/*.parquet       committed ocr results (memo source,
+                                        and the per-partition metrics view)
       root/pdf/bucket=K/*.parquet       committed pdf results (pdf memo source)
-      root/metrics/bucket=K/*.parquet   per-compute-partition metrics
       root/watermarks/K.json            watermark row, written LAST
     """
 
@@ -105,7 +95,6 @@ class CheckpointStore:
         self.spans_dir = os.path.join(root, "spans")
         self.ocr_dir = os.path.join(root, "ocr")
         self.pdf_dir = os.path.join(root, "pdf")
-        self.metrics_dir = os.path.join(root, "metrics")
         self.wm_dir = os.path.join(root, "watermarks")
         os.makedirs(self.wm_dir, exist_ok=True)
 
@@ -173,43 +162,44 @@ class CheckpointStore:
             spark.createDataFrame([], schema=WATERMARK_SCHEMA)
         )
 
-    def _committed_paths(self, table_dir: str) -> list[str]:
-        """`table_dir/bucket=K` of every committed bucket that wrote one:
-        only committed buckets count (half-written ones are re-run and
-        overwritten)."""
+    def _read(
+        self, spark: SparkSession, table_dir: str, schema: str, **options
+    ) -> DataFrame | None:
+        """`table_dir/bucket=K` of every committed bucket that wrote one,
+        read under an explicit schema (no footer-inference job), or None
+        if there is none: only committed buckets count (half-written ones
+        are re-run and overwritten)."""
         paths = (
             os.path.join(table_dir, f"bucket={b}")
             for b in sorted(self.committed_buckets())
         )
-        return [p for p in paths if os.path.isdir(p)]
+        paths = [p for p in paths if os.path.isdir(p)]
+        if not paths:
+            return None
+        return spark.read.schema(schema).options(**options).parquet(*paths)
 
     def memo_df(self, spark: SparkSession) -> DataFrame | None:
-        paths = self._committed_paths(self.ocr_dir)
-        if not paths:
-            return None
-        from ..operators.media_ocr import OCR_RESULT_SCHEMA
-
-        # explicit schema: skips the per-call footer-inference job (the
-        # bucket loop builds this once per bucket)
-        return spark.read.schema(OCR_RESULT_SCHEMA).parquet(*paths)
+        return self._read(spark, self.ocr_dir, OCR_RESULT_SCHEMA)
 
     def pdf_memo_df(self, spark: SparkSession) -> DataFrame | None:
-        paths = self._committed_paths(self.pdf_dir)
-        if not paths:
-            return None
-        return spark.read.schema(PDF_MEMO_SCHEMA).parquet(*paths)
+        return self._read(spark, self.pdf_dir, PDF_MEMO_SCHEMA)
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
-        paths = self._committed_paths(self.metrics_dir)
-        if not paths:
-            return spark.createDataFrame([], schema=METRICS_SCHEMA)
-        return spark.read.parquet(*paths)
+        """partition_metrics over the committed OCR results; `basePath`
+        keeps the `bucket` partition column, so rows are keyed by
+        (bucket, partition_id)."""
+        ocr = self._read(
+            spark, self.ocr_dir, OCR_RESULT_SCHEMA, basePath=self.ocr_dir
+        )
+        if ocr is None:
+            ocr = spark.createDataFrame([], OCR_RESULT_SCHEMA + ", bucket int")
+        return partition_metrics(ocr)
 
     def spans_df(self, spark: SparkSession) -> DataFrame:
-        paths = self._committed_paths(self.spans_dir)
-        if not paths:
-            return spark.createDataFrame([], schema=SPANS_SCHEMA)
-        return spark.read.parquet(*paths)
+        spans = self._read(spark, self.spans_dir, SPANS_SCHEMA)
+        if spans is None:
+            spans = spark.createDataFrame([], schema=SPANS_SCHEMA)
+        return spans
 
 
 def run_checkpointed(
@@ -287,10 +277,63 @@ def run_checkpointed(
     except Exception:
         bucket_cost = None
     try:
-        committed, total_spans = _bucket_loop(
-            spark, docs_b, media, media_hashed, store, cfg, b, done,
-            bucket_cost, run_id, fail_after_buckets, pdfs, pdfs_hashed,
-        )
+        for k in range(b):
+            if k in done:
+                continue
+            if fail_after_buckets is not None and committed >= fail_after_buckets:
+                raise RuntimeError(f"injected failure after {committed} buckets")
+            t0 = time.monotonic()
+            # ONE extract() per bucket, and one write per table.  The OCR
+            # and pdf stage outputs are persisted: `res.spans`' lookup
+            # joins are built over the SAME ocr_results / pdf_results
+            # DataFrame subtrees (pipeline.extract ties them), so the
+            # spans write reads the cache the memo writes filled instead
+            # of re-running mapInPandas.  Neither result is coalesced
+            # before its first write: a coalesce above an unfilled cache
+            # would run every unit in one task.
+            res = extract(
+                docs_b.filter(F.col("bucket") == k).drop("bucket"), media,
+                cfg, memo=store.memo_df(spark),
+                total_media_bytes=bucket_cost, media_hashed=media_hashed,
+                pdfs=pdfs, pdfs_hashed=pdfs_hashed,
+                pdf_memo=store.pdf_memo_df(spark),
+            )
+            ocr = res.ocr_results.persist()
+            pdf = res.pdf_results.persist() if res.pdf_results is not None else None
+            # The watermark counts are observed while the tables are
+            # written.  Each observe() sits directly under its write, in
+            # the result stage, where Spark merges one attempt per
+            # partition: a retried or speculative attempt counts once.
+            # explode_spans gives each doc with a span exactly one
+            # `order` 0 row (observe refuses countDistinct).
+            ocr_seen, spans_seen = Observation(), Observation()
+            ocr.observe(
+                ocr_seen, F.count(F.lit(1)).alias("n_ocr_computed")
+            ).write.mode("overwrite").parquet(
+                os.path.join(store.ocr_dir, f"bucket={k}")
+            )
+            if pdf is not None:
+                pdf.write.mode("overwrite").parquet(
+                    os.path.join(store.pdf_dir, f"bucket={k}")
+                )
+            res.spans.observe(
+                spans_seen,
+                F.count_if(F.col("order") == 0).alias("n_docs"),
+                F.count(F.lit(1)).alias("n_spans"),
+                F.count_if(F.col("error_code").isNotNull()).alias("n_errors"),
+            ).write.mode("overwrite").parquet(
+                os.path.join(store.spans_dir, f"bucket={k}")
+            )
+            ocr.unpersist()
+            if pdf is not None:
+                pdf.unpersist()
+            stats = dict(
+                bucket=k, run_id=run_id, **spans_seen.get, **ocr_seen.get,
+                wall_s=time.monotonic() - t0, committed_at=time.time(),
+            )
+            store.commit(k, stats)
+            committed += 1
+            total_spans += stats["n_spans"]
     finally:
         media_hashed.unpersist()
         if pdfs_hashed is not None:
@@ -302,90 +345,3 @@ def run_checkpointed(
         buckets_committed=committed,
         spans_written=total_spans,
     )
-
-
-def _bucket_loop(
-    spark: SparkSession,
-    docs_b: DataFrame,
-    media: DataFrame,
-    media_hashed: DataFrame,
-    store: CheckpointStore,
-    cfg: JobConfig,
-    b: int,
-    done: set[int],
-    bucket_cost: int | None,
-    run_id: str,
-    fail_after_buckets: int | None,
-    pdfs: DataFrame | None = None,
-    pdfs_hashed: DataFrame | None = None,
-) -> tuple[int, int]:
-    committed = 0
-    total_spans = 0
-    for k in range(b):
-        if k in done:
-            continue
-        if fail_after_buckets is not None and committed >= fail_after_buckets:
-            raise RuntimeError(f"injected failure after {committed} buckets")
-        t0 = time.monotonic()
-        part = docs_b.filter(F.col("bucket") == k).drop("bucket")
-        # ONE extract() per bucket.  The OCR and pdf stage outputs are
-        # persisted: `res.spans`' lookup joins are built over the SAME
-        # ocr_results / pdf_results DataFrame subtrees (pipeline.extract
-        # ties them), so the spans write hits the cache instead of
-        # re-running mapInPandas — the round-1 double-extract re-ran the
-        # whole explode/join plan and cost ~3-4 s of fixed overhead per
-        # bucket.  Neither result is coalesced before its first write: a
-        # coalesce above an unfilled cache would run every unit in one
-        # task.
-        res = extract(
-            part, media, cfg, memo=store.memo_df(spark),
-            total_media_bytes=bucket_cost, media_hashed=media_hashed,
-            pdfs=pdfs, pdfs_hashed=pdfs_hashed,
-            pdf_memo=store.pdf_memo_df(spark),
-        )
-        spans_path = os.path.join(store.spans_dir, f"bucket={k}")
-        ocr_path = os.path.join(store.ocr_dir, f"bucket={k}")
-        ocr = res.ocr_results.persist()
-        ocr.write.mode("overwrite").parquet(ocr_path)
-        pdf = None
-        if res.pdf_results is not None:
-            pdf = res.pdf_results.persist()
-            pdf.write.mode("overwrite").parquet(
-                os.path.join(store.pdf_dir, f"bucket={k}")
-            )
-        from .metrics import partition_metrics
-
-        partition_metrics(ocr).write.mode("overwrite").parquet(
-            os.path.join(store.metrics_dir, f"bucket={k}")
-        )
-        res.spans.write.mode("overwrite").parquet(spans_path)
-        # all span stats in ONE aggregation pass over the written bucket
-        # (round 1 issued four separate actions / three re-scans)
-        written = spark.read.parquet(spans_path)
-        srow = written.agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(
-                F.when(F.col("error_code").isNotNull(), 1).otherwise(0)
-            ).alias("n_errors"),
-        ).first()
-        # n_ocr from the written files' parquet footers: exact row count
-        # with NO Spark job (footer metadata, bytes of IO per file)
-        n_ocr = _parquet_num_rows(ocr_path)
-        ocr.unpersist()
-        if pdf is not None:
-            pdf.unpersist()
-        stats = dict(
-            bucket=k,
-            run_id=run_id,
-            n_docs=srow["n_docs"],
-            n_spans=srow["n_spans"],
-            n_errors=int(srow["n_errors"] or 0),
-            n_ocr_computed=n_ocr,
-            wall_s=time.monotonic() - t0,
-            committed_at=time.time(),
-        )
-        store.commit(k, stats)
-        committed += 1
-        total_spans += stats["n_spans"]
-    return committed, total_spans

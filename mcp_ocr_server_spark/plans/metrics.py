@@ -1,18 +1,18 @@
-"""Per-partition metrics + lineage tables (north_star: "writing
+"""Per-partition metrics + lineage views (north_star: "writing
 extracted spans back ... with per-partition lineage and metrics
-tables").
+tables"), both read from what a checkpointed run commits anyway:
 
-Two side tables accompany every extraction run:
-
-- **partition metrics** — one row per physical task partition of the
-  OCR stage: row counts, error counts, duration stats, quality-metric
-  aggregates.  `spark_partition_id()` is captured INSIDE the stage's
-  output so the row remembers where it was computed.
+- **partition metrics** — one row per bucket and physical task
+  partition of the OCR stage: row counts, error counts, duration
+  stats, quality-metric aggregates.  A view over the committed OCR
+  results (CheckpointStore.metrics_df): `partition_id` is captured
+  INSIDE the stage's output, so every row remembers where it was
+  computed.
 - **lineage** — the bucket watermark table (plans/checkpoint.py):
   bucket → run id, counts, wall time, commit timestamp.
 
 The reference's only metrics are zap log lines (pkg/logger) and the
-batch `count` field (handler.go:236, G4); these tables are their
+batch `count` field (handler.go:236, G4); these views are their
 queryable replacement.
 """
 
@@ -22,17 +22,16 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def partition_metrics(ocr_results: DataFrame) -> DataFrame:
-    """Aggregate the OCR stage output by the partition that computed it.
+    """Aggregate committed OCR results by the bucket and the partition
+    that computed them (partition ids restart in every bucket).
 
     The `partition_id` column is stamped INSIDE the OCR stage via
     TaskContext (operators/media_ocr.py), so it reflects the compute
-    partition even after the results are written out and re-read.
+    partition even after the results are written out and re-read;
+    `bucket` is the store's partition column (CheckpointStore.metrics_df).
     """
-    df = ocr_results
-    if "partition_id" not in df.columns:
-        df = df.withColumn("partition_id", F.spark_partition_id())
     return (
-        df.groupBy("partition_id")
+        ocr_results.groupBy("bucket", "partition_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_images"),
             F.sum(F.when(F.col("error_code").isNotNull(), 1).otherwise(0))

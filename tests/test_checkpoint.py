@@ -107,14 +107,116 @@ def test_kill_and_resume_no_reprocessing(spark, tmp_path):
     runs = {r.run_id for r in wm.collect()}
     assert runs == {"run-0", "run-1"}
 
-    # per-partition metrics table (north_star lineage+metrics): image
-    # counts reconcile with the committed OCR results, and partition ids
-    # were stamped by the compute tasks
-    metrics = store.metrics_df(spark)
-    assert metrics.agg(F.sum("n_images")).first()[0] == sum(
-        r.n_ocr_computed for r in wm.collect()
+    # per-partition metrics view (north_star lineage+metrics): one row
+    # per (bucket, partition_id), each bucket's image count reconciles
+    # with its watermark, and partition ids were stamped by the compute
+    # tasks
+    metrics = store.metrics_df(spark).collect()
+    keys = [(r.bucket, r.partition_id) for r in metrics]
+    assert len(keys) == len(set(keys))
+    images = {}
+    for r in metrics:
+        images[r.bucket] = images.get(r.bucket, 0) + r.n_images
+    assert {r.bucket: r.n_ocr_computed for r in wm.collect()} == {
+        k: images.get(k, 0) for k in range(N_BUCKETS)
+    }
+    assert all(r.partition_id >= 0 for r in metrics)
+
+    # an empty store: an empty frame with the view's columns
+    empty = CheckpointStore(str(tmp_path / "empty")).metrics_df(spark)
+    assert empty.columns == store.metrics_df(spark).columns
+    assert empty.count() == 0
+
+
+def test_bucket_loop_reads_back_no_output(spark, tmp_path, monkeypatch):
+    """The bucket loop writes each table once and reads back neither
+    spans nor metrics: the only parquet reads it issues are the memo
+    reads of committed ocr/ and pdf/ buckets."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    cfg = S.CorpusConfig(n_docs=40, p_pdf=0.35)
+    docs = S.docs_df(spark, cfg)
+    media = S.media_df(spark, cfg)
+    pdfs = S.pdf_df(spark, cfg)
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        read.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    run_checkpointed(
+        spark, docs, media, store, FIXTURE_JOB, n_buckets=3, pdfs=pdfs,
     )
-    assert all(r.partition_id >= 0 for r in metrics.collect())
+    monkeypatch.undo()
+    assert store.committed_buckets() == {0, 1, 2}
+    memo_dirs = (store.ocr_dir, store.pdf_dir)
+    assert read and all(os.path.dirname(p) in memo_dirs for p in read), read
+    # a memo read only ever names buckets committed before it
+    assert {os.path.basename(p) for p in read} == {"bucket=0", "bucket=1"}
+
+
+def _docs_in_buckets(spark, wanted, n_buckets):
+    """One fresh doc id per entry of `wanted` (a bucket number each),
+    drawn from a fixed candidate list via the public bucket_col."""
+    cands = spark.createDataFrame(
+        [(f"wm-doc-{i}",) for i in range(64)], "doc_id string"
+    ).select("doc_id", bucket_col(n_buckets).alias("b")).collect()
+    pool = {}
+    for r in cands:
+        pool.setdefault(r.b, []).append(r.doc_id)
+    return [pool[b].pop(0) for b in wanted]
+
+
+def test_watermark_counts_match_committed_tables(spark, tmp_path):
+    """Every watermark field equals a count taken independently (pyarrow,
+    no Spark) from the committed tables: n_docs = distinct doc_id of
+    spans/bucket=K, n_spans its rows, n_errors its non-null error_code
+    rows, n_ocr_computed the rows of ocr/bucket=K.  Bucket 0 holds a doc
+    with an empty spans array (not counted in n_docs), bucket 1 only
+    images bucket 0 already OCR'd (every one a memo hit: an empty OCR
+    write) and bucket 2 no doc at all (every count 0)."""
+    import pyarrow.parquet as pq
+
+    media = spark.createDataFrame(
+        [S.media_item(CORPUS, j) for j in (0, 1)], S.MEDIA_SCHEMA
+    )
+    img0, img1 = S.media_ref(0), S.media_ref(1)
+    full, empty, reuse = _docs_in_buckets(spark, [0, 0, 1], 3)
+    docs = spark.createDataFrame(
+        [
+            (full, [("text", "hello", None, 0), ("image", None, img0, 5),
+                    ("image", None, img1, 9), ("image", None, "img-gone", 12)]),
+            (empty, []),
+            (reuse, [("image", None, img1, 0), ("text", "bye", None, 3),
+                     ("image", None, img0, 4)]),
+        ],
+        S.DOCS_SCHEMA,
+    )
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    run_checkpointed(spark, docs, media, store, FIXTURE_JOB, n_buckets=3)
+    assert store.committed_buckets() == {0, 1, 2}
+
+    wm = {r.bucket: r for r in store.watermarks_df(spark).collect()}
+    for k in range(3):
+        spans = pq.read_table(os.path.join(store.spans_dir, f"bucket={k}"))
+        ocr = pq.read_table(os.path.join(store.ocr_dir, f"bucket={k}"))
+        errors = spans.column("error_code").to_pylist()
+        assert (wm[k].n_docs, wm[k].n_spans, wm[k].n_errors,
+                wm[k].n_ocr_computed) == (
+            len(set(spans.column("doc_id").to_pylist())),
+            spans.num_rows,
+            sum(e is not None for e in errors),
+            ocr.num_rows,
+        ), k
+    assert (wm[0].n_docs, wm[0].n_spans, wm[0].n_errors,
+            wm[0].n_ocr_computed) == (1, 4, 1, 2)
+    assert (wm[1].n_docs, wm[1].n_spans, wm[1].n_errors,
+            wm[1].n_ocr_computed) == (1, 3, 0, 0)
+    assert (wm[2].n_docs, wm[2].n_spans, wm[2].n_errors,
+            wm[2].n_ocr_computed) == (0, 0, 0, 0)
 
 
 def test_precomputed_bucket_mismatch_rejected(spark, tmp_path):
