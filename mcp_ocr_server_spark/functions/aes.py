@@ -1,5 +1,6 @@
-"""AES-128/256 (FIPS-197 re-derivation) in pure stdlib + numpy — the
-cipher backend for the PDF standard security handler's AESV2/AESV3
+"""AES-128/192/256 (FIPS-197 re-derivation) in stdlib + numpy, with the
+CBC encrypt chain in C where the native library builds — the cipher
+backend for the PDF standard security handler's AESV2/AESV3
 crypt filters (functions/pdfcrypt.py).
 
 Design notes, because this runs inside executors:
@@ -11,15 +12,18 @@ Design notes, because this runs inside executors:
     (n_blocks, 4, 4) uint8 array and each round is four table-gathers
     plus XORs.  A 1 MiB stream decrypts in one shot instead of 65k
     Python-loop iterations.
-  - **Encrypt is writer/KDF-side only** (corpus generation, /Perms,
-    and the R6 hash's CBC chain, which is sequential by construction),
-    so it is a scalar T-table implementation: four 256-entry uint32
+  - **Encrypt is a sequential chain** (corpus generation, /Perms,
+    and the R6 hash's CBC chain, which is sequential by construction:
+    each Algorithm 2.B hash runs 64 or more chains of 128 or more
+    blocks), so it runs in C (`native.aes_cbc_encrypt`): the
+    key schedule and a T-table round loop — four 256-entry uint32
     tables folding SubBytes+ShiftRows+MixColumns per FIPS-197 §5.1 /
-    the classic Rijndael reference layout — ~4 table lookups + XORs
-    per column per round on plain Python ints.  One word-state loop
-    serves ECB and CBC: the input is unpacked once into 32-bit words
-    and the CBC chain stays four ints, so Algorithm 2.B's ~130-block
-    chains pay no per-block bytes conversion.
+    the classic Rijndael reference layout — over tables this module
+    derives and passes in.  `_cbc_encrypt_words` is the same loop on
+    Python ints: the fallback where the library cannot be built, and
+    the reference the C loop is tested against.  It unpacks the input
+    once into 32-bit words and keeps the CBC chain as four ints, so a
+    block pays no per-block bytes conversion.
   - All tables are DERIVED at import (GF(2^8) exp/log over generator
     0x03, the §5.1.1 affine map) rather than pasted as literals —
     self-checking against the FIPS-197 Appendix C vectors in
@@ -32,9 +36,12 @@ PDF uses CBC only.
 
 from __future__ import annotations
 
+import ctypes
 import struct
 
 import numpy as np
+
+from .. import native
 
 # --- GF(2^8) and the S-box, derived -----------------------------------------
 
@@ -99,11 +106,15 @@ _M14 = np.array([_gmul(a, 14) for a in range(256)], dtype=np.uint8)
 # --- key schedule (§5.2) -----------------------------------------------------
 
 
+def _check_key(key: bytes) -> None:
+    if len(key) not in (16, 24, 32):
+        raise ValueError(f"AES key must be 16/24/32 bytes, got {len(key)}")
+
+
 def _expand_key(key: bytes) -> list[int]:
     """Round-key WORDS w[0..4*(Nr+1)) as big-endian uint32."""
+    _check_key(key)
     nk = len(key) // 4
-    if nk not in (4, 6, 8):
-        raise ValueError(f"AES key must be 16/24/32 bytes, got {len(key)}")
     nr = nk + 6
     w = [int.from_bytes(key[4 * i:4 * i + 4], "big") for i in range(nk)]
     rcon = 1
@@ -137,12 +148,18 @@ _SB3 = [x << 24 for x in SBOX]
 _SB2 = [x << 16 for x in SBOX]
 _SB1 = [x << 8 for x in SBOX]
 
+# the same tables for the C loop: te0..te3 as one (4, 256) uint32 array,
+# and the S-box; module globals, so their addresses stay valid
+_TE_NP = np.array([_TE0, _TE1, _TE2, _TE3], dtype=np.uint32)
+_SBOX_NP = np.array(SBOX, dtype=np.uint8)
+_TE_ADDR, _SBOX_ADDR = _TE_NP.ctypes.data, _SBOX_NP.ctypes.data
+
 
 def encrypt_block(key: bytes, block: bytes) -> bytes:
     """One 16-byte block, ECB (= one CBC block under a zero IV)."""
     if len(block) != 16:
         raise ValueError("AES block must be 16 bytes")
-    return _cbc_encrypt_words(key, bytes(16), block)
+    return cbc_encrypt(key, bytes(16), block, pad=False)
 
 
 def _cbc_encrypt_words(key: bytes, iv: bytes, data: bytes) -> bytes:
@@ -254,7 +271,9 @@ def decrypt_block(key: bytes, block: bytes) -> bytes:
 def cbc_encrypt(key: bytes, iv: bytes, data: bytes,
                 pad: bool = True) -> bytes:
     """CBC encrypt; PKCS#7-pads unless pad=False (then the length must
-    already be block-aligned — the KDF / key-blob case)."""
+    already be block-aligned — the KDF / key-blob case).  Runs in C
+    where the native library loads, else `_cbc_encrypt_words`; every
+    length is checked here, before either."""
     if pad:
         p = 16 - len(data) % 16
         data = data + bytes([p]) * p
@@ -262,7 +281,16 @@ def cbc_encrypt(key: bytes, iv: bytes, data: bytes,
         raise ValueError("unpadded CBC input must be block-aligned")
     if len(iv) != 16:
         raise ValueError("AES-CBC IV must be 16 bytes")
-    return _cbc_encrypt_words(key, iv, data)
+    _check_key(key)
+    lib = native.load()
+    if lib is None:
+        return _cbc_encrypt_words(key, iv, data)
+    out = ctypes.create_string_buffer(len(data))
+    lib.aes_cbc_encrypt(
+        _TE_ADDR, _SBOX_ADDR, bytes(key), len(key),
+        bytes(iv), bytes(data), len(data) // 16, out,
+    )
+    return out.raw
 
 
 def cbc_decrypt(key: bytes, iv: bytes, data: bytes,

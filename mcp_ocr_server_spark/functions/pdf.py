@@ -885,10 +885,13 @@ def _validated_objects(data: bytes) -> dict[int, _Obj]:
 
     Encrypted documents whose USER password is empty (the owner-locked
     print/copy-restricted shape — the common "encrypted" PDF in a
-    crawl) are DECRYPTED here via the RC4 standard security handler
-    (functions/pdfcrypt.py): every stream payload is replaced by its
-    plaintext, so downstream extractors run unchanged.  Real passwords
-    and AES crypt filters refuse loudly.
+    crawl) are DECRYPTED here via the standard security handler
+    (functions/pdfcrypt.py: RC4 at /V 1-2, RC4 or AESV2 crypt filters
+    at /V 4, AESV3 at /V 5 R5-R6), found in a classic trailer or an
+    /XRef stream's dict: every stream payload except the /Encrypt dict's
+    and the /XRef streams' is replaced by its plaintext, so downstream
+    extractors run unchanged.  A real user password, a non-Standard
+    handler and an unsupported /V, /R or /CFM refuse loudly.
 
     Raises ValueError for non-PDF bytes or undecryptable documents."""
     if not data.startswith(b"%PDF-"):
@@ -1080,11 +1083,12 @@ def make_pdf_parse_map(ocr_cfg=None):
     """Build the mapInPandas stage over DISTINCT work units
     (content_hash, bytes) — the pipeline's pdf analogue of the OCR
     stage: one parse per distinct byte content, results joined back to
-    every referencing span.  Parse cost is heavy-tailed (an R6/AESV3
-    document spends ~0.5 s in Algorithm 2.B, a born-digital one ~1 ms),
-    so the checkpoint loop keeps these rows as a durable memo (C2's
-    shape) and a later bucket never parses the same pdf again.  ocr_cfg
-    enables the scanned-PDF OCR fallback."""
+    every referencing span.  Parse cost varies by class (a born-digital
+    document ~1 ms, an R4/AESV2 one ~3 ms, an R6/AESV3 one ~5 ms, most
+    of it Algorithm 2.B's two hashes, and a scanned one the OCR of each
+    page), so the checkpoint loop keeps these rows as a durable memo
+    (C2's shape) and a later bucket never parses the same pdf again.
+    ocr_cfg enables the scanned-PDF OCR fallback."""
 
     def pdf_parse_map(
         batches: Iterator[pd.DataFrame],

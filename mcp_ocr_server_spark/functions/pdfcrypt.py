@@ -29,9 +29,9 @@ Documented scope (refusals name the feature):
   - EMPTY user password only.  A real password is a secret this
     engine cannot know; verification failure refuses with "password
     required".
-  - classic-xref layout (the writer scope of the pdf corpus); the
-    1.5+ XRef-stream encrypted layout keeps its refusal in
-    _validated_objects.
+  - classic-xref and 1.5+ XRef-stream layouts; _validated_objects
+    finds /Encrypt in either trailer and never decrypts the /XRef
+    streams themselves (§7.5.8.2).
   - only STREAM payloads are decrypted: page content, CMaps, image
     XObjects — everything the extractors read.  Top-level literal
     strings (document info) stay encrypted; no extractor reads them.

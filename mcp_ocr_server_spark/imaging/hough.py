@@ -36,7 +36,7 @@ import math
 import numpy as np
 
 from ..deadline import check_deadline
-from . import native
+from .. import native
 
 # --------------------------------------------------------------------------
 # Canny edge detector (aperture-3 Sobel, L1 gradient norm — OpenCV's

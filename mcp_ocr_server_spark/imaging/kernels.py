@@ -21,7 +21,7 @@ import numbers
 import numpy as np
 
 from ..deadline import check_deadline
-from . import native
+from .. import native
 
 # --------------------------------------------------------------------------
 # K1 grayscale — preprocessor.go:133-138 (CvtColor BGR2GRAY if channels>1).

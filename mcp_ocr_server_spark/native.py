@@ -1,7 +1,10 @@
-"""Native builds of the two sequential preprocess loops (K5 and K2).
+"""Native builds of the package's three sequential loops: the Hough
+vote-and-walk (K5), the NL-means offset rows (K2) and the AES-CBC
+encrypt chain of the PDF security handler.
 
-Two kernels spend nearly all of their time in loops that numpy can
-only run as many small passes:
+Each spends nearly all of its time in a loop whose every step depends
+on the one before, which numpy can only run as many small passes and
+Python only as one interpreted step at a time:
 
 - `hough.hough_lines_p`: vote a point into every theta bin, take the
   argmax, and when it reaches the threshold walk the line, consume its
@@ -12,19 +15,23 @@ only run as many small passes:
 - `kernels.nl_means_denoise`: for each offset of the search window,
   the patch distance of every pixel, its weight and the weighted sums.
   `nlm_offset_row` runs one offset row `dy` of that loop.
+- `aes.cbc_encrypt`: CBC chains each block's input to the previous
+  ciphertext block, so each of Algorithm 2.B's 64 or more chains of
+  128 or more blocks (`pdfcrypt.hash_2b`) runs one block after
+  another.  `aes_cbc_encrypt` expands the key and runs the chain.
 
 The C source lives in this module as a string because the package is
 shipped to Spark's Python workers as a zip of its `*.py` files.
 `load()` loads it with `ctypes` from a per-user cache directory,
 compiling it there with the host's `cc` first if no process has yet; a
 missing compiler, a failed build or no safe cache directory make
-`load()` return None (one logged warning per process), and both
-callers run their numpy bodies.
+`load()` return None (one logged warning per process), and every
+caller runs its numpy or Python body.
 
-Exactness: each C loop must give its numpy body's output bit for bit.
-The flags keep `-ffp-contract=off`, so nothing fuses into an FMA, and
-no `-march`/`-ffast-math`, so nothing reassociates and the `.so` runs
-on any x86-64.
+Exactness: each C loop must give its numpy or Python body's output bit
+for bit.  The flags keep `-ffp-contract=off`, so nothing fuses into an
+FMA, and no `-march`/`-ffast-math`, so nothing reassociates and the
+`.so` runs on any x86-64.
 
 - Hough: takes cos/sin from numpy (no libm `cos`/`sin`); computes a bin
   as `r = x*c; r += y*s; r /= rho_res; rint(r)`, the order of the numpy
@@ -38,6 +45,11 @@ on any x86-64.
   one, and every distance past it weighs exactly +0.0 in numpy too;
   `num += w * p` and `den += w` run in float32 per pixel in the numpy
   body's (dy, dx) order.
+- AES: integer only.  The S-box and the four T-tables come from the
+  caller (`aes` derives them from GF(2^8) at import), the key schedule
+  and the rounds are `_expand_key` and `_cbc_encrypt_words` step for
+  step on big-endian 32-bit words, so the same tables give the same
+  bytes.
 """
 
 from __future__ import annotations
@@ -91,6 +103,19 @@ log = logging.getLogger(__name__)
 #   one more column while it slides) can wrap.  The index
 #   min(d, n_table) reads table[0..n_table], n_table + 1 entries.
 # - num and den are h x w.
+#
+# aes_cbc_encrypt (the caller refuses key lengths other than 16, 24 and
+# 32, IVs other than 16 bytes and input that is not block-aligned):
+# - key: nk = key_len / 4 is 4, 6 or 8, so the loads read key[0..key_len)
+#   and the schedule writes w[0..4*(nk + 7)), at most the 60 words of w;
+#   w[i - nk] and w[i - 1] are earlier entries.  The C loop returns
+#   without touching anything for any other key_len.
+# - tables: every index is a byte of a uint32 (`>> 24`, or `>> k & 0xFF`),
+#   so it lies in [0, 255]; te holds 4 x 256 uint32 (te0..te3) and sbox
+#   256 bytes.
+# - blocks: block b reads in[16*b .. 16*b + 16) and writes the same range
+#   of out, for b < n_blocks, where both buffers hold 16 * n_blocks bytes;
+#   the IV is 16 bytes.
 SOURCE = r"""
 #include <math.h>
 #include <stdint.h>
@@ -252,6 +277,94 @@ void nlm_offset_row(const uint8_t *restrict img, int64_t stride,
         }
     }
 }
+
+static uint32_t load_be32(const uint8_t *p)
+{
+    return (uint32_t)p[0] << 24 | (uint32_t)p[1] << 16
+           | (uint32_t)p[2] << 8 | (uint32_t)p[3];
+}
+
+static void store_be32(uint8_t *p, uint32_t v)
+{
+    p[0] = (uint8_t)(v >> 24);
+    p[1] = (uint8_t)(v >> 16);
+    p[2] = (uint8_t)(v >> 8);
+    p[3] = (uint8_t)v;
+}
+
+/* S-box of the top byte of a, byte 2 of b, byte 1 of c and the low
+   byte of d, packed in that order: sub4(x, x, x, x) is SubWord(x), and
+   the final round's SubBytes + ShiftRows takes one byte of each of the
+   four state words. */
+static uint32_t sub4(const uint8_t *sbox, uint32_t a, uint32_t b,
+                     uint32_t c, uint32_t d)
+{
+    return (uint32_t)sbox[a >> 24] << 24 | (uint32_t)sbox[b >> 16 & 0xFF] << 16
+           | (uint32_t)sbox[c >> 8 & 0xFF] << 8 | (uint32_t)sbox[d & 0xFF];
+}
+
+void aes_cbc_encrypt(const uint32_t *restrict te, const uint8_t *restrict sbox,
+                     const uint8_t *restrict key, int64_t key_len,
+                     const uint8_t *restrict iv, const uint8_t *restrict in,
+                     int64_t n_blocks, uint8_t *restrict out)
+{
+    int64_t nk = key_len / 4, nr = nk + 6;
+    if (key_len % 4 || (nk != 4 && nk != 6 && nk != 8))
+        return;
+    /* key schedule (FIPS-197 5.2), the order of aes._expand_key */
+    uint32_t w[60], rcon = 1;
+    for (int64_t i = 0; i < nk; i++)
+        w[i] = load_be32(key + 4 * i);
+    for (int64_t i = nk; i < 4 * (nr + 1); i++) {
+        uint32_t t = w[i - 1];
+        if (i % nk == 0) {
+            t = t << 8 | t >> 24; /* RotWord */
+            t = sub4(sbox, t, t, t, t) ^ rcon << 24;
+            rcon <<= 1;
+            if (rcon & 0x100)
+                rcon ^= 0x11B;
+        } else if (nk == 8 && i % nk == 4) {
+            t = sub4(sbox, t, t, t, t);
+        }
+        w[i] = w[i - nk] ^ t;
+    }
+
+    const uint32_t *te0 = te, *te1 = te + 256, *te2 = te + 512, *te3 = te + 768;
+    uint32_t c0 = load_be32(iv), c1 = load_be32(iv + 4),
+             c2 = load_be32(iv + 8), c3 = load_be32(iv + 12);
+    for (int64_t b = 0; b < n_blocks; b++) {
+        const uint8_t *p = in + 16 * b;
+        uint32_t s0 = load_be32(p) ^ c0 ^ w[0];
+        uint32_t s1 = load_be32(p + 4) ^ c1 ^ w[1];
+        uint32_t s2 = load_be32(p + 8) ^ c2 ^ w[2];
+        uint32_t s3 = load_be32(p + 12) ^ c3 ^ w[3];
+        for (int64_t r = 1; r < nr; r++) {
+            const uint32_t *k = w + 4 * r;
+            uint32_t t0 = te0[s0 >> 24] ^ te1[s1 >> 16 & 0xFF]
+                          ^ te2[s2 >> 8 & 0xFF] ^ te3[s3 & 0xFF] ^ k[0];
+            uint32_t t1 = te0[s1 >> 24] ^ te1[s2 >> 16 & 0xFF]
+                          ^ te2[s3 >> 8 & 0xFF] ^ te3[s0 & 0xFF] ^ k[1];
+            uint32_t t2 = te0[s2 >> 24] ^ te1[s3 >> 16 & 0xFF]
+                          ^ te2[s0 >> 8 & 0xFF] ^ te3[s1 & 0xFF] ^ k[2];
+            uint32_t t3 = te0[s3 >> 24] ^ te1[s0 >> 16 & 0xFF]
+                          ^ te2[s1 >> 8 & 0xFF] ^ te3[s2 & 0xFF] ^ k[3];
+            s0 = t0;
+            s1 = t1;
+            s2 = t2;
+            s3 = t3;
+        }
+        const uint32_t *k = w + 4 * nr;
+        c0 = sub4(sbox, s0, s1, s2, s3) ^ k[0];
+        c1 = sub4(sbox, s1, s2, s3, s0) ^ k[1];
+        c2 = sub4(sbox, s2, s3, s0, s1) ^ k[2];
+        c3 = sub4(sbox, s3, s0, s1, s2) ^ k[3];
+        uint8_t *q = out + 16 * b;
+        store_be32(q, c0);
+        store_be32(q + 4, c1);
+        store_be32(q + 8, c2);
+        store_be32(q + 12, c3);
+    }
+}
 """
 
 # -O3 vectorises nlm_offset_row's integer column sums; -O2 leaves them
@@ -340,7 +453,9 @@ def load() -> ctypes.CDLL | None:
             raise OSError(f"{path} is not a private file of this user")
         lib = ctypes.CDLL(path)
     except (OSError, subprocess.SubprocessError) as exc:
-        log.warning("native kernels unavailable, using numpy: %s", exc)
+        log.warning(
+            "native kernels unavailable, using the numpy/Python bodies: %s", exc
+        )
         return None
     fn = lib.hough_ppht
     i64, ptr = ctypes.c_int64, ctypes.c_void_p
@@ -357,6 +472,12 @@ def load() -> ctypes.CDLL | None:
         ptr, i64, i64, i64,                     # img, stride, h, w
         i64, i64, i64,                          # template, s, dy
         ptr, i64, ptr, ptr, ptr,                # table, n_table, col, num, den
+    ]
+    fn.restype = None
+    fn = lib.aes_cbc_encrypt
+    fn.argtypes = [
+        ptr, ptr, ptr, i64,                     # te, sbox, key, key_len
+        ptr, ptr, i64, ptr,                     # iv, in, n_blocks, out
     ]
     fn.restype = None
     return lib

@@ -73,8 +73,13 @@ def pagerank(
     mass = ``unit`` per node).  Deterministic per the module contract.
     """
     edges = edges.select("src", "dst", "w").persist()
+    # out-weight per source, keyed by its own column name: joining it
+    # back to `edges` on a same-named `src` compares one attribute with
+    # itself (Spark logs a "trivially true" predicate each iteration)
     outw = (
-        edges.groupBy("src").agg(F.sum("w").alias("wout")).persist()
+        edges.groupBy(F.col("src").alias("out_src"))
+        .agg(F.sum("w").alias("wout"))
+        .persist()
     )
     nodes = (
         edges.select(F.col("src").alias("page"))
@@ -85,7 +90,7 @@ def pagerank(
     n_nodes = nodes.count()  # scalar; also materializes the checkpoint
     # dangling set is fixed across iterations — compute once
     dangling = nodes.join(
-        outw.select(F.col("src").alias("page")), "page", "left_anti"
+        outw.select(F.col("out_src").alias("page")), "page", "left_anti"
     ).localCheckpoint(eager=False)
     # base is a Python-computed literal embedded in BOTH plans (the
     # oracle builder runs the identical expression), so the two engines
@@ -110,7 +115,7 @@ def pagerank(
         )
         inflow = (
             ranks.join(edges, ranks["page"] == edges["src"])
-            .join(outw, edges["src"] == outw["src"])
+            .join(outw, edges["src"] == outw["out_src"])
             .select(
                 edges["dst"].alias("page"),
                 F.round(

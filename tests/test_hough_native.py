@@ -1,6 +1,7 @@
-"""The native Hough loop (imaging/native.py) against its numpy
-reference, its deadline, and the native library's build, cache and
-fallback rules (shared with the NL-means loop, test_nlmeans_native.py).
+"""The native Hough loop (native.py) against its numpy reference, its
+deadline, and the native library's build, cache and fallback rules
+(shared with the NL-means loop, test_nlmeans_native.py, and the AES-CBC
+loop, test_aes_native.py).
 
 `hough.hough_lines_p` runs the C loop wherever it builds and
 `hough._hough_lines_p_numpy` otherwise; both must give the same
@@ -20,8 +21,8 @@ import textwrap
 import numpy as np
 import pytest
 
-from mcp_ocr_server_spark import deadline as deadline_mod
-from mcp_ocr_server_spark.imaging import hough, native as native_mod
+from mcp_ocr_server_spark import deadline as deadline_mod, native as native_mod
+from mcp_ocr_server_spark.imaging import hough
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -158,7 +159,10 @@ _FALLBACK_SCRIPT = textwrap.dedent("""
     import logging, sys
     sys.path[:0] = [sys.argv[1], sys.argv[1] + "/tests"]
     logging.basicConfig(level=logging.WARNING, format="WARNING %(name)s %(message)s")
-    from mcp_ocr_server_spark.imaging import hough, kernels, native
+    from mcp_ocr_server_spark import native
+    from mcp_ocr_server_spark.functions import pdf, pdfcrypt
+    from mcp_ocr_server_spark.imaging import hough, kernels
+    from mcp_ocr_server_spark.sources import synthetic
     from test_kernel_pins import (
         HOUGH_RANDOM_PINS, NLMEANS_PINS, _digest, _nlmeans_input, _random_segments,
     )
@@ -166,7 +170,15 @@ _FALLBACK_SCRIPT = textwrap.dedent("""
     print("digest ok", _digest(_random_segments(hough.hough_lines_p, 0)) == HOUGH_RANDOM_PINS[0])
     out = kernels.nl_means_denoise(_nlmeans_input("blurry_44x444"))
     print("nl-means ok", _digest([out]) == NLMEANS_PINS["blurry_44x444"])
+    print("hash_2b ok", pdfcrypt.hash_2b(b"secret", b"saltsalt").hex() == sys.argv[2])
+    r6 = synthetic.encrypt_pdf_bytes(
+        synthetic.make_pdf_bytes([["owner locked"]]), owner_pw=b"owner", r=6
+    )
+    row = pdf.pdf_text_row("r6.pdf", r6)
+    print("r6 ok", b"/AESV3" in r6 and row["error"] is None and row["text"] == "owner locked")
 """)
+_HASH_2B_PIN = "f28f56ef5747965c3a052f8e074560c8fb02d13283508c02219717d36ef23e4c"
+_FALLBACK_OUT = ["loaded False", "digest ok True", "nl-means ok True", "hash_2b ok True", "r6 ok True"]
 
 
 def _run_without_cc(tmp_path) -> subprocess.CompletedProcess:
@@ -181,7 +193,7 @@ def _run_without_cc(tmp_path) -> subprocess.CompletedProcess:
         "TMPDIR": str(tmp_path / "tmp"),
     }
     return subprocess.run(
-        [sys.executable, "-c", _FALLBACK_SCRIPT, REPO],
+        [sys.executable, "-c", _FALLBACK_SCRIPT, REPO, _HASH_2B_PIN],
         env=env, capture_output=True, text=True, timeout=300,
     )
 
@@ -191,11 +203,13 @@ def _warnings(proc) -> list[str]:
 
 
 def test_fallback_without_cc_gives_pinned_segments_and_one_warning(tmp_path):
-    """Both kernels fall back to their numpy bodies with the pinned
-    outputs, and the process warns once for the shared library."""
+    """All three loops fall back to their numpy or Python bodies with
+    the pinned outputs (Hough segments, an NL-means page, an Algorithm
+    2.B hash and an R6 pdf's text), and the process warns once for the
+    shared library."""
     proc = _run_without_cc(tmp_path)
     assert proc.returncode == 0, proc.stderr
-    assert proc.stdout.split("\n")[:3] == ["loaded False", "digest ok True", "nl-means ok True"]
+    assert proc.stdout.split("\n")[:5] == _FALLBACK_OUT
     warnings = _warnings(proc)
     assert len(warnings) == 1, proc.stderr
     assert "no C compiler" in warnings[0]
@@ -216,5 +230,5 @@ def test_library_in_unsafe_place_is_not_loaded(tmp_path, unsafe):
         os.chmod(path, 0o666)
     proc = _run_without_cc(tmp_path)
     assert proc.returncode == 0, proc.stderr
-    assert proc.stdout.split("\n")[:3] == ["loaded False", "digest ok True", "nl-means ok True"]
+    assert proc.stdout.split("\n")[:5] == _FALLBACK_OUT
     assert len(_warnings(proc)) == 1, proc.stderr

@@ -1,4 +1,4 @@
-"""The native NL-means offset loop (imaging/native.py) against its numpy
+"""The native NL-means offset loop (native.py) against its numpy
 reference, its weight table, its deadline and its parameter checks.
 
 `kernels.nl_means_denoise` runs the C loop wherever it builds and
@@ -16,8 +16,8 @@ import shutil
 import numpy as np
 import pytest
 
-from mcp_ocr_server_spark import deadline as deadline_mod
-from mcp_ocr_server_spark.imaging import kernels, native as native_mod
+from mcp_ocr_server_spark import deadline as deadline_mod, native as native_mod
+from mcp_ocr_server_spark.imaging import kernels
 
 needs_cc = pytest.mark.skipif(shutil.which("cc") is None, reason="no C compiler")
 
