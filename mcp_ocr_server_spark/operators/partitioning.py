@@ -21,6 +21,16 @@ layers, applied in plans/pipeline.py:
 At cluster scale the cost hint comes from table metadata (Iceberg
 tracks file/column sizes — no data scan needed); locally we default to
 a multiple of the scheduler's parallelism and let AQE coalesce.
+
+Partitions and files are sized apart.  The UDF stage's partition count
+(`n_partitions_for_cost`) is floored at 4x parallelism because a task's
+cost is set by the images it decodes, and fine work units rebalance
+heavy-tailed ones.  A result table written from that stage holds a few
+hundred bytes per unit, so writing it at the same split makes one
+near-empty file, and one write task with its fixed per-task cost, per
+partition.  The checkpoint loop therefore coalesces each memo table to
+`n_parts_for_bytes` of the hint alone, without the floor: one file per
+bucket under 64 MB of input bytes (plans/checkpoint.py).
 """
 
 from __future__ import annotations
@@ -35,6 +45,14 @@ TARGET_BYTES_PER_PARTITION = 64 * 1024 * 1024
 MAX_PARTITIONS = 100_000
 
 
+def n_parts_for_bytes(total_bytes: int | None) -> int:
+    """One part per TARGET_BYTES_PER_PARTITION of `total_bytes`, at least
+    one: the byte-cost term alone.  With no hint, or 0 bytes, that is 1."""
+    if not total_bytes:
+        return 1
+    return min(MAX_PARTITIONS, math.ceil(total_bytes / TARGET_BYTES_PER_PARTITION))
+
+
 def n_partitions_for_cost(spark, total_cost_bytes: int | None) -> int:
     # Floor = 4x parallelism, not 1x: per-image cost is heavy-tailed
     # (NL-means runs only on low-sharpness pages, 10-30x the cost of a
@@ -43,12 +61,9 @@ def n_partitions_for_cost(spark, total_cost_bytes: int | None) -> int:
     # rebalance; measured 9.0 s -> 7.0 s on the sf0.1 extraction at
     # local[32] (128 partitions), with task overhead negligible against
     # per-image compute.  The byte-cost term still dominates at scale.
-    min_parts = spark.sparkContext.defaultParallelism * 4
-    if total_cost_bytes is None:
-        return min_parts
     return max(
-        min_parts,
-        min(MAX_PARTITIONS, math.ceil(total_cost_bytes / TARGET_BYTES_PER_PARTITION)),
+        spark.sparkContext.defaultParallelism * 4,
+        n_parts_for_bytes(total_cost_bytes),
     )
 
 

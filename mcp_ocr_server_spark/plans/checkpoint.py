@@ -33,7 +33,13 @@ Design (SURVEY.md §4 item 2):
 Lineage: every watermark row records bucket id, run id, span/doc/error
 counts, the number of images OCR'd and wall time.  The counts are
 observed while the bucket's tables are written, so each table is
-written once and read back never.  Per-partition metrics are a view
+written once and read back never.  Each write is coalesced to the files
+its size needs: the memo tables get one file per 64 MB of the bucket's
+share of input bytes (`partitioning.n_parts_for_bytes`), the spans
+table one per core, whatever the UDF stages' split.  Write tasks have a
+fixed cost (a task deserialises the whole Hadoop configuration, and
+every created file and directory gets its permissions set) that a few
+dozen memo rows do not pay for.  Per-partition metrics are a view
 over the committed OCR results (``CheckpointStore.metrics_df``), keyed
 by (bucket, partition_id): no second table restates them.
 """
@@ -49,6 +55,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, JobConfig
 from ..operators.media_ocr import OCR_RESULT_SCHEMA
+from ..operators.partitioning import n_parts_for_bytes
 from .metrics import partition_metrics
 from .pipeline import PDF_MEMO_SCHEMA, extract, hash_media, hash_pdfs
 
@@ -83,11 +90,15 @@ class CheckpointStore:
     """Watermark + output layout rooted at a directory.
 
     Layout:
-      root/spans/bucket=K/*.parquet     committed span rows
+      root/spans/bucket=K/*.parquet     committed span rows, at most
+                                        defaultParallelism files
       root/ocr/bucket=K/*.parquet       committed ocr results (memo source,
                                         and the per-partition metrics view)
       root/pdf/bucket=K/*.parquet       committed pdf results (pdf memo source)
       root/watermarks/K.json            watermark row, written LAST
+
+    Each memo table gets one file per 64 MB of the bucket's share of its
+    input bytes: one file for a bucket under 64 MB of images (or pdfs).
     """
 
     def __init__(self, root: str):
@@ -271,11 +282,16 @@ def run_checkpointed(
     # pdf analogue of media_hashed: sha256 over the pdf corpus runs
     # once per run, not twice per bucket (review finding)
     pdfs_hashed = hash_pdfs(pdfs).persist() if pdfs is not None else None
-    try:
-        total_bytes = media_hashed.agg(F.sum("n_bytes")).first()[0] or 0
-        bucket_cost = max(1, int(total_bytes) // b)
-    except Exception:
-        bucket_cost = None
+    # Per-bucket byte shares: the OCR stage's partition hint, and the
+    # file counts of the two memo writes.  An empty table sums to null.
+    total_bytes = media_hashed.agg(F.sum("n_bytes")).first()[0] or 0
+    bucket_cost = max(1, int(total_bytes) // b)
+    pdf_bytes = 0
+    if pdfs_hashed is not None:
+        pdf_bytes = pdfs_hashed.agg(F.sum("n_bytes")).first()[0] or 0
+    ocr_files = n_parts_for_bytes(bucket_cost)
+    pdf_files = n_parts_for_bytes(int(pdf_bytes) // b)
+    spans_files = spark.sparkContext.defaultParallelism
     try:
         for k in range(b):
             if k in done:
@@ -288,9 +304,12 @@ def run_checkpointed(
             # joins are built over the SAME ocr_results / pdf_results
             # DataFrame subtrees (pipeline.extract ties them), so the
             # spans write reads the cache the memo writes filled instead
-            # of re-running mapInPandas.  Neither result is coalesced
-            # before its first write: a coalesce above an unfilled cache
-            # would run every unit in one task.
+            # of re-running mapInPandas.  Each write is coalesced to the
+            # files its size needs, not to the UDF stage's split.  The
+            # coalesce cannot reach mapInPandas: AQE materialises the
+            # persisted relation in its own query stage, at the UDF's
+            # split, before the write's stage runs, so the coalesce only
+            # merges the cached partitions.
             res = extract(
                 docs_b.filter(F.col("bucket") == k).drop("bucket"), media,
                 cfg, memo=store.memo_df(spark),
@@ -307,16 +326,16 @@ def run_checkpointed(
             # explode_spans gives each doc with a span exactly one
             # `order` 0 row (observe refuses countDistinct).
             ocr_seen, spans_seen = Observation(), Observation()
-            ocr.observe(
+            ocr.coalesce(ocr_files).observe(
                 ocr_seen, F.count(F.lit(1)).alias("n_ocr_computed")
             ).write.mode("overwrite").parquet(
                 os.path.join(store.ocr_dir, f"bucket={k}")
             )
             if pdf is not None:
-                pdf.write.mode("overwrite").parquet(
+                pdf.coalesce(pdf_files).write.mode("overwrite").parquet(
                     os.path.join(store.pdf_dir, f"bucket={k}")
                 )
-            res.spans.observe(
+            res.spans.coalesce(spans_files).observe(
                 spans_seen,
                 F.count_if(F.col("order") == 0).alias("n_docs"),
                 F.count(F.lit(1)).alias("n_spans"),

@@ -155,8 +155,12 @@ def ocr_params(cfg: JobConfig) -> str:
 
 
 def hash_pdfs(pdfs: DataFrame) -> DataFrame:
-    """pdfs(media_ref, bytes) -> (media_ref, content_hash)."""
-    return pdfs.select("media_ref", F.sha2("bytes", 256).alias("content_hash"))
+    """pdfs(media_ref, bytes) -> (media_ref, n_bytes, content_hash)."""
+    return pdfs.select(
+        "media_ref",
+        F.length("bytes").alias("n_bytes"),
+        F.sha2("bytes", 256).alias("content_hash"),
+    )
 
 
 def _null(dtype: str) -> F.Column:
@@ -195,7 +199,7 @@ def extract(
     unsupported filter / 1.5+ xref streams) become PDF_PARSE_FAILED
     rows.  Without `pdfs`, pdf spans pass through the non-media
     identity path (legacy corpora contain none).  `pdfs_hashed` is the
-    pdf analogue of `media_hashed`: a precomputed (media_ref,
+    pdf analogue of `media_hashed`: a precomputed (media_ref, n_bytes,
     content_hash) projection the checkpoint loop persists once per run
     so B buckets don't sha256 the pdf corpus B times.  `pdf_memo` is a
     prior `pdf_results` table (PDF_MEMO_SCHEMA): distinct pdf hashes it

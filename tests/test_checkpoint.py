@@ -4,10 +4,16 @@ output rows as an uninterrupted run — no duplicates, no gaps."""
 
 import dataclasses
 import os
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
+from mcp_ocr_server_spark.operators.partitioning import (
+    TARGET_BYTES_PER_PARTITION,
+    n_partitions_for_cost,
+    n_parts_for_bytes,
+)
 from mcp_ocr_server_spark.plans.checkpoint import (
     CheckpointStore,
     bucket_col,
@@ -378,3 +384,68 @@ def test_pdf_memo_keyed_on_ocr_config(spark, tmp_path):
     assert refs[0] & refs[1]
     for b in range(n_buckets):
         assert sorted(parsed[b]) == sorted(refs[b])
+
+
+@pytest.fixture(scope="module")
+def two_bucket_store(spark, tmp_path_factory):
+    """A committed 2-bucket interleaved run (images and pdfs)."""
+    cfg = S.CorpusConfig(n_docs=40, p_pdf=0.35)
+    store = CheckpointStore(str(tmp_path_factory.mktemp("files") / "ckpt"))
+    run_checkpointed(
+        spark, S.docs_df(spark, cfg), S.media_df(spark, cfg), store,
+        FIXTURE_JOB, n_buckets=2, pdfs=S.pdf_df(spark, cfg),
+    )
+    assert store.committed_buckets() == {0, 1}
+    return store
+
+
+def _data_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_bucket_writes_files_by_size(spark, two_bucket_store):
+    """A bucket far under 64 MB of input writes one file per memo table,
+    and at most one spans file per core, whatever the UDF stages'
+    split (4x parallelism)."""
+    store = two_bucket_store
+    cores = spark.sparkContext.defaultParallelism
+    for k in (0, 1):
+        for table in (store.ocr_dir, store.pdf_dir):
+            files = _data_files(os.path.join(table, f"bucket={k}"))
+            assert len(files) == 1, (table, k, files)
+        spans = _data_files(os.path.join(store.spans_dir, f"bucket={k}"))
+        assert 1 <= len(spans) <= cores, (k, spans)
+
+
+def test_memo_coalesce_keeps_udf_split(two_bucket_store):
+    """The one-file OCR memo write merges the OCR stage's output, not
+    its work: a bucket that OCR'd several units committed rows stamped
+    by more than one compute task (`partition_id`)."""
+    import pyarrow.parquet as pq
+
+    store = two_bucket_store
+    pids = {
+        k: pq.read_table(
+            os.path.join(store.ocr_dir, f"bucket={k}"), columns=["partition_id"]
+        ).column("partition_id").to_pylist()
+        for k in (0, 1)
+    }
+    busy = [k for k, p in pids.items() if len(p) >= 2]
+    assert busy, pids
+    for k in busy:
+        assert len(set(pids[k])) > 1, (k, pids[k])
+
+
+def test_n_parts_for_bytes():
+    """The file count is the byte-cost term alone; the UDF stage's
+    partition count floors it at 4x parallelism."""
+    t = TARGET_BYTES_PER_PARTITION
+    assert n_parts_for_bytes(None) == 1
+    assert n_parts_for_bytes(0) == 1
+    assert n_parts_for_bytes(1) == 1
+    assert n_parts_for_bytes(t) == 1
+    assert n_parts_for_bytes(t + 1) == 2
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    assert n_partitions_for_cost(fake, None) == 16
+    assert n_partitions_for_cost(fake, t) == 16
+    assert n_partitions_for_cost(fake, 40 * t + 1) == 41
